@@ -124,8 +124,10 @@ def hashed_shingles_udf(n: int = 3):
 
 
 def shingle_strings_udf(n: int = 3):
-    """pandas UDF: text → array<string> distinct shingles — feeds
-    pyspark.ml HashingTF without the interpreted-HOF pass."""
+    """pandas UDF: text → array<string> of the doc's distinct word
+    n-gram shingles (first-occurrence order) — the string-valued
+    shingle set without the interpreted-HOF pass, for consumers that
+    need the gram text itself (decontamination, contamination profiles)."""
     import pandas as pd
 
     def kernel(texts):
@@ -171,26 +173,6 @@ def _band_sigs_from_hashes(
     )
     out[nz] = sigs
     return out
-
-
-def band_signatures_from_text_udf(
-    n: int, bands: int, rows_per_band: int, seed: int
-):
-    """pandas UDF: text → array<long> of ``bands`` MinHash band
-    signatures, fused tokenize→shingle→hash→minhash→band in one kernel
-    (one Arrow round-trip instead of two)."""
-    import pandas as pd
-
-    k = bands * rows_per_band
-    rng = np.random.RandomState(seed)
-    salts = rng.randint(0, 2**63 - 1, size=k, dtype=np.int64).astype(_U64)
-
-    def kernel(texts):
-        h, counts = _hashed_shingle_sets(texts.to_numpy(dtype=object), n)
-        sigs = _band_sigs_from_hashes(h, counts, salts, bands, rows_per_band)
-        return pd.Series([row.tolist() for row in sigs])
-
-    return F.pandas_udf(kernel, "array<long>")
 
 
 def char_ngrams_udf(n: int = 3):

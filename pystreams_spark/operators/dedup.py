@@ -6,10 +6,11 @@ Tiers, cheapest first:
 - ngram-jaccard: exact pairwise Jaccard over word shingles — the
   oracle-checkable ground truth for near-dup; brute force, so gate to
   small inputs or pre-blocked candidate pairs.
-- minhash: MinHashLSH banding — the 100 TB path. Cost scales with
-  band-bucket collisions, not n².
-- simhash: 64-bit simhash + hamming-band grouping; cheap single-pass
-  near-dup key.
+- minhash: banded MinHash (``minhash_neardup_pairs``: b bands of r
+  Arrow-kernel minhash rows, exact-Jaccard verify) — the 100 TB path.
+  Cost scales with band-bucket collisions, not n².
+- simhash: 64-bit simhash + ``banded_hamming_pairs``; cheap
+  single-pass near-dup key.
 - embedding: cosine-threshold pairs (see operators.similarity).
 
 Cluster resolution (connected components over the duplicate-pair graph)
@@ -26,12 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles
-from ..functions.text_kernels import (
-    band_signatures_from_text_udf,
-    hashed_shingles_udf,
-    shingle_strings_udf,
-    simhash_from_text_udf,
-)
+from ..functions.text_kernels import hashed_shingles_udf, simhash_from_text_udf
 from ..io import broadcast_if_small, ensure_parallelism, materialize
 
 
@@ -741,82 +737,6 @@ def cross_source_shingle_overlap(
     )
 
 
-def minhash_candidates(
-    df: DataFrame,
-    threshold: float = 0.5,
-    n: int = 3,
-    num_hash_tables: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_features: int = 1 << 18,
-    seed: int = 42,
-) -> DataFrame:
-    """Near-dup candidate pairs via MinHashLSH over hashed shingles.
-
-    Pipeline: shingle → HashingTF (sparse presence vector) → MinHash
-    signatures → LSH band join under a Jaccard-distance threshold.
-    Each stage is a narrow map except the band-bucket join; at 100 TB
-    the bucket join shuffles only (band-hash, id) pairs. Approximate →
-    rows-only checked; the exact ``ngram_jaccard_pairs`` is its oracle
-    in tests at small scale."""
-    from pyspark.ml.feature import HashingTF, MinHashLSH
-
-    sh = ensure_parallelism(df).select(
-        F.col(id_col), shingle_strings_udf(n)(F.col(text_col)).alias("_sh")
-    ).filter(F.size("_sh") > 0)
-    tf = HashingTF(inputCol="_sh", outputCol="_features", numFeatures=num_features)
-    feat = tf.transform(sh)
-    mh = MinHashLSH(
-        inputCol="_features", outputCol="_hashes", numHashTables=num_hash_tables, seed=seed
-    ).fit(feat)
-    pairs = mh.approxSimilarityJoin(feat, feat, 1.0 - threshold, distCol="_jdist")
-    return (
-        pairs.select(
-            F.col(f"datasetA.{id_col}").alias("id_a"),
-            F.col(f"datasetB.{id_col}").alias("id_b"),
-            F.round(1.0 - F.col("_jdist"), 6).alias("est_jaccard"),
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-    )
-
-
-def _simhash_udf():
-    """Vectorized kernel: array<long> shingle hashes → 64-bit simhash.
-
-    Why a pandas UDF and not Column algebra: the per-bit ±1 voting needs
-    64 traversals of the hash array (or a 64-wide array accumulator) —
-    higher-order functions are interpreted, not codegen'd, so the pure
-    Column version costs ~100x (measured 434 s vs <5 s at sf0.1). The
-    hashing itself (xxhash64) stays JVM-side; only the deterministic
-    bit-voting crosses to numpy.
-    """
-    import numpy as np
-    import pandas as pd
-
-    def kernel(hashes):  # pd.Series -> pd.Series (scalar pandas UDF)
-        idx = np.arange(64, dtype=np.uint64)
-        out = np.zeros(len(hashes), dtype=np.int64)
-        for row, hs in enumerate(hashes):
-            if hs is None or len(hs) == 0:
-                continue
-            h = np.asarray(hs, dtype=np.int64).astype(np.uint64)
-            bits = (h[:, None] >> idx) & np.uint64(1)  # (n_shingles, 64)
-            votes = (2 * bits.astype(np.int64) - 1).sum(axis=0)
-            sig = ((votes > 0).astype(np.uint64) << idx).sum(dtype=np.uint64)
-            out[row] = sig.astype(np.int64)
-        return pd.Series(out)
-
-    return F.pandas_udf(kernel, "long")
-
-
-def simhash(text_col, n: int = 2) -> "F.Column":
-    """64-bit SimHash over word n-grams: per-shingle xxhash64 (JVM) →
-    per-bit ±1 votes → sign (vectorized numpy kernel). One narrow pass,
-    no shuffle."""
-    hashes = F.transform(shingles(text_col, n), lambda s: F.xxhash64(s))
-    return _simhash_udf()(hashes)
-
-
 def simhash_candidates(
     df: DataFrame,
     text_col: str = "text",
@@ -824,52 +744,23 @@ def simhash_candidates(
     n: int = 2,
     bands: int = 4,
 ) -> DataFrame:
-    """Candidate near-dup pairs = docs sharing any 16-bit band of their
-    simhash (≈ hamming distance ≤ 3·16 guaranteed recall band trick).
-    Shuffles (band_id, band_value) keys only. Each pair carries its
-    signature ``hamming`` distance as a self-check column — quality
-    drift shows up as changed values in rows-only checks."""
+    """Candidate near-dup pairs = docs sharing any of ``bands`` equal-width
+    bands of their 64-bit simhash (4 × 16 bits by default: a shared band
+    bounds the Hamming distance by the other 48 bits). Banding and the
+    XOR/bit_count verify are ``banded_hamming_pairs``; each pair carries
+    its signature ``hamming`` distance (int) as a self-check column —
+    quality drift shows up as changed values in rows-only checks."""
     sig = ensure_parallelism(df).select(
         F.col(id_col), simhash_from_text_udf(n)(F.col(text_col)).alias("_sig")
     ).localCheckpoint(eager=True)
-    band_width = 64 // bands
-    banded = sig.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.shiftright("_sig", i * band_width)
-                        .bitwiseAND(F.lit((1 << band_width) - 1))
-                        .alias("val"),
-                    )
-                    for i in range(bands)
-                ]
-            )
-        ).alias("_b"),
-    ).select(id_col, "_b.band", "_b.val")
-    other = banded.select(
-        F.col(id_col).alias("id_b"), F.col("band"), F.col("val")
-    )
-    pairs = (
-        banded.withColumnRenamed(id_col, "id_a")
-        .join(other, ["band", "val"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    sa = sig.select(F.col(id_col).alias("id_a"), F.col("_sig").alias("_sa"))
-    sb = sig.select(F.col(id_col).alias("id_b"), F.col("_sig").alias("_sb"))
-    return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("_sa").bitwiseXOR(F.col("_sb"))).alias("hamming"),
-        )
-    )
+    band_bits = 64 // bands
+    return banded_hamming_pairs(
+        sig,
+        id_col=id_col,
+        bands=bands,
+        band_bits=band_bits,
+        max_hamming=64 - band_bits,
+    ).withColumn("hamming", F.col("hamming").cast("int"))
 
 
 def _cc_union_find_one_task(edges: DataFrame) -> DataFrame:
@@ -1054,73 +945,16 @@ def _banded_candidate_pairs(
     )
 
 
-def minhash_candidates_fast(
-    df: DataFrame,
-    threshold: float = 0.1,
-    n: int = 3,
-    num_hash_tables: int = 4,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seed: int = 42,
-) -> DataFrame:
-    """Same contract as ``minhash_candidates`` (ml-lib MinHashLSH
-    semantics: candidate iff any of the k width-1 hash tables agree,
-    then keep pairs with exact Jaccard ≥ threshold, reported as
-    ``est_jaccard``) — but built on the repo's Arrow kernels instead of
-    pyspark.ml: one narrow pass hashes shingles, a second computes the k
-    per-table minhash signatures, and the join shuffles (band, sig, id)
-    triples only. Verification runs array_intersect over 64-bit shingle
-    hashes, not shingle strings. Measured at sf0.1: 6.9 s (ml-lib
-    approxSimilarityJoin) → ~1.3 s, identical pair semantics."""
-    sh = (
-        ensure_parallelism(df)
-        .select(F.col(id_col), hashed_shingles_udf(n)(F.col(text_col)).alias("_sh"))
-        .localCheckpoint(eager=True)
-    )
-    # materialize signatures once (id + k longs per doc — tiny): the
-    # banded self-join has the kernel stage on BOTH sides, and the
-    # downstream broadcast_if_small materialization adds a third lineage
-    # pass — un-checkpointed, the pandas kernel ran ≥2× per action
-    # (measured at sf0.1: candidate generation 20.3 s → 7.3 s)
-    sigs = (
-        sh.filter(F.size("_sh") > 0)
-        .select(
-            F.col(id_col),
-            _minhash_bands_udf(num_hash_tables, 1, seed)(F.col("_sh")).alias("_bands"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    cands = _banded_candidate_pairs(sigs, id_col=id_col)
-    a = sh.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa"))
-    b = sh.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb"))
-    inter = F.size(F.array_intersect("_sa", "_sb")).cast("double")
-    union = F.size("_sa").cast("double") + F.size("_sb").cast("double") - inter
-    jac = inter / union
-    # Join order matters at scale: broadcasting the (id_a, id_b)
-    # candidate list into the first join streams the corpus shingle
-    # arrays in place (no corpus-wide array shuffle); only the
-    # candidate-matched rows (bounded by the band collision count)
-    # reach the second, shuffling join. The candidate count is
-    # data-dependent (near-quadratic on dup-heavy corpora), so the
-    # broadcast is adaptive: verified-small → hint, else shuffle join.
-    return (
-        a.join(broadcast_if_small(cands), "id_a")
-        .join(b, "id_b")
-        .filter(jac >= threshold)
-        .select("id_a", "id_b", F.round(jac, 6).alias("est_jaccard"))
-    )
-
-
 def _minhash_bands_udf(bands: int, rows_per_band: int, seed: int):
     """Vectorized kernel: array<long> shingle hashes → array<long> of
     ``bands`` band signatures (each = hash of ``rows_per_band`` minhash
     values under distinct permutation salts).
 
-    Same rationale as the simhash kernel: k permutation-mins per row
-    would be k interpreted HOF traversals in Column algebra — and worse,
-    CollapseProject inlines the (expensive) shingle expression into
-    every one of the k signature expressions, recomputing it k times
-    (measured: 21 s at sf0.1 vs ~2 s here). splitmix64 is the
+    Why a kernel: k permutation-mins per row would be k interpreted HOF
+    traversals in Column algebra — and worse, CollapseProject inlines
+    the (expensive) shingle expression into every one of the k
+    signature expressions, recomputing it k times (measured: 21 s at
+    sf0.1 vs ~2 s here). splitmix64 is the
     permutation mixer — deterministic, seeded, vectorized.
     """
     import numpy as np
@@ -1149,40 +983,6 @@ def _minhash_bands_udf(bands: int, rows_per_band: int, seed: int):
         return pd.Series(out)
 
     return F.pandas_udf(kernel, "array<long>")
-
-
-def minhash_banded_candidates(
-    df: DataFrame,
-    n: int = 3,
-    bands: int = 8,
-    rows_per_band: int = 2,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    seed: int = 42,
-) -> DataFrame:
-    """Banded MinHash LSH — the tunable-precision alternative to
-    pyspark.ml's MinHashLSH (whose bands are width 1, so candidate
-    probability is 1-(1-j)^k: at k=8 even j=0.2 pairs collide 83% of
-    the time and candidate generation degenerates to ~all pairs).
-
-    A pair is a candidate iff some band's ``rows_per_band`` minhash
-    signatures all match → P = 1-(1-j^r)^b, sharply thresholded.
-    Shingle hashing is JVM-side; permutation mins run in a vectorized
-    kernel; the only shuffle is the (band, sig, id) equi-join.
-    Candidates are distinct (id_a < id_b) pairs — verify with exact
-    Jaccard downstream.
-    """
-    sigs = ensure_parallelism(df).select(
-        F.col(id_col),
-        band_signatures_from_text_udf(n, bands, rows_per_band, seed)(
-            F.col(text_col)
-        ).alias("_bands"),
-    )
-    # materialize signatures once: both sides of the self-join would
-    # otherwise recompute the whole shingle+kernel pipeline (2x cost);
-    # the signature table is tiny (id + b longs per doc)
-    sigs = sigs.localCheckpoint(eager=True)
-    return _banded_candidate_pairs(sigs, id_col=id_col)
 
 
 def simhash_deterministic_candidates(
@@ -1396,8 +1196,8 @@ def minhash_deterministic_candidates(
     shuffle of partial minima), a (band, key)-keyed self-join whose
     row bill is the band-collision count (the LSH design parameter),
     and a broadcast-candidate verify. The engine-seeded Arrow-kernel
-    variants (``minhash_candidates_fast``/``minhash_banded_candidates``)
-    remain the production path; this is the correctness anchor."""
+    ``minhash_neardup_pairs`` remains the production path; this is the
+    correctness anchor."""
     if rows_per_band not in (1, 2):
         raise ValueError(
             "minhash_deterministic_candidates: rows_per_band must be 1 or "
@@ -1510,19 +1310,85 @@ def _verify_pairs_jaccard(
     MinHash's own error), and the joined sides shuffle 8 bytes per
     shingle instead of the n-gram text. The candidate list is broadcast
     (adaptive — see broadcast_if_small) into the first join so
-    non-candidate rows never shuffle their arrays."""
+    non-candidate rows never shuffle their arrays. Keeps pairs whose
+    UNROUNDED Jaccard is ≥ ``threshold`` and reports it rounded to 6
+    places as ``jaccard``."""
     a = sh_a.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa"))
     b = sh_b.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb"))
     inter = F.size(F.array_intersect("_sa", "_sb")).cast("double")
     union = (
         F.size("_sa").cast("double") + F.size("_sb").cast("double") - inter
     )
+    jac = inter / union
     return (
         a.join(broadcast_if_small(cands), "id_a")
         .join(b, "id_b")
-        .filter(inter / union >= threshold)
-        .select("id_a", "id_b")
+        .filter(jac >= threshold)
+        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
     )
+
+
+def _minhash_signatures(
+    df: DataFrame,
+    n: int,
+    bands: int,
+    rows_per_band: int,
+    seed: int,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    checkpoint_dir: str | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """(hashed-shingle frame ``id_col`` + ``_sh``, band-signature frame
+    ``id_col`` + ``_bands``), both materialized. One narrow kernel pass
+    tokenizes the text; its pinned output feeds BOTH the band signatures
+    and the exact-Jaccard verify, so the text is tokenized once. The
+    (tiny) signature table is pinned too — both sides of the banded
+    self-join and broadcast_if_small's count would otherwise each re-run
+    the minhash kernel stage (the reproducible 30× r2 bench regression
+    on the near-dup pipeline)."""
+    sh = materialize(
+        df.select(F.col(id_col), hashed_shingles_udf(n)(F.col(text_col)).alias("_sh")),
+        checkpoint_dir,
+    )
+    sigs = materialize(
+        sh.filter(F.size("_sh") > 0).select(
+            F.col(id_col),
+            _minhash_bands_udf(bands, rows_per_band, seed)(F.col("_sh")).alias("_bands"),
+        ),
+        checkpoint_dir,
+    )
+    return sh, sigs
+
+
+def minhash_neardup_pairs(
+    df: DataFrame,
+    n: int = 3,
+    bands: int = 8,
+    rows_per_band: int = 2,
+    threshold: float = 0.35,
+    seed: int = 42,
+    text_col: str = "text",
+    id_col: str = "doc_id",
+    checkpoint_dir: str | None = None,
+) -> DataFrame:
+    """Banded-MinHash near-dup pairs: (id_a < id_b, jaccard) for every
+    candidate whose exact word-``n``-gram Jaccard is ≥ ``threshold``.
+
+    A pair is a candidate iff some band's ``rows_per_band`` minhash
+    values all agree → P = 1 − (1 − j^r)^b, sharply thresholded for
+    r > 1 (at r = 1 every band is one minhash, so even j = 0.2 pairs
+    collide often). Shingle hashing and permutation mins run in Arrow
+    kernels; the only corpus-scale shuffle is the (band, sig, id)
+    equi-join, and the verify is exact over 64-bit shingle hashes
+    (``_verify_pairs_jaccard``), so precision is 1 and only recall is
+    probabilistic. ``threshold=0`` returns every candidate pair.
+    ``checkpoint_dir`` as in ``io.materialize``."""
+    sh, sigs = _minhash_signatures(
+        ensure_parallelism(df), n, bands, rows_per_band, seed,
+        text_col=text_col, id_col=id_col, checkpoint_dir=checkpoint_dir,
+    )
+    cands = _banded_candidate_pairs(sigs, id_col=id_col)
+    return _verify_pairs_jaccard(sh, sh, cands, threshold, id_col=id_col)
 
 
 def neardup_dedup(
@@ -1549,29 +1415,10 @@ def neardup_dedup(
     executor-pinned localCheckpoint (``io.materialize``) — the
     fault-tolerant posture for cluster runs.
     """
-    # One narrow kernel pass computes each doc's hashed shingle set;
-    # the checkpointed frame feeds BOTH the band signatures (candidate
-    # generation) and the exact-Jaccard verification — the text is
-    # tokenized exactly once end-to-end.
-    sh = materialize(
-        ensure_parallelism(df)
-        .select(F.col(id_col), hashed_shingles_udf(n)(F.col(text_col)).alias("_sh")),
-        checkpoint_dir,
+    verified = minhash_neardup_pairs(
+        df, n=n, threshold=threshold, seed=seed, text_col=text_col,
+        id_col=id_col, checkpoint_dir=checkpoint_dir,
     )
-    # materialize the (tiny) signature table once — both sides of the
-    # banded self-join and broadcast_if_small's materialization would
-    # otherwise each re-run the minhash kernel stage (the reproducible
-    # 30× r2 bench regression on this pipeline)
-    sigs = materialize(
-        sh.filter(F.size("_sh") > 0)
-        .select(
-            F.col(id_col),
-            _minhash_bands_udf(8, 2, seed)(F.col("_sh")).alias("_bands"),
-        ),
-        checkpoint_dir,
-    )
-    cands = _banded_candidate_pairs(sigs, id_col=id_col)
-    verified = _verify_pairs_jaccard(sh, sh, cands, threshold, id_col=id_col)
     clusters = cc_keep_min(
         verified, df.select(id_col), id_col=id_col, checkpoint_dir=checkpoint_dir
     )

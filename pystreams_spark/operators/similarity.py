@@ -1,13 +1,15 @@
 """Similarity search over embedding columns (SURVEY.md §2.K).
 
-Two tiers:
+Tiers:
 - ``knn_exact``: brute-force cosine top-k — the oracle-checkable
   baseline. Queries are broadcast against the (large) corpus, so the
   corpus is scanned once with no shuffle of the big side; per-query
   top-k is a window over the joined result.
-- ``knn_lsh`` / ``similarity_join_lsh``: BucketedRandomProjectionLSH —
-  the 100 TB path. Hash once, bucket-join, refine within buckets; cost
-  scales with bucket collisions instead of |corpus| × |queries|.
+- ``knn_lsh``: random-projection (Euclidean) LSH — the 100 TB path.
+  Hash once, bucket-join, refine within buckets; cost scales with
+  bucket collisions instead of |corpus| × |queries|.
+- ``cosine_lsh_pairs``: sign-random-projection LSH for embedding
+  near-dup pairs, verified by exact cosine.
 - ``knn_ivf``: coarse-quantizer variant (IVF): assign every vector to
   its nearest of k sampled centroids, probe only matching cells.
 """
@@ -52,7 +54,7 @@ def knn_exact(
 ) -> DataFrame:
     """Brute-force top-k per query — cosine (descending score) or
     ``metric="l2"`` euclidean (ascending distance, the ground truth for
-    BucketedRandomProjectionLSH).
+    ``knn_lsh``).
 
     ``queries`` must be small (it is broadcast); ``corpus`` may be
     arbitrarily large — it is scanned once, never shuffled. Determinism:
@@ -168,50 +170,6 @@ def _probe_dim(df: DataFrame, vec_col: str, op_name: str) -> int:
     return len(row[0])
 
 
-def _with_ml_vector(df: DataFrame, array_col: str, out_col: str) -> DataFrame:
-    from pyspark.ml.functions import array_to_vector
-
-    return df.withColumn(out_col, array_to_vector(F.col(array_col).cast("array<double>")))
-
-
-def knn_lsh(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    bucket_length: float = 2.0,
-    num_hash_tables: int = 3,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """Approximate kNN via BucketedRandomProjectionLSH (Euclidean).
-
-    Scale path: the corpus is hashed once (one narrow pass); candidate
-    generation is a bucket equi-join, so work grows with collision
-    counts, not |corpus|×|queries|. Returns (query_id, corpus_id,
-    dist) — approximate, hence rows-only checked (no SQL oracle).
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-
-    c = _with_ml_vector(corpus, vec_col, "_features")
-    q = _with_ml_vector(queries, vec_col, "_features")
-    model = BucketedRandomProjectionLSH(
-        inputCol="_features",
-        outputCol="_hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_hash_tables,
-        seed=seed,
-    ).fit(c)
-    joined = model.approxSimilarityJoin(q, c, float("inf"), distCol="dist")
-    out = joined.select(
-        F.col(f"datasetA.{query_id}").alias(query_id),
-        F.col(f"datasetB.{corpus_id}").alias(corpus_id),
-        F.round("dist", 6).alias("dist"),
-    )
-    return top_k_per_group(out, [query_id], [F.asc("dist"), F.asc(corpus_id)], k=k)
-
-
 def _ivf_scored_candidates(
     queries: DataFrame,
     corpus: DataFrame,
@@ -314,7 +272,7 @@ def _ivf_assign_probe_topk(
     return top_k_per_group(cand, [query_id], [F.desc("score"), F.asc(corpus_id)], k=k)
 
 
-def knn_lsh_fast(
+def knn_lsh(
     queries: DataFrame,
     corpus: DataFrame,
     k: int,
@@ -325,12 +283,12 @@ def knn_lsh_fast(
     vec_col: str = "embedding",
     seed: int = 42,
 ) -> DataFrame:
-    """Approximate kNN via random-projection LSH (Euclidean), same hash
-    family as ``knn_lsh``'s BucketedRandomProjectionLSH —
+    """Approximate kNN via random-projection LSH (Euclidean):
     h_t(x) = floor(x·g_t / bucket_length) with seeded unit-gaussian
-    projections — implemented on the engine's own kernels instead of
-    pyspark.ml (whose approxSimilarityJoin explodes per-table hash rows
-    through two full shuffles; measured ~5 s → ~1.5 s at sf0.1).
+    projections g_t, one per hash table — the hash family of
+    BucketedRandomProjectionLSH, on the engine's own kernels (the
+    Spark ML approxSimilarityJoin explodes per-table hash rows through
+    two full shuffles; measured ~5 s → ~1.5 s at sf0.1).
 
     Plan: corpus is hashed in ONE narrow numpy pass (a (dim × tables)
     matmul per Arrow batch) → candidate generation joins the corpus
@@ -484,7 +442,7 @@ def cosine_lsh_pairs(
     is subquadratic; that's what the exact blocked-matmul
     ``cosine_pairs_above`` is for.)
 
-    Plan shape mirrors ``minhash_candidates_fast``: one narrow kernel
+    Plan shape mirrors ``dedup.minhash_neardup_pairs``: one narrow kernel
     pass computes band signatures (a matmul + bit-pack per Arrow
     batch), the only corpus-scale shuffle is the (band, sig) equi-join,
     and verification joins vectors for candidate pairs only (candidate
@@ -695,7 +653,7 @@ def knn_ivf_kmeans(
     sample (``fit_fraction``, capped at ``_FIT_CAP`` rows — at 100 TB
     pass ~1e5/|corpus|): a 16-cell fit over ≤100k×64 doubles is
     milliseconds of BLAS, vs ~10 distributed jobs (one per iteration)
-    for pyspark.ml KMeans. Sampling-to-driver for coarse-quantizer
+    for Spark ML KMeans. Sampling-to-driver for coarse-quantizer
     training is the standard IVF recipe; only the bounded sample ever
     leaves the executors. Assignment stays distributed (one vectorized
     kernel pass with the broadcast centroid matrix).
@@ -1601,7 +1559,7 @@ def lsh_buckets_deterministic(
 
     One narrow kernel pass with the (n_planes × d) matrix broadcast —
     no shuffle, no fit. Production LSH wants fresh random planes per
-    index build (`knn_lsh` / `embedding_lsh_pairs`); this variant
+    index build (`knn_lsh` / `cosine_lsh_pairs`); this variant
     trades that for full DuckDB replayability."""
     import hashlib
 

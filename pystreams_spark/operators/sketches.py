@@ -27,41 +27,63 @@ from ..functions.text_kernels import _MASK, _U64, _mix
 from .bloom import _H1_SALT, _H2_SALT
 
 
-def _cms_positions(h: np.ndarray, depth: int, width: int) -> np.ndarray:
-    """(n,) uint64 hashes → (depth, n) column indices, one row per hash
-    function via Kirsch–Mitzenmacher double hashing (pairwise-independent
-    enough for the CMS bound, one mix instead of ``depth`` rehashes)."""
+def _cms_positions(hs: list[np.ndarray], depth: int, width: int) -> np.ndarray:
+    """Engine-hash position family: one int64 hash column → (depth, n)
+    column indices, one row per hash function via Kirsch–Mitzenmacher
+    double hashing (pairwise-independent enough for the CMS bound, one
+    mix instead of ``depth`` rehashes)."""
+    h = hs[0].astype(_U64)
     h1 = _mix(h ^ _H1_SALT)
     h2 = _mix(h ^ _H2_SALT) | _U64(1)  # odd stride → full period
     i = np.arange(depth, dtype=_U64)[:, None]
-    return ((h1[None, :] + i * h2[None, :]) & _MASK) % _U64(width)
+    return (((h1[None, :] + i * h2[None, :]) & _MASK) % _U64(width)).astype(np.int64)
+
+
+def _cms_positions_portable(hs: list[np.ndarray], depth: int, width: int) -> np.ndarray:
+    """Portable (oracle-replayable) position family: the
+    Kirsch–Mitzenmacher pair (h1, h2) arrives as two md5-derived 60-bit
+    int64 COLUMNS and positions are plain (h1 + d·h2) mod width bigint
+    arithmetic — exactly replayable as SQL (h1 < 2^60, d·h2 < 2^62 → no
+    overflow on either engine). The engine-hash family stays the
+    production path (one xxhash64 instead of two md5s per row); this one
+    is its correctness anchor."""
+    h1, h2 = hs
+    i = np.arange(depth, dtype=np.int64)[:, None]
+    return (h1[None, :] + i * h2[None, :]) % np.int64(width)
 
 
 def build_count_min(
-    df: DataFrame, hash_col: str, width: int = 2048, depth: int = 5
+    df: DataFrame,
+    hash_cols: str | list[str],
+    width: int = 2048,
+    depth: int = 5,
+    positions=_cms_positions,
 ) -> bytes:
-    """One narrow pass over ``df[hash_col]`` (int64) → serialized
-    (depth x width) int64 counter matrix. Every occurrence counts once;
-    duplicates are NOT collapsed (this sketches the frequency
-    distribution, not the key set)."""
+    """One narrow pass over ``df[hash_cols]`` (int64) → serialized
+    (depth x width) int64 counter matrix, cells chosen by ``positions``
+    (``_cms_positions`` over one engine-hash column, or
+    ``_cms_positions_portable`` over an (h1, h2) pair). Every occurrence
+    counts once; duplicates are NOT collapsed (this sketches the
+    frequency distribution, not the key set)."""
     import pandas as pd
 
+    cols = [hash_cols] if isinstance(hash_cols, str) else list(hash_cols)
     w, d = int(width), int(depth)
 
     def to_matrices(batches):
         mat = np.zeros(d * w, dtype=np.int64)
         touched = False
         for pdf in batches:
-            h = pdf.iloc[:, 0].to_numpy(dtype=np.int64).astype(_U64)
-            if len(h):
+            hs = [pdf.iloc[:, j].to_numpy(dtype=np.int64) for j in range(len(cols))]
+            if len(hs[0]):
                 touched = True
-                pos = _cms_positions(h, d, w)  # (d, n)
+                pos = positions(hs, d, w)  # (d, n)
                 row_off = (np.arange(d, dtype=np.int64) * w)[:, None]
-                np.add.at(mat, (pos.astype(np.int64) + row_off).reshape(-1), 1)
+                np.add.at(mat, (pos + row_off).reshape(-1), 1)
         if touched:
             yield pd.DataFrame({"mat": [mat.tobytes()]})
 
-    parts = df.select(F.col(hash_col)).mapInPandas(to_matrices, "mat binary")
+    parts = df.select(*cols).mapInPandas(to_matrices, "mat binary")
 
     def _add(a: bytes, b) -> bytes:
         bb = b.mat if hasattr(b, "mat") else b
@@ -79,102 +101,23 @@ def cms_total(cms: bytes, depth: int = 5) -> int:
     return int(mat[0].sum())
 
 
-def cms_estimate_udf(spark, cms: bytes, depth: int = 5):
-    """Vectorized point-query: int64 hash column → estimated count
-    (min over the depth rows). The matrix ships once per executor via a
-    Spark broadcast. Guarantees: estimate >= true count, always."""
+def cms_estimate_udf(spark, cms: bytes, depth: int = 5, positions=_cms_positions):
+    """Vectorized point-query: the int64 hash column(s) ``positions``
+    takes → estimated count (min over the depth rows). The matrix ships
+    once per executor via a Spark broadcast. Guarantees: estimate >=
+    true count, always."""
     import pandas as pd
 
     mat0 = np.frombuffer(cms, dtype=np.int64).reshape(depth, -1)
     width = mat0.shape[1]
     bc = spark.sparkContext.broadcast(cms)
 
-    def kernel(hashes):
+    def kernel(*cols):
         mat = np.frombuffer(bc.value, dtype=np.int64).reshape(depth, width)
-        h = hashes.to_numpy(dtype=np.int64).astype(_U64)
-        if not len(h):
+        hs = [c.to_numpy(dtype=np.int64) for c in cols]
+        if not len(hs[0]):
             return pd.Series([], dtype=np.int64)
-        pos = _cms_positions(h, depth, width).astype(np.int64)
-        ests = mat[np.arange(depth)[:, None], pos].min(axis=0)
-        return pd.Series(ests)
-
-    return F.pandas_udf(kernel, "long")
-
-
-# ---------------------------------------------------------------------------
-# portable (oracle-replayable) CMS variant — r9, VERDICT r8 #6's
-# recipe applied to the sketch family: the SAME distributed build
-# skeleton (per-partition local matrices → treeAggregate sum), but the
-# Kirsch–Mitzenmacher pair (h1, h2) comes in as two md5-derived 60-bit
-# COLUMNS instead of the numpy mixer, and positions are plain
-# (h1 + d·h2) mod width bigint arithmetic — exactly replayable as SQL
-# (h1 < 2^60, d·h2 < 2^62 → no overflow on either engine). The
-# engine-hash variant above stays the production path (one xxhash64
-# instead of two md5s per row); this one is its correctness anchor.
-# ---------------------------------------------------------------------------
-
-
-def _cms_positions_portable(
-    h1: np.ndarray, h2: np.ndarray, depth: int, width: int
-) -> np.ndarray:
-    i = np.arange(depth, dtype=np.int64)[:, None]
-    return (h1[None, :] + i * h2[None, :]) % np.int64(width)
-
-
-def build_count_min_portable(
-    df: DataFrame, h1_col: str, h2_col: str,
-    width: int = 2048, depth: int = 5,
-) -> bytes:
-    """`build_count_min` with the portable position family."""
-    import pandas as pd
-
-    w, d = int(width), int(depth)
-
-    def to_matrices(batches):
-        mat = np.zeros(d * w, dtype=np.int64)
-        touched = False
-        for pdf in batches:
-            h1 = pdf.iloc[:, 0].to_numpy(dtype=np.int64)
-            h2 = pdf.iloc[:, 1].to_numpy(dtype=np.int64)
-            if len(h1):
-                touched = True
-                pos = _cms_positions_portable(h1, h2, d, w)
-                row_off = (np.arange(d, dtype=np.int64) * w)[:, None]
-                np.add.at(mat, (pos + row_off).reshape(-1), 1)
-        if touched:
-            yield pd.DataFrame({"mat": [mat.tobytes()]})
-
-    parts = df.select(F.col(h1_col), F.col(h2_col)).mapInPandas(
-        to_matrices, "mat binary"
-    )
-
-    def _add(a: bytes, b) -> bytes:
-        bb = b.mat if hasattr(b, "mat") else b
-        return (
-            np.frombuffer(a, dtype=np.int64)
-            + np.frombuffer(bb, dtype=np.int64)
-        ).tobytes()
-
-    zero = bytes(d * w * 8)
-    return parts.rdd.treeAggregate(zero, _add, _add, depth=2)
-
-
-def cms_estimate_portable_udf(spark, cms: bytes, depth: int = 5):
-    """Point-query mirror of `cms_estimate_udf` for the portable
-    family: (h1, h2) columns → min over the depth rows."""
-    import pandas as pd
-
-    mat0 = np.frombuffer(cms, dtype=np.int64).reshape(depth, -1)
-    width = mat0.shape[1]
-    bc = spark.sparkContext.broadcast(cms)
-
-    def kernel(h1s, h2s):
-        mat = np.frombuffer(bc.value, dtype=np.int64).reshape(depth, width)
-        h1 = h1s.to_numpy(dtype=np.int64)
-        h2 = h2s.to_numpy(dtype=np.int64)
-        if not len(h1):
-            return pd.Series([], dtype=np.int64)
-        pos = _cms_positions_portable(h1, h2, depth, width)
+        pos = positions(hs, depth, width)
         ests = mat[np.arange(depth)[:, None], pos].min(axis=0)
         return pd.Series(ests)
 

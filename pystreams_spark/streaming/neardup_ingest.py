@@ -45,11 +45,10 @@ from pyspark.sql import functions as F
 
 from ..operators.dedup import (
     _banded_candidate_pairs,
-    _minhash_bands_udf,
+    _minhash_signatures,
     _verify_pairs_jaccard,
     cc_keep_min,
 )
-from ..functions.text_kernels import hashed_shingles_udf
 
 __all__ = ["NeardupIngest"]
 
@@ -164,23 +163,11 @@ class NeardupIngest:
         id_col, epoch_id = self.id_col, int(epoch_id)
         self._check_params(spark)
 
-        # 1. tokenize once: shingles + band signatures, checkpointed so
-        # the self-join/verify/store lineages share ONE kernel pass
-        sh = (
-            batch.select(
-                F.col(id_col), hashed_shingles_udf(self.n)(F.col(self.text_col)).alias("_sh")
-            )
-            .localCheckpoint(eager=True)
-        )
-        sigs = (
-            sh.filter(F.size("_sh") > 0)
-            .select(
-                F.col(id_col),
-                _minhash_bands_udf(self.bands, self.rows_per_band, self.seed)(
-                    F.col("_sh")
-                ).alias("_bands"),
-            )
-            .localCheckpoint(eager=True)
+        # 1. tokenize once: shingles + band signatures, pinned so the
+        # self-join/verify/store lineages share ONE kernel pass
+        sh, sigs = _minhash_signatures(
+            batch, self.n, self.bands, self.rows_per_band, self.seed,
+            text_col=self.text_col, id_col=id_col,
         )
 
         # 2. intra-batch: candidates → verify → CC → min-id survivors

@@ -13,7 +13,7 @@ from pystreams_spark.operators.dedup import (
     cc_keep_min,
     duplicate_clusters_md5,
     exact_dedup_hashed,
-    minhash_candidates,
+    minhash_neardup_pairs,
     ngram_jaccard_pairs,
 )
 from pystreams_spark.operators.joins import asof_join, interval_join
@@ -103,36 +103,38 @@ def test_percentile_approx_error_bound(spark, sf_dir):
     assert abs(approx - exact) / exact < 0.02
 
 
-def test_minhash_recall_vs_exact_jaccard(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents").limit(200)
+def _check_minhash_recall_and_threshold(spark, sf_dir, bands, rows_per_band, exact_tau):
+    n_docs = 250
+    docs = load_table(spark, sf_dir, "documents").limit(n_docs)
     exact = {
         (r.id_a, r.id_b)
-        for r in ngram_jaccard_pairs(docs, threshold=0.4, n=3).collect()
+        for r in ngram_jaccard_pairs(docs, threshold=exact_tau, n=3).collect()
     }
-    cand = {
-        (r.id_a, r.id_b)
-        for r in minhash_candidates(docs, threshold=0.3, n=3).collect()
-    }
+    rows = minhash_neardup_pairs(
+        docs, n=3, bands=bands, rows_per_band=rows_per_band, threshold=0.3
+    ).collect()
+    # every reported pair really is ≥ threshold (verify stage is exact)
+    assert all(r.jaccard >= 0.3 for r in rows)
     if exact:
-        recall = len(exact & cand) / len(exact)
-        assert recall >= 0.8, f"minhash recall too low: {recall}"
+        got = {(r.id_a, r.id_b) for r in rows}
+        recall = len(exact & got) / len(exact)
+        assert recall >= 0.8, f"{bands}x{rows_per_band} minhash recall too low: {recall}"
+    if rows_per_band > 1:
+        # width-r bands must not degenerate to all-pairs candidates
+        # (width-1 bands admit most pairs); threshold 0 keeps them all
+        cand = minhash_neardup_pairs(
+            docs, n=3, bands=bands, rows_per_band=rows_per_band, threshold=0.0
+        ).count()
+        all_pairs = n_docs * (n_docs - 1) / 2
+        assert cand < 0.2 * all_pairs, f"{cand} candidates of {all_pairs}"
 
 
 def test_minhash_fast_recall_and_threshold(spark, sf_dir):
-    from pystreams_spark.operators.dedup import minhash_candidates_fast
+    _check_minhash_recall_and_threshold(spark, sf_dir, 4, 1, 0.4)
 
-    docs = load_table(spark, sf_dir, "documents").limit(200)
-    exact = {
-        (r.id_a, r.id_b)
-        for r in ngram_jaccard_pairs(docs, threshold=0.4, n=3).collect()
-    }
-    rows = minhash_candidates_fast(docs, threshold=0.3, n=3).collect()
-    cand = {(r.id_a, r.id_b) for r in rows}
-    # every reported pair really is ≥ threshold (verify stage is exact)
-    assert all(r.est_jaccard >= 0.3 for r in rows)
-    if exact:
-        recall = len(exact & cand) / len(exact)
-        assert recall >= 0.8, f"fast minhash recall too low: {recall}"
+
+def test_minhash_banded_recall_and_precision(spark, sf_dir):
+    _check_minhash_recall_and_threshold(spark, sf_dir, 8, 2, 0.5)
 
 
 def test_knn_lsh_recall_vs_exact(spark, sf_dir):
@@ -150,24 +152,13 @@ def test_knn_lsh_recall_vs_exact(spark, sf_dir):
         (r.query_id, r.vec_id)
         for r in top_k_per_group(joined, ["query_id"], [F.asc("d"), F.asc("vec_id")], 10).collect()
     }
-    approx = {
-        (r.query_id, r.vec_id)
-        for r in knn_lsh(q, c, k=10, num_hash_tables=5, bucket_length=4.0).collect()
-    }
+    rows = knn_lsh(q, c, k=10, num_hash_tables=5, bucket_length=4.0).collect()
+    approx = {(r.query_id, r.vec_id) for r in rows}
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.6, f"LSH recall too low: {recall}"
-
-    # kernel-path variant: same hash family, same contract, must reach
-    # the same recall bar and return sane distances
-    from pystreams_spark.operators.similarity import knn_lsh_fast
-
-    fast_rows = knn_lsh_fast(q, c, k=10, num_hash_tables=5, bucket_length=4.0).collect()
-    fast = {(r.query_id, r.vec_id) for r in fast_rows}
-    fast_recall = len(exact & fast) / len(exact)
-    assert fast_recall >= 0.6, f"fast LSH recall too low: {fast_recall}"
-    assert all(r.dist >= 0 for r in fast_rows)
+    assert all(r.dist >= 0 for r in rows)
     per_q: dict = {}
-    for r in fast_rows:
+    for r in rows:
         per_q.setdefault(r.query_id, []).append(r.dist)
     assert all(ds == sorted(ds) for ds in per_q.values())
 
@@ -718,8 +709,9 @@ def test_reliable_checkpoint_paths_match_local(spark, sf_dir, tmp_path):
 
 
 def test_simhash_similar_docs_close_hamming(spark):
-    from pystreams_spark.operators.dedup import simhash
+    from pystreams_spark.functions.text_kernels import simhash_from_text_udf
 
+    simhash = simhash_from_text_udf(2)
     base = "the quick brown fox jumps over the lazy dog again and again today"
     near = base.replace("today", "tomorrow")
     far = "completely different words about database query optimization engines"
@@ -735,27 +727,6 @@ def test_simhash_similar_docs_close_hamming(spark):
     # determinism
     sigs2 = {r.doc_id: r.sig for r in df.select("doc_id", simhash("text").alias("sig")).collect()}
     assert sigs == sigs2
-
-
-def test_minhash_banded_recall_and_precision(spark, sf_dir):
-    from pystreams_spark.operators.dedup import minhash_banded_candidates
-
-    docs = load_table(spark, sf_dir, "documents")
-    exact_hi = {
-        (r.id_a, r.id_b)
-        for r in ngram_jaccard_pairs(docs.limit(250), threshold=0.5, n=3).collect()
-    }
-    cand = {
-        (r.id_a, r.id_b)
-        for r in minhash_banded_candidates(docs.limit(250), n=3).collect()
-    }
-    n_docs = 250
-    all_pairs = n_docs * (n_docs - 1) / 2
-    # banding must not degenerate to all-pairs (the ml-lib failure mode)
-    assert len(cand) < 0.2 * all_pairs, f"{len(cand)} candidates of {all_pairs}"
-    if exact_hi:
-        recall = len(exact_hi & cand) / len(exact_hi)
-        assert recall >= 0.8, f"banded minhash recall {recall} on {len(exact_hi)} pairs"
 
 
 def test_asof_forward_and_tolerance_vs_pandas(spark):
@@ -2124,7 +2095,6 @@ def test_minhash_banding_curve_matches_empirical_rate(spark):
     """The published S-curve P=1-(1-j^r)^b must predict the EMPIRICAL
     banded-candidate rate: for pairs at controlled Jaccard, the b=8,r=2
     banding's hit rate falls inside a tolerance of the formula."""
-    from pystreams_spark.operators.dedup import minhash_banded_candidates
     from pystreams_spark.queries import QUERIES
 
     curve = {
@@ -2143,7 +2113,7 @@ def test_minhash_banding_curve_matches_empirical_rate(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     cands = {
         (r.id_a, r.id_b)
-        for r in minhash_banded_candidates(docs, n=3).select("id_a", "id_b").collect()
+        for r in minhash_neardup_pairs(docs, n=3, threshold=0.0).collect()
     }
     planted = {(2 * p, 2 * p + 1) for p in range(60)}
     rate = len(cands & planted) / len(planted)
