@@ -103,8 +103,10 @@ def _quantize(arg: str, acc: str = "decimal(38,0)") -> str:
     sum. Bit-identical within the contract's documented per-value
     bound (|round(arg)| < 2^52): round() output is an integral double,
     so the bigint cast is exact and yields the same integer the direct
-    decimal cast did. Outside the bound the forms differ (bigint
-    saturates at 2^63−1, NaN→0 instead of NULL) — but off-grid /
+    decimal cast did. Outside the bound the forms differ (past 2^63 and
+    at NaN the bigint cast raises under ANSI mode, Spark 4's default,
+    and saturates / yields 0 without it, where the decimal cast gave
+    NULL; pinned in tests/test_exact.py) — but off-grid /
     non-finite values were already outside the contract, and the
     DuckDB fragments have always cast per value to BIGINT (which
     raises there), so the cross-engine posture is unchanged:

@@ -945,10 +945,13 @@ def _banded_candidate_pairs(
     )
 
 
-def _minhash_bands_udf(bands: int, rows_per_band: int, seed: int):
-    """Vectorized kernel: array<long> shingle hashes → array<long> of
-    ``bands`` band signatures (each = hash of ``rows_per_band`` minhash
-    values under distinct permutation salts).
+def _minhash_udf(n: int, bands: int, rows_per_band: int, seed: int):
+    """Vectorized kernel: text → struct of ``_sh``, the doc's distinct
+    hashed word-``n``-gram shingles (sorted, as ``hashed_shingles_udf``
+    gives them), and ``_bands``, its ``bands`` band signatures (each =
+    hash of ``rows_per_band`` minhash values under distinct permutation
+    salts; NULL for a doc with no shingles). One Python pass yields
+    both, so the text crosses the Arrow boundary once.
 
     Why a kernel: k permutation-mins per row would be k interpreted HOF
     traversals in Column algebra — and worse, CollapseProject inlines
@@ -960,29 +963,23 @@ def _minhash_bands_udf(bands: int, rows_per_band: int, seed: int):
     import numpy as np
     import pandas as pd
 
-    from ..functions.text_kernels import _band_sigs_from_hashes
+    from ..functions.text_kernels import _band_sigs_from_hashes, _hashed_shingle_sets
 
     k = bands * rows_per_band
     rng = np.random.RandomState(seed)
     salts = rng.randint(0, 2**63 - 1, size=k, dtype=np.int64).astype(np.uint64)
 
-    def kernel(hashes):
-        lens = np.array([0 if h is None else len(h) for h in hashes], dtype=np.int64)
-        if len(lens) == 0 or lens.sum() == 0:
-            return pd.Series([None] * len(hashes))
-        # flatten all rows into one array; per-row mins via reduceat —
-        # no per-row Python loop (the loop version cost ~1 ms/row)
-        flat = np.concatenate(
-            [np.asarray(h, dtype=np.int64) for h in hashes if h is not None and len(h)]
-        ).astype(np.uint64)
-        band_sigs = _band_sigs_from_hashes(flat, lens, salts, bands, rows_per_band)
-        out = np.empty(len(hashes), dtype=object)
-        nz = lens > 0
-        for i in np.where(nz)[0]:
-            out[i] = band_sigs[i].tolist()
-        return pd.Series(out)
+    def kernel(texts):
+        h, counts = _hashed_shingle_sets(texts.to_numpy(dtype=object), n)
+        band_sigs = _band_sigs_from_hashes(h, counts, salts, bands, rows_per_band)
+        signed = h.astype(np.int64)
+        offsets = np.concatenate(([0], np.cumsum(counts)))
+        return pd.DataFrame({
+            "_sh": [signed[offsets[i] : offsets[i + 1]].tolist() for i in range(len(counts))],
+            "_bands": [band_sigs[i].tolist() if c else None for i, c in enumerate(counts)],
+        })
 
-    return F.pandas_udf(kernel, "array<long>")
+    return F.pandas_udf(kernel, "struct<_sh: array<long>, _bands: array<long>>")
 
 
 def simhash_deterministic_candidates(
@@ -1336,28 +1333,19 @@ def _minhash_signatures(
     seed: int,
     text_col: str = "text",
     id_col: str = "doc_id",
-    checkpoint_dir: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """(hashed-shingle frame ``id_col`` + ``_sh``, band-signature frame
-    ``id_col`` + ``_bands``), both materialized. One narrow kernel pass
-    tokenizes the text; its pinned output feeds BOTH the band signatures
-    and the exact-Jaccard verify, so the text is tokenized once. The
-    (tiny) signature table is pinned too — both sides of the banded
-    self-join and broadcast_if_small's count would otherwise each re-run
-    the minhash kernel stage (the reproducible 30× r2 bench regression
+) -> DataFrame:
+    """Lazy (``id_col``, ``_sh`` hashed shingles, ``_bands`` band
+    signatures) frame from one narrow kernel pass over the text. The
+    banded self-join, broadcast_if_small's count and the exact-Jaccard
+    verify all read it, so callers pin it once — ``materialize`` in the
+    batch path, the state write in ``NeardupIngest`` — or each consumer
+    re-runs the kernel stage (the reproducible 30× r2 bench regression
     on the near-dup pipeline)."""
-    sh = materialize(
-        df.select(F.col(id_col), hashed_shingles_udf(n)(F.col(text_col)).alias("_sh")),
-        checkpoint_dir,
+    m = df.select(
+        F.col(id_col),
+        _minhash_udf(n, bands, rows_per_band, seed)(F.col(text_col)).alias("_m"),
     )
-    sigs = materialize(
-        sh.filter(F.size("_sh") > 0).select(
-            F.col(id_col),
-            _minhash_bands_udf(bands, rows_per_band, seed)(F.col("_sh")).alias("_bands"),
-        ),
-        checkpoint_dir,
-    )
-    return sh, sigs
+    return m.select(id_col, "_m._sh", "_m._bands")
 
 
 def minhash_neardup_pairs(
@@ -1383,12 +1371,15 @@ def minhash_neardup_pairs(
     (``_verify_pairs_jaccard``), so precision is 1 and only recall is
     probabilistic. ``threshold=0`` returns every candidate pair.
     ``checkpoint_dir`` as in ``io.materialize``."""
-    sh, sigs = _minhash_signatures(
-        ensure_parallelism(df), n, bands, rows_per_band, seed,
-        text_col=text_col, id_col=id_col, checkpoint_dir=checkpoint_dir,
+    sigs = materialize(
+        _minhash_signatures(
+            ensure_parallelism(df), n, bands, rows_per_band, seed,
+            text_col=text_col, id_col=id_col,
+        ),
+        checkpoint_dir,
     )
     cands = _banded_candidate_pairs(sigs, id_col=id_col)
-    return _verify_pairs_jaccard(sh, sh, cands, threshold, id_col=id_col)
+    return _verify_pairs_jaccard(sigs, sigs, cands, threshold, id_col=id_col)
 
 
 def neardup_dedup(

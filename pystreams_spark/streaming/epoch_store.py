@@ -1,21 +1,34 @@
-"""Shared epoch-partitioned state-store reader for the foreachBatch
-ingests (SURVEY §2.I) — the ``_SUCCESS`` commit filter, hardened
-(ADVICE r10).
+"""Shared epoch-partitioned state store for the foreachBatch ingests
+(SURVEY §2.I): the parameter binding, the per-epoch write and the
+``_SUCCESS`` commit filter, hardened (ADVICE r10).
 
 The ingests (`NeardupIngest`, `NoveltyIngest`, `ImagedupIngest`) write
 their cross-batch state as ``<root>/epoch=<n>/`` parquet directories
 and read back "everything committed strictly before the current
-epoch". A crash mid-write leaves an ``epoch=N`` directory without its
-``_SUCCESS`` marker; the streaming checkpoint then REPLAYS batch N
-under the same epoch id, so the torn directory is (a) excluded from
-the store read by the epoch bound itself and (b) overwritten by the
-replay. That makes the marker filter a backstop — and it means a
-marker-less directory STRICTLY OLDER than the replay horizon is not a
-torn write at all: nothing will ever rewrite it, so silently skipping
-it would silently disable cross-batch dedup for those signatures (the
-exact silent-recall-hole this store exists to prevent). Two
-non-crash ways to get there, both configuration bugs, both now fail
-loudly instead of silently:
+epoch". Each micro-batch runs in this order:
+
+1. ``check_params`` binds the store to its parameters with Hadoop
+   FileSystem calls (no Spark job), once per ingest instance,
+2. ``committed_epoch_dirs`` lists the committed epochs ``< e`` BEFORE
+   anything is written, so a refusal (below) leaves no side effect,
+3. ``write_epoch`` writes the batch's state to ``epoch=<e>`` and hands
+   back the directory read back: that write is the batch's only pin,
+   and the intra-batch, cross-batch and output lineages all read it,
+4. the output is written the same way to ``out/epoch=<e>``.
+
+A crash after step 3 leaves a committed ``epoch=e`` state directory
+with no output; the streaming checkpoint then REPLAYS batch e under the
+same epoch id, whose store read is bounded to ``epoch < e`` and whose
+writes overwrite, so the replay recomputes the same state and output —
+exactly-once. A crash mid-write leaves an ``epoch=N`` directory without
+its ``_SUCCESS`` marker; the epoch bound excludes it from its own
+replay's read and the replay overwrites it. That makes the marker
+filter a backstop — and it means a marker-less directory STRICTLY OLDER
+than the replay horizon is not a torn write at all: nothing will ever
+rewrite it, so silently skipping it would silently disable cross-batch
+dedup for those signatures (the exact silent-recall-hole this store
+exists to prevent). Two non-crash ways to get there, both configuration
+bugs, both now fail loudly instead of silently:
 
 - ``mapreduce.fileoutputcommitter.marksuccessfuljobs=false`` — every
   epoch is marker-less, the store reads as permanently empty.
@@ -30,9 +43,16 @@ and the first task commit) genuinely carries no data and is skipped.
 
 from __future__ import annotations
 
+import json
+
 from pyspark.sql import DataFrame, SparkSession
 
-__all__ = ["assert_markers_enabled", "committed_epoch_dirs", "read_epoch_store"]
+__all__ = [
+    "assert_markers_enabled",
+    "check_params",
+    "committed_epoch_dirs",
+    "write_epoch",
+]
 
 _MARK_KEY = "mapreduce.fileoutputcommitter.marksuccessfuljobs"
 
@@ -102,12 +122,61 @@ def committed_epoch_dirs(
     return committed
 
 
-def read_epoch_store(
-    spark: SparkSession, root: str, before_epoch: int, who: str
-) -> DataFrame | None:
-    """The store as of (strictly before) ``before_epoch``; None when
-    nothing committed yet."""
-    committed = committed_epoch_dirs(spark, root, before_epoch, who)
-    if not committed:
-        return None
-    return spark.read.parquet(*committed)
+def check_params(
+    spark: SparkSession, state_dir: str, params: dict, who: str, why: str
+) -> None:
+    """Bind ``state_dir`` to ``params`` on first use and REFUSE different
+    ones later: a changed seed, banding or gram width against an
+    existing store would make new state silently never match the stored
+    state. ``why`` names that failure in the refusal.
+
+    The binding is ``state_dir/_params/part-00000`` (one JSON line) plus
+    ``_SUCCESS`` — the layout Spark's text writer leaves, so stores
+    bound by it verify too — written and read with Hadoop
+    FileSystem calls: no Spark job. A ``_params`` directory without a
+    part file (a crash before the first write) is bound afresh."""
+    sc = spark.sparkContext
+    hpath = sc._jvm.org.apache.hadoop.fs.Path
+    path = hpath(f"{state_dir}/_params")
+    fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+    listed = fs.listStatus(path) if fs.exists(path) else []
+    parts = sorted(
+        (st.getPath() for st in listed if st.getPath().getName().startswith("part-")),
+        key=lambda p: p.getName(),
+    )
+    if not parts:
+        line = json.dumps(params, sort_keys=True) + "\n"
+        out = fs.create(hpath(path, "part-00000"), True)
+        try:
+            out.write(bytearray(line, "utf-8"))
+        finally:
+            out.close()
+        fs.create(hpath(path, "_SUCCESS"), True).close()
+        return
+    read = sc._jvm.org.apache.commons.io.IOUtils.toString
+    text = []
+    for part in parts:
+        stream = fs.open(part)
+        try:
+            text.append(read(stream, "UTF-8"))
+        finally:
+            stream.close()
+    stored = json.loads("".join(text))
+    if stored != params:
+        raise ValueError(
+            f"{who}: state at {state_dir} was built with {stored}, current "
+            f"instance uses {params} — {why}. Use the original parameters "
+            "or a fresh state_dir."
+        )
+
+
+def write_epoch(df: DataFrame, root: str, epoch: int) -> DataFrame:
+    """Overwrite ``root/epoch=<epoch>`` with ``df`` and return that
+    directory read back. The write is the frame's one materialization:
+    consumers of the returned frame scan the parquet instead of
+    re-running ``df``'s lineage. Read with ``df``'s schema, so the
+    read-back runs no schema-inference job."""
+    path = f"{root}/epoch={epoch}"
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
+

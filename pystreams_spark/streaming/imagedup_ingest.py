@@ -4,20 +4,25 @@ the r10 `operators/imagehash` batch pipeline, for the "media corpus
 grows forever" shape (crawl landing zones where the same photo keeps
 re-arriving re-encoded and resized).
 
-Per micro-batch (driven by ``foreachBatch``):
+Per micro-batch (driven by ``foreachBatch``; the store plumbing is
+`epoch_store`'s):
 
-1. decode+hash ONCE: one Arrow kernel pass attaches each payload's
-   60-bit integer-exact dHash (`imagehash.image_dhash`, the same
-   kernel the batch query runs — payloads never leave it),
-2. intra-batch dedup: banded-Hamming self-pairs → connected
+1. params check and store listing: the hash/banding parameters are
+   bound to the store (FileSystem calls, no Spark job), and the committed
+   epochs ``< e`` are listed BEFORE anything is written,
+2. decode+hash ONCE, state write first: one Arrow kernel pass attaches
+   each payload's 60-bit integer-exact dHash (`imagehash.image_dhash`,
+   the same kernel the batch query runs — payloads never leave it),
+   written straight to the SIGNATURE STORE as ``sigs/epoch=e`` — ALL
+   batch signatures, dropped ones included, so duplicate CHAINS work
+   across batches exactly as in batch CC. That write is the batch's
+   only pin: every step below reads it back,
+3. intra-batch dedup: banded-Hamming self-pairs → connected
    components → min-id survivor per cluster,
-3. cross-batch dedup: 4×15-bit band keys of the batch signatures
-   equi-join the accumulated SIGNATURE STORE (parquet, one directory
-   per epoch), bit_count-XOR verify ≤ ``max_hamming``, drop any batch
-   image verified-similar to ANY earlier image,
-4. state update: ALL batch signatures (dropped ones included) append
-   to the store, so duplicate CHAINS work across batches exactly as
-   in batch CC,
+4. cross-batch dedup: 4×15-bit band keys of the batch signatures
+   equi-join the committed epochs listed in step 1, bit_count-XOR
+   verify ≤ ``max_hamming``, drop any batch image verified-similar to
+   ANY earlier image,
 5. exactly-once under replay AND dirty crashes: epoch-dir idempotent
    overwrite writes; the store read enumerates only ``epoch=N`` dirs
    with a ``_SUCCESS`` marker and ``N <`` the current epoch (the
@@ -42,6 +47,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .epoch_store import (
+    assert_markers_enabled,
+    check_params,
+    committed_epoch_dirs,
+    write_epoch,
+)
 
 __all__ = ["ImagedupIngest"]
 
@@ -75,6 +87,7 @@ class ImagedupIngest:
         self.w_cells = w_cells
         self.payload_col = payload_col
         self.id_col = id_col
+        self._params_checked = False
 
     # -- state ---------------------------------------------------------------
 
@@ -87,61 +100,18 @@ class ImagedupIngest:
         }
 
     def _check_params(self, spark: SparkSession) -> None:
-        """Persist the hash/banding parameters next to the store on
-        first use and REFUSE different ones later: a changed grid or
-        banding makes new signatures silently never match stored ones
-        — duplicates would leak through with no error (the
-        ``NeardupIngest`` contract). Also refuses a session configured
-        not to write ``_SUCCESS`` markers (ADVICE r10)."""
-        import json
-
-        from .epoch_store import assert_markers_enabled
-
+        """The ``NeardupIngest`` contract: refuse a store bound to other
+        hash/banding parameters — a changed grid or banding makes new
+        signatures silently never match stored ones — and a session
+        that writes no ``_SUCCESS`` markers."""
         assert_markers_enabled(spark, "ImagedupIngest")
-        # r12: memoized after first success (file immutable, written
-        # only here) — was one read job + collect EVERY micro-batch
-        if getattr(self, "_params_checked", False):
-            return
-
-        from pyspark.errors import AnalysisException
-
-        path = f"{self.state_dir}/_params"
-        try:
-            stored = json.loads(
-                spark.read.text(path).agg(
-                    F.concat_ws("", F.collect_list("value"))
-                ).first()[0]
+        if not self._params_checked:
+            check_params(
+                spark, self.state_dir, self._params(), "ImagedupIngest",
+                "a changed hash grid or banding makes signatures silently "
+                "never match",
             )
-        except AnalysisException:
-            spark.createDataFrame(
-                [(json.dumps(self._params(), sort_keys=True),)],
-                "value string",
-            ).coalesce(1).write.mode("overwrite").text(path)
             self._params_checked = True
-            return
-        if stored != self._params():
-            raise ValueError(
-                f"ImagedupIngest: state at {self.state_dir} was built "
-                f"with {stored}, current instance uses {self._params()} "
-                "— signatures would silently never match. Use the "
-                "original parameters or a fresh state_dir."
-            )
-        self._params_checked = True
-
-    def _store(
-        self, spark: SparkSession, before_epoch: int
-    ) -> DataFrame | None:
-        """Signature store as of (strictly before) ``before_epoch`` —
-        the hardened shared commit filter (`epoch_store`, ADVICE r10):
-        committed epochs are read, torn (empty marker-less) epochs are
-        skipped, and a marker-less OLD epoch holding part files raises
-        instead of silently dropping its signatures from dedup; None
-        when nothing committed yet."""
-        from .epoch_store import read_epoch_store
-
-        return read_epoch_store(
-            spark, f"{self.state_dir}/sigs", before_epoch, "ImagedupIngest"
-        )
 
     def survivors(self, spark: SparkSession) -> DataFrame:
         """All survivor rows emitted so far (union of epoch outputs)."""
@@ -176,9 +146,13 @@ class ImagedupIngest:
         id_col, epoch_id = self.id_col, int(epoch_id)
         self._check_params(spark)
 
-        # 1. decode+hash once; checkpointed so the self-join / cross-
-        # join / store lineages share ONE Arrow kernel pass
-        sig = (
+        # 1. the committed epochs < e, listed before any write
+        root = f"{self.state_dir}/sigs"
+        dirs = committed_epoch_dirs(spark, root, epoch_id, "ImagedupIngest")
+
+        # 2. decode+hash once; the state write is the pin the self-join,
+        # cross-join and output lineages read
+        sig = write_epoch(
             image_dhash(
                 batch.select(id_col, self.payload_col),
                 payload_col=self.payload_col,
@@ -186,12 +160,12 @@ class ImagedupIngest:
                 h_cells=self.h_cells,
                 w_cells=self.w_cells,
                 on_undecodable="error",
-            )
-            .select(id_col, "dhash")
-            .localCheckpoint(eager=True)
+            ).select(id_col, "dhash"),
+            root,
+            epoch_id,
         )
 
-        # 2. intra-batch: banded pairs → CC → min-id survivors
+        # 3. intra-batch: banded pairs → CC → min-id survivors
         intra = banded_hamming_pairs(
             sig, id_col=id_col, sig_col="dhash",
             bands=self.bands, band_bits=self.band_bits,
@@ -202,9 +176,10 @@ class ImagedupIngest:
             F.col(id_col) != F.col("cluster_id")
         ).select(id_col)
 
-        # 3. cross-batch: batch signatures vs the committed store
-        store = self._store(spark, epoch_id)
-        if store is not None:
+        # 4. cross-batch: batch signatures vs the committed store, read
+        # with the batch state's schema (no inference job)
+        if dirs:
+            store = spark.read.schema(sig.schema).parquet(*dirs)
             cands = (
                 self._bands_of(store, "id_a")
                 .join(self._bands_of(sig, "id_b"), ["band", "val"])
@@ -225,19 +200,16 @@ class ImagedupIngest:
                     <= self.max_hamming
                 )
                 .select(F.col("id_b").alias(id_col))
-                .distinct()
             )
-            dropped = dropped.unionByName(cross_dropped).distinct()
+            # no distinct: the anti-join below ignores repeats
+            dropped = dropped.unionByName(cross_dropped)
 
-        survivors = batch.join(dropped, id_col, "left_anti")
-
-        # 4./5. idempotent epoch writes; the store read above never
-        # sees its own (or any uncommitted) epoch → exactly-once
-        sig.write.mode("overwrite").parquet(
-            f"{self.state_dir}/sigs/epoch={epoch_id}"
-        )
-        survivors.write.mode("overwrite").parquet(
-            f"{self.state_dir}/out/epoch={epoch_id}"
+        # 5. idempotent output write; the store read above never sees
+        # its own (or any uncommitted) epoch → exactly-once
+        write_epoch(
+            batch.join(dropped, id_col, "left_anti"),
+            f"{self.state_dir}/out",
+            epoch_id,
         )
 
     def foreach_batch(self):

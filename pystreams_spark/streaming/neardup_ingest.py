@@ -3,24 +3,30 @@ STREAM against everything ingested before it — the streaming face of
 `operators/dedup.neardup_dedup` for the "corpus grows forever" shape
 (crawl ingestion, data-feed landing zones).
 
-Per micro-batch (driven by ``foreachBatch``):
+Per micro-batch (driven by ``foreachBatch``; the store plumbing is
+`epoch_store`'s):
 
-1. tokenize ONCE: one kernel pass yields each doc's hashed shingle set
-   and banded MinHash signatures (same kernels as the batch path),
-2. intra-batch dedup: banded self-join → exact-Jaccard verify →
+1. params check and store listing: the signature parameters are bound
+   to the store (FileSystem calls, no Spark job), and the committed epochs
+   ``< e`` are listed BEFORE anything is written,
+2. tokenize once, state write first: one kernel pass yields each doc's
+   hashed shingle set and banded MinHash signatures (the batch path's
+   kernel), written straight to the SIGNATURE STORE as ``sigs/epoch=e``
+   — ALL batch docs, dropped ones included, so duplicate CHAINS work
+   across batches exactly as in batch CC (c dropped because it matches
+   b, even though b itself was dropped for matching a). That write is
+   the batch's only pin: every step below reads it back,
+3. intra-batch dedup: banded self-join → exact-Jaccard verify →
    connected components → min-id survivor per cluster,
-3. cross-batch dedup: (band, sig) equi-join of the batch signatures
-   against the accumulated SIGNATURE STORE (parquet, partitioned by
-   epoch), exact-Jaccard verify against the stored shingle sets, drop
-   any batch doc verified-similar to ANY earlier doc,
-4. state update: ALL batch docs' signatures (dropped ones included) are
-   appended to the store — duplicate CHAINS then work across batches
-   exactly as in batch CC (c dropped because it matches b, even though
-   b itself was dropped for matching a),
+4. cross-batch dedup: (band, sig) equi-join of the batch signatures
+   against the committed epochs listed in step 1, exact-Jaccard verify
+   against the stored shingle sets, drop any batch doc verified-similar
+   to ANY earlier doc,
 5. exactly-once under replay: the store and the output are written to
    ``epoch=<id>`` partition directories with idempotent overwrite, and
-   the store read for epoch e prunes to ``epoch < e`` — a replayed
-   batch recomputes against exactly its original view of the state.
+   the store read for epoch e is bounded to ``epoch < e`` — a replayed
+   batch (after a crash anywhere, even between its two writes)
+   recomputes against exactly its original view of the state.
 
 Semantics vs the batch operator (stated, not hidden): the online rule
 is "drop iff a verified-similar doc was seen earlier". For duplicate
@@ -48,6 +54,12 @@ from ..operators.dedup import (
     _minhash_signatures,
     _verify_pairs_jaccard,
     cc_keep_min,
+)
+from .epoch_store import (
+    assert_markers_enabled,
+    check_params,
+    committed_epoch_dirs,
+    write_epoch,
 )
 
 __all__ = ["NeardupIngest"]
@@ -82,6 +94,7 @@ class NeardupIngest:
         self.text_col = text_col
         self.id_col = id_col
         self.seed = seed
+        self._params_checked = False
 
     # -- state ---------------------------------------------------------------
 
@@ -93,64 +106,18 @@ class NeardupIngest:
         }
 
     def _check_params(self, spark: SparkSession) -> None:
-        """Persist the signature parameters next to the store on first
-        use and REFUSE to run with different ones later: a changed seed
-        or banding would make new signatures silently never match the
-        stored ones — duplicates would leak through with no error.
-        Also refuses a session configured not to write ``_SUCCESS``
-        markers (the commit filter would read every epoch as
-        uncommitted — ADVICE r10).
-
-        r12: the stored-params read is memoized per instance — the
-        file is immutable after first write and only this class writes
-        it, so re-reading it EVERY micro-batch was one wasted read job
-        + driver collect per batch. The (free, conf-only) marker check
-        still runs each batch."""
-        import json
-
-        from pyspark.errors import AnalysisException
-
-        from .epoch_store import assert_markers_enabled
-
+        """Refuse a session that writes no ``_SUCCESS`` markers (every
+        batch; conf-only) and a store bound to other parameters: a
+        changed seed or banding would make new signatures silently never
+        match the stored ones. The store's binding is immutable, so it
+        is checked once per instance."""
         assert_markers_enabled(spark, "NeardupIngest")
-        if getattr(self, "_params_checked", False):
-            return
-
-        path = f"{self.state_dir}/_params"
-        try:
-            stored = json.loads(
-                spark.read.text(path).agg(
-                    F.concat_ws("", F.collect_list("value"))
-                ).first()[0]
+        if not self._params_checked:
+            check_params(
+                spark, self.state_dir, self._params(), "NeardupIngest",
+                "signatures would silently never match",
             )
-        except AnalysisException:
-            spark.createDataFrame(
-                [(json.dumps(self._params(), sort_keys=True),)], "value string"
-            ).coalesce(1).write.mode("overwrite").text(path)
             self._params_checked = True
-            return
-        if stored != self._params():
-            raise ValueError(
-                f"NeardupIngest: state at {self.state_dir} was built with "
-                f"{stored}, current instance uses {self._params()} — "
-                "signatures would silently never match. Use the original "
-                "parameters or a fresh state_dir."
-            )
-        self._params_checked = True
-
-    def _store(self, spark: SparkSession, before_epoch: int) -> DataFrame | None:
-        """Signature store as of (strictly before) ``before_epoch`` —
-        the hardened shared commit filter (`epoch_store`, ADVICE r10):
-        committed epochs are read, torn (empty marker-less) epochs are
-        skipped, and a marker-less OLD epoch holding part files raises
-        instead of silently dropping its signatures from dedup. The
-        epoch bound applies on the directory NAME, so no partition
-        column is materialized."""
-        from .epoch_store import read_epoch_store
-
-        return read_epoch_store(
-            spark, f"{self.state_dir}/sigs", before_epoch, "NeardupIngest"
-        )
 
     def survivors(self, spark: SparkSession) -> DataFrame:
         """All survivor rows emitted so far (union of epoch outputs)."""
@@ -163,26 +130,36 @@ class NeardupIngest:
         id_col, epoch_id = self.id_col, int(epoch_id)
         self._check_params(spark)
 
-        # 1. tokenize once: shingles + band signatures, pinned so the
-        # self-join/verify/store lineages share ONE kernel pass
-        sh, sigs = _minhash_signatures(
-            batch, self.n, self.bands, self.rows_per_band, self.seed,
-            text_col=self.text_col, id_col=id_col,
+        # 1. the committed epochs < e, listed before any write: a
+        # refusal of a marker-less old epoch leaves no side effect
+        root = f"{self.state_dir}/sigs"
+        dirs = committed_epoch_dirs(spark, root, epoch_id, "NeardupIngest")
+
+        # 2. tokenize once; the state write is the pin every lineage
+        # below reads
+        sigs = write_epoch(
+            _minhash_signatures(
+                batch, self.n, self.bands, self.rows_per_band, self.seed,
+                text_col=self.text_col, id_col=id_col,
+            ),
+            root,
+            epoch_id,
         )
 
-        # 2. intra-batch: candidates → verify → CC → min-id survivors
+        # 3. intra-batch: candidates → verify → CC → min-id survivors
         intra_pairs = _verify_pairs_jaccard(
-            sh, sh, _banded_candidate_pairs(sigs, id_col=id_col),
+            sigs, sigs, _banded_candidate_pairs(sigs, id_col=id_col),
             self.threshold, id_col=id_col,
         )
         clusters = cc_keep_min(intra_pairs, batch.select(id_col), id_col=id_col)
-        intra_dropped = clusters.filter(
+        dropped = clusters.filter(
             F.col(id_col) != F.col("cluster_id")
         ).select(id_col)
 
-        # 3. cross-batch: batch sigs vs signature store
-        store = self._store(spark, epoch_id)
-        if store is not None:
+        # 4. cross-batch: batch sigs vs the committed store, read with
+        # the batch state's schema (no inference job)
+        if dirs:
+            store = spark.read.schema(sigs.schema).parquet(*dirs)
             new_b = sigs.select(
                 F.col(id_col).alias("id_b"),
                 F.posexplode("_bands").alias("band", "sig"),
@@ -197,26 +174,20 @@ class NeardupIngest:
                 .distinct()
             )
             cross_pairs = _verify_pairs_jaccard(
-                store.select(id_col, "_sh"), sh, cands,
-                self.threshold, id_col=id_col,
+                store, sigs, cands, self.threshold, id_col=id_col,
             )
-            cross_dropped = cross_pairs.select(
-                F.col("id_b").alias(id_col)
-            ).distinct()
-            dropped = intra_dropped.unionByName(cross_dropped).distinct()
-        else:
-            dropped = intra_dropped
+            # no distinct: the anti-join below ignores repeats
+            dropped = dropped.unionByName(
+                cross_pairs.select(F.col("id_b").alias(id_col))
+            )
 
-        survivors = batch.join(dropped, id_col, "left_anti")
-
-        # 4./5. idempotent epoch writes: same epoch → same paths, same
+        # 5. idempotent output write: same epoch → same path, same
         # deterministic content; the store read above never sees its
         # own epoch, so replay is exactly-once
-        sh.join(sigs, id_col, "left").write.mode(
-            "overwrite"
-        ).parquet(f"{self.state_dir}/sigs/epoch={epoch_id}")
-        survivors.write.mode("overwrite").parquet(
-            f"{self.state_dir}/out/epoch={epoch_id}"
+        write_epoch(
+            batch.join(dropped, id_col, "left_anti"),
+            f"{self.state_dir}/out",
+            epoch_id,
         )
 
     def foreach_batch(self):

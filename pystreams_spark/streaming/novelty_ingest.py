@@ -5,21 +5,28 @@ streaming face of `operators/dedup.ngram_novelty_scores` for the
 a crawl pipeline reads to down-weight or drop mostly-seen feeds
 BEFORE paying to store them).
 
-Per micro-batch (driven by ``foreachBatch``):
+Per micro-batch (driven by ``foreachBatch``; the store plumbing is
+`epoch_store`'s):
 
-1. gram once: the production hashed-gram construction (word n-gram →
+1. params check and store listing: the gram width is bound to the
+   store (FileSystem calls, no Spark job), and the committed epochs ``< e``
+   are listed BEFORE anything is written,
+2. gram once: the production hashed-gram construction (word n-gram →
    xxhash64 inside the per-doc array, Column algebra only — identical
-   classes to ``ngram_novelty_scores(hash_grams=True)``),
-2. intra-batch first-seen: per-gram MIN(doc id) inside the batch,
-3. cross-batch: a gram is NOVEL iff its batch-first doc owns it AND
-   the gram is absent from the accumulated GRAM STORE (parquet,
-   partitioned by epoch, 8 bytes per distinct gram — no text),
-4. per-doc novelty = novel grams / distinct grams, emitted to
-   ``out/epoch=<n>``,
-5. state update: exactly the grams first seen THIS epoch append to
-   ``grams/epoch=<n>``; under replay the store read prunes to
-   ``epoch < e``, so a recomputed batch sees its original view and
-   rewrites identical output — exactly-once.
+   classes to ``ngram_novelty_scores(hash_grams=True)``), pinned: the
+   first-seen aggregate and the score join both read it,
+3. intra-batch first-seen: per-gram MIN(doc id) inside the batch,
+4. state write first: a gram is NOVEL iff its batch-first doc owns it
+   AND the gram is absent from the accumulated GRAM STORE (parquet,
+   partitioned by epoch, 8 bytes per distinct gram — no text); exactly
+   those grams are written to ``grams/epoch=<n>``, and that write is
+   the novel set's pin,
+5. per-doc novelty = novel grams / distinct grams, the novel grams'
+   owners taken from the read-back epoch joined to the batch-first
+   frame, emitted to ``out/epoch=<n>``; under replay the store read
+   prunes to ``epoch < e``, so a recomputed batch (after a crash
+   anywhere, even between its two writes) sees its original view and
+   rewrites identical state and output — exactly-once.
 
 Semantics vs the batch operator (stated, not hidden): batch novelty
 attributes each gram to the MINIMUM doc id; the online rule attributes
@@ -38,6 +45,13 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .epoch_store import (
+    assert_markers_enabled,
+    check_params,
+    committed_epoch_dirs,
+    write_epoch,
+)
 
 __all__ = ["NoveltyIngest"]
 
@@ -63,64 +77,22 @@ class NoveltyIngest:
         self.n = n
         self.text_col = text_col
         self.id_col = id_col
+        self._params_checked = False
 
     def _params(self) -> dict:
         return {"n": self.n, "text_col": self.text_col, "id_col": self.id_col}
 
     def _check_params(self, spark: SparkSession) -> None:
         """Same guard as NeardupIngest: a changed gram width against an
-        existing store would silently mis-score every later doc. Also
-        refuses a session configured not to write ``_SUCCESS`` markers
-        (ADVICE r10)."""
-        import json
-
-        from .epoch_store import assert_markers_enabled
-
+        existing store would silently mis-score every later doc; a
+        session that writes no ``_SUCCESS`` markers is refused too."""
         assert_markers_enabled(spark, "NoveltyIngest")
-        # r12: memoized after first success (file immutable, written
-        # only here) — was one read job + collect EVERY micro-batch
-        if getattr(self, "_params_checked", False):
-            return
-
-        from pyspark.errors import AnalysisException
-
-        path = f"{self.state_dir}/_params"
-        try:
-            stored = json.loads(
-                spark.read.text(path).agg(
-                    F.concat_ws("", F.collect_list("value"))
-                ).first()[0]
+        if not self._params_checked:
+            check_params(
+                spark, self.state_dir, self._params(), "NoveltyIngest",
+                "gram classes would not match",
             )
-        except AnalysisException:
-            spark.createDataFrame(
-                [(json.dumps(self._params(), sort_keys=True),)], "value string"
-            ).coalesce(1).write.mode("overwrite").text(path)
             self._params_checked = True
-            return
-        if stored != self._params():
-            raise ValueError(
-                f"NoveltyIngest: state at {self.state_dir} was built with "
-                f"{stored}, current instance uses {self._params()} — gram "
-                "classes would not match. Use the original parameters or a "
-                "fresh state_dir."
-            )
-        self._params_checked = True
-
-    def _store(self, spark: SparkSession, before_epoch: int) -> DataFrame | None:
-        """Gram store strictly before ``before_epoch``; None when empty.
-
-        Commit filter (r10, ADVICE r9; hardened r11 via the shared
-        `epoch_store`): committed epochs are read, torn (empty
-        marker-less) epochs are skipped, and a marker-less OLD epoch
-        holding part files raises instead of silently dropping its
-        grams (same pattern as ``StatsMaintainer.current``). The epoch
-        bound is applied on the directory NAME, so no partition column
-        is materialized."""
-        from .epoch_store import read_epoch_store
-
-        return read_epoch_store(
-            spark, f"{self.state_dir}/grams", before_epoch, "NoveltyIngest"
-        )
 
     def scores(self, spark: SparkSession) -> DataFrame:
         """All scored rows emitted so far (union of epoch outputs)."""
@@ -156,29 +128,25 @@ class NoveltyIngest:
         id_col, epoch_id = self.id_col, int(epoch_id)
         self._check_params(spark)
 
-        # one gram pass, pinned: posts feed first-seen, novelty AND the
-        # state append (three consumers)
-        posts = self._batch_posts(batch).localCheckpoint(eager=True)
-        batch_first = posts.groupBy("g").agg(F.min(id_col).alias("_first"))
+        # the committed epochs < e, listed before any write
+        root = f"{self.state_dir}/grams"
+        dirs = committed_epoch_dirs(spark, root, epoch_id, "NoveltyIngest")
 
-        store = self._store(spark, epoch_id)
-        if store is not None:
-            fresh = batch_first.join(
-                store.select("g"), "g", "left_anti"
-            )
-        else:
-            fresh = batch_first
-        # fresh: grams first seen THIS epoch, attributed to their
-        # batch-first doc; pinned — consumed by the score join and the
-        # state write, and the anti-join must not replay per consumer
-        fresh = fresh.localCheckpoint(eager=True)
+        # one gram pass, pinned: posts feed first-seen and the scores
+        posts = self._batch_posts(batch).localCheckpoint(eager=True)
+        batch_first = posts.groupBy("g").agg(F.min(id_col).alias("_novel_owner"))
+
+        fresh = batch_first.select("g")
+        if dirs:
+            # the gram store, read with its known schema (no inference job)
+            store = spark.read.schema("g long").parquet(*dirs)
+            fresh = fresh.join(store, "g", "left_anti")
+        # grams first seen THIS epoch: the state write is their pin, and
+        # their owners come back from the batch-first frame
+        fresh = write_epoch(fresh, root, epoch_id).join(batch_first, "g")
 
         scored = (
-            posts.join(
-                fresh.withColumnRenamed("_first", "_novel_owner"),
-                "g",
-                "left",
-            )
+            posts.join(fresh, "g", "left")
             .groupBy(id_col)
             .agg(
                 F.count(F.lit(1)).alias("n_grams"),
@@ -192,16 +160,10 @@ class NoveltyIngest:
                 F.round(F.col("novel_grams") / F.col("n_grams"), 6),
             )
         )
-
-        # idempotent epoch writes: the store read above never sees its
+        # idempotent output write: the store read above never sees its
         # own epoch, so a replayed batch recomputes the SAME fresh set
         # and the same scores
-        fresh.select("g").write.mode("overwrite").parquet(
-            f"{self.state_dir}/grams/epoch={epoch_id}"
-        )
-        scored.write.mode("overwrite").parquet(
-            f"{self.state_dir}/out/epoch={epoch_id}"
-        )
+        write_epoch(scored, f"{self.state_dir}/out", epoch_id)
 
     def foreach_batch(self):
         return self.process_batch

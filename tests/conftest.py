@@ -19,10 +19,11 @@ def spark():
     # PYSTREAMS_TEST_SHUFFLE lets the parity suite re-run under a
     # different partitioning (e.g. 5 or 97) — a full-suite
     # partitioning-independence sweep: any query whose result depends
-    # on partition count fails the oracle compare
+    # on partition count fails the oracle compare. Cores follow
+    # SPARK_GRAFT_CPUS (the box's core count); partitions stay at 8
     s = get_spark(
         app_name="pystreams-tests",
-        cpus=8,
+        cpus=os.environ.get("SPARK_GRAFT_CPUS", "8"),
         shuffle_partitions=int(os.environ.get("PYSTREAMS_TEST_SHUFFLE", "8")),
     )
     yield s

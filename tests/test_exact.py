@@ -295,6 +295,49 @@ def test_np_trunc_div_matches_duckdb_intdiv():
     assert got == want
 
 
+def test_quantize_at_its_2_52_bound_and_nan_both_engines(spark):
+    """``_quantize``'s documented per-value bound is |round(x)| < 2^52.
+    Pin what both engines do at the bound: at 2^52 ± 1 (and the half
+    case 2^52 − 0.5) round() still yields an exact integral double, so
+    Spark's bigint-routed cast and DuckDB's per-value BIGINT cast give
+    the same exact integer — the bound is conservative. NaN has no
+    integer: DuckDB raises; Spark raises under ANSI mode (the Spark 4
+    default) and yields 0 without it, where the old direct decimal cast
+    gave NULL."""
+    from pystreams_spark.functions.exact import _quantize
+
+    b = 2**52
+    xs = [b - 1, b, b + 1, -(b + 1), -(b - 1), b - 0.5, -(b - 0.5)]
+    want = [b - 1, b, b + 1, -(b + 1), -(b - 1), b, -b]
+    df = spark.createDataFrame(
+        [(i, float(x)) for i, x in enumerate(xs)], "i int, x double"
+    )
+    got_s = [
+        int(r.q)
+        for r in df.selectExpr("i", f"{_quantize('x')} AS q").orderBy("i").collect()
+    ]
+    con = duckdb.connect()
+    got_d = [
+        con.execute("SELECT CAST(ROUND(?::DOUBLE) AS BIGINT)", [float(x)]).fetchone()[0]
+        for x in xs
+    ]
+    assert got_s == got_d == want
+
+    nan = spark.createDataFrame([(float("nan"),)], "x double")
+    key = "spark.sql.ansi.enabled"
+    old = spark.conf.get(key)
+    try:
+        spark.conf.set(key, "true")
+        with pytest.raises(Exception, match="CAST_OVERFLOW"):
+            nan.selectExpr(f"{_quantize('x')} AS q").collect()
+        spark.conf.set(key, "false")
+        assert nan.selectExpr(f"{_quantize('x')} AS q").first().q == 0
+    finally:
+        spark.conf.set(key, old)
+    with pytest.raises(duckdb.ConversionException):
+        con.execute("SELECT CAST(ROUND(?::DOUBLE) AS BIGINT)", [float("nan")]).fetchone()
+
+
 def test_kmeans_centers_partitioning_independent(spark):
     """The r12 centroid contract removes the float-partial-sum order
     dependence: the fitted centers must be BIT-identical under wildly

@@ -1376,6 +1376,9 @@ def test_neardup_ingest_commit_filter_skips_torn_epoch(spark, tmp_path):
         fh.write(b"\x00not parquet")
     with pytest.raises(Exception, match="no\\s+_SUCCESS|committed-"):
         NeardupIngest(state, threshold=0.6).process_batch(bdf(batches[2]), 4)
+    # the committed epochs are listed before the batch writes anything,
+    # so the refusal leaves no state behind
+    assert not os.path.exists(f"{state}/sigs/epoch=4")
 
 
 def test_epoch_store_refuses_markerless_session(spark, tmp_path):
@@ -1398,3 +1401,179 @@ def test_epoch_store_refuses_markerless_session(spark, tmp_path):
             NeardupIngest(str(tmp_path / "state")).process_batch(bdf, 0)
     finally:
         conf.set(key, old)
+
+
+# ---------------------------------------------------------------------------
+# The epoch-store plumbing shared by the three ingests (streaming/epoch_store.py)
+# ---------------------------------------------------------------------------
+
+# ingest kind → (class, store subdirectory, parameter change that must
+# be refused, the refusal's own reason)
+_INGESTS = {
+    "neardup": ("NeardupIngest", "sigs", {"seed": 7}, "never match"),
+    "novelty": ("NoveltyIngest", "grams", {"n": 2}, "gram classes"),
+    "imagedup": (
+        "ImagedupIngest", "sigs", {"bands": 5, "band_bits": 12},
+        "hash grid or banding",
+    ),
+}
+
+
+def _ingest_module(kind):
+    import importlib
+
+    return importlib.import_module(f"pystreams_spark.streaming.{kind}_ingest")
+
+
+def _make_ingest(kind, state, **changed):
+    if kind == "neardup":
+        changed.setdefault("threshold", 0.6)
+    cls = getattr(_ingest_module(kind), _INGESTS[kind][0])
+    return cls(str(state), **changed)
+
+
+def _ingest_frames(spark, kind):
+    """The kind's three-batch test stream as frames."""
+    if kind == "imagedup":
+        payloads, batches = _image_corpus()
+        return [_image_bdf(spark, payloads, ids) for ids in batches]
+    docs, batches = _ingest_corpus()
+    return [
+        spark.createDataFrame(
+            [(i, docs[i]) for i in ids], "doc_id long, text string"
+        )
+        for ids in batches
+    ]
+
+
+def _rows(spark, path):
+    """A parquet directory's rows (partition column included), sorted,
+    arrays as tuples."""
+    return sorted(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in spark.read.parquet(path).collect()
+    )
+
+
+# Most Spark jobs one micro-batch of each ingest may start: the count
+# measured on a batch that also reads the store, at 4 and 8 cores. Each
+# includes the state write, the output write and their
+# adaptive-execution stage jobs.
+_BATCH_JOB_BUDGET = {"neardup": 17, "novelty": 9, "imagedup": 15}
+
+
+@pytest.mark.parametrize("kind", sorted(_INGESTS))
+def test_ingest_job_budget(spark, tmp_path, kind):
+    """Two micro-batches of each ingest start at most two batches'
+    budget of Spark jobs: the params check runs none, and the state
+    write is the batch's only pin."""
+    frames = _ingest_frames(spark, kind)[:2]
+    ingest = _make_ingest(kind, tmp_path / "state")
+    sc = spark.sparkContext
+    group = f"ingest-job-budget-{kind}"
+    sc.setJobGroup(group, group)
+    try:
+        for epoch, frame in enumerate(frames):
+            ingest.process_batch(frame, epoch)
+    finally:
+        sc.setJobGroup(None, None)  # type: ignore[arg-type]
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    budget = 2 * _BATCH_JOB_BUDGET[kind]
+    assert n_jobs <= budget, (
+        f"{kind}: two micro-batches ran {n_jobs} Spark jobs, budget {budget}"
+    )
+
+
+@pytest.mark.parametrize("kind", sorted(_INGESTS))
+def test_ingest_replays_crash_between_state_and_output_writes(
+    spark, tmp_path, monkeypatch, kind
+):
+    """The state write comes first: a crash before the output write
+    leaves a committed state epoch and no output. Replaying the epoch
+    (bounded to ``epoch < e``, overwriting both) must leave the store
+    and the output equal to an uninterrupted run's."""
+    mod = _ingest_module(kind)
+    store_sub = _INGESTS[kind][1]
+    frames = _ingest_frames(spark, kind)
+
+    clean = _make_ingest(kind, tmp_path / "clean")
+    for epoch, frame in enumerate(frames):
+        clean.process_batch(frame, epoch)
+
+    real_write = mod.write_epoch
+    crashed = []
+
+    def crash_once_on_output(df, root, epoch):
+        if root.endswith("/out") and epoch == 1 and not crashed:
+            crashed.append(epoch)
+            raise RuntimeError("simulated crash before the output write")
+        return real_write(df, root, epoch)
+
+    monkeypatch.setattr(mod, "write_epoch", crash_once_on_output)
+    state = tmp_path / "crashed"
+    _make_ingest(kind, state).process_batch(frames[0], 0)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        _make_ingest(kind, state).process_batch(frames[1], 1)
+    assert (state / store_sub / "epoch=1" / "_SUCCESS").exists()
+    assert not (state / "out" / "epoch=1").exists()
+
+    # restart: the stream replays epoch 1, then carries on
+    resumed = _make_ingest(kind, state)
+    for epoch in (1, 2):
+        resumed.process_batch(frames[epoch], epoch)
+    for sub in (store_sub, "out"):
+        assert _rows(spark, str(state / sub)) == _rows(
+            spark, str(tmp_path / "clean" / sub)
+        ), sub
+
+
+@pytest.mark.parametrize("kind", sorted(_INGESTS))
+def test_check_params_refuses_with_each_ingests_reason(spark, tmp_path, kind):
+    """A store bound to one parameter set refuses another with the
+    ingest's own reason; the first instance's check is memoized."""
+    _, _, changed, reason = _INGESTS[kind]
+    bound = _make_ingest(kind, tmp_path / "state")
+    bound._check_params(spark)
+    assert bound._params_checked is True
+    with pytest.raises(ValueError, match=reason):
+        _make_ingest(kind, tmp_path / "state", **changed)._check_params(spark)
+    _make_ingest(kind, tmp_path / "state")._check_params(spark)
+
+
+def test_check_params_verifies_spark_text_layout_and_runs_no_job(
+    spark, tmp_path
+):
+    """Stores bound by Spark's text writer (``_params/part-*`` plus
+    ``_SUCCESS``) still verify; the binding written now reads back
+    through Spark's text reader; and neither the first-use write nor
+    the later read starts a Spark job."""
+    import json
+
+    from pystreams_spark.streaming.epoch_store import check_params
+
+    params = {"n": 3, "text_col": "text", "id_col": "doc_id"}
+    old = str(tmp_path / "old")
+    spark.createDataFrame(
+        [(json.dumps(params, sort_keys=True),)], "value string"
+    ).coalesce(1).write.mode("overwrite").text(f"{old}/_params")
+    new = str(tmp_path / "new")
+
+    sc = spark.sparkContext
+    group = "check-params-no-job"
+    sc.setJobGroup(group, group)
+    try:
+        check_params(spark, old, params, "T", "old layout")
+        with pytest.raises(ValueError, match="T: .*old layout"):
+            check_params(spark, old, {**params, "n": 2}, "T", "old layout")
+        check_params(spark, new, params, "T", "new layout")  # binds
+        check_params(spark, new, params, "T", "new layout")  # verifies
+        with pytest.raises(ValueError, match="new layout"):
+            check_params(spark, new, {**params, "n": 2}, "T", "new layout")
+    finally:
+        sc.setJobGroup(None, None)  # type: ignore[arg-type]
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs == 0, f"check_params started {n_jobs} Spark job(s)"
+
+    assert os.path.exists(f"{new}/_params/_SUCCESS")
+    (line,) = spark.read.text(f"{new}/_params").collect()
+    assert json.loads(line.value) == params
