@@ -182,20 +182,6 @@ def _families(spark, data_dir: str, ckpt_dir: str):
         "prefix_jaccard_pairs": lambda: ngram_jaccard_pairs_prefix(
             docs(), threshold=0.35, n=3
         ).count(),
-        # r8 (VERDICT r7 #5): the shared-content regime, guarded. First
-        # attempt (hot_df=2 absolute) measured WORSE (179 s wall, 1.32
-        # shuffle exponent): with pervasive sharing the hot set is
-        # corpus-sized and the broadcast-array scan dominates. The
-        # canonical AllPairs ascending-df order (order_by="df") is the
-        # actual cure — prefixes hold each doc's rarest shingles.
-        # Output pairs must equal the unguarded run's (any total order
-        # is exact), so rows_out doubles as the recall check.
-        "prefix_jaccard_pairs_hotdf2": lambda: ngram_jaccard_pairs_prefix(
-            docs(), threshold=0.35, n=3, hot_df=2
-        ).count(),
-        "prefix_jaccard_pairs_dforder": lambda: ngram_jaccard_pairs_prefix(
-            docs(), threshold=0.35, n=3, order_by="df"
-        ).count(),
         "kmeans_lloyd": lambda: kmeans_cells_deterministic(
             emb(), n_cells=8, iters=2
         ).count(),

@@ -364,8 +364,6 @@ def ngram_jaccard_pairs_prefix(
     id_col: str = "doc_id",
     block_cols: tuple = (),
     round_to: int = 6,
-    hot_df: int | float = 0.05,
-    order_by: str = "df",
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs via PREFIX FILTERING (Chaudhuri et
     al. 2006 / Bayardo et al. 2007 "AllPairs" — public set-similarity-
@@ -378,121 +376,69 @@ def ngram_jaccard_pairs_prefix(
     |X| − α + 1 elements; J(A,B) ≥ τ implies |A∩B| ≥ ⌈τ·|X|⌉ for both
     endpoints, so indexing only each doc's first
     |X| − ⌈τ·|X|⌉ + 1 shingles finds every qualifying pair — for ANY
-    total order. The order used here is (is_hot, hash): shingles whose
-    per-block df exceeds ``hot_df`` sort LAST, so a boilerplate shingle
-    enters a doc's prefix only when the doc is itself nearly all
-    boilerplate — the join cost becomes Σ df_prefix², dominated by
-    rare shingles. Candidates are then scored on their full sets
-    (``_verify_jaccard_pairs``), so a false candidate costs one array
+    total order. Candidates are then scored on their full sets
+    (``_verify_pairs_fullset``), so a false candidate costs one array
     intersect, never a wrong answer.
 
-    Using hot-membership instead of full df-rank for the order is the
-    key cost saving: the hot set is boilerplate-few and broadcasts, so
-    the prefix is built by array ops on the checkpointed shingle table
-    — no posting-table join, no per-doc regroup. Total cost: one df
-    aggregation (partial-agg'd, distinct (block, shingle) keys), the
-    prefix self-join, and the broadcast verify probe. Prefer this over
-    ``ngram_jaccard_pairs_inverted`` whenever τ ≳ 0.3 or the corpus
-    carries boilerplate; at very low τ the prefix approaches the whole
-    set and the plain inverted index (optionally df-capped) costs the
-    same with fewer stages.
-
-    ``order_by`` picks the global prefix order (r8):
-
-    - ``"hot"``: the (is_hot, hash) binary order above —
-      zero extra shuffles, built by broadcast array ops. Right when
-      high-df shingles are boilerplate-FEW (its design target). When
-      sharing is PERVASIVE (a large fraction of all shingles carries
-      corpus-growing df — e.g. templated corpora), the hot set itself
-      becomes corpus-sized and the per-row broadcast-array scan
-      dominates wall time while barely pruning (measured r8, SCALE.md:
-      10× shared-content run, 179 s wall, shuffle exponent 1.32 —
-      worse than unguarded).
-    - ``"df"`` (default since r8): the canonical AllPairs/PPJoin ascending-df order —
-      every shingle ranked by its exact (block-scoped) document
-      frequency, so prefixes hold each doc's RAREST shingles and
-      Σ df_prefix² is minimized over all orders of this family. Costs
-      two extra LINEAR posting-table shuffles (df join + per-doc
-      regroup) and removes the quadratic candidate term — the right
-      trade exactly when content repeats at scale (measured r8:
-      shuffle exponent back to ≈1, SCALE.md). Output is identical
-      either way (any total order is exact). Measured r8 it also wins
-      the UNIQUE-content regime (69 vs 83 MB shuffle, equal wall at
-      10×), hence the default.
+    The order is the canonical AllPairs/PPJoin ascending-df order:
+    every shingle ranked by its exact (block-scoped) document
+    frequency, hash tie-break, so prefixes hold each doc's RAREST
+    shingles and Σ df_prefix² is minimized over all orders of this
+    family — a boilerplate shingle enters a doc's prefix only when the
+    doc is itself nearly all boilerplate. It costs LINEAR
+    posting-table shuffles (the df window + per-doc regroup) and
+    removes the quadratic candidate term — measured r8 (SCALE.md):
+    shuffle exponent ≈1 when content repeats at scale, and a win on
+    unique content too (69 vs 83 MB shuffle against a binary hot/cold
+    order). Prefer this over ``ngram_jaccard_pairs_inverted`` whenever
+    τ ≳ 0.3 or the corpus carries boilerplate; at very low τ the
+    prefix approaches the whole set and the plain inverted index
+    (optionally df-capped) costs the same with fewer stages.
     """
     if not threshold > 0.0:
         raise ValueError(
             "ngram_jaccard_pairs_prefix requires threshold > 0 "
             "(prefix filtering has no pruning power at τ = 0)"
         )
-    if order_by not in ("hot", "df"):
-        raise ValueError(f"order_by must be 'hot' or 'df', got {order_by!r}")
     blocks = list(block_cols)
     sh = _shingle_table(df, n, text_col, id_col, blocks)
     posts = sh.select(id_col, *blocks, F.explode("_sh").alias("_h"))
-    if order_by == "df":
-        # per-posting df via a partition-only window (r13, guide §2.4
-        # — the same rewrite as r12's first-seen novelty): the
-        # groupBy(_h).count + join-back form paid TWO exchanges of the
-        # posting table (one for the aggregate, one for the join's
-        # probe side) plus the join itself; one window over (_h)
-        # attaches the identical integer count in a single exchange.
-        # (_df, h) stays a global function of the shingle, so the
-        # order is consistent corpus-wide and the prefix theorem
-        # applies unchanged.
-        ordered_tbl = (
-            posts.withColumn(
-                "_df",
-                F.count(F.lit(1)).over(Window.partitionBy(*blocks, "_h")),
-            )
-            .groupBy(id_col, *blocks)
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("_df", "_h"))
-                ).alias("_ordst")
-            )
+    # per-posting df via a partition-only window (r13, guide §2.4
+    # — the same rewrite as r12's first-seen novelty): the
+    # groupBy(_h).count + join-back form paid TWO exchanges of the
+    # posting table (one for the aggregate, one for the join's
+    # probe side) plus the join itself; one window over (_h)
+    # attaches the identical integer count in a single exchange.
+    # (_df, h) stays a global function of the shingle, so the
+    # order is consistent corpus-wide and the prefix theorem
+    # applies unchanged.
+    ordered_tbl = (
+        posts.withColumn(
+            "_df",
+            F.count(F.lit(1)).over(Window.partitionBy(*blocks, "_h")),
         )
-        sz = F.size("_ordst")
-        plen = (sz - F.ceil(F.lit(float(threshold)) * sz) + 1).cast("int")
-        pre = ordered_tbl.select(
-            id_col,
-            *blocks,
-            F.explode(
-                F.slice(
-                    F.transform("_ordst", lambda x: x["_h"]), F.lit(1), plen
-                )
-            ).alias("_h"),
+        .groupBy(id_col, *blocks)
+        .agg(
+            F.array_sort(
+                F.collect_list(F.struct("_df", "_h"))
+            ).alias("_ordst")
         )
-        cand = _shared_shingle_candidates(pre, blocks, id_col)
-        return _verify_pairs_fullset(
-            sh, cand, id_col, threshold, round_to, "jaccard"
-        )
-    hot = _hot_shingle_keys(sh, posts, blocks, hot_df).groupBy(*blocks).agg(
-        F.collect_list("_h").alias("_hot")
     )
-    if blocks:
-        shx = sh.join(F.broadcast(hot), blocks, "left")
-    else:
-        # global agg: always exactly one row, even with zero hot keys
-        shx = sh.crossJoin(F.broadcast(hot))
-    empty = F.array().cast("array<bigint>")
-    hot_arr = F.coalesce(F.col("_hot"), empty)
-    # global (is_hot, hash) order: sorted cold shingles, then sorted hot
-    ordered = F.concat(
-        F.array_sort(F.array_except("_sh", hot_arr)),
-        F.array_sort(F.array_intersect("_sh", hot_arr)),
-    )
-    # prefix length |X| − ⌈τ·|X|⌉ + 1
-    plen = (
-        F.col("_sz") - F.ceil(F.lit(float(threshold)) * F.col("_sz")) + 1
-    ).cast("int")
-    pre = shx.select(
+    sz = F.size("_ordst")
+    plen = (sz - F.ceil(F.lit(float(threshold)) * sz) + 1).cast("int")
+    pre = ordered_tbl.select(
         id_col,
         *blocks,
-        F.explode(F.slice(ordered, F.lit(1), plen)).alias("_h"),
+        F.explode(
+            F.slice(
+                F.transform("_ordst", lambda x: x["_h"]), F.lit(1), plen
+            )
+        ).alias("_h"),
     )
     cand = _shared_shingle_candidates(pre, blocks, id_col)
-    return _verify_pairs_fullset(sh, cand, id_col, threshold, round_to, "jaccard")
+    return _verify_pairs_fullset(
+        sh, cand, id_col, threshold, round_to, "jaccard"
+    )
 
 
 def ngram_novelty_scores(

@@ -10,8 +10,15 @@ Tiers:
   bucket collisions instead of |corpus| × |queries|.
 - ``cosine_lsh_pairs``: sign-random-projection LSH for embedding
   near-dup pairs, verified by exact cosine.
-- ``knn_ivf``: coarse-quantizer variant (IVF): assign every vector to
-  its nearest of k sampled centroids, probe only matching cells.
+- deterministic quantizers: ONE Lloyd recurrence
+  (``kmeans_centers_deterministic`` — md5-ordered seeds, integer-micros
+  updates) behind k-means cells (``kmeans_cells_deterministic``, which
+  also scopes SemDeDup), IVF (``knn_ivf_deterministic``: assign every
+  vector to its cell, probe the ``n_probe`` nearest cells) and PQ
+  (``knn_pq_deterministic``: per-subspace codebooks, one encode+ADC
+  kernel; ``knn_pq_refined`` re-ranks its shortlist exactly). Every
+  stage is SQL-replayable, so approximate search quality is certified
+  by recall gates or DuckDB oracles, not trusted to a seed.
 """
 
 from __future__ import annotations
@@ -170,108 +177,6 @@ def _probe_dim(df: DataFrame, vec_col: str, op_name: str) -> int:
     return len(row[0])
 
 
-def _ivf_scored_candidates(
-    queries: DataFrame,
-    corpus: DataFrame,
-    centers_mat,
-    n_probe: int,
-    query_id: str,
-    corpus_id: str,
-    vec_col: str,
-    metric: str = "dot",
-) -> DataFrame:
-    """Exact-cosine-scored IVF candidates with each candidate's PROBE
-    RANK: (query_id, corpus_id, score, _probe_rank) where _probe_rank
-    is the position of the candidate's cell in the query's
-    affinity-ordered cell list (0 = home cell). Because a corpus vector
-    lives in exactly one cell, candidate sets NEST in n_probe —
-    ``filter(_probe_rank < p)`` reproduces the n_probe=p candidate set
-    exactly — so ONE scored pass at the largest probe setting serves a
-    whole recall curve (r12: ann_ivf_recall_curve ran 4 independent
-    assignment+probe+score passes for nested candidate sets).
-
-    ``metric`` picks the cell-affinity rule: ``dot`` (argmax x·c, ties →
-    lowest cell id) or ``l2`` (argmin ||x-c||, same tie rule). The
-    refine is always exact cosine over the probed candidates.
-    """
-    import numpy as np
-    import pandas as pd
-
-    spark = corpus.sparkSession
-    bc_centers = spark.sparkContext.broadcast(np.ascontiguousarray(centers_mat))
-
-    def _affinity(m, cm):
-        # higher = closer, first max wins ties (lowest cell id)
-        if metric == "l2":
-            return m @ cm.T - 0.5 * (cm * cm).sum(axis=1)[None, :]
-        return m @ cm.T
-
-    def assign_cells(batches):
-        cm = bc_centers.value
-        for pdf in batches:
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            pdf = pdf.copy()
-            pdf["_cell"] = _affinity(m, cm).argmax(axis=1).astype(np.int32)
-            yield pdf
-
-    assigned_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in corpus.schema.fields]
-        + ["_cell int"]
-    )
-    assigned = ensure_parallelism(corpus).mapInPandas(assign_cells, assigned_schema)
-
-    def probe_cells(batches):
-        cm = bc_centers.value
-        for pdf in batches:
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            top = np.argsort(-_affinity(m, cm), axis=1, kind="stable")[:, :n_probe]
-            qids = pdf[query_id].to_numpy()
-            yield pd.DataFrame(
-                {
-                    query_id: np.repeat(qids, top.shape[1]),
-                    "_cell": top.reshape(-1).astype(np.int32),
-                    "_probe_rank": np.tile(
-                        np.arange(top.shape[1], dtype=np.int32), len(qids)
-                    ),
-                }
-            )
-
-    probes = (
-        queries.select(query_id, vec_col)
-        .mapInPandas(probe_cells, f"{query_id} long, _cell int, _probe_rank int")
-        .join(queries.select(F.col(query_id), F.col(vec_col).alias("_qvec")), query_id)
-    )
-    return assigned.join(F.broadcast(probes), "_cell").select(
-        query_id,
-        corpus_id,
-        F.round(cosine("_qvec", vec_col), 6).alias("score"),
-        "_probe_rank",
-    )
-
-
-def _ivf_assign_probe_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    centers_mat,
-    k: int,
-    n_probe: int,
-    query_id: str,
-    corpus_id: str,
-    vec_col: str,
-    metric: str = "dot",
-) -> DataFrame:
-    """Shared IVF machinery: given a driver-side (n_cells × dim) centroid
-    matrix, assign corpus vectors to cells and probe per-query cells with
-    vectorized numpy kernels (one narrow pass each, broadcast centroids),
-    then equi-join on the cell id and refine with exact cosine + top-k.
-    """
-    cand = _ivf_scored_candidates(
-        queries, corpus, centers_mat, n_probe, query_id, corpus_id, vec_col,
-        metric=metric,
-    ).drop("_probe_rank")
-    return top_k_per_group(cand, [query_id], [F.desc("score"), F.asc(corpus_id)], k=k)
-
-
 def knn_lsh(
     queries: DataFrame,
     corpus: DataFrame,
@@ -368,56 +273,6 @@ def knn_lsh(
 
     out = cand_vec.mapInPandas(refine, f"{query_id} long, {corpus_id} long, dist double")
     return top_k_per_group(out, [query_id], [F.asc("dist"), F.asc(corpus_id)], k=k)
-
-
-def knn_ivf(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    n_cells: int = 16,
-    n_probe: int = 2,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """IVF-style ANN: sample ``n_cells`` corpus vectors as centroids
-    (deterministic hash-ordered sample), assign each corpus vector to
-    its max-dot-product centroid, then for each query probe the
-    ``n_probe`` best cells only.
-
-    At 100 TB the corpus-side assignment is a single narrow map with a
-    broadcast centroid matrix (n_cells × dim doubles — KBs); the probe
-    join touches ~n_probe/n_cells of the data. Assignment and probe run
-    as vectorized numpy kernels (BLAS matmul per Arrow batch) — the
-    earlier crossJoin+window formulation shuffled |corpus| × n_cells
-    rows through a row_number window for the same result (measured 3.4 s
-    → ~1 s at sf0.1). Approximate → rows-only checked.
-    """
-    centers_mat = _ivf_sample_centers(corpus, n_cells, corpus_id, vec_col, seed)
-    return _ivf_assign_probe_topk(
-        queries, corpus, centers_mat, k, n_probe, query_id, corpus_id, vec_col,
-        metric="dot",
-    )
-
-
-def _ivf_sample_centers(
-    corpus: DataFrame, n_cells: int, corpus_id: str, vec_col: str, seed: int
-):
-    """Deterministic hash-ordered centroid sample as a driver-side
-    (n_cells × dim) float64 matrix — ONE TakeOrdered job. Factored out
-    (r12) so a caller building several IVF passes over the same corpus
-    (e.g. a recall curve) samples once instead of per pass."""
-    import numpy as np
-
-    cents = (
-        corpus.select(F.col(corpus_id).alias("_cid"), F.col(vec_col).alias("_cvec"))
-        .orderBy(F.xxhash64(F.col("_cid") + F.lit(seed)))
-        .limit(n_cells)
-        .select("_cvec")
-        .toPandas()
-    )
-    return np.stack(cents["_cvec"].to_numpy()).astype(np.float64)
 
 
 def cosine_lsh_pairs(
@@ -631,360 +486,31 @@ def cosine_pairs_above(
     return base.mapInPandas(kernel, "id_a long, id_b long, score double")
 
 
-def knn_ivf_kmeans(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    n_cells: int = 16,
-    n_probe: int = 2,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    fit_fraction: float = 1.0,
-) -> DataFrame:
-    """IVF ANN with KMeans-trained cells (vs sampled centroids in
-    ``knn_ivf``): centroids actually tile the data distribution, so
-    cell populations are balanced and probe recall is higher for the
-    same n_probe. Train is one pass over (a sample of) the corpus;
-    assignment is a broadcast transform. Approximate → rows-only.
-
-    The fit runs DRIVER-SIDE with numpy Lloyd iterations over a bounded
-    sample (``fit_fraction``, capped at ``_FIT_CAP`` rows — at 100 TB
-    pass ~1e5/|corpus|): a 16-cell fit over ≤100k×64 doubles is
-    milliseconds of BLAS, vs ~10 distributed jobs (one per iteration)
-    for Spark ML KMeans. Sampling-to-driver for coarse-quantizer
-    training is the standard IVF recipe; only the bounded sample ever
-    leaves the executors. Assignment stays distributed (one vectorized
-    kernel pass with the broadcast centroid matrix).
-    (Measured at sf0.1: 5.3 s ml-lib → 1.5 s cached ml-lib → ~0.7 s.)
-    """
-    centers_mat = _fit_centroids_driver(corpus, vec_col, n_cells, seed, fit_fraction)
-
-    return _ivf_assign_probe_topk(
-        queries, corpus, centers_mat, k, n_probe, query_id, corpus_id, vec_col,
-        metric="l2",
-    )
-
-
-def fit_pq_codebooks(
-    corpus: DataFrame,
-    m: int = 8,
-    n_codes: int = 16,
-    vec_col: str = "embedding",
-    seed: int = 42,
-    iters: int = 10,
-    fit_cap: int = 200_000,
-):
-    """Product-quantization codebooks (Jégou et al. 2011, public
-    knowledge): split the d-dim space into ``m`` subspaces and run
-    per-subspace KMeans (``n_codes`` centroids each). A vector is then
-    stored as m small codes — at m=8 that is 8 bytes instead of 256 for
-    a 64-dim float32 embedding, the 32x shrink that makes a 100 TB
-    embedding store RAM-resident for ANN serving.
-
-    Same driver-fit posture as ``knn_ivf_kmeans``: codebook training
-    uses a BOUNDED sample (``fit_cap`` rows — at corpus scale pass a
-    sampling fraction upstream), numpy Lloyd iterations per subspace
-    (seeded, milliseconds of BLAS); everything per-row afterwards is
-    distributed. Returns np.ndarray (m, n_codes, d//m)."""
-    import numpy as np
-
-    sample = np.stack(
-        ensure_parallelism(corpus)
-        .select(F.col(vec_col).alias("_v"))
-        .limit(fit_cap)
-        .toPandas()["_v"]
-        .to_numpy()
-    ).astype(np.float64)
-    d = sample.shape[1]
-    if d % m != 0:
-        raise ValueError(f"dim {d} not divisible by m={m} subspaces")
-    sub_d = d // m
-    rng = np.random.RandomState(seed)
-    books = np.empty((m, n_codes, sub_d))
-    for j in range(m):
-        sub = sample[:, j * sub_d : (j + 1) * sub_d]
-        centers = sub[rng.choice(len(sub), size=n_codes, replace=False)]
-        for _ in range(iters):
-            d2 = ((sub[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for c in range(n_codes):
-                members = sub[assign == c]
-                if len(members):
-                    centers[c] = members.mean(axis=0)
-        books[j] = centers
-    return books
-
-
-def pq_encode(
-    df: DataFrame,
-    codebooks,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    code_col: str = "pq_codes",
-) -> DataFrame:
-    """Distributed PQ encoding: one vectorized kernel pass with the
-    broadcast codebooks; output is (id, array<tinyint> of m codes) —
-    the compressed representation a 100 TB ingest would write instead
-    of (alongside) raw floats."""
-    import numpy as np
-    import pandas as pd
-
-    spark = df.sparkSession
-    m, n_codes, sub_d = codebooks.shape
-    bc = spark.sparkContext.broadcast(np.ascontiguousarray(codebooks))
-
-    def kernel(batches):
-        books = bc.value
-        for pdf in batches:
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            if not len(ids):
-                continue
-            mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            codes = np.empty((len(ids), m), dtype=np.int8)
-            for j in range(m):
-                sub = mat[:, j * sub_d : (j + 1) * sub_d]
-                # (n, n_codes) squared distances to this subspace's centroids
-                d2 = ((sub[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-                codes[:, j] = d2.argmin(axis=1).astype(np.int8)
-            yield pd.DataFrame({id_col: ids, code_col: list(codes)})
-
-    return ensure_parallelism(df).select(id_col, vec_col).mapInPandas(
-        kernel, f"{id_col} long, {code_col} array<tinyint>"
-    )
-
-
-def knn_pq_adc(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    m: int = 8,
-    n_codes: int = 16,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    round_to: int = 6,
-) -> DataFrame:
-    """Approximate kNN by asymmetric distance computation over PQ codes:
-    per query, precompute an (m, n_codes) lookup table of subspace
-    squared distances; a corpus vector's approximate L2 is then m table
-    gathers + a sum — no float vector is ever touched at query time.
-
-    Scale shape: queries are bounded/broadcast (their LUTs are
-    nq*m*n_codes doubles); the corpus is one encoded-codes scan, each
-    partition emits only its LOCAL top-k per query, and the exact
-    global top-k reduces (partitions × nq × k) candidate rows — the
-    same partial-top-k pattern as TakeOrdered. Approximate → rows-only
-    with recall self-check at the query layer."""
-    import numpy as np
-    import pandas as pd
-
-    spark = corpus.sparkSession
-    books = fit_pq_codebooks(
-        corpus, m=m, n_codes=n_codes, vec_col=vec_col, seed=seed
-    )
-    encoded = pq_encode(corpus, books, id_col=corpus_id, vec_col=vec_col)
-    sub_d = books.shape[2]
-
-    qpdf = queries.select(query_id, vec_col).toPandas()
-    qids = qpdf[query_id].to_numpy(dtype=np.int64)
-    qmat = np.stack(qpdf[vec_col].to_numpy()).astype(np.float64)
-    # LUT[q, j, c] = ||q_sub_j - codebook[j][c]||^2
-    lut = np.empty((len(qids), m, n_codes))
-    for j in range(m):
-        qs = qmat[:, j * sub_d : (j + 1) * sub_d]
-        lut[:, j, :] = ((qs[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-    bc = spark.sparkContext.broadcast((qids, lut))
-
-    def kernel(batches):
-        q_ids, q_lut = bc.value
-        nq = len(q_ids)
-        for pdf in batches:
-            ids = pdf[corpus_id].to_numpy(dtype=np.int64)
-            if not len(ids):
-                continue
-            codes = np.stack(pdf["pq_codes"].to_numpy()).astype(np.int64)
-            acc = np.zeros((nq, len(ids)))
-            for j in range(m):
-                acc += q_lut[:, j, codes[:, j]]
-            dists = np.sqrt(acc)
-            top = min(k, len(ids))
-            part = np.argpartition(dists, top - 1, axis=1)[:, :top]
-            out_q = np.repeat(q_ids, top)
-            out_i = ids[part.reshape(-1)]
-            out_d = np.take_along_axis(dists, part, axis=1).reshape(-1)
-            yield pd.DataFrame(
-                {query_id: out_q, corpus_id: out_i, "adc_dist": out_d}
-            )
-
-    local = encoded.mapInPandas(
-        kernel, f"{query_id} long, {corpus_id} long, adc_dist double"
-    ).withColumn("adc_dist", F.round("adc_dist", round_to))
-    return top_k_per_group(
-        local, [query_id], [F.asc("adc_dist"), F.asc(corpus_id)], k=k
-    )
-
-
-def knn_pq_refined(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int,
-    shortlist: int = 50,
-    m: int = 8,
-    n_codes: int = 16,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    round_to: int = 6,
-) -> DataFrame:
-    """PQ ANN with EXACT RE-RANKING (the standard two-stage serving
-    shape, Jégou et al. §V): ADC over compressed codes produces a
-    ``shortlist`` of candidates per query, then only those candidate
-    vectors are fetched at full precision and re-ranked by exact L2.
-    Recall@k becomes the ADC shortlist's recall@shortlist — far above
-    raw ADC@k — while full-precision distance work drops from |corpus|
-    to nq × shortlist.
-
-    Scale shape: the shortlist (nq × shortlist id pairs — KBs) rides
-    ``broadcast_if_small`` back onto the corpus scan, so candidate
-    vectors are fetched by a broadcast semi-probe, never a corpus
-    shuffle; the re-rank itself is nq × shortlist rows of Column
-    algebra. Returns (query_id, corpus_id, dist) — exact L2 on the
-    survivors."""
-    from ..functions.vector import as_double, dot, l2_norm
-
-    cand = knn_pq_adc(
-        queries,
-        corpus,
-        k=shortlist,
-        m=m,
-        n_codes=n_codes,
-        query_id=query_id,
-        corpus_id=corpus_id,
-        vec_col=vec_col,
-        seed=seed,
-        round_to=round_to,
-    ).select(query_id, corpus_id)
-    cvec = corpus.select(
-        F.col(corpus_id),
-        as_double(vec_col).alias("_cvec"),
-        l2_norm(vec_col).alias("_cnorm"),
-    )
-    qvec = queries.select(
-        F.col(query_id),
-        as_double(vec_col).alias("_qvec"),
-        l2_norm(vec_col).alias("_qnorm"),
-    )
-    fetched = cvec.join(broadcast_if_small(cand), corpus_id).join(
-        F.broadcast(qvec), query_id
-    )
-    dist = F.sqrt(
-        F.greatest(
-            F.col("_qnorm") * F.col("_qnorm")
-            - 2.0 * dot(F.col("_qvec"), F.col("_cvec"))
-            + F.col("_cnorm") * F.col("_cnorm"),
-            F.lit(0.0),
-        )
-    )
-    reranked = fetched.select(
-        query_id, corpus_id, F.round(dist, round_to).alias("dist")
-    )
-    return top_k_per_group(
-        reranked, [query_id], [F.asc("dist"), F.asc(corpus_id)], k=k
-    )
-
-
 # ---------------------------------------------------------------------------
-# SemDeDup — cluster-scoped semantic deduplication
+# Deterministic quantizers: one Lloyd recurrence (md5-ordered seeds,
+# integer-micros updates) behind k-means cells, IVF and PQ
 # ---------------------------------------------------------------------------
 
 
-def _fit_centroids_driver(
-    corpus: DataFrame,
-    vec_col: str,
-    n_cells: int,
-    seed: int,
-    fit_fraction: float = 1.0,
-    fit_cap: int = 200_000,
-    iters: int = 10,
-):
-    """Driver-side numpy Lloyd fit over a bounded corpus sample — the
-    standard coarse-quantizer recipe (same bound/rationale as
-    ``knn_ivf_kmeans``: at 100 TB pass ``fit_fraction`` ≈ 1e5/|corpus|;
-    only the capped sample ever leaves the executors)."""
-    import numpy as np
-
-    fit_df = ensure_parallelism(corpus).select(F.col(vec_col).alias("_v"))
-    if fit_fraction < 1.0:
-        fit_df = fit_df.sample(fraction=fit_fraction, seed=seed)
-    sample = np.stack(fit_df.limit(fit_cap).toPandas()["_v"].to_numpy()).astype(
-        np.float64
-    )
-    rng = np.random.RandomState(seed)
-    # tiny corpora: can't seed more centers than sample rows — clamp
-    # (every vector its own cell) instead of raising from rng.choice
-    n_cells = min(n_cells, len(sample))
-    centers = sample[rng.choice(len(sample), size=n_cells, replace=False)]
-    for _ in range(iters):
-        d2 = ((sample[:, None, :] - centers[None, :, :]) ** 2).sum(axis=2)
-        cells = d2.argmin(axis=1)
-        for j in range(n_cells):
-            members = sample[cells == j]
-            if len(members):
-                centers[j] = members.mean(axis=0)
-    return centers
-
-
-def assign_kmeans_cells(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    n_cells: int = 16,
-    seed: int = 42,
-    out_col: str = "cell",
-    fit_fraction: float = 1.0,
-) -> DataFrame:
-    """Attach a KMeans cell id to every row: driver-bounded centroid
-    fit + ONE vectorized broadcast-assignment kernel pass (no shuffle —
-    assignment is a narrow map)."""
-    import numpy as np
-    import pandas as pd
-
-    centers = _fit_centroids_driver(df, vec_col, n_cells, seed, fit_fraction)
-    bc = df.sparkSession.sparkContext.broadcast(centers)
-    fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields)
-    schema = f"{fields}, {out_col} int"
-
-    def kernel(batches):
-        c = bc.value
-        c2 = (c * c).sum(axis=1)
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            # argmin over squared L2 via the expansion trick (no n×k×d temp)
-            d2 = (m * m).sum(axis=1)[:, None] - 2.0 * (m @ c.T) + c2[None, :]
-            out = pdf.copy()
-            out[out_col] = d2.argmin(axis=1).astype(np.int32)
-            yield out
-
-    return df.mapInPandas(kernel, schema)
-
-
-def _kmeans_assign_batch(m, c, round_to: int = 6):
-    """Oracle-exact cell assignment: argmin over the INTEGER-quantized
-    distance ``CAST(ROUND(Σ(xᵢ−cᵢ)²·10^r) AS BIGINT)`` (half-away, the
-    engines' rule — see `_q_scaled`); np.argmin's first-minimum = the
-    lowest-cell tie-break the DuckDB replay's (dist, cell) ordering
-    states."""
+def _q_sqdist(m, c, round_to: int = 6):
+    """(rows of ``m``) × (rows of ``c``) INTEGER-quantized squared L2
+    distances ``CAST(ROUND(Σ(xᵢ−cᵢ)²·10^r) AS BIGINT)`` (half-away, the
+    engines' rule — see `_q_scaled`): the one distance every
+    deterministic quantizer here ranks cells by (Lloyd assignment, IVF
+    probe, blocked-bitext probe)."""
     import numpy as np
 
     d2 = np.empty((len(m), len(c)))
     for j in range(len(c)):
         d2[:, j] = ((m - c[j]) ** 2).sum(axis=1)
-    return _q_scaled(d2, round_to).argmin(axis=1)
+    return _q_scaled(d2, round_to)
+
+
+def _kmeans_assign_batch(m, c, round_to: int = 6):
+    """Oracle-exact cell assignment: argmin over `_q_sqdist`;
+    np.argmin's first-minimum = the lowest-cell tie-break the DuckDB
+    replay's (dist, cell) ordering states."""
+    return _q_sqdist(m, c, round_to).argmin(axis=1)
 
 
 def _lloyd_seed_order(idv, n_cells: int):
@@ -1006,34 +532,48 @@ def _lloyd_seed_order(idv, n_cells: int):
     )[: int(n_cells)]
 
 
+def _lloyd_update(centers, counts, sums, scale: int):
+    """One centroid update from per-cell counts and int64 sums of
+    quantized coordinates: the integer half-up average
+    (2Σ + N) div (2N) in units of 1/``scale``, div truncating toward
+    zero (the functions/exact contract); empty cells keep their
+    previous centroid. Shared by the single-task and distributed fits,
+    so the centroid is a pure integer function of the assignment."""
+    import numpy as np
+
+    from ..functions.exact import np_trunc_div
+
+    nz = counts > 0
+    new_c = centers.copy()
+    n_col = counts[nz][:, None]
+    new_c[nz] = (
+        np_trunc_div(2 * sums[nz] + n_col, 2 * n_col).astype(np.float64) / scale
+    )
+    return new_c
+
+
 def _lloyd_iterate(mat, centers, iters: int, round_to: int):
     """Run ``iters`` deterministic-Lloyd rounds over an in-memory
     matrix — the single-task body of the fit. Bit-identical to the
     distributed per-partition partials + driver reduce: the assignment
-    is the same ``_kmeans_assign_batch`` and the centroid update is the
-    same order-free int64 quantize-before-sum + (2Σ+N) div 2N half-up
-    average, so partitioning cannot appear in the result by
+    is the same ``_kmeans_assign_batch`` and the update the same
+    ``_lloyd_update`` over order-free int64 quantize-before-sum
+    partials, so partitioning cannot appear in the result by
     construction."""
     import numpy as np
 
-    from ..functions.exact import np_round_half_away_scaled, np_trunc_div
+    from ..functions.exact import np_round_half_away_scaled
 
     scale = 10 ** int(round_to)
     k = len(centers)
     q = np_round_half_away_scaled(mat, scale)
     for _ in range(iters):
         cells = _kmeans_assign_batch(mat, centers, round_to)
-        counts = np.bincount(cells, minlength=k)
         sums = np.zeros((k, mat.shape[1]), dtype=np.int64)
         np.add.at(sums, cells, q)
-        nz = counts > 0
-        new_c = centers.copy()  # empty cells keep previous centroid
-        n_col = counts[nz][:, None]
-        new_c[nz] = (
-            np_trunc_div(2 * sums[nz] + n_col, 2 * n_col).astype(np.float64)
-            / scale
+        centers = _lloyd_update(
+            centers, np.bincount(cells, minlength=k), sums, scale
         )
-        centers = new_c
     return centers
 
 
@@ -1043,7 +583,7 @@ def _lloyd_iterate(mat, centers, iters: int, round_to: int):
 # partial-collect) driver barriers — the same adaptive pattern as BPE
 # training's single-task merge loop. Each barrier is a full cluster
 # round-trip at any scale; on a wide input the row count blows the
-# bound and the distributed loop below is used unchanged.
+# bound and the distributed loop is used.
 _LLOYD_SINGLE_TASK_ROWS = 65_536
 _LLOYD_SINGLE_TASK_CELLS = 2_000_000  # n_rows × n_cells assignment budget
 
@@ -1078,17 +618,11 @@ def _lloyd_fit_single_task(
         idv = np.concatenate(ids)
         mat = np.vstack(vecs)
         order = _lloyd_seed_order(idv, n_cells)
-        if slices is None:
-            books = [_lloyd_iterate(mat, mat[order].copy(), iters, round_to)]
-        else:
-            books = []
-            for s0, ln in slices:
-                sub = np.ascontiguousarray(mat[:, s0 : s0 + ln])
-                books.append(
-                    _lloyd_iterate(sub, sub[order].copy(), iters, round_to)
-                )
+        views = [(0, mat.shape[1])] if slices is None else slices
         frames = []
-        for j, b in enumerate(books):
+        for j, (s0, ln) in enumerate(views):
+            sub = np.ascontiguousarray(mat[:, s0 : s0 + ln])
+            b = _lloyd_iterate(sub, sub[order].copy(), iters, round_to)
             frames.append(
                 pd.DataFrame(
                     {
@@ -1148,135 +682,40 @@ def kmeans_centers_deterministic(
     iters: int = 2,
     round_to: int = 6,
     precounted: int | None = None,
+    slices: list[tuple[int, int]] | None = None,
 ):
-    """The FIT half of ``kmeans_cells_deterministic`` (r7 split so IVF
+    """The FIT half of ``kmeans_cells_deterministic`` (split so IVF
     can probe the same centroids the cells came from): md5-ordered
     seeds, ``iters`` fused Lloyd rounds, returns the final (k × d)
     centroid ndarray — exactly the c_iters matrix the unrolled DuckDB
-    recurrence produces. Zero shuffles; k·|partitions| partial rows to
-    the driver per round.
+    recurrence produces. ``iters=0`` returns the seed rows themselves,
+    a deterministic md5-ordered centroid sample. Zero shuffles;
+    k·|partitions| partial rows to the driver per round.
 
-    r12: when the table fits the single-task budget (counted once —
+    ``slices`` (0-based (start, length) views of ``vec_col``) fits
+    INDEPENDENT codebooks, one per slice, in the same passes and
+    returns a list of (n_cells × length) ndarrays — bit-identical to
+    fitting each ``F.slice`` projection alone, because (a) the
+    md5-ordered seed rule depends only on ``id_col``, so every
+    subspace seeds from the SAME rows, and (b) each subspace's
+    assignment and integer-scaled partial sums never read another
+    subspace's columns. A product-quantizer fit is therefore
+    1 + ``iters`` jobs in total, not m × (1 + ``iters``).
+
+    When the table fits the single-task budget (counted once —
     ``precounted`` lets callers reuse a count they already paid; on a
     lazily-pinned input the count doubles as the pin job), the whole
     recurrence runs executor-side in ONE job (`_lloyd_fit_single_task`,
     bit-identical by the integer contract) instead of 1 + ``iters``
-    driver barriers."""
+    driver barriers, each a narrow full-corpus pass."""
     import numpy as np
     import pandas as pd
 
-    n = df.count() if precounted is None else int(precounted)
-    if _lloyd_single_task_ok(df, id_col, n, n_cells):
-        return _lloyd_fit_single_task(
-            df, id_col, vec_col, None, n_cells, iters, round_to
-        )
-
-    spark = df.sparkSession
-    seed_rows = (
-        df.select(F.col(id_col), F.col(vec_col))
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(n_cells)
-        .collect()
-    )
-    centers = np.stack(
-        [np.asarray(r[1], dtype=np.float64) for r in seed_rows]
-    )
-    k, d = centers.shape
-
-    from ..functions.exact import np_round_half_away_scaled, np_trunc_div
-
-    scale = 10 ** int(round_to)
-
-    def partials(centers_arr):
-        """One fused scan: per-partition (cell, n, INTEGER-scaled sum
-        per dim). r12: partials accumulate in int64 units of
-        10^-round_to — float partial sums made the updated centroid
-        depend on partition/summation order, the exact cross-engine
-        ROUND(AVG) half-case class the sf0.1 sweep proved real
-        (resample, r11); with quantize-before-sum the centroid is a
-        pure integer function of the assignment, identical on any
-        partitioning and bit-equal to the DuckDB oracle's replay."""
-        bc = spark.sparkContext.broadcast(centers_arr)
-        schema = "cell int, n long, s array<long>"
-
-        def kernel(batches):
-            c = bc.value
-            counts = np.zeros(len(c), dtype=np.int64)
-            sums = np.zeros((len(c), c.shape[1]), dtype=np.int64)
-            for pdf in batches:
-                if not len(pdf):
-                    continue
-                m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                cells = _kmeans_assign_batch(m, c, round_to)
-                counts += np.bincount(cells, minlength=len(c))
-                np.add.at(
-                    sums, cells, np_round_half_away_scaled(m, scale)
-                )
-            nz = np.nonzero(counts)[0]
-            if len(nz) == 0:
-                # empty partition (or every row filtered upstream):
-                # yielding here would emit an EMPTY python-list "s"
-                # column, which pandas types float64 and Arrow then
-                # cannot convert to the list type — the r11 facade test
-                # hit exactly this on a 12-row frame with empty
-                # partitions. Yield nothing instead.
-                return
-            yield pd.DataFrame(
-                {"cell": nz.astype(np.int32), "n": counts[nz], "s": list(sums[nz])}
-            )
-
-        return df.mapInPandas(kernel, schema).collect()
-
-    for _ in range(iters):
-        agg_n = np.zeros(k, dtype=np.int64)
-        agg_s = np.zeros((k, d), dtype=np.int64)
-        for r in partials(centers):
-            agg_n[r["cell"]] += r["n"]
-            agg_s[r["cell"]] += np.asarray(r["s"], dtype=np.int64)
-        new_centers = centers.copy()  # empty cells keep previous centroid
-        nz = agg_n > 0
-        # integer half-up average in scaled units — (2Σ + N) div (2N)
-        # with div truncating toward zero, the functions/exact contract
-        n_col = agg_n[nz][:, None]
-        new_centers[nz] = (
-            np_trunc_div(2 * agg_s[nz] + n_col, 2 * n_col).astype(
-                np.float64
-            )
-            / scale
-        )
-        centers = new_centers
-    return centers
-
-
-def kmeans_centers_deterministic_sliced(
-    df: DataFrame,
-    slices: list[tuple[int, int]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_cells: int = 8,
-    iters: int = 2,
-    round_to: int = 6,
-    precounted: int | None = None,
-):
-    """Fit INDEPENDENT deterministic-Lloyd codebooks over ``slices``
-    (0-based (start, length) views of ``vec_col``) in ONE set of
-    passes — bit-identical to calling ``kmeans_centers_deterministic``
-    once per ``F.slice`` projection, because (a) the md5-ordered seed
-    rule depends only on ``id_col``, so every subspace seeds from the
-    SAME rows, and (b) each subspace's assignment and integer-scaled
-    partial sums never read another subspace's columns. Collapses the
-    m × (1 seed TakeOrdered + iters partial-collect) jobs of a
-    product-quantizer fit to 1 + iters jobs total — the per-merge
-    barrier latency was scheduler overhead, not compute (guide §2.4).
-    Returns a list of (n_cells × length) ndarrays, one per slice.
-
-    r12: below the single-task budget the whole multi-book fit is ONE
-    1-task job (see ``kmeans_centers_deterministic``)."""
-    import numpy as np
-    import pandas as pd
+    from ..functions.exact import np_round_half_away_scaled
 
     n = df.count() if precounted is None else int(precounted)
-    if _lloyd_single_task_ok(df, id_col, n, n_cells * len(slices)):
+    n_books = 1 if slices is None else len(slices)
+    if _lloyd_single_task_ok(df, id_col, n, n_cells * n_books):
         return _lloyd_fit_single_task(
             df, id_col, vec_col, slices, n_cells, iters, round_to
         )
@@ -1289,30 +728,30 @@ def kmeans_centers_deterministic_sliced(
         .collect()
     )
     full = np.stack([np.asarray(r[1], dtype=np.float64) for r in seed_rows])
-    books = [
-        np.ascontiguousarray(full[:, s : s + ln]) for s, ln in slices
-    ]
-
-    from ..functions.exact import np_round_half_away_scaled, np_trunc_div
-
+    views = [(0, full.shape[1])] if slices is None else slices
+    books = [np.ascontiguousarray(full[:, s : s + ln]) for s, ln in views]
     scale = 10 ** int(round_to)
-    m = len(slices)
 
     def partials(books_arr):
+        """One fused scan: per-partition (sub, cell, n, INTEGER-scaled
+        sum per dim). Partials accumulate in int64 units of
+        10^-round_to — float partial sums made the updated centroid
+        depend on partition/summation order (the cross-engine
+        ROUND(AVG) half-case class the sf0.1 sweep proved real); with
+        quantize-before-sum the centroid is a pure integer function of
+        the assignment, identical on any partitioning and bit-equal to
+        the DuckDB oracle's replay."""
         bc = spark.sparkContext.broadcast(books_arr)
-        schema = "sub int, cell int, n long, s array<long>"
 
         def kernel(batches):
             bks = bc.value
             counts = [np.zeros(len(b), dtype=np.int64) for b in bks]
-            sums = [
-                np.zeros((len(b), b.shape[1]), dtype=np.int64) for b in bks
-            ]
+            sums = [np.zeros(b.shape, dtype=np.int64) for b in bks]
             for pdf in batches:
                 if not len(pdf):
                     continue
                 mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                for j, (s0, ln) in enumerate(slices):
+                for j, (s0, ln) in enumerate(views):
                     sub = mat[:, s0 : s0 + ln]
                     cells = _kmeans_assign_batch(sub, bks[j], round_to)
                     counts[j] += np.bincount(cells, minlength=len(bks[j]))
@@ -1320,7 +759,7 @@ def kmeans_centers_deterministic_sliced(
                         sums[j], cells, np_round_half_away_scaled(sub, scale)
                     )
             frames = []
-            for j in range(m):
+            for j in range(len(bks)):
                 nz = np.nonzero(counts[j])[0]
                 if len(nz) == 0:
                     continue
@@ -1334,32 +773,29 @@ def kmeans_centers_deterministic_sliced(
                         }
                     )
                 )
+            # an empty partition yields NOTHING: an empty python-list
+            # "s" column is typed float64 by pandas and Arrow cannot
+            # convert it to the list type (the r11 facade crash on a
+            # 12-row frame with empty partitions)
             if frames:
                 yield pd.concat(frames, ignore_index=True)
 
-        return df.mapInPandas(kernel, schema).collect()
+        return df.mapInPandas(
+            kernel, "sub int, cell int, n long, s array<long>"
+        ).collect()
 
     for _ in range(iters):
         agg_n = [np.zeros(len(b), dtype=np.int64) for b in books]
-        agg_s = [
-            np.zeros((len(b), b.shape[1]), dtype=np.int64) for b in books
-        ]
+        agg_s = [np.zeros(b.shape, dtype=np.int64) for b in books]
         for r in partials(books):
             j = r["sub"]
             agg_n[j][r["cell"]] += r["n"]
             agg_s[j][r["cell"]] += np.asarray(r["s"], dtype=np.int64)
-        for j in range(m):
-            nz = agg_n[j] > 0
-            new_b = books[j].copy()  # empty cells keep previous centroid
-            n_col = agg_n[j][nz][:, None]
-            new_b[nz] = (
-                np_trunc_div(2 * agg_s[j][nz] + n_col, 2 * n_col).astype(
-                    np.float64
-                )
-                / scale
-            )
-            books[j] = new_b
-    return books
+        books = [
+            _lloyd_update(b, agg_n[j], agg_s[j], scale)
+            for j, b in enumerate(books)
+        ]
+    return books[0] if slices is None else books
 
 
 def kmeans_cells_deterministic(
@@ -1372,14 +808,13 @@ def kmeans_cells_deterministic(
     out_col: str = "cell",
 ) -> DataFrame:
     """Distributed Lloyd (KMeans) with ENGINE-PORTABLE determinism —
-    the oracle-checkable coarse quantizer (upgrades the driver-sampled
-    ``assign_kmeans_cells``, whose `limit(fit_cap)` sample order makes
-    centroids layout-dependent):
+    the oracle-checkable coarse quantizer:
 
     - seeds: the ``n_cells`` rows with the smallest
       ``md5(CAST(id AS STRING))`` (hex order, id tie-break) — the
       md5-portable seeding this repo uses wherever DuckDB must replay
-      engine randomness; cell index = rank in that order;
+      engine randomness; cell index = rank in that order (a corpus
+      smaller than ``n_cells`` gets one cell per row);
     - each iteration assigns every point to
       argmin over ``ROUND(Σ(xᵢ−cᵢ)², round_to)`` (ties → lowest cell)
       and recomputes centroids as per-dimension ``ROUND(AVG, round_to)``
@@ -1398,7 +833,7 @@ def kmeans_cells_deterministic(
     groupBy(cell).avg, while skipping the posexplode shuffle the
     unfused form would pay). Nothing corpus-sized ever moves. Returns
     df + ``out_col`` int."""
-    from ..io import ensure_parallelism
+    import numpy as np
 
     # pinned once: the fit reads base 1 + iters times (seed + fused
     # Lloyd passes) and the assignment pass below reads it again — one
@@ -1411,9 +846,6 @@ def kmeans_cells_deterministic(
         base, id_col=id_col, vec_col=vec_col, n_cells=n_cells, iters=iters,
         round_to=round_to,
     )
-
-    import numpy as np
-    import pandas as pd  # noqa: F401 (kernel closure below)
 
     bc = df.sparkSession.sparkContext.broadcast(centers)
     fields = ", ".join(
@@ -1434,35 +866,38 @@ def kmeans_cells_deterministic(
     return base.mapInPandas(assign_kernel, schema)
 
 
-def knn_ivf_deterministic(
+def _ivf_scored_candidates(
     queries: DataFrame,
     corpus: DataFrame,
-    k: int,
-    n_cells: int = 8,
-    n_probe: int = 2,
-    iters: int = 2,
-    query_id: str = "query_id",
-    corpus_id: str = "vec_id",
-    vec_col: str = "embedding",
+    n_cells: int,
+    n_probe: int,
+    iters: int,
+    query_id: str,
+    corpus_id: str,
+    vec_col: str,
     round_to: int = 6,
 ) -> DataFrame:
-    """IVF ANN with ORACLE-GRADE determinism (r7): the coarse quantizer
-    is `kmeans_cells_deterministic`'s engine-portable recurrence
-    (md5-ordered seeds, ROUND-6 Lloyd), the probe ranks query→centroid
-    CAST(ROUND(L2²·10⁶) AS BIGINT) with lowest-cell ties (half-away on
-    both engines — r12), and the refine is exact
-    ROUND(cosine, 6) with id ties — every stage is SQL-replayable, so
-    the whole ANN search hash-checks against a DuckDB unroll instead of
-    settling for a rows-only recall gate. Same physical shape as
-    `knn_ivf_kmeans`: zero-shuffle fused Lloyd fit, one narrow
-    assignment kernel over the corpus, a broadcast (query, cell) probe
-    table, per-cell equi-join + exact top-k — per-query cost
+    """The IVF candidate path: (query_id, corpus_id, score,
+    _probe_rank) for every corpus vector in one of a query's
+    ``n_probe`` nearest cells, where _probe_rank is the position of
+    the candidate's cell in the query's probe order (0 = home cell).
+
+    Every stage is SQL-replayable: the coarse quantizer is
+    `kmeans_centers_deterministic` (``iters=0`` probes the md5-ordered
+    seed sample itself), assignment and probe both rank cells by
+    `_q_sqdist` with lowest-cell ties, and the score is
+    CAST(ROUND(cosine·10^r) AS BIGINT)/10^r. Because a corpus vector
+    lives in exactly one cell, candidate sets NEST in n_probe —
+    ``filter(_probe_rank < p)`` reproduces the n_probe=p candidate set
+    exactly — so ONE scored pass at the largest probe setting serves a
+    whole recall curve.
+
+    Physical shape: zero-shuffle fused Lloyd fit, one narrow
+    assignment kernel over the corpus, a broadcast (query, cell,
+    rank) probe table, per-cell equi-join — per-query cost
     ~n_probe/n_cells of the corpus."""
     import numpy as np
     import pandas as pd
-
-    from ..io import ensure_parallelism
-    from .topk import top_k_per_group
 
     # pinned once for the fit's 1 + iters passes plus the assignment
     # pass (guide §2.4; see kmeans_cells_deterministic). Lazy: the
@@ -1472,8 +907,7 @@ def knn_ivf_deterministic(
         base, id_col=corpus_id, vec_col=vec_col, n_cells=n_cells,
         iters=iters, round_to=round_to,
     )
-    spark = corpus.sparkSession
-    bc = spark.sparkContext.broadcast(centers)
+    bc = corpus.sparkSession.sparkContext.broadcast(centers)
 
     def assign_kernel(batches):
         c = bc.value
@@ -1496,25 +930,27 @@ def knn_ivf_deterministic(
             if not len(pdf):
                 continue
             m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            d2 = np.empty((len(m), len(c)))
-            for j in range(len(c)):
-                d2[:, j] = ((m - c[j]) ** 2).sum(axis=1)
-            d2 = _q_scaled(d2, round_to)
             # stable sort on the quantized distance = lowest-cell
             # tie-break, matching the assignment rule and the oracle's
             # ROW_NUMBER (dist, cell) ordering
-            order = np.argsort(d2, axis=1, kind="stable")[:, :n_probe]
+            order = np.argsort(_q_sqdist(m, c, round_to), axis=1, kind="stable")
+            order = order[:, :n_probe]
             qids = pdf[query_id].to_numpy()
             yield pd.DataFrame(
                 {
                     query_id: np.repeat(qids, order.shape[1]),
                     "_cell": order.reshape(-1).astype(np.int32),
+                    "_probe_rank": np.tile(
+                        np.arange(order.shape[1], dtype=np.int32), len(qids)
+                    ),
                 }
             )
 
     probes = (
         queries.select(query_id, vec_col)
-        .mapInPandas(probe_kernel, f"`{query_id}` long, _cell int")
+        .mapInPandas(
+            probe_kernel, f"`{query_id}` long, _cell int, _probe_rank int"
+        )
         .join(
             queries.select(F.col(query_id), F.col(vec_col).alias("_qvec")),
             query_id,
@@ -1526,13 +962,39 @@ def knn_ivf_deterministic(
     # ulp cases; the emitted score is the identical quotient on both
     # engines.
     s = float(10 ** round_to)
-    cand = assigned.join(F.broadcast(probes), "_cell").select(
+    return assigned.join(F.broadcast(probes), "_cell").select(
         query_id,
         corpus_id,
         (F.round(cosine("_qvec", vec_col) * s).cast("long") / F.lit(s)).alias(
             "score"
         ),
+        "_probe_rank",
     )
+
+
+def knn_ivf_deterministic(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    n_cells: int = 8,
+    n_probe: int = 2,
+    iters: int = 2,
+    query_id: str = "query_id",
+    corpus_id: str = "vec_id",
+    vec_col: str = "embedding",
+    round_to: int = 6,
+) -> DataFrame:
+    """IVF ANN with ORACLE-GRADE determinism: `_ivf_scored_candidates`
+    (md5-seeded integer-micros Lloyd cells, quantized-L2 probe of the
+    ``n_probe`` nearest cells, integer-scaled cosine) plus the exact
+    top-k by (score desc, id) — every stage is SQL-replayable, so the
+    whole ANN search hash-checks against a DuckDB unroll instead of
+    settling for a rows-only recall gate. ``iters=0`` is the
+    sampled-centroid IVF (cells = the md5-ordered seed rows)."""
+    cand = _ivf_scored_candidates(
+        queries, corpus, n_cells, n_probe, iters, query_id, corpus_id,
+        vec_col, round_to,
+    ).drop("_probe_rank")
     return top_k_per_group(
         cand, [query_id], [F.desc("score"), F.asc(corpus_id)], k=k
     )
@@ -1607,7 +1069,7 @@ def knn_pq_deterministic(
     round_to: int = 6,
 ) -> DataFrame:
     """Product-quantization ADC search with ORACLE-GRADE determinism
-    (r7, companion to `knn_ivf_deterministic`): per-subspace codebooks
+    (companion to `knn_ivf_deterministic`): per-subspace codebooks
     come from the deterministic Lloyd recurrence over SLICED vectors
     (same md5-ordered seeds per subspace), corpus codes are the
     integer-quantized per-subspace L2 argmins (lowest-code ties), and
@@ -1615,16 +1077,12 @@ def knn_pq_deterministic(
     AS BIGINT) / 10⁶ — the classic ADC lookup-table sum carried in
     EXACT int64 micros (r12: the float re-round disappeared), so
     the ENTIRE compressed-domain search (fit, encode, tables, top-k)
-    hash-checks against a DuckDB CTE unroll. Physical shape matches
-    `knn_pq_adc`: m driver-reduced fits (zero shuffle), ONE narrow
-    encode+ADC kernel pass over the corpus emitting per-partition
-    top-k, global top-k reduce — |Q|·k rows per partition move, never
-    the corpus."""
+    hash-checks against a DuckDB CTE unroll. Physical shape: one fused
+    m-codebook fit (zero shuffle), ONE narrow encode+ADC kernel pass
+    over the corpus emitting per-partition top-k, global top-k reduce
+    — |Q|·k rows per partition move, never the corpus."""
     import numpy as np
     import pandas as pd
-
-    from ..io import ensure_parallelism
-    from .topk import top_k_per_group
 
     d = _probe_dim(corpus, vec_col, "knn_pq_deterministic")
     if d % m != 0:
@@ -1634,14 +1092,13 @@ def knn_pq_deterministic(
     # encode+ADC pass (guide §2.4; see kmeans_cells_deterministic).
     # Lazy: the fit's cutover count materializes it (r12).
     base = ensure_parallelism(corpus).localCheckpoint(eager=False)
-    # one fused fit for all m subspaces (1 seed collect + iters passes
-    # instead of m × (1 + iters) — bit-identical books, see
-    # kmeans_centers_deterministic_sliced)
-    books = kmeans_centers_deterministic_sliced(
+    # one fused fit for all m subspaces (bit-identical to m separate
+    # fits, see kmeans_centers_deterministic's ``slices``)
+    books = kmeans_centers_deterministic(
         base,
-        [(j * sd, sd) for j in range(m)],
         id_col=corpus_id, vec_col=vec_col, n_cells=n_codes,
         iters=iters, round_to=round_to,
+        slices=[(j * sd, sd) for j in range(m)],
     )
     books_arr = np.stack(books)  # (m, n_codes, sd)
 
@@ -1717,6 +1174,81 @@ def knn_pq_deterministic(
     )
 
 
+def knn_pq_refined(
+    queries: DataFrame,
+    corpus: DataFrame,
+    k: int,
+    shortlist: int = 50,
+    m: int = 8,
+    n_codes: int = 16,
+    query_id: str = "query_id",
+    corpus_id: str = "vec_id",
+    vec_col: str = "embedding",
+    round_to: int = 6,
+) -> DataFrame:
+    """PQ ANN with EXACT RE-RANKING (the standard two-stage serving
+    shape, Jégou et al. §V): `knn_pq_deterministic`'s ADC over
+    compressed codes (10 Lloyd rounds per codebook) produces a
+    ``shortlist`` of candidates per query, then only those candidate
+    vectors are fetched at full precision and re-ranked by exact L2.
+    Recall@k becomes the ADC shortlist's recall@shortlist — far above
+    raw ADC@k — while full-precision distance work drops from |corpus|
+    to nq × shortlist.
+
+    Scale shape: the shortlist (nq × shortlist id pairs — KBs) rides
+    ``broadcast_if_small`` back onto the corpus scan, so candidate
+    vectors are fetched by a broadcast semi-probe, never a corpus
+    shuffle; the re-rank itself is nq × shortlist rows of Column
+    algebra. Returns (query_id, corpus_id, dist) — exact L2 on the
+    survivors."""
+    from ..functions.vector import as_double, dot, l2_norm
+
+    cand = knn_pq_deterministic(
+        queries,
+        corpus,
+        k=shortlist,
+        m=m,
+        n_codes=n_codes,
+        iters=10,
+        query_id=query_id,
+        corpus_id=corpus_id,
+        vec_col=vec_col,
+        round_to=round_to,
+    ).select(query_id, corpus_id)
+    cvec = corpus.select(
+        F.col(corpus_id),
+        as_double(vec_col).alias("_cvec"),
+        l2_norm(vec_col).alias("_cnorm"),
+    )
+    qvec = queries.select(
+        F.col(query_id),
+        as_double(vec_col).alias("_qvec"),
+        l2_norm(vec_col).alias("_qnorm"),
+    )
+    fetched = cvec.join(broadcast_if_small(cand), corpus_id).join(
+        F.broadcast(qvec), query_id
+    )
+    dist = F.sqrt(
+        F.greatest(
+            F.col("_qnorm") * F.col("_qnorm")
+            - 2.0 * dot(F.col("_qvec"), F.col("_cvec"))
+            + F.col("_cnorm") * F.col("_cnorm"),
+            F.lit(0.0),
+        )
+    )
+    reranked = fetched.select(
+        query_id, corpus_id, F.round(dist, round_to).alias("dist")
+    )
+    return top_k_per_group(
+        reranked, [query_id], [F.asc("dist"), F.asc(corpus_id)], k=k
+    )
+
+
+# ---------------------------------------------------------------------------
+# SemDeDup — cluster-scoped semantic deduplication
+# ---------------------------------------------------------------------------
+
+
 def semantic_dedup_pairs(
     df: DataFrame,
     threshold: float,
@@ -1724,7 +1256,6 @@ def semantic_dedup_pairs(
     vec_col: str = "embedding",
     cluster_col: str | None = None,
     n_cells: int = 16,
-    seed: int = 42,
     round_to: int = 6,
     tile: int = 2048,
     max_cluster_rows: int = 200_000,
@@ -1734,8 +1265,9 @@ def semantic_dedup_pairs(
     cost is Σ m_c² (bounded by cluster size), never |corpus|².
 
     ``cluster_col=None`` runs the built-in KMeans cells (the paper's
-    recipe); passing an existing column (e.g. a label / topic / domain)
-    makes the op fully deterministic and SQL-oracle-checkable. The
+    recipe: `kmeans_cells_deterministic`, ``n_cells`` cells, 2 Lloyd
+    rounds); passing an existing column (e.g. a label / topic / domain)
+    scopes by that key instead. Either way the op is deterministic. The
     output ``cluster`` column carries the ORIGINAL key value — long for
     integral clusters (and KMeans cells), the string form otherwise.
     No hash stands between the key and the pairing scope, so two
@@ -1761,7 +1293,9 @@ def semantic_dedup_pairs(
     import pandas as pd
 
     if cluster_col is None:
-        base = assign_kmeans_cells(df, vec_col, n_cells, seed, out_col="_cluster")
+        base = kmeans_cells_deterministic(
+            df, id_col, vec_col, n_cells=n_cells, out_col="_cluster"
+        )
         cl = "_cluster"
     else:
         base, cl = df, cluster_col
@@ -1844,7 +1378,6 @@ def semantic_dedup(
     vec_col: str = "embedding",
     cluster_col: str | None = None,
     n_cells: int = 16,
-    seed: int = 42,
 ) -> DataFrame:
     """SemDeDup survivors: drop every row that has a SMALLER-id semantic
     neighbor (cosine ≥ threshold) in its cluster; keep the rest.
@@ -1857,7 +1390,7 @@ def semantic_dedup(
     the input minus a broadcast-able dropped-id set (left_anti join).
     """
     pairs = semantic_dedup_pairs(
-        df, threshold, id_col, vec_col, cluster_col, n_cells, seed
+        df, threshold, id_col, vec_col, cluster_col, n_cells
     )
     dropped = pairs.select(F.col("id_b").alias(id_col)).distinct()
     return df.join(broadcast_if_small(dropped), on=id_col, how="left_anti")
@@ -2112,11 +1645,9 @@ def margin_bitext_mine_blocked(
                 if not len(pdf):
                     continue
                 m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-                d2 = np.empty((len(m), len(c)))
-                for j in range(len(c)):
-                    d2[:, j] = ((m - c[j]) ** 2).sum(axis=1)
-                d2 = _q_scaled(d2, round_to)
-                order = np.argsort(d2, axis=1, kind="stable")[:, :p]
+                order = np.argsort(
+                    _q_sqdist(m, c, round_to), axis=1, kind="stable"
+                )[:, :p]
                 yield pd.DataFrame(
                     {
                         id_col: np.repeat(pdf[id_col].to_numpy(), p),

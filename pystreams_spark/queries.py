@@ -1333,9 +1333,10 @@ def ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-@query(
-    "knn_exact_cosine",
-    oracle="""
+# exact cosine top-10 of the 5 query vectors (vec_id < 5) over the rest
+# of the embeddings: knn_exact_cosine's oracle, and the ground truth
+# the IVF recall oracles flag rows against
+_KNN_EXACT_COSINE_SQL = """
     WITH q AS (SELECT vec_id AS query_id, embedding FROM embeddings WHERE vec_id < 5),
          c AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 5),
          scored AS (
@@ -1353,8 +1354,10 @@ def ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM scored)
     WHERE rn <= 10
     ORDER BY query_id, score DESC, vec_id
-    """,
-)
+    """
+
+
+@query("knn_exact_cosine", oracle=_KNN_EXACT_COSINE_SQL)
 def knn_exact_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-10 for 5 query vectors — the exact ANN
     baseline (queries broadcast; corpus scanned once, never shuffled)."""
@@ -1572,29 +1575,6 @@ def knn_lsh_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = knn_exact(q, c, k=10, metric="l2", score_col="dist")
     return annotate_recall_vs_exact(approx, exact, k=10, min_avg_recall=0.6).orderBy(
         "query_id", "dist", "vec_id"
-    )
-
-
-@query("knn_ivf_approx")
-def knn_ivf_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-bucketed approximate kNN (sampled centroids, n_probe of
-    n_cells probed). Self-check columns flag rows vs the exact cosine
-    top-k. NOTE the fixture embeddings are uniform random (no cluster
-    structure — measured same-label vs cross-label mean cosine 0.002 vs
-    0.000), so IVF recall here is bounded by the probed fraction
-    (4/16); on real clustered embeddings recall concentrates far above
-    that bound."""
-    from .operators.similarity import annotate_recall_vs_exact, knn_exact, knn_ivf
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    c = e.filter(F.col("vec_id") >= 5)
-    approx = knn_ivf(q, c, k=10, n_probe=4)
-    exact = knn_exact(q, c, k=10)
-    return annotate_recall_vs_exact(approx, exact, k=10, min_avg_recall=0.15).orderBy(
-        "query_id", F.desc("score"), "vec_id"
     )
 
 
@@ -4468,47 +4448,33 @@ def price_neighborhood_range_frame(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
 
-@query("knn_ivf_kmeans")
-def knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF ANN with KMeans-trained centroids (seeded): higher-recall
-    cells than sampled centroids when the data clusters; the train step
-    runs once and amortizes over all queries. Approximate → rows-only.
-    Self-check columns flag rows vs the exact cosine top-k (see the
-    uniform-fixture recall caveat on knn_ivf_approx)."""
-    from .operators.similarity import annotate_recall_vs_exact, knn_exact
-    from .operators.similarity import knn_ivf_kmeans as op
-
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    c = e.filter(F.col("vec_id") >= 5)
-    approx = op(q, c, k=10, n_probe=4)
-    exact = knn_exact(q, c, k=10)
-    return annotate_recall_vs_exact(approx, exact, k=10, min_avg_recall=0.15).orderBy(
-        "query_id", F.desc("score"), "vec_id"
-    )
-
-
 @query("knn_pq_adc")
 def knn_pq_adc_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Product-quantization ANN (Jégou et al.; operators/similarity.py):
-    per-subspace KMeans codebooks (bounded driver fit, seeded), corpus
-    encoded to m=8 tinyint codes (32x smaller than float32 — the
-    RAM-resident 100 TB serving representation), queries answered by
-    asymmetric distance computation: per-partition local top-k over
-    LUT gathers, exact global top-k reduce. Approximate → rows-only;
-    recall self-check columns vs exact L2 top-k (fixture embeddings are
+    """Product-quantization ANN (Jégou et al.; operators/similarity.py)
+    at the serving parameters: `knn_pq_deterministic` with m=8
+    subspace codebooks of 16 codes (10 deterministic Lloyd rounds), so
+    the corpus encodes to 8 small codes per vector (32x smaller than
+    float32 — the RAM-resident 100 TB serving representation), and
+    queries are answered by asymmetric distance computation:
+    per-partition local top-k over the integer lookup-table sums,
+    exact global top-k reduce. Rows-only (a DuckDB replay of 10 Lloyd
+    rounds runs out of memory); recall self-check columns vs exact L2
+    top-k, and the recall floor raises in-plan. Fixture embeddings are
     uniform random — no cluster structure — so recall here sits at the
-    information floor of 64-bit codes; see the knn_ivf_approx caveat)."""
-    from .operators.similarity import annotate_recall_vs_exact, knn_exact, knn_pq_adc
+    information floor of 64-bit codes (see the knn_ivf_approx
+    caveat)."""
+    from .operators.similarity import (
+        annotate_recall_vs_exact,
+        knn_exact,
+        knn_pq_deterministic,
+    )
 
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
     c = e.filter(F.col("vec_id") >= 5)
-    approx = knn_pq_adc(q, c, k=10)
+    approx = knn_pq_deterministic(q, c, k=10, m=8, n_codes=16, iters=10)
     exact = knn_exact(q, c, k=10, metric="l2", score_col="dist")
     return annotate_recall_vs_exact(approx, exact, k=10, min_avg_recall=0.05).orderBy(
         "query_id", "adc_dist", "vec_id"
@@ -8749,11 +8715,12 @@ def semantic_dedup_by_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _lloyd_ctes(n_cells: int, iters: int) -> list:
-    """Shared unrolled-CTE prefix (r9 refactor): pts → md5-ordered
-    seeds c0 → alternating assign/update rounds → final assignment
-    a{iters}. Used by the kmeans-pair oracle and the r9 semantic
-    leakage oracle."""
+def _lloyd_ctes(n_cells: int, iters: int, where: str = "") -> list:
+    """Shared unrolled-CTE prefix (r9 refactor): pts (the embeddings
+    rows matching ``where``) → md5-ordered seeds c0 → alternating
+    assign/update rounds → final assignment a{iters}. The one DuckDB
+    replay of `kmeans_centers_deterministic`, used by the kmeans-pair,
+    semantic leakage, IVF and cluster-sample oracles."""
     assign = """
   a{i} AS (
     SELECT vec_id, v, cell FROM (
@@ -8779,9 +8746,9 @@ def _lloyd_ctes(n_cells: int, iters: int) -> list:
     ) m USING (cell)
   )"""
     ctes = [
-        """pts AS (
+        f"""pts AS (
     SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
+    FROM embeddings {where}
   )""",
         f"""c0 AS (
     SELECT (ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)) - 1 AS cell, v
@@ -8959,56 +8926,20 @@ def semantic_split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-def _ivf_oracle_sql(
-    n_cells: int = 8, iters: int = 2, n_probe: int = 2, k: int = 10
-) -> str:
-    """Unrolled-CTE DuckDB replay of knn_ivf_deterministic: the same
-    md5-seeded ROUND-6 Lloyd recurrence as `_kmeans_oracle_sql`, run
-    over the corpus slice, then probe = each query's n_probe nearest
-    centroids by ROUND(L2²,6) (cell tie-break), candidates = probed
-    cells' members, refine = ROUND(cosine,6) top-k (id tie-break)."""
-    assign = """
-  a{i} AS (
-    SELECT vec_id, v, cell FROM (
-      SELECT p.vec_id, p.v, s.cell,
-        ROW_NUMBER() OVER (PARTITION BY p.vec_id ORDER BY
-          CAST(ROUND(list_sum(list_transform(list_zip(p.v, s.v),
-                z -> (z[1]-z[2])*(z[1]-z[2]))) * 1000000) AS BIGINT), s.cell) AS rn
-      FROM pts p CROSS JOIN c{i} s) WHERE rn = 1
-  )"""
-    update = """
-  c{j} AS (
-    SELECT s.cell, COALESCE(m.v, s.v) AS v
-    FROM c{i} s LEFT JOIN (
-      SELECT cell, list(mv ORDER BY dim) AS v FROM (
-        SELECT cell, dim,
-               CAST((2 * SUM(CAST(ROUND(val * 1000000) AS BIGINT))
-                     + COUNT(val)) // (2 * COUNT(val)) AS DOUBLE)
-               / 1000000.0 AS mv FROM (
-          SELECT cell, unnest(v) AS val, generate_subscripts(v, 1) AS dim
-          FROM a{i}
-        ) GROUP BY cell, dim
-      ) GROUP BY cell
-    ) m USING (cell)
-  )"""
-    ctes = [
-        """pts AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings WHERE vec_id >= 5
-  )""",
+def _ivf_topk_ctes(n_cells: int, iters: int, n_probe: int, k: int) -> list:
+    """Unrolled-CTE DuckDB replay of knn_ivf_deterministic, ending in
+    an ``ivf`` CTE of (query_id, vec_id, score): the `_lloyd_ctes`
+    recurrence over the corpus slice (``iters=0`` = the md5-ordered
+    seed sample), then probe = each query's n_probe nearest centroids
+    by ROUND(L2²,6) (cell tie-break), candidates = probed cells'
+    members, refine = ROUND(cosine,6) top-k (id tie-break)."""
+    ctes = _lloyd_ctes(n_cells, iters, "WHERE vec_id >= 5")
+    ctes.append(
         """qs AS (
     SELECT vec_id AS query_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
     FROM embeddings WHERE vec_id < 5
-  )""",
-        f"""c0 AS (
-    SELECT (ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)) - 1 AS cell, v
-    FROM pts ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {n_cells}
-  )""",
-    ]
-    for i in range(iters):
-        ctes.append(assign.format(i=i).strip())
-        ctes.append(update.format(i=i, j=i + 1).strip())
-    ctes.append(assign.format(i=iters).strip())
+  )"""
+    )
     ctes.append(
         f"""probe AS (
     SELECT query_id, cell FROM (
@@ -9033,15 +8964,43 @@ def _ivf_oracle_sql(
     JOIN qs q ON q.query_id = pr.query_id
   )"""
     )
+    ctes.append(
+        f"""ivf AS (
+    SELECT query_id, vec_id, score FROM (
+      SELECT cand.*,
+             ROW_NUMBER() OVER (PARTITION BY query_id
+                                ORDER BY score DESC, vec_id) AS rn
+      FROM cand)
+    WHERE rn <= {k}
+  )"""
+    )
+    return ctes
+
+
+def _ivf_oracle_sql(
+    n_cells: int = 8, iters: int = 2, n_probe: int = 2, k: int = 10
+) -> str:
+    """knn_ivf_deterministic's oracle: the `_ivf_topk_ctes` rows."""
     return f"""
-WITH {", ".join(ctes)}
-SELECT query_id, vec_id, score FROM (
-  SELECT cand.*,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY score DESC, vec_id) AS rn
-  FROM cand)
-WHERE rn <= {k}
-ORDER BY query_id, score DESC, vec_id
+WITH {", ".join(_ivf_topk_ctes(n_cells, iters, n_probe, k))}
+SELECT * FROM ivf ORDER BY query_id, score DESC, vec_id
+"""
+
+
+def _ivf_recall_oracle_sql(n_cells: int, iters: int, n_probe: int) -> str:
+    """Oracle of an IVF top-10 annotated against the exact cosine
+    top-10 (`annotate_recall_vs_exact`): the `_ivf_topk_ctes` rows,
+    each flagged in/out of `knn_exact_cosine`'s rows, plus the
+    per-query recall@10."""
+    return f"""
+WITH {", ".join(_ivf_topk_ctes(n_cells, iters, n_probe, 10))},
+  exact AS (SELECT query_id, vec_id FROM ({_KNN_EXACT_COSINE_SQL}) x)
+SELECT i.query_id, i.vec_id, i.score,
+       e.vec_id IS NOT NULL AS in_exact_topk,
+       ROUND(CAST(COUNT(e.vec_id) OVER (PARTITION BY i.query_id) AS DOUBLE)
+             / 10, 4) AS recall_at_k
+FROM ivf i LEFT JOIN exact e ON e.query_id = i.query_id AND e.vec_id = i.vec_id
+ORDER BY i.query_id, i.score DESC, i.vec_id
 """
 
 
@@ -9056,9 +9015,8 @@ def knn_ivf_deterministic_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     The DuckDB oracle unrolls the identical recurrence via CTEs, so a
     regression anywhere — seeding, Lloyd arithmetic, probe ranking,
     candidate scoping, final top-k — breaks the driver's value hash.
-    The engine-seeded variants (knn_ivf_approx/knn_ivf_kmeans) remain
-    the sampled-fit production recipes; this is the same topology with
-    an engine-portable fit."""
+    knn_ivf_approx/knn_ivf_kmeans run this same kernel at 16 cells
+    and 4 probes under a recall gate."""
     from .operators.similarity import knn_ivf_deterministic
 
     e = _t(spark, sf_dir, "embeddings")
@@ -9069,6 +9027,57 @@ def knn_ivf_deterministic_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn_ivf_deterministic(q, c, k=10, n_cells=8, n_probe=2).orderBy(
         "query_id", F.desc("score"), "vec_id"
     )
+
+
+def _knn_ivf_recall_gated(
+    spark: SparkSession, sf_dir: str, iters: int
+) -> DataFrame:
+    """knn_ivf_deterministic at 4 of 16 cells probed, annotated
+    against the exact cosine top-10 with a 0.15 recall floor — the
+    shared body of knn_ivf_approx (``iters=0``) and knn_ivf_kmeans."""
+    from .operators.similarity import (
+        annotate_recall_vs_exact,
+        knn_exact,
+        knn_ivf_deterministic,
+    )
+
+    e = _t(spark, sf_dir, "embeddings")
+    q = e.filter(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("query_id"), "embedding"
+    )
+    c = e.filter(F.col("vec_id") >= 5)
+    approx = knn_ivf_deterministic(
+        q, c, k=10, n_cells=16, n_probe=4, iters=iters
+    )
+    exact = knn_exact(q, c, k=10)
+    return annotate_recall_vs_exact(approx, exact, k=10, min_avg_recall=0.15).orderBy(
+        "query_id", F.desc("score"), "vec_id"
+    )
+
+
+@query("knn_ivf_approx", oracle=_ivf_recall_oracle_sql(16, 0, 4))
+def knn_ivf_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-bucketed approximate kNN over SAMPLED centroids: the 16
+    md5-ordered seed rows of the deterministic Lloyd fit, unrefined
+    (``iters=0``), with 4 of 16 cells probed. Self-check columns flag
+    rows vs the exact cosine top-k and a 0.15 recall floor raises
+    in-plan. NOTE the fixture embeddings are uniform random (no
+    cluster structure — measured same-label vs cross-label mean cosine
+    0.002 vs 0.000), so IVF recall here is bounded by the probed
+    fraction (4/16); on real clustered embeddings recall concentrates
+    far above that bound."""
+    return _knn_ivf_recall_gated(spark, sf_dir, iters=0)
+
+
+@query("knn_ivf_kmeans", oracle=_ivf_recall_oracle_sql(16, 2, 4))
+def knn_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF ANN over KMeans-trained cells: the knn_ivf_approx search
+    with 2 deterministic Lloyd rounds refining the 16 sampled
+    centroids, so cells tile the data distribution (higher recall for
+    the same n_probe when the data clusters; see the uniform-fixture
+    caveat on knn_ivf_approx). The fit runs once and amortizes over
+    all queries."""
+    return _knn_ivf_recall_gated(spark, sf_dir, iters=2)
 
 
 def _pq_oracle_sql(
@@ -9182,8 +9191,8 @@ def knn_pq_deterministic_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     and queries rank by the classic ADC lookup-table sum — every
     distance rounded at the same points on both engines, so codebook
     fit, encoding, table build, and the final top-10 all sit behind the
-    driver's value hash. The engine-seeded knn_pq_adc/knn_pq_refined
-    remain the bounded-sample production recipes."""
+    driver's value hash. knn_pq_adc/knn_pq_refined run this same
+    kernel at m=8, 16 codes and 10 Lloyd rounds under recall gates."""
     from .operators.similarity import knn_pq_deterministic
 
     e = _t(spark, sf_dir, "embeddings")
@@ -10567,12 +10576,13 @@ def contamination_overlap_profile(spark: SparkSession, sf_dir: str) -> DataFrame
 
 
 @query("knn_pq_refined")  # two-stage ANN: compressed-code shortlist →
-# exact re-rank. KMeans codebooks are engine-seeded → no SQL oracle;
-# recall columns vs exact L2 top-k are the value-level self-check and the
-# min_avg_recall gate makes a recall collapse raise instead of drifting.
+# exact re-rank. Rows-only (the 10-round codebook replay runs DuckDB out
+# of memory); recall columns vs exact L2 top-k are the value-level
+# self-check and the min_avg_recall gate makes a recall collapse raise.
 def knn_pq_refined_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ + exact re-rank (`operators/similarity.knn_pq_refined`): ADC
-    over 8-byte codes shortlists 50 candidates/query, only those fetch
+    over 8-byte codes (the knn_pq_adc kernel and parameters)
+    shortlists 50 candidates/query, only those fetch
     full-precision vectors (broadcast semi-probe, no corpus shuffle)
     for exact L2 re-ranking. Recall@10 rises to the shortlist's
     recall@50 — the standard serving topology for RAM-resident
@@ -10595,30 +10605,26 @@ def knn_pq_refined_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "dist", "vec_id")
 
 
-@query("ann_ivf_recall_curve")  # engine-seeded centroid sample → no SQL
-# oracle; the curve carries its own proof: candidate cells NEST as
-# n_probe grows, so recall must be non-decreasing — violated ⇒ the plan
-# raises (assert_true), making the rows-only verdict self-certifying.
+@query("ann_ivf_recall_curve")  # rows-only: the curve carries its
+# own proof — candidate cells NEST as n_probe grows, so recall must be
+# non-decreasing; violated ⇒ the plan raises (assert_true), making the
+# rows-only verdict self-certifying.
 def ann_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The recall/cost calibration curve an ANN deployment is tuned
     from: recall@10 of IVF search at n_probe ∈ {1,2,4,8} of 16 cells
-    against exact L2 top-k. Exact ground truth is computed ONCE and
-    re-probed per setting. Since r12 the four probe settings also share
-    ONE centroid sample, ONE corpus cell-assignment pass, and ONE
-    scored candidate superset at n_probe=8: because a corpus vector
+    against exact L2 top-k. Exact ground truth is computed ONCE. The
+    four probe settings share ONE centroid fit (the 16 md5-ordered
+    seed rows, ``iters=0`` — knn_ivf_approx's cells), ONE corpus
+    cell-assignment pass, and ONE scored candidate superset at
+    n_probe=8 (`_ivf_scored_candidates`): because a corpus vector
     lives in exactly one cell, candidate sets nest in n_probe, so
-    filtering the superset on probe rank < p reproduces each setting's
-    candidate set (and therefore its top-k and recall) bit-for-bit —
-    the curve ran 4 independent sample+assign+probe+score passes for
-    identical results before. The monotonicity gate (nested candidate
-    sets ⇒ non-decreasing recall) runs over the 4-row curve."""
+    filtering the superset on probe rank < p reproduces each
+    setting's candidate set (and therefore its top-k and recall)
+    bit-for-bit. The monotonicity gate (nested candidate sets ⇒
+    non-decreasing recall) runs over the 4-row curve."""
     from functools import reduce
 
-    from .operators.similarity import (
-        _ivf_sample_centers,
-        _ivf_scored_candidates,
-        knn_exact,
-    )
+    from .operators.similarity import _ivf_scored_candidates, knn_exact
     from .operators.topk import top_k_per_group
 
     e = _t(spark, sf_dir, "embeddings")
@@ -10632,12 +10638,11 @@ def ann_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("_h", F.lit(1))
         .localCheckpoint(eager=True)
     )
-    centers = _ivf_sample_centers(c, 16, "vec_id", "embedding", 42)
     # eager pin: the 4 per-setting top-k branches below all read this
     # frame inside ONE final action — lazy would let each branch race
     # to recompute the assignment+probe pass before the pin lands
     scored = _ivf_scored_candidates(
-        q, c, centers, 8, "query_id", "vec_id", "embedding"
+        q, c, 16, 8, 0, "query_id", "vec_id", "embedding"
     ).localCheckpoint(eager=True)
     parts = []
     for n_probe in (1, 2, 4, 8):
@@ -13527,44 +13532,7 @@ def _cluster_sample_oracle_sql(n_cells: int = 8, iters: int = 2,
     recurrence as `_kmeans_oracle_sql` / `_ivf_oracle_sql`), then a
     deterministic per-cell reservoir (md5(vec_id) hex order, id
     tie-break) and per-cell norm diagnostics."""
-    assign = """
-  a{i} AS (
-    SELECT vec_id, v, cell FROM (
-      SELECT p.vec_id, p.v, s.cell,
-        ROW_NUMBER() OVER (PARTITION BY p.vec_id ORDER BY
-          CAST(ROUND(list_sum(list_transform(list_zip(p.v, s.v),
-                z -> (z[1]-z[2])*(z[1]-z[2]))) * 1000000) AS BIGINT), s.cell) AS rn
-      FROM pts p CROSS JOIN c{i} s) WHERE rn = 1
-  )"""
-    update = """
-  c{j} AS (
-    SELECT s.cell, COALESCE(m.v, s.v) AS v
-    FROM c{i} s LEFT JOIN (
-      SELECT cell, list(mv ORDER BY dim) AS v FROM (
-        SELECT cell, dim,
-               CAST((2 * SUM(CAST(ROUND(val * 1000000) AS BIGINT))
-                     + COUNT(val)) // (2 * COUNT(val)) AS DOUBLE)
-               / 1000000.0 AS mv FROM (
-          SELECT cell, unnest(v) AS val, generate_subscripts(v, 1) AS dim
-          FROM a{i}
-        ) GROUP BY cell, dim
-      ) GROUP BY cell
-    ) m USING (cell)
-  )"""
-    ctes = [
-        """pts AS (
-    SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-    FROM embeddings
-  )""",
-        f"""c0 AS (
-    SELECT (ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)) - 1 AS cell, v
-    FROM pts ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {n_cells}
-  )""",
-    ]
-    for i in range(iters):
-        ctes.append(assign.format(i=i).strip())
-        ctes.append(update.format(i=i, j=i + 1).strip())
-    ctes.append(assign.format(i=iters).strip())
+    ctes = _lloyd_ctes(n_cells, iters)
     ctes.append(
         f"""ranked AS (
     SELECT vec_id, cell,

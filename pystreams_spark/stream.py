@@ -419,7 +419,6 @@ class Stream:
         vec_col: str = "embedding",
         cluster_col: str | None = None,
         n_cells: int = 16,
-        seed: int = 42,
     ) -> "Stream":
         """SemDeDup: drop rows with a smaller-id semantic neighbor
         (cosine ≥ threshold) inside their (KMeans or given) cluster
@@ -428,7 +427,7 @@ class Stream:
 
         return Stream(
             semantic_dedup(
-                self.df, threshold, id_col, vec_col, cluster_col, n_cells, seed
+                self.df, threshold, id_col, vec_col, cluster_col, n_cells
             )
         )
 

@@ -372,7 +372,6 @@ def test_kmeans_single_task_fit_matches_distributed(spark):
     from pystreams_spark.operators.similarity import (
         _LLOYD_SINGLE_TASK_ROWS,
         kmeans_centers_deterministic,
-        kmeans_centers_deterministic_sliced,
     )
 
     rng = np.random.RandomState(7)
@@ -389,11 +388,11 @@ def test_kmeans_single_task_fit_matches_distributed(spark):
     assert np.array_equal(single, dist)
 
     slices = [(0, 4), (4, 4)]
-    single_s = kmeans_centers_deterministic_sliced(
-        df, slices, n_cells=4, iters=2
+    single_s = kmeans_centers_deterministic(
+        df, n_cells=4, iters=2, slices=slices
     )
-    dist_s = kmeans_centers_deterministic_sliced(
-        df, slices, n_cells=4, iters=2, precounted=forced_distributed
+    dist_s = kmeans_centers_deterministic(
+        df, n_cells=4, iters=2, precounted=forced_distributed, slices=slices
     )
     assert len(single_s) == len(dist_s) == 2
     for a, b in zip(single_s, dist_s):

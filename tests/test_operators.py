@@ -1126,20 +1126,31 @@ def test_pii_redaction_semantics(spark):
 def test_pq_encode_beats_trivial_quantizer(spark, sf_dir):
     # PQ reconstruction (gather each code's centroid) must beat the
     # 0-bit baseline (quantize everything to the global mean): the
-    # defining property of a useful codebook, deterministic under seed
+    # defining property of a useful codebook, deterministic by
+    # construction (md5-ordered seeds, integer-micros Lloyd)
     import numpy as np
 
-    from pystreams_spark.operators.similarity import fit_pq_codebooks, pq_encode
+    from pystreams_spark.operators.similarity import (
+        _kmeans_assign_batch,
+        kmeans_centers_deterministic,
+    )
 
     e = load_table(spark, sf_dir, "embeddings")
-    books = fit_pq_codebooks(e, m=8, n_codes=16)
-    enc = pq_encode(e, books).toPandas().set_index("vec_id")
-    orig = e.select("vec_id", "embedding").toPandas().set_index("vec_id")
-    ids = orig.index.to_numpy()
-    mat = np.stack(orig.loc[ids, "embedding"].to_numpy()).astype(np.float64)
-    codes = np.stack(enc.loc[ids, "pq_codes"].to_numpy()).astype(np.int64)
-    assert codes.min() >= 0 and codes.max() < 16
-    sub_d = books.shape[2]
+    orig = e.select("vec_id", "embedding").toPandas()
+    mat = np.stack(orig["embedding"].to_numpy()).astype(np.float64)
+    m, n_codes = 8, 16
+    sd = mat.shape[1] // m
+    slices = [(j * sd, sd) for j in range(m)]
+    books = np.stack(
+        kmeans_centers_deterministic(e, n_cells=n_codes, iters=10, slices=slices)
+    )
+    # the knn_pq_deterministic encode: per-subspace quantized-L2 argmin
+    codes = np.stack(
+        [_kmeans_assign_batch(mat[:, s0 : s0 + ln], books[j])
+         for j, (s0, ln) in enumerate(slices)],
+        axis=1,
+    )
+    assert codes.min() >= 0 and codes.max() < n_codes
     decoded = np.concatenate(
         [books[j][codes[:, j]] for j in range(books.shape[0])], axis=1
     )
@@ -1147,8 +1158,10 @@ def test_pq_encode_beats_trivial_quantizer(spark, sf_dir):
     pq_mse = ((decoded - mat) ** 2).mean()
     mean_mse = ((mat - mat.mean(axis=0)) ** 2).mean()
     assert pq_mse < 0.7 * mean_mse, (pq_mse, mean_mse)
-    # determinism: refit + re-encode yields identical codes
-    books2 = fit_pq_codebooks(e, m=8, n_codes=16)
+    # determinism: a refit yields identical codebooks
+    books2 = np.stack(
+        kmeans_centers_deterministic(e, n_cells=n_codes, iters=10, slices=slices)
+    )
     assert np.array_equal(books, books2)
 
 
@@ -1156,7 +1169,7 @@ def test_pq_adc_topk_recall_floor(spark, sf_dir):
     from pystreams_spark.operators.similarity import (
         annotate_recall_vs_exact,
         knn_exact,
-        knn_pq_adc,
+        knn_pq_deterministic,
     )
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -1164,7 +1177,7 @@ def test_pq_adc_topk_recall_floor(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     c = e.filter(F.col("vec_id") >= 5)
-    approx = knn_pq_adc(q, c, k=10)
+    approx = knn_pq_deterministic(q, c, k=10, m=8, n_codes=16, iters=10)
     exact = knn_exact(q, c, k=10, metric="l2", score_col="dist")
     out = annotate_recall_vs_exact(approx, exact, k=10)
     per_q = {
@@ -1454,16 +1467,14 @@ def test_semantic_dedup_finds_planted_duplicates(spark, sf_dir):
     dup_df = spark.createDataFrame(planted, "vec_id long, embedding array<float>")
     corpus = base.select("vec_id", "embedding").unionByName(dup_df)
 
-    pairs = semantic_dedup_pairs(
-        corpus, threshold=0.99, n_cells=4, seed=7
-    ).collect()
+    pairs = semantic_dedup_pairs(corpus, threshold=0.99, n_cells=4).collect()
     got_pairs = {(r.id_a, r.id_b) for r in pairs}
     for vid, _ in planted:
         assert (vid - 100_000, vid) in got_pairs
 
     survivors = {
         r.vec_id
-        for r in semantic_dedup(corpus, threshold=0.99, n_cells=4, seed=7).collect()
+        for r in semantic_dedup(corpus, threshold=0.99, n_cells=4).collect()
     }
     for vid, _ in planted:
         assert vid not in survivors
@@ -1779,12 +1790,12 @@ def test_semantic_dedup_null_cluster_rows_kept(spark):
 
 
 def test_kmeans_cells_clamped_on_tiny_corpus(spark):
-    from pystreams_spark.operators.similarity import assign_kmeans_cells
+    from pystreams_spark.operators.similarity import kmeans_cells_deterministic
 
     df = spark.createDataFrame(
         [(i, [float(i)] * 4) for i in range(3)], "vec_id long, embedding array<float>"
     )
-    out = assign_kmeans_cells(df, n_cells=16, seed=1)  # 16 > 3 rows
+    out = kmeans_cells_deterministic(df, n_cells=16)  # 16 > 3 rows
     assert out.count() == 3
 
 
@@ -2814,34 +2825,6 @@ def test_deterministic_ann_empty_input_raises_clearly(spark):
         knn_pq_deterministic(q, empty.withColumnRenamed("vec_id", "vec_id"), k=1)
 
 
-def test_prefix_jaccard_order_modes_agree(spark, sf_dir):
-    """r8: the ascending-df prefix order (new default) and the binary
-    hot/cold order produce the IDENTICAL pair set — any global total
-    order keeps the prefix theorem exact; the orders differ only in
-    candidate cost (SCALE.md measures both regimes)."""
-    from pystreams_spark.operators.dedup import ngram_jaccard_pairs_prefix
-
-    docs = load_table(spark, sf_dir, "documents").limit(200)
-    df_order = sorted(
-        (r.id_a, r.id_b, r.jaccard)
-        for r in ngram_jaccard_pairs_prefix(
-            docs, threshold=0.3, n=3, order_by="df"
-        ).collect()
-    )
-    hot_order = sorted(
-        (r.id_a, r.id_b, r.jaccard)
-        for r in ngram_jaccard_pairs_prefix(
-            docs, threshold=0.3, n=3, order_by="hot"
-        ).collect()
-    )
-    assert df_order == hot_order and df_order
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="order_by"):
-        ngram_jaccard_pairs_prefix(docs, threshold=0.3, order_by="nope")
-
-
 def test_ngram_novelty_scores_known_corpus(spark):
     """r8: hand-built corpus with knowable first-seen attribution.
     Doc 1 introduces everything (novelty 1.0); doc 2 is a verbatim
@@ -3418,19 +3401,16 @@ def test_kmeans_sliced_fit_equals_per_slice_fits(spark, sf_dir):
     import numpy as np
 
     from pystreams_spark.io import ensure_parallelism
-    from pystreams_spark.operators.similarity import (
-        kmeans_centers_deterministic,
-        kmeans_centers_deterministic_sliced,
-    )
+    from pystreams_spark.operators.similarity import kmeans_centers_deterministic
 
     e = load_table(spark, sf_dir, "embeddings")
     base = ensure_parallelism(e)
     d = len(e.select("embedding").head()[0])
     m = 4
     sd = d // m
-    fused = kmeans_centers_deterministic_sliced(
-        base, [(j * sd, sd) for j in range(m)],
-        id_col="vec_id", vec_col="embedding", n_cells=8, iters=2,
+    fused = kmeans_centers_deterministic(
+        base, id_col="vec_id", vec_col="embedding", n_cells=8, iters=2,
+        slices=[(j * sd, sd) for j in range(m)],
     )
     for j in range(m):
         sub = base.select(
@@ -3444,14 +3424,14 @@ def test_kmeans_sliced_fit_equals_per_slice_fits(spark, sf_dir):
 
 def test_ivf_scored_superset_rank_filter_equals_per_probe(spark, sf_dir):
     """r12 optimization: one scored candidate pass at the LARGEST probe
-    setting, filtered on probe rank < p, must reproduce knn_ivf's
-    per-setting top-k bit-identically for every smaller p (candidate
+    setting, filtered on probe rank < p, must reproduce
+    knn_ivf_deterministic's per-setting top-k bit-identically for
+    every smaller p (candidate
     sets nest because each corpus vector lives in exactly one cell) —
     the equivalence ann_ivf_recall_curve's shared plan rests on."""
     from pystreams_spark.operators.similarity import (
-        _ivf_sample_centers,
         _ivf_scored_candidates,
-        knn_ivf,
+        knn_ivf_deterministic,
     )
     from pystreams_spark.operators.topk import top_k_per_group
 
@@ -3460,9 +3440,8 @@ def test_ivf_scored_superset_rank_filter_equals_per_probe(spark, sf_dir):
         F.col("vec_id").alias("query_id"), "embedding"
     )
     c = e.filter(F.col("vec_id") >= 5)
-    centers = _ivf_sample_centers(c, 16, "vec_id", "embedding", 42)
     scored = _ivf_scored_candidates(
-        q, c, centers, 8, "query_id", "vec_id", "embedding"
+        q, c, 16, 8, 0, "query_id", "vec_id", "embedding"
     ).localCheckpoint(eager=True)
     for p in (1, 2, 4, 8):
         shared = sorted(
@@ -3476,6 +3455,8 @@ def test_ivf_scored_superset_rank_filter_equals_per_probe(spark, sf_dir):
         )
         solo = sorted(
             tuple(r)
-            for r in knn_ivf(q, c, k=10, n_cells=16, n_probe=p).collect()
+            for r in knn_ivf_deterministic(
+                q, c, k=10, n_cells=16, n_probe=p, iters=0
+            ).collect()
         )
         assert shared == solo, f"n_probe={p} differs"

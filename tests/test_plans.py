@@ -122,11 +122,12 @@ def test_no_rowwise_python_udfs_anywhere(spark, sf_dir):
     # exactly once): the ANN paths run a bucket/cell-assignment kernel
     # on the corpus and a separate exact-refine kernel on candidates
     budget = {
+        # IVF (knn_ivf_deterministic at every setting): corpus
+        # cell-assignment kernel + query probe kernel, each pass-once
+        # (the deterministic Lloyd FIT executes eagerly at build time
+        # and never enters this plan)
         "knn_ivf_approx": 2,
         "knn_ivf_kmeans": 2,
-        # oracle-grade IVF (r7): corpus cell-assignment kernel + query
-        # probe kernel, each pass-once (the deterministic Lloyd FIT
-        # executes eagerly at build time and never enters this plan)
         "knn_ivf_deterministic": 2,
         # oracle-grade LSH (r7): bucket kernel + within-bucket pair
         # kernel, each pass-once
@@ -144,20 +145,17 @@ def test_no_rowwise_python_udfs_anywhere(spark, sf_dir):
         # pass-once kernels as semantic_dedup_kmeans (cell assignment
         # + per-cluster pairwise) before its label join and 1-row agg
         "semantic_split_leakage_report": 2,
-        # PQ chains two distinct kernels in ONE narrow pipeline: encode
-        # (vector → m codes) then ADC probe (codes → local top-k); each
-        # row passes each kernel exactly once. At ingest scale the
-        # encoded table would be a stored artifact, splitting the plan.
-        "knn_pq_adc": 2,
-        # two-stage serving: the PQ encode+probe pipeline (2) feeds the
-        # exact re-rank, whose candidate fetch is pure Column algebra —
-        # no additional kernel, but the shortlist's 2 survive in-plan
-        "knn_pq_refined": 2,
-        # the calibration curve runs FOUR IVF settings by design
-        # (n_probe 1/2/4/8), each a deliberate assign+probe kernel pair
-        # over ~n_probe/16 of the corpus; nothing is re-evaluated —
-        # the 4 branches are 4 intentional measurements in one union
-        "ann_ivf_recall_curve": 8,
+        # PQ encodes and probes in ONE fused encode+ADC kernel
+        # (knn_pq_deterministic): measured 1
+        "knn_pq_adc": 1,
+        # two-stage serving: the ADC shortlist is pinned by its
+        # broadcast_if_small, so the exact re-rank plans as Column
+        # algebra over an existing RDD: measured 0
+        "knn_pq_refined": 0,
+        # the calibration curve's four n_probe settings filter ONE
+        # scored IVF candidate superset, pinned eagerly before the
+        # curve's plan: measured 0
+        "ann_ivf_recall_curve": 0,
         # payload synthesis kernel + the real decode kernel — a
         # deliberate two-stage pipeline, each row passing each once
         "media_decode_report": 2,
