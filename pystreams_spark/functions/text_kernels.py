@@ -1,27 +1,25 @@
-"""Vectorized Arrow kernels for the rows-only text-dedup hot path.
+"""Vectorized Arrow kernels for the text-dedup hot path.
 
 Why kernels and not Column algebra: the shingle pipeline (split →
 sequence → transform(slice+concat_ws) → array_distinct) is built from
 higher-order functions, which Spark interprets per element — no
 WholeStageCodegen. Measured at sf0.1 (5k docs, ~300 chars): ~3.3 s per
-pass for the Column version vs ~0.2 s for one Arrow-batched kernel, and
-several rows-only queries need the pass (banded MinHash, SimHash, the
-end-to-end near-dup pipeline, inverted-index Jaccard). Each kernel does
-tokenize → shingle → hash in ONE narrow pass over the text column —
-no shuffle, one JVM↔Python Arrow round-trip.
+pass for the Column version vs ~0.2 s for one Arrow-batched kernel.
+Each kernel does tokenize → shingle → hash in ONE narrow pass over the
+text column — no shuffle, one JVM↔Python Arrow round-trip.
 
-Determinism: shingle hashing is `pandas.util.hash_array` (SipHash with
-pandas' fixed default key) over the exact ``" ".join(tokens[i:i+n])``
-shingle strings — the same shingle set the Column-algebra
-``functions.text.shingles`` builds, so exact-Jaccard results computed
-from these hashes match the string-set semantics the SQL oracle states
-(64-bit collisions are the only gap, negligible at any realistic doc
-size). MinHash permutations / SimHash bit votes use the splitmix64
-mixer seeded explicitly.
+Two gram hashes, each over the exact ``" ".join(tokens[i:i+n])``
+shingle strings the Column-algebra ``functions.text.shingles`` builds:
 
-The Column-algebra versions in ``functions.text`` remain the
-oracle-parity surface; these kernels are the scale path for the
-rows-only operators built on them.
+- ``_hashed_shingle_sets``: ``pandas.util.hash_array`` (SipHash with
+  pandas' fixed key) — the inverted-index Jaccard family, whose
+  oracles replay string sets, so only gram identity matters.
+- ``_md5_gram_values``: the first 60 bits of md5(gram), the value the
+  DuckDB oracles spell ``('0x' || substr(md5(gram), 1, 15))::BIGINT``.
+  Both LSH text families read it: the SimHash kernel votes its 60
+  bits, the MinHash kernel takes universal-hash minima over it with
+  md5-derived constants (``minhash_det_constants``), so every
+  signature and band key is replayable in SQL.
 """
 
 from __future__ import annotations
@@ -87,6 +85,21 @@ def _doc_shingles(texts, n: int) -> tuple[np.ndarray, np.ndarray]:
     return out, n_sh
 
 
+def _distinct_per_doc(vals: np.ndarray, n_sh: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(flat per-gram values, grams per doc) → (the DISTINCT values of
+    each doc, sorted within the doc, and per-doc distinct counts)."""
+    doc_idx = np.repeat(np.arange(len(n_sh)), n_sh)
+    # distinct per doc: sort by (doc, value), keep first of each run
+    order = np.lexsort((vals, doc_idx))
+    d, h = doc_idx[order], vals[order]
+    keep = np.ones(len(h), dtype=bool)
+    if len(h) > 1:
+        keep[1:] = (d[1:] != d[:-1]) | (h[1:] != h[:-1])
+    d, h = d[keep], h[keep]
+    counts = np.bincount(d, minlength=len(n_sh)).astype(np.int64)
+    return h, counts
+
+
 def _hashed_shingle_sets(texts, n: int) -> tuple[np.ndarray, np.ndarray]:
     """texts → (flat uint64 hashes of the DISTINCT shingles of each doc,
     per-doc distinct counts). One pd.util.hash_array call per batch."""
@@ -94,16 +107,108 @@ def _hashed_shingle_sets(texts, n: int) -> tuple[np.ndarray, np.ndarray]:
 
     flat, n_sh = _doc_shingles(texts, n)
     hashes = pd.util.hash_array(flat) if len(flat) else np.empty(0, dtype=_U64)
-    doc_idx = np.repeat(np.arange(len(n_sh)), n_sh)
-    # distinct per doc: sort by (doc, hash), keep first of each run
-    order = np.lexsort((hashes, doc_idx))
-    d, h = doc_idx[order], hashes[order]
-    keep = np.ones(len(h), dtype=bool)
-    if len(h) > 1:
-        keep[1:] = (d[1:] != d[:-1]) | (h[1:] != h[:-1])
-    d, h = d[keep], h[keep]
-    counts = np.bincount(d, minlength=len(n_sh)).astype(np.int64)
-    return h, counts
+    return _distinct_per_doc(hashes, n_sh)
+
+
+def _md5_gram_values(texts, n: int) -> tuple[np.ndarray, np.ndarray]:
+    """texts → (flat int64 DISTINCT gram values of each doc, per-doc
+    distinct counts). A gram's value is the first 60 bits of md5 over
+    its UTF-8 bytes — SQL's ``('0x' || substr(md5(g), 1, 15))::BIGINT``.
+    Every doc has ≥ 1 gram: a NULL, empty or shorter-than-``n`` text
+    yields its whole token string as its one gram, as ``shingles`` does."""
+    import hashlib
+
+    flat, n_sh = _doc_shingles(texts, n)
+    md5 = hashlib.md5
+    # the first 8 digest bytes, big-endian, shifted down to 60 bits
+    raw = b"".join(md5(g.encode("utf-8")).digest()[:8] for g in flat)
+    vals = (np.frombuffer(raw, dtype=">u8") >> np.uint64(4)).astype(np.int64)
+    return _distinct_per_doc(vals, n_sh)
+
+
+_MINHASH_P = 2147483647  # 2^31 − 1 (Mersenne prime): universal-hash modulus
+
+
+def minhash_det_constants(k: int, p: int = _MINHASH_P) -> list[tuple[int, int]]:
+    """k md5-derived (a, b) universal-hash constants of the MinHash
+    permutations: a ∈ [1, p−1], b ∈ [0, p−1], both from the first 60
+    bits of md5 over a fixed salt. Pure hashlib — the constants are
+    literals in both the kernel and the DuckDB oracle, so
+    engine-portability is by construction."""
+    import hashlib
+
+    out = []
+    for j in range(k):
+        a = int(hashlib.md5(f"minhash-a:{j}".encode()).hexdigest()[:15], 16)
+        b = int(hashlib.md5(f"minhash-b:{j}".encode()).hexdigest()[:15], 16)
+        out.append((a % (p - 1) + 1, b % p))
+    return out
+
+
+def _minhash_band_keys(
+    v: np.ndarray, counts: np.ndarray, bands: int, rows_per_band: int
+) -> np.ndarray:
+    """(flat int64 gram values, per-doc counts) → (n_docs, bands) int64
+    band keys. Permutation j is h_j = min over the doc's values of
+    (a_j·(v mod p) + b_j) mod p, p = 2³¹−1, with
+    ``minhash_det_constants``; a band key is h for ``rows_per_band`` = 1
+    and h·p + h′ for 2. Every product is < 2⁶², so the int64 arithmetic
+    is exact and equals the SQL oracle's. Docs with zero values get
+    all-zero rows (``_md5_gram_values`` never yields one)."""
+    if rows_per_band not in (1, 2):
+        raise ValueError(
+            f"rows_per_band must be 1 or 2, got {rows_per_band}: the band "
+            "key packs r 31-bit minima into one 62-bit bigint"
+        )
+    p = _MINHASH_P
+    k = bands * rows_per_band
+    consts = np.array(minhash_det_constants(k), dtype=np.int64).reshape(k, 2)
+    out = np.zeros((len(counts), bands), dtype=np.int64)
+    nz = counts > 0
+    if not nz.any():
+        return out
+    offsets = np.concatenate(([0], np.cumsum(counts[nz])[:-1]))
+    x = v % p
+    # one contiguous 1-D pass per permutation: a (total, k) 2-D reduceat
+    # strides k words per step and costs ~10× more at sf0.1
+    mins = np.empty((k, int(nz.sum())), dtype=np.int64)
+    for j in range(k):
+        a, b = consts[j]
+        mins[j] = np.minimum.reduceat((a * x + b) % p, offsets)
+    keys = mins if rows_per_band == 1 else mins[0::2] * p + mins[1::2]
+    out[nz] = keys.T
+    return out
+
+
+def _simhash_votes(v: np.ndarray, counts: np.ndarray, n_bits: int) -> np.ndarray:
+    """(flat int64 gram values, per-doc counts ≥ 1) → int64 SimHash per
+    doc: bit b is 1 iff Σ over the doc's values of (2·((v≫b)∧1) − 1)
+    is > 0, i.e. iff more than half the values have bit b set (ties
+    → 0). One 1-D count pass per bit."""
+    out = np.zeros(len(counts), dtype=np.int64)
+    if not len(counts):
+        return out
+    offsets = np.concatenate(([0], np.cumsum(counts)[:-1]))
+    for b in range(n_bits):
+        ones = np.add.reduceat((v >> b) & 1, offsets)
+        out |= (2 * ones > counts).astype(np.int64) << b
+    return out
+
+
+def simhash_md5_udf(n: int = 3, n_bits: int = 60):
+    """pandas UDF: text → ``n_bits``-bit SimHash (≤ 60) voted over the
+    doc's DISTINCT md5 gram values (``_md5_gram_values``), fused
+    tokenize→shingle→hash→vote in one kernel pass."""
+    import pandas as pd
+
+    if not 0 < n_bits <= 60:
+        raise ValueError(f"simhash_md5_udf: n_bits must be in [1, 60], got {n_bits}")
+
+    def kernel(texts):
+        v, counts = _md5_gram_values(texts.to_numpy(dtype=object), n)
+        return pd.Series(_simhash_votes(v, counts, n_bits))
+
+    return F.pandas_udf(kernel, "long")
 
 
 def hashed_shingles_udf(n: int = 3):
@@ -141,38 +246,6 @@ def shingle_strings_udf(n: int = 3):
         )
 
     return F.pandas_udf(kernel, "array<string>")
-
-
-def _band_sigs_from_hashes(
-    h: np.ndarray, counts: np.ndarray, salts: np.ndarray, bands: int, rows_per_band: int
-) -> np.ndarray:
-    """(flat uint64 shingle hashes, per-doc counts) → (n_docs, bands)
-    int64 band signatures. Docs with zero shingles get all-zero rows
-    (callers filter empties beforehand; '' still hashes to one value)."""
-    k = bands * rows_per_band
-    out = np.zeros((len(counts), bands), dtype=np.int64)
-    nz = counts > 0
-    if not nz.any():
-        return out
-    offsets = np.concatenate(([0], np.cumsum(counts[nz])[:-1]))
-    n_nz = int(nz.sum())
-    # One contiguous 1-D mix+reduceat per permutation salt. The obvious
-    # (total, k) 2-D form costs ~10× more: reduceat along axis=0 of a
-    # C-order matrix strides k words per step (cache-hostile) and the
-    # (total, k) temporary blows the cache for large corpora; k passes
-    # over a contiguous len(h) vector stream at memory bandwidth
-    # (measured at sf0.1, 260k shingles × 16 salts: 6.4 s → <0.5 s).
-    mins = np.empty((k, n_nz), dtype=_U64)
-    for j in range(k):
-        mins[j] = np.minimum.reduceat(_mix(h ^ salts[j]), offsets)
-    sigs = (
-        _mix(mins ^ salts[:, None])
-        .reshape(bands, rows_per_band, n_nz)
-        .sum(axis=1, dtype=_U64)
-        .T.astype(np.int64)
-    )
-    out[nz] = sigs
-    return out
 
 
 def char_ngrams_udf(n: int = 3):
@@ -260,29 +333,6 @@ def _winnowing_doc_fps(s: str, k: int, w: int) -> np.ndarray:
 
         sel = sliding_window_view(grams, w).min(axis=1)
     return np.unique(sel)
-
-
-def simhash_from_text_udf(n: int = 2):
-    """pandas UDF: text → 64-bit SimHash, fused tokenize→shingle→hash→
-    bit-vote in one kernel. Votes are over the doc's DISTINCT shingle
-    hashes (same set semantics as the shingles() Column)."""
-    import pandas as pd
-
-    bit_idx = np.arange(64, dtype=_U64)
-
-    def kernel(texts):
-        h, counts = _hashed_shingle_sets(texts.to_numpy(dtype=object), n)
-        out = np.zeros(len(counts), dtype=np.int64)
-        nz = counts > 0
-        if nz.any():
-            bits = ((h[:, None] >> bit_idx) & _U64(1)).astype(np.int64) * 2 - 1
-            offsets = np.concatenate(([0], np.cumsum(counts[nz])[:-1]))
-            votes = np.add.reduceat(bits, offsets, axis=0)  # (n_nonzero, 64)
-            sigs = ((votes > 0).astype(_U64) << bit_idx).sum(axis=1, dtype=_U64)
-            out[nz] = sigs.astype(np.int64)
-        return pd.Series(out)
-
-    return F.pandas_udf(kernel, "long")
 
 
 def portable_winnow_fps_udf(k: int = 5, w: int = 8, base: int = 257):

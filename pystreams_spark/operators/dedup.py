@@ -7,11 +7,16 @@ Tiers, cheapest first:
   oracle-checkable ground truth for near-dup; brute force, so gate to
   small inputs or pre-blocked candidate pairs.
 - minhash: banded MinHash (``minhash_neardup_pairs``: b bands of r
-  Arrow-kernel minhash rows, exact-Jaccard verify) — the 100 TB path.
-  Cost scales with band-bucket collisions, not n².
-- simhash: 64-bit simhash + ``banded_hamming_pairs``; cheap
-  single-pass near-dup key.
+  universal-hash minima over md5 gram values, exact-Jaccard verify) —
+  the 100 TB path. Cost scales with band-bucket collisions, not n².
+- simhash: 60-bit md5-gram SimHash + ``banded_hamming_pairs``
+  (``simhash_deterministic_candidates``); cheap single-pass near-dup
+  key.
 - embedding: cosine-threshold pairs (see operators.similarity).
+
+Both LSH text families run one Arrow kernel over the md5 gram values
+(``functions.text_kernels``), so every signature, band key and verify
+the engine computes is replayable in DuckDB SQL.
 
 Cluster resolution (connected components over the duplicate-pair graph)
 is ``cc_keep_min``: single-task union-find for small dup graphs,
@@ -27,7 +32,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles
-from ..functions.text_kernels import hashed_shingles_udf, simhash_from_text_udf
+from ..functions.text_kernels import hashed_shingles_udf, simhash_md5_udf
 from ..io import broadcast_if_small, ensure_parallelism, materialize
 
 
@@ -191,16 +196,6 @@ def _verify_pairs_fullset(
         .filter(F.col(out_col) >= threshold)
         .select("id_a", "id_b", out_col)
     )
-
-
-def _verify_jaccard_pairs(
-    sh: DataFrame,
-    cand: DataFrame,
-    id_col: str,
-    threshold: float,
-    round_to: int,
-) -> DataFrame:
-    return _verify_pairs_fullset(sh, cand, id_col, threshold, round_to, "jaccard")
 
 
 def _shared_shingle_candidates(
@@ -683,32 +678,6 @@ def cross_source_shingle_overlap(
     )
 
 
-def simhash_candidates(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 2,
-    bands: int = 4,
-) -> DataFrame:
-    """Candidate near-dup pairs = docs sharing any of ``bands`` equal-width
-    bands of their 64-bit simhash (4 × 16 bits by default: a shared band
-    bounds the Hamming distance by the other 48 bits). Banding and the
-    XOR/bit_count verify are ``banded_hamming_pairs``; each pair carries
-    its signature ``hamming`` distance (int) as a self-check column —
-    quality drift shows up as changed values in rows-only checks."""
-    sig = ensure_parallelism(df).select(
-        F.col(id_col), simhash_from_text_udf(n)(F.col(text_col)).alias("_sig")
-    ).localCheckpoint(eager=True)
-    band_bits = 64 // bands
-    return banded_hamming_pairs(
-        sig,
-        id_col=id_col,
-        bands=bands,
-        band_bits=band_bits,
-        max_hamming=64 - band_bits,
-    ).withColumn("hamming", F.col("hamming").cast("int"))
-
-
 def _cc_union_find_one_task(edges: DataFrame) -> DataFrame:
     """Connected components of a SMALL edge list in one executor task:
     coalesce(1) + union-find with path compression, roots relabeled to
@@ -875,54 +844,53 @@ def cc_keep_min(
 
 
 def _banded_candidate_pairs(
-    sigs: DataFrame, id_col: str = "doc_id", bands_col: str = "_bands"
+    sigs: DataFrame,
+    id_col: str = "doc_id",
+    bands_col: str = "_bands",
+    distinct: bool = True,
 ) -> DataFrame:
     """(id, array<long> band sigs) → distinct candidate pairs (id_a < id_b)
-    sharing any (band, sig). The only shuffle is the equi-join on the
-    (band, sig) key — at 100 TB this moves 12 bytes/posting, never text."""
+    sharing any (band, sig); ``distinct=False`` keeps one row per shared
+    band instead. The only shuffle is the equi-join on the (band, sig)
+    key — at 100 TB this moves 12 bytes/posting, never text."""
     banded = sigs.select(id_col, F.posexplode(bands_col).alias("band", "sig"))
     other = banded.select(F.col(id_col).alias("id_b"), "band", "sig")
-    return (
+    pairs = (
         banded.withColumnRenamed(id_col, "id_a")
         .join(other, ["band", "sig"])
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
-        .distinct()
     )
+    return pairs.distinct() if distinct else pairs
 
 
-def _minhash_udf(n: int, bands: int, rows_per_band: int, seed: int):
+def _minhash_udf(n: int, bands: int, rows_per_band: int):
     """Vectorized kernel: text → struct of ``_sh``, the doc's distinct
-    hashed word-``n``-gram shingles (sorted, as ``hashed_shingles_udf``
-    gives them), and ``_bands``, its ``bands`` band signatures (each =
-    hash of ``rows_per_band`` minhash values under distinct permutation
-    salts; NULL for a doc with no shingles). One Python pass yields
-    both, so the text crosses the Arrow boundary once.
+    md5 gram values (sorted; ``text_kernels._md5_gram_values``), and
+    ``_bands``, its ``bands`` band keys (``_minhash_band_keys``:
+    universal-hash minima under ``minhash_det_constants``, packed
+    ``rows_per_band`` ∈ {1, 2} per key). One Python pass yields both,
+    so the text crosses the Arrow boundary once.
 
-    Why a kernel: k permutation-mins per row would be k interpreted HOF
-    traversals in Column algebra — and worse, CollapseProject inlines
-    the (expensive) shingle expression into every one of the k
-    signature expressions, recomputing it k times (measured: 21 s at
-    sf0.1 vs ~2 s here). splitmix64 is the
-    permutation mixer — deterministic, seeded, vectorized.
-    """
+    Why a kernel: k permutation-mins per row would be k aggregates over
+    an exploded gram table in Column algebra (one shuffle of partial
+    minima); here they are k contiguous numpy passes per Arrow batch.
+    The recipe is the SQL oracle's, value for value."""
     import numpy as np
     import pandas as pd
 
-    from ..functions.text_kernels import _band_sigs_from_hashes, _hashed_shingle_sets
+    from ..functions.text_kernels import _md5_gram_values, _minhash_band_keys
 
-    k = bands * rows_per_band
-    rng = np.random.RandomState(seed)
-    salts = rng.randint(0, 2**63 - 1, size=k, dtype=np.int64).astype(np.uint64)
+    # validate at construction, not inside the first Arrow batch
+    _minhash_band_keys(np.empty(0, np.int64), np.empty(0, np.int64), bands, rows_per_band)
 
     def kernel(texts):
-        h, counts = _hashed_shingle_sets(texts.to_numpy(dtype=object), n)
-        band_sigs = _band_sigs_from_hashes(h, counts, salts, bands, rows_per_band)
-        signed = h.astype(np.int64)
+        v, counts = _md5_gram_values(texts.to_numpy(dtype=object), n)
+        keys = _minhash_band_keys(v, counts, bands, rows_per_band)
         offsets = np.concatenate(([0], np.cumsum(counts)))
         return pd.DataFrame({
-            "_sh": [signed[offsets[i] : offsets[i + 1]].tolist() for i in range(len(counts))],
-            "_bands": [band_sigs[i].tolist() if c else None for i, c in enumerate(counts)],
+            "_sh": [v[offsets[i] : offsets[i + 1]].tolist() for i in range(len(counts))],
+            "_bands": keys.tolist(),
         })
 
     return F.pandas_udf(kernel, "struct<_sh: array<long>, _bands: array<long>>")
@@ -937,77 +905,33 @@ def simhash_deterministic_candidates(
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """ORACLE-GRADE SimHash (r9 — the deterministic-anchor recipe once
-    more): a 60-bit signature from per-gram md5 values with explicit
-    bit voting, banded candidates, and bit_count-XOR Hamming verify —
-    every stage plain integer Column algebra an SQL engine replays
-    exactly (no engine hash, no Arrow kernel).
+    """ORACLE-GRADE SimHash (r9): a ``bands·band_bits``-bit (≤ 60)
+    signature voted over per-gram md5 values, banded candidates, and
+    bit_count-XOR Hamming verify — every value an SQL engine replays
+    exactly (``queries._simhash_oracle_sql``).
 
     Construction, identical in both engines: gram value v = first 60
     bits of md5(space-joined word n-gram); signature bit b = 1 iff
     Σ over the doc's DISTINCT grams of (2·((v≫b)∧1) − 1) > 0 (ties →
-    0, fixed in both engines); candidates share any of ``bands``
-    ``band_bits``-wide signature slices; pairs keep
-    hamming = bit_count(sig_a ⊕ sig_b) ≤ ``max_hamming``.
+    0); candidates share any of ``bands`` ``band_bits``-wide signature
+    slices; pairs keep hamming = bit_count(sig_a ⊕ sig_b) ≤
+    ``max_hamming``.
 
-    Scale shape: the voting is ``60·|grams|`` partial-aggregated adds
-    behind ONE per-doc groupBy (no row explosion — the 60 sums are
-    agg expressions, not rows), the band join shuffles (band, value,
-    id) triples, and the verify joins two 8-byte signatures per
-    candidate. The xxhash64+numpy `simhash_candidates` stays the
-    production path (one kernel pass beats 60 agg expressions); this
-    anchors the voting and banding semantics under a value hash."""
-    from ..functions.text import tokens
-
-    import functools
-    import operator
-
-    base = ensure_parallelism(df).select(
-        F.col(id_col), tokens(F.col(text_col)).alias("_toks")
-    )
-    grams = base.select(
-        id_col,
-        F.array_distinct(
-            F.transform(
-                F.sequence(
-                    F.lit(1),
-                    F.greatest(F.size("_toks") - (n - 1), F.lit(1)),
-                ),
-                lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i, n)),
-            )
-        ).alias("_grams"),
-    )
-    gv = grams.select(
-        id_col,
-        F.explode(
-            F.array_distinct(
-                F.transform(
-                    "_grams",
-                    lambda g: F.conv(
-                        F.substring(F.md5(g), 1, 15), 16, 10
-                    ).cast("long"),
-                )
-            )
-        ).alias("_v"),
-    )
-    nbits = bands * band_bits
-    votes = gv.groupBy(id_col).agg(
-        *[
-            F.sum(
-                F.shiftright("_v", b).bitwiseAND(F.lit(1)) * 2 - 1
-            ).alias(f"_b{b}")
-            for b in range(nbits)
-        ]
-    )
-    sig_expr = functools.reduce(
-        operator.add,
-        [
-            F.shiftleft((F.col(f"_b{b}") > 0).cast("long"), b)
-            for b in range(nbits)
-        ],
-    )
-    sig = votes.select(id_col, sig_expr.alias("_sig")).localCheckpoint(
-        eager=True
+    Scale shape: the signature is one narrow Arrow-kernel pass
+    (``simhash_md5_udf``: tokenize → md5 → 1-D bit counts, no explode
+    and no shuffle), pinned because banding reads it three times; the
+    band join shuffles (band, value, id) triples, and the verify joins
+    two 8-byte signatures per candidate."""
+    n_bits = bands * band_bits
+    if n_bits > 60:
+        raise ValueError(
+            f"simhash_deterministic_candidates: bands·band_bits = {n_bits} "
+            "> 60 — the md5 gram value carries 60 bits"
+        )
+    sig = (
+        ensure_parallelism(df)
+        .select(F.col(id_col), simhash_md5_udf(n, n_bits)(F.col(text_col)).alias("_sig"))
+        .localCheckpoint(eager=True)
     )
     return banded_hamming_pairs(
         sig,
@@ -1083,26 +1007,6 @@ def banded_hamming_pairs(
     )
 
 
-_MINHASH_P = 2147483647  # 2^31 − 1 (Mersenne prime): universal-hash modulus
-
-
-def minhash_det_constants(k: int, p: int = _MINHASH_P) -> list[tuple[int, int]]:
-    """k md5-derived (a, b) universal-hash constants for the
-    ORACLE-GRADE deterministic MinHash (r9, r8 verdict #6 — the ANN
-    trio's recipe applied to banding): a ∈ [1, p−1], b ∈ [0, p−1],
-    both from the first 60 bits of md5 over a fixed salt. Pure
-    hashlib — the constants are LITERALS in both the Spark plan and
-    the DuckDB oracle, so engine-portability is by construction."""
-    import hashlib
-
-    out = []
-    for j in range(k):
-        a = int(hashlib.md5(f"minhash-a:{j}".encode()).hexdigest()[:15], 16)
-        b = int(hashlib.md5(f"minhash-b:{j}".encode()).hexdigest()[:15], 16)
-        out.append((a % (p - 1) + 1, b % p))
-    return out
-
-
 def minhash_deterministic_candidates(
     df: DataFrame,
     n: int = 3,
@@ -1112,129 +1016,45 @@ def minhash_deterministic_candidates(
     id_col: str = "doc_id",
     round_to: int = 6,
 ) -> DataFrame:
-    """Banded MinHash whose SIGNATURE/BAND construction is replayable
-    as DuckDB CTEs (r9, r8 verdict #6) — so the candidate set itself
-    gets a full value-hash verdict, not just the post-verify pairs
-    (``minhash_banded_neardup``'s oracle is the naive all-pairs
-    exact-Jaccard, a valid equality only while every fixture pair sits
-    at J ≥ 0.9 where banding recall ≈ 1; THIS query's oracle replays
-    the banding, so parity holds at any J).
+    """Banded MinHash candidates with their band-share count and exact
+    Jaccard — every value replayable as DuckDB CTEs
+    (``queries._minhash_oracle_sql``), so the candidate set itself gets
+    a full value-hash verdict at any Jaccard level, not just the
+    post-verify pairs.
 
     Construction, identical in both engines:
     - gram value v = first 60 bits of md5(space-joined word n-gram),
-      one md5 per distinct gram per doc (the value is reused for the
-      exact-Jaccard verify, so gram strings never touch a shuffle);
+      one per distinct gram per doc (reused for the exact-Jaccard
+      verify, so gram strings never touch a shuffle);
     - permutation j: h_j = (a_j·(v mod p) + b_j) mod p with p = 2³¹−1
       and md5-derived literal constants (``minhash_det_constants``) —
       the classic universal-hash MinHash, no engine RNG anywhere;
     - signature_j(doc) = min over the doc's grams of h_j;
-    - band key (rows_per_band ≤ 2) packs the band's minima into one
-      bigint: h·p + h′ < 2⁶² — an equi-join key, no string digests;
+    - band key (``rows_per_band`` ∈ {1, 2}) packs the band's minima
+      into one bigint: h·p + h′ < 2⁶² — an equi-join key;
     - candidates = distinct (id_a < id_b) sharing ≥ 1 band key, with
       ``n_bands_shared`` kept as evidence, then exact Jaccard over the
-      60-bit gram values (collision odds 2⁻⁶⁰ per pair, identical in
-      both engines by construction).
+      60-bit gram values.
 
-    Scale shape: one md5 pass + k literal-arithmetic min-aggs (one
-    shuffle of partial minima), a (band, key)-keyed self-join whose
-    row bill is the band-collision count (the LSH design parameter),
-    and a broadcast-candidate verify. The engine-seeded Arrow-kernel
-    ``minhash_neardup_pairs`` remains the production path; this is the
-    correctness anchor."""
-    if rows_per_band not in (1, 2):
-        raise ValueError(
-            "minhash_deterministic_candidates: rows_per_band must be 1 or "
-            "2 — the band key packs r 31-bit minima into one 62-bit bigint"
-        )
-    from ..functions.text import tokens
-
-    p = _MINHASH_P
-    k = bands * rows_per_band
-    consts = minhash_det_constants(k)
-
-    base = ensure_parallelism(df).select(
-        F.col(id_col), tokens(F.col(text_col)).alias("_toks")
-    )
-    grams = base.select(
-        id_col,
-        F.array_distinct(
-            F.transform(
-                F.sequence(
-                    F.lit(1),
-                    F.greatest(F.size("_toks") - (n - 1), F.lit(1)),
-                ),
-                lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i, n)),
-            )
-        ).alias("_grams"),
-    )
-    # one md5 per gram, inside the per-doc array; consumed twice
-    # (signatures + verify) → pinned. Lazy (r12): the candidate list's
-    # broadcast_if_small count below always runs at construction and
-    # its lineage passes through gv, so that count materializes the
-    # pin en route — same single evaluation, one fewer barrier job.
-    gv = grams.select(
-        id_col,
-        F.array_distinct(
-            F.transform(
-                "_grams",
-                lambda g: F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast(
-                    "long"
-                ),
-            )
-        ).alias("_vs"),
+    Scale shape: one narrow kernel pass (``_minhash_udf``) pinned for
+    its three readers, a (band, key)-keyed self-join whose row bill is
+    the band-collision count (the LSH design parameter), and a
+    broadcast verify of the collision rows — ``minhash_neardup_pairs``
+    with every candidate kept. The band-share count is taken after the
+    verify, so the pair aggregation runs with the action and not in
+    the broadcast's construction-time size probe."""
+    # lazy pin: the collision list's broadcast_if_small count runs at
+    # construction and its lineage passes through the pin
+    sigs = _minhash_signatures(
+        ensure_parallelism(df), n, bands, rows_per_band,
+        text_col=text_col, id_col=id_col,
     ).localCheckpoint(eager=False)
-
-    posts = gv.select(id_col, F.explode("_vs").alias("_v"))
-    x = F.col("_v") % p
-    sigs = posts.groupBy(id_col).agg(
-        *[
-            F.min((F.lit(a) * x + F.lit(b)) % p).alias(f"_h{j}")
-            for j, (a, b) in enumerate(consts)
-        ]
-    )
-
-    def band_key(t: int):
-        c = F.col(f"_h{t * rows_per_band}")
-        if rows_per_band == 2:
-            c = c * F.lit(p) + F.col(f"_h{t * rows_per_band + 1}")
-        return c
-
-    bposts = sigs.select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("_band"), band_key(t).alias("_key")
-                    )
-                    for t in range(bands)
-                ]
-            )
-        ).alias("_b"),
-    ).select(id_col, F.col("_b._band").alias("_band"), F.col("_b._key").alias("_key"))
-    xp = bposts.select(F.col(id_col).alias("id_a"), "_band", "_key")
-    yp = bposts.select(F.col(id_col).alias("id_b"), "_band", "_key")
-    cand = (
-        xp.join(yp, ["_band", "_key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("long").alias("n_bands_shared"))
-    )
-    a = gv.select(F.col(id_col).alias("id_a"), F.col("_vs").alias("_sa"))
-    b = gv.select(F.col(id_col).alias("id_b"), F.col("_vs").alias("_sb"))
-    inter = F.size(F.array_intersect("_sa", "_sb")).cast("double")
-    union = (
-        F.size("_sa").cast("double") + F.size("_sb").cast("double") - inter
-    )
+    hits = _banded_candidate_pairs(sigs, id_col=id_col, distinct=False)
     return (
-        a.join(broadcast_if_small(cand), "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            "n_bands_shared",
-            F.round(inter / union, round_to).alias("jaccard"),
-        )
+        _verify_pairs_jaccard(sigs, sigs, hits, None, id_col=id_col, round_to=round_to)
+        .groupBy("id_a", "id_b", "jaccard")
+        .agg(F.count(F.lit(1)).cast("long").alias("n_bands_shared"))
+        .select("id_a", "id_b", "n_bands_shared", "jaccard")
     )
 
 
@@ -1242,20 +1062,20 @@ def _verify_pairs_jaccard(
     sh_a: DataFrame,
     sh_b: DataFrame,
     cands: DataFrame,
-    threshold: float,
+    threshold: float | None,
     id_col: str = "doc_id",
+    round_to: int = 6,
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate (id_a, id_b) pairs over
-    hashed-shingle frames (``id_col`` + ``_sh`` array<long>).
+    gram-value frames (``id_col`` + ``_sh`` array<long>).
 
-    array_intersect/union over fixed-width longs instead of shingle
-    strings — same Jaccard (64-bit collisions are negligible next to
-    MinHash's own error), and the joined sides shuffle 8 bytes per
-    shingle instead of the n-gram text. The candidate list is broadcast
-    (adaptive — see broadcast_if_small) into the first join so
-    non-candidate rows never shuffle their arrays. Keeps pairs whose
-    UNROUNDED Jaccard is ≥ ``threshold`` and reports it rounded to 6
-    places as ``jaccard``."""
+    array_intersect over fixed-width longs instead of shingle strings —
+    the joined sides shuffle 8 bytes per gram instead of the n-gram
+    text. The candidate list is broadcast (adaptive — see
+    broadcast_if_small) into the first join so non-candidate rows never
+    shuffle their arrays. Keeps pairs whose UNROUNDED Jaccard is ≥
+    ``threshold`` (every candidate for ``None``) and reports it rounded
+    to ``round_to`` places as ``jaccard``."""
     a = sh_a.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa"))
     b = sh_b.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb"))
     inter = F.size(F.array_intersect("_sa", "_sb")).cast("double")
@@ -1263,12 +1083,10 @@ def _verify_pairs_jaccard(
         F.size("_sa").cast("double") + F.size("_sb").cast("double") - inter
     )
     jac = inter / union
-    return (
-        a.join(broadcast_if_small(cands), "id_a")
-        .join(b, "id_b")
-        .filter(jac >= threshold)
-        .select("id_a", "id_b", F.round(jac, 6).alias("jaccard"))
-    )
+    j = a.join(broadcast_if_small(cands), "id_a").join(b, "id_b")
+    if threshold is not None:
+        j = j.filter(jac >= threshold)
+    return j.select("id_a", "id_b", F.round(jac, round_to).alias("jaccard"))
 
 
 def _minhash_signatures(
@@ -1276,20 +1094,19 @@ def _minhash_signatures(
     n: int,
     bands: int,
     rows_per_band: int,
-    seed: int,
     text_col: str = "text",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Lazy (``id_col``, ``_sh`` hashed shingles, ``_bands`` band
-    signatures) frame from one narrow kernel pass over the text. The
-    banded self-join, broadcast_if_small's count and the exact-Jaccard
-    verify all read it, so callers pin it once — ``materialize`` in the
-    batch path, the state write in ``NeardupIngest`` — or each consumer
+    """Lazy (``id_col``, ``_sh`` md5 gram values, ``_bands`` band keys)
+    frame from one narrow kernel pass over the text. The banded
+    self-join, broadcast_if_small's count and the exact-Jaccard verify
+    all read it, so callers pin it once — ``materialize`` in the batch
+    path, the state write in ``NeardupIngest`` — or each consumer
     re-runs the kernel stage (the reproducible 30× r2 bench regression
     on the near-dup pipeline)."""
     m = df.select(
         F.col(id_col),
-        _minhash_udf(n, bands, rows_per_band, seed)(F.col(text_col)).alias("_m"),
+        _minhash_udf(n, bands, rows_per_band)(F.col(text_col)).alias("_m"),
     )
     return m.select(id_col, "_m._sh", "_m._bands")
 
@@ -1300,7 +1117,6 @@ def minhash_neardup_pairs(
     bands: int = 8,
     rows_per_band: int = 2,
     threshold: float = 0.35,
-    seed: int = 42,
     text_col: str = "text",
     id_col: str = "doc_id",
     checkpoint_dir: str | None = None,
@@ -1308,18 +1124,20 @@ def minhash_neardup_pairs(
     """Banded-MinHash near-dup pairs: (id_a < id_b, jaccard) for every
     candidate whose exact word-``n``-gram Jaccard is ≥ ``threshold``.
 
-    A pair is a candidate iff some band's ``rows_per_band`` minhash
-    values all agree → P = 1 − (1 − j^r)^b, sharply thresholded for
-    r > 1 (at r = 1 every band is one minhash, so even j = 0.2 pairs
-    collide often). Shingle hashing and permutation mins run in Arrow
-    kernels; the only corpus-scale shuffle is the (band, sig, id)
-    equi-join, and the verify is exact over 64-bit shingle hashes
-    (``_verify_pairs_jaccard``), so precision is 1 and only recall is
-    probabilistic. ``threshold=0`` returns every candidate pair.
-    ``checkpoint_dir`` as in ``io.materialize``."""
+    A pair is a candidate iff some band's ``rows_per_band`` (1 or 2)
+    minhash values all agree → P = 1 − (1 − j^r)^b, sharply
+    thresholded for r > 1 (at r = 1 every band is one minhash, so even
+    j = 0.2 pairs collide often). Gram hashing and permutation mins
+    run in one Arrow kernel (``_minhash_udf``, the recipe of
+    ``minhash_deterministic_candidates``); the only corpus-scale
+    shuffle is the (band, sig, id) equi-join, and the verify is exact
+    over the 60-bit gram values (``_verify_pairs_jaccard``), so
+    precision is 1 and only recall is probabilistic. ``threshold=0``
+    returns every candidate pair. ``checkpoint_dir`` as in
+    ``io.materialize``."""
     sigs = materialize(
         _minhash_signatures(
-            ensure_parallelism(df), n, bands, rows_per_band, seed,
+            ensure_parallelism(df), n, bands, rows_per_band,
             text_col=text_col, id_col=id_col,
         ),
         checkpoint_dir,
@@ -1334,7 +1152,6 @@ def neardup_dedup(
     n: int = 3,
     text_col: str = "text",
     id_col: str = "doc_id",
-    seed: int = 42,
     checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """End-to-end near-duplicate dedup: banded-MinHash candidates →
@@ -1353,7 +1170,7 @@ def neardup_dedup(
     fault-tolerant posture for cluster runs.
     """
     verified = minhash_neardup_pairs(
-        df, n=n, threshold=threshold, seed=seed, text_col=text_col,
+        df, n=n, threshold=threshold, text_col=text_col,
         id_col=id_col, checkpoint_dir=checkpoint_dir,
     )
     clusters = cc_keep_min(

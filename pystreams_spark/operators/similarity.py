@@ -9,7 +9,11 @@ Tiers:
   Hash once, bucket-join, refine within buckets; cost scales with
   bucket collisions instead of |corpus| × |queries|.
 - ``cosine_lsh_pairs``: sign-random-projection LSH for embedding
-  near-dup pairs, verified by exact cosine.
+  near-dup pairs, verified by exact cosine; ``lsh_buckets_deterministic``
+  is the same signs packed into one bucket id.
+  All three project onto ONE plane source, ``_md5_planes`` (md5-derived
+  Rademacher rows), and quantize before every sign, distance or
+  threshold (``_q_scaled``), so no engine RNG decides a result.
 - deterministic quantizers: ONE Lloyd recurrence
   (``kmeans_centers_deterministic`` — md5-ordered seeds, integer-micros
   updates) behind k-means cells (``kmeans_cells_deterministic``, which
@@ -45,6 +49,35 @@ def _q_scaled(x, round_to: int):
     from ..functions.exact import np_round_half_away_scaled
 
     return np_round_half_away_scaled(x, 10 ** int(round_to))
+
+
+def _md5_planes(n_planes: int, dim: int):
+    """(n_planes × dim) Rademacher matrix: entry (p, d) is +1 when the
+    first hex digit of ``md5(f"{p}:{d}")`` is even, else −1 — planes
+    any engine derives from the same strings (the DuckDB oracles spell
+    it ``substr(md5(p || ':' || d), 1, 1) IN ('0','2',…,'e')``)."""
+    import hashlib
+
+    import numpy as np
+
+    even = set("02468ace")
+    return np.array(
+        [
+            [
+                1.0 if hashlib.md5(f"{p}:{d}".encode()).hexdigest()[0] in even else -1.0
+                for d in range(dim)
+            ]
+            for p in range(n_planes)
+        ]
+    ).reshape(n_planes, dim)
+
+
+def _plane_signs(m, planes, round_to: int = 6):
+    """(n × n_planes) bool sign bits of ``m``'s projections, taken on
+    the INTEGER-quantized dot (half-away — ``_q_scaled``): quantizing
+    before the sign absorbs float summation-order differences, and the
+    integer compare is exact on both engines."""
+    return _q_scaled(m @ planes.T, round_to) >= 0
 
 
 def knn_exact(
@@ -186,14 +219,15 @@ def knn_lsh(
     query_id: str = "query_id",
     corpus_id: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate kNN via random-projection LSH (Euclidean):
-    h_t(x) = floor(x·g_t / bucket_length) with seeded unit-gaussian
-    projections g_t, one per hash table — the hash family of
-    BucketedRandomProjectionLSH, on the engine's own kernels (the
-    Spark ML approxSimilarityJoin explodes per-table hash rows through
-    two full shuffles; measured ~5 s → ~1.5 s at sf0.1).
+    h_t(x) = floor(x·g_t / bucket_length) with unit projections g_t,
+    one per hash table — the ``_md5_planes`` rows scaled by 1/√dim —
+    the hash family of BucketedRandomProjectionLSH, on the engine's own
+    kernels (the Spark ML approxSimilarityJoin explodes per-table hash
+    rows through two full shuffles; measured ~5 s → ~1.5 s at sf0.1).
+    Refined distances are quantized half-away (``_q_scaled``) like the
+    SQL ROUND the exact baseline uses.
 
     Plan: corpus is hashed in ONE narrow numpy pass (a (dim × tables)
     matmul per Arrow batch) → candidate generation joins the corpus
@@ -213,9 +247,7 @@ def knn_lsh(
     qids = qpdf[query_id].to_numpy(dtype=np.int64)
     qm = np.stack(qpdf[vec_col].to_numpy()).astype(np.float64)
     dim = qm.shape[1]
-    rng = np.random.RandomState(seed)
-    proj = rng.normal(size=(num_hash_tables, dim))
-    proj /= np.linalg.norm(proj, axis=1, keepdims=True)
+    proj = _md5_planes(num_hash_tables, dim) / np.sqrt(dim)
     bc = spark.sparkContext.broadcast((proj, qids, qm))
 
     def corpus_buckets(batches):
@@ -267,7 +299,7 @@ def knn_lsh(
                 {
                     query_id: pdf[query_id].to_numpy(dtype=np.int64),
                     corpus_id: pdf[corpus_id].to_numpy(dtype=np.int64),
-                    "dist": np.round(d, 6),
+                    "dist": _q_scaled(d, 6) / 1e6,
                 }
             )
 
@@ -282,14 +314,13 @@ def cosine_lsh_pairs(
     bands: int = 6,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed: int = 42,
 ) -> DataFrame:
     """Embedding near-dup pairs at corpus scale: sign-random-projection
     (hyperplane) LSH candidates → exact-cosine verification.
 
     A vector's signature is ``bands × bits_per_band`` hyperplane signs
-    (sign(x·g)); two vectors are candidates iff some band's bits all
-    agree. P[bit agrees] = 1 − θ/π, so with the defaults (6 bands of 10
+    (``_plane_signs`` over ``_md5_planes``); two vectors are candidates
+    iff some band's bits all agree. P[bit agrees] = 1 − θ/π, so with the defaults (6 bands of 10
     bits) a cos ≥ 0.95 pair is caught with ~92% probability, a true
     duplicate (cos ≥ 0.99) with ~99.98%, while a random orthogonal pair
     collides only ~0.6% of the time — the subquadratic regime. (For the
@@ -303,26 +334,27 @@ def cosine_lsh_pairs(
     and verification joins vectors for candidate pairs only (candidate
     list broadcast). Verified scores are exact → precision 1.0 by
     construction; recall is probabilistic (unit-tested on planted
-    duplicates). Approximate → rows-only checked.
+    duplicates). The verify quantizes the cosine to 6 places and cuts
+    at ``quantized_threshold``, the contract of ``cosine_pairs_above``.
     """
     import numpy as np
     import pandas as pd
 
+    from ..functions.exact import quantized_threshold
     from .dedup import _banded_candidate_pairs
 
     n_bits = bands * bits_per_band
-    # projection matrix is (n_bits × dim); built lazily per worker from
-    # the seed once the batch reveals dim — deterministic everywhere,
-    # and the operator works for any embedding width without a driver pass
-    state = {"proj": None}
+    # plane matrix is (n_bits × dim); built lazily per worker once the
+    # batch reveals dim — the operator works for any embedding width
+    # without a driver pass
+    state = {"planes": None}
 
     def band_sigs(batches):
         for pdf in batches:
             m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            if state["proj"] is None or state["proj"].shape[1] != m.shape[1]:
-                r = np.random.RandomState(seed)
-                state["proj"] = r.normal(size=(n_bits, m.shape[1]))
-            bits = (m @ state["proj"].T) > 0  # (n, n_bits)
+            if state["planes"] is None or state["planes"].shape[1] != m.shape[1]:
+                state["planes"] = _md5_planes(n_bits, m.shape[1])
+            bits = _plane_signs(m, state["planes"])  # (n, n_bits)
             weights = (1 << np.arange(bits_per_band, dtype=np.int64))[None, None, :]
             sigs = (
                 bits.reshape(len(m), bands, bits_per_band).astype(np.int64) * weights
@@ -343,22 +375,23 @@ def cosine_lsh_pairs(
     joined = a.join(broadcast_if_small(cands), "id_a").join(b, "id_b")
 
     def verify(batches):
+        thr_q = quantized_threshold(threshold, 10**6)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             va = np.stack(pdf["_va"].to_numpy()).astype(np.float64)
             vb = np.stack(pdf["_vb"].to_numpy()).astype(np.float64)
-            s = np.round(
+            q = _q_scaled(
                 (va * vb).sum(axis=1)
                 / (np.linalg.norm(va, axis=1) * np.linalg.norm(vb, axis=1)),
                 6,
             )
-            keep = s >= threshold
+            keep = q >= thr_q
             yield pd.DataFrame(
                 {
                     "id_a": pdf["id_a"].to_numpy(dtype=np.int64)[keep],
                     "id_b": pdf["id_b"].to_numpy(dtype=np.int64)[keep],
-                    "score": s[keep],
+                    "score": q[keep] / 1e6,
                 }
             )
 
@@ -1009,30 +1042,19 @@ def lsh_buckets_deterministic(
     round_to: int = 6,
 ) -> DataFrame:
     """Sign-random-projection LSH (Charikar 2002) with ENGINE-PORTABLE
-    hyperplanes (r7): plane p's component for dimension d is +1 when
-    the first hex digit of ``md5(f"{p}:{d}")`` is even, else −1 — a
-    Rademacher matrix both engines can derive from the same strings,
-    the md5-portable-randomness trick this repo's seeded sampling
-    already uses. Bucket = Σ_p [CAST(ROUND(v·h_p·10⁶) AS BIGINT) ≥ 0]·2^p
-    (quantizing before the sign absorbs float summation-order
-    differences, and the integer compare is exact on both engines —
+    hyperplanes (r7): the ``_md5_planes`` Rademacher matrix, which both
+    engines derive from the same strings — the md5-portable-randomness
+    trick this repo's seeded sampling already uses. Bucket =
+    Σ_p [CAST(ROUND(v·h_p·10⁶) AS BIGINT) ≥ 0]·2^p (``_plane_signs``:
     the round-before-compare rule every float oracle here uses, in the
     r12 scaled-integer form).
 
     One narrow kernel pass with the (n_planes × d) matrix broadcast —
-    no shuffle, no fit. Production LSH wants fresh random planes per
-    index build (`knn_lsh` / `cosine_lsh_pairs`); this variant
-    trades that for full DuckDB replayability."""
-    import hashlib
-
+    no shuffle, no fit; ``cosine_lsh_pairs`` bands the same signs."""
     import numpy as np
 
     d = _probe_dim(df, vec_col, "lsh_buckets_deterministic")
-    planes = np.empty((n_planes, d))
-    for p in range(n_planes):
-        for dim in range(d):
-            h = hashlib.md5(f"{p}:{dim}".encode()).hexdigest()[0]
-            planes[p, dim] = 1.0 if h in "02468ace" else -1.0
+    planes = _md5_planes(n_planes, d)
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast(planes)
 
@@ -1047,10 +1069,8 @@ def lsh_buckets_deterministic(
             if not len(pdf):
                 continue
             m = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            # sign of the INTEGER-quantized dot (half-away — `_q_scaled`)
-            dots = _q_scaled(m @ pl.T, round_to)
             out = pdf.copy()
-            out[out_col] = ((dots >= 0) * weights[None, :]).sum(axis=1)
+            out[out_col] = (_plane_signs(m, pl, round_to) * weights[None, :]).sum(axis=1)
             yield out
 
     return df.mapInPandas(kernel, f"{fields}, {out_col} long")

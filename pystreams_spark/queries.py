@@ -39,6 +39,7 @@ from .functions.exact import (
     var_samp_exact,
     var_samp_exact_sql,
 )
+from .functions.text_kernels import _MINHASH_P, minhash_det_constants
 from .io import load_table
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -76,6 +77,143 @@ _QUALITY_SQL = """ROUND(
            / GREATEST(CAST(length(text) AS DOUBLE), 1.0) * 5.0, 1.0)), 6)""".format(
     t=_TOKS_SQL
 )
+
+
+# The two LSH text families' oracles (the md5 recipes of
+# `functions/text_kernels`): `g(doc_id, v)` holds each doc's distinct
+# first-60-bit md5 gram values, and the MinHash constants are
+# md5-derived Python literals — identical by construction in the
+# kernels and the SQL text.
+def _md5_grams_cte(n: int, src: str = "documents") -> str:
+    return f"""g AS (
+        SELECT doc_id, unnest(list_distinct(list_transform(
+            generate_series(1, GREATEST(len({_TOKS_SQL}) - {n - 1}, 1)),
+            i -> ('0x' || substr(md5(array_to_string(
+                     list_slice({_TOKS_SQL}, i, i + {n - 1}), ' ')), 1, 15))::BIGINT
+        ))) AS v
+        FROM {src}
+    )"""
+
+
+def _mh_mins_sql(k: int) -> str:
+    return ",\n               ".join(
+        f"MIN(({a} * (v % {_MINHASH_P}) + {b}) % {_MINHASH_P}) AS h{j}"
+        for j, (a, b) in enumerate(minhash_det_constants(k))
+    )
+
+
+def _mh_bands_sql(bands: int, rows_per_band: int) -> str:
+    def key(t: int) -> str:
+        if rows_per_band == 1:
+            return f"h{t}"
+        return f"h{2 * t} * {_MINHASH_P} + h{2 * t + 1}"
+
+    return "\n        UNION ALL ".join(
+        f"SELECT doc_id, {t} AS band, {key(t)} AS key FROM sig"
+        for t in range(bands)
+    )
+
+
+def _minhash_sig_ctes(k: int, src: str = "documents") -> str:
+    """`g`, then `sig(doc_id, h0 … h{k-1})`: the 3-gram MinHash minima
+    of `text_kernels._minhash_band_keys` over ``src``'s (doc_id, text)."""
+    return f"""{_md5_grams_cte(3, src)}, sig AS (
+        SELECT doc_id,
+               {_mh_mins_sql(k)}
+        FROM g GROUP BY doc_id
+    )"""
+
+
+def _simhash_sig_ctes(n: int, n_bits: int) -> str:
+    """`g`, then `sig(doc_id, sig)`: the ``n_bits``-bit md5-gram vote of
+    `text_kernels.simhash_md5_udf`."""
+    return f"""{_md5_grams_cte(n)}, votes AS (
+        SELECT doc_id, b.b, SUM(((v >> b.b) & 1) * 2 - 1) AS vote
+        FROM g CROSS JOIN (SELECT unnest(generate_series(0, {n_bits - 1})) AS b) b
+        GROUP BY 1, 2
+    ), sig AS (
+        SELECT doc_id,
+               SUM(CASE WHEN vote > 0 THEN (CAST(1 AS BIGINT) << b)
+                   ELSE 0 END) AS sig
+        FROM votes GROUP BY doc_id
+    )"""
+
+
+def _minhash_oracle_sql(
+    bands: int,
+    rows_per_band: int,
+    threshold: float | None = None,
+    src: str = "documents",
+) -> str:
+    """`operators/dedup.minhash_deterministic_candidates` (3-grams) in
+    DuckDB: (id_a, id_b, n_bands_shared, jaccard) per band-collision
+    pair of ``src``'s docs; ``threshold`` keeps pairs whose UNROUNDED
+    Jaccard is ≥ it, as ``minhash_neardup_pairs`` does."""
+    where = (
+        ""
+        if threshold is None
+        else "WHERE CAST(i.shared AS DOUBLE) / (sa.sz + sb.sz - i.shared)"
+        f" >= CAST({float(threshold)!r} AS DOUBLE)"
+    )
+    return f"""
+    WITH {_minhash_sig_ctes(bands * rows_per_band, src)}, bp AS (
+        {_mh_bands_sql(bands, rows_per_band)}
+    ), cand AS (
+        SELECT x.doc_id AS id_a, y.doc_id AS id_b,
+               CAST(COUNT(*) AS BIGINT) AS n_bands_shared
+        FROM bp x JOIN bp y ON x.band = y.band AND x.key = y.key
+                           AND x.doc_id < y.doc_id
+        GROUP BY 1, 2
+    ), sets AS (
+        SELECT doc_id, COUNT(*) AS sz FROM g GROUP BY doc_id
+    ), iv AS (
+        -- COUNT(gb.v) over the LEFT join: a band collision between
+        -- docs sharing zero grams (p-collision odds, ~2^-62) must
+        -- still emit the pair with jaccard 0, as the Spark side does
+        SELECT c.id_a, c.id_b, c.n_bands_shared, COUNT(gb.v) AS shared
+        FROM cand c
+        LEFT JOIN g ga ON ga.doc_id = c.id_a
+        LEFT JOIN g gb ON gb.doc_id = c.id_b AND gb.v = ga.v
+        GROUP BY 1, 2, 3
+    )
+    SELECT i.id_a, i.id_b, i.n_bands_shared,
+           ROUND(CAST(i.shared AS DOUBLE) / (sa.sz + sb.sz - i.shared), 6)
+             AS jaccard
+    FROM iv i JOIN sets sa ON sa.doc_id = i.id_a
+              JOIN sets sb ON sb.doc_id = i.id_b
+    {where}
+    ORDER BY id_a, id_b
+    """
+
+
+def _simhash_oracle_sql(n: int, bands: int, band_bits: int, max_hamming: int) -> str:
+    """`operators/dedup.simhash_deterministic_candidates` in DuckDB:
+    ``bands·band_bits``-bit md5-gram votes, banded candidates, and the
+    bit_count-XOR verify ≤ ``max_hamming``."""
+    n_bits = bands * band_bits
+    if n_bits > 60:
+        raise ValueError(
+            f"_simhash_oracle_sql: bands·band_bits = {n_bits} > 60 — the "
+            "md5 gram value carries 60 bits"
+        )
+    return f"""
+    WITH {_simhash_sig_ctes(n, n_bits)}, bp AS (
+        SELECT doc_id, t.t AS band,
+               (sig >> (t.t * {band_bits})) & {(1 << band_bits) - 1} AS val
+        FROM sig CROSS JOIN (SELECT unnest(generate_series(0, {bands - 1})) AS t) t
+    ), cand AS (
+        SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
+        FROM bp x JOIN bp y ON x.band = y.band AND x.val = y.val
+                           AND x.doc_id < y.doc_id
+    )
+    SELECT c.id_a, c.id_b,
+           CAST(bit_count(xor(sa.sig, sb.sig)) AS BIGINT) AS hamming
+    FROM cand c JOIN sig sa ON sa.doc_id = c.id_a
+                JOIN sig sb ON sb.doc_id = c.id_b
+    WHERE bit_count(xor(sa.sig, sb.sig)) <= {max_hamming}
+    ORDER BY id_a, id_b
+    """
+
 
 
 # Engine-exact average of a column whose values are exact multiples of
@@ -1450,16 +1588,62 @@ def centroid_classifier_confusion(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-@query("embedding_neardup_lsh")
+@query(
+    "embedding_neardup_lsh",
+    oracle="""
+WITH e AS (
+  SELECT vec_id, embedding FROM embeddings
+  UNION ALL
+  -- the Spark side's jitter reads the lateral alias (the new id)
+  SELECT vec_id + 1000000 AS vec_id,
+         CAST(list_transform(embedding, (x, i) ->
+              CAST(x AS DOUBLE)
+              + 0.01 * sin(CAST((vec_id + 1000000) * 64 + i - 1 AS DOUBLE)))
+              AS FLOAT[]) AS embedding
+  FROM embeddings WHERE vec_id < 50
+), pts AS (
+  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM e
+), planes AS (
+  SELECT p.range AS p, d.range AS dim,
+    CASE WHEN substr(md5(CAST(p.range AS VARCHAR) || ':' || CAST(d.range AS VARCHAR)), 1, 1)
+         IN ('0','2','4','6','8','a','c','e') THEN 1.0 ELSE -1.0 END AS s
+  FROM range(60) p, range(64) d
+), dots AS (
+  SELECT x.vec_id, pl.p,
+         CAST(ROUND(SUM(x.val * pl.s) * 1000000) AS BIGINT) AS dot
+  FROM (SELECT vec_id, unnest(v) AS val, generate_subscripts(v, 1) - 1 AS dim FROM pts) x
+  JOIN planes pl ON pl.dim = x.dim
+  GROUP BY x.vec_id, pl.p
+), bands AS (
+  SELECT vec_id, p // 10 AS band,
+         SUM(CASE WHEN dot >= 0 THEN CAST(1 AS BIGINT) << (p % 10) ELSE 0 END) AS sig
+  FROM dots GROUP BY vec_id, p // 10
+), cand AS (
+  SELECT DISTINCT a.vec_id AS id_a, b.vec_id AS id_b
+  FROM bands a JOIN bands b ON a.band = b.band AND a.sig = b.sig AND a.vec_id < b.vec_id
+), scored AS (
+  SELECT c.id_a, c.id_b,
+    CAST(ROUND(
+      list_sum(list_transform(list_zip(pa.v, pb.v), z -> z[1] * z[2]))
+      / (SQRT(list_sum(list_transform(pa.v, x -> x * x)))
+         * SQRT(list_sum(list_transform(pb.v, x -> x * x)))) * 1000000) AS BIGINT) AS q
+  FROM cand c JOIN pts pa ON pa.vec_id = c.id_a JOIN pts pb ON pb.vec_id = c.id_b
+)
+SELECT id_a, id_b, q / 1000000.0 AS score, id_b = id_a + 1000000 AS is_planted
+FROM scored WHERE q >= 900000
+ORDER BY id_a, id_b
+""",
+)
 def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH embedding near-dup at corpus scale, validated on
-    planted duplicates: 50 seeded jittered copies (cos ≈ 0.999) are
-    unioned into the corpus; the LSH pipeline (sign signatures → band
-    join → exact-cosine verify ≥ 0.9) must recover them. The
+    planted duplicates: 50 jittered copies (cos ≈ 0.999) are unioned
+    into the corpus; the LSH pipeline (md5-plane sign signatures → band
+    join → quantized-cosine verify ≥ 0.9) must recover them. The
     ``is_planted`` column makes recall regressions visible as changed
-    row values in the rows-only check. The uniform fixture itself has
-    no cos ≥ 0.9 pairs, so planted rows are exactly the signal.
-    Deterministic jitter (sin of id·position) — no RNG anywhere."""
+    row values. The uniform fixture itself has no cos ≥ 0.9 pairs, so
+    planted rows are exactly the signal. Deterministic jitter (sin of
+    id·position) and md5 planes — no RNG anywhere, so the DuckDB
+    oracle replays jitter, signs, bands and verify."""
     from .operators.similarity import cosine_lsh_pairs
 
     e = _t(spark, sf_dir, "embeddings")
@@ -1515,13 +1699,21 @@ def embedding_norms_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
 # -- rows-only (approximate / engine-specific hash) §2.K ---------------------
 
 
-@query("minhash_neardup_candidates")
+@query(
+    "minhash_neardup_candidates",
+    oracle=f"""
+    SELECT id_a, id_b, jaccard AS est_jaccard
+    FROM ({_minhash_oracle_sql(bands=4, rows_per_band=1, threshold=0.1)})
+    ORDER BY id_a, id_b
+    """,
+)
 def minhash_neardup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash LSH near-dup candidates (seeded, approximate → rows-only;
-    unit tests compare recall against exact Jaccard):
-    ``minhash_neardup_pairs`` with 4 width-1 bands (a pair is a
-    candidate iff any of 4 minhashes agree), verified pairs at exact
-    Jaccard ≥ 0.1 reported as ``est_jaccard``."""
+    """MinHash LSH near-dup candidates: ``minhash_neardup_pairs`` with
+    4 width-1 bands (a pair is a candidate iff any of 4 minhashes
+    agree), verified pairs at exact Jaccard ≥ 0.1 reported as
+    ``est_jaccard``. The md5 MinHash recipe is the anchor's, so the
+    DuckDB oracle replays the candidates and the verify (unit tests
+    compare recall against exact Jaccard)."""
     from .gates import gate_rows
     from .operators.dedup import minhash_neardup_pairs
 
@@ -1539,30 +1731,38 @@ def minhash_neardup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-@query("simhash_neardup_candidates")
+@query(
+    "simhash_neardup_candidates",
+    oracle=_simhash_oracle_sql(n=2, bands=4, band_bits=15, max_hamming=45),
+)
 def simhash_neardup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash band-collision candidates (engine-specific xxhash64 →
-    rows-only)."""
+    """SimHash band-collision candidates over word bigrams: every pair
+    sharing one of 4 × 15-bit bands of the 60-bit md5-gram signature
+    (``simhash_deterministic_candidates`` with the verify cut at the
+    band bound), each with its signature ``hamming`` distance as a
+    self-check column."""
     from .gates import gate_rows
-    from .operators.dedup import simhash_candidates
+    from .operators.dedup import simhash_deterministic_candidates
 
     d = _t(spark, sf_dir, "documents")
-    out = simhash_candidates(d)  # 4 bands × 16 bits
-    # r6 invariant gate: a shared 16-bit band bounds the signature
-    # hamming distance by the other 48 bits — more means the banding
+    out = simhash_deterministic_candidates(
+        d, n=2, bands=4, band_bits=15, max_hamming=45
+    )
+    # r6 invariant gate: a shared 15-bit band bounds the signature
+    # hamming distance by the other 45 bits — more means the banding
     # or the XOR/bit_count self-check column regressed
     return gate_rows(
         out,
-        (F.col("hamming") >= 0) & (F.col("hamming") <= 48),
-        "simhash_candidates: hamming outside the 48-bit band bound",
+        (F.col("hamming") >= 0) & (F.col("hamming") <= 45),
+        "simhash_neardup_candidates: hamming outside the 45-bit band bound",
     ).orderBy("id_a", "id_b")
 
 
 @query("knn_lsh_approx")
 def knn_lsh_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate kNN via random-projection (Euclidean) LSH — seeded
-    ``similarity.knn_lsh`` (numpy bucket kernel + exact L2 refine).
-    Carries in_exact_topk / recall_at_k self-check columns (vs exact
+    """Approximate kNN via random-projection (Euclidean) LSH —
+    ``similarity.knn_lsh`` (md5 Rademacher projections, numpy bucket
+    kernel + exact L2 refine). Carries in_exact_topk / recall_at_k self-check columns (vs exact
     euclidean top-k) so rows-only checks surface recall drift."""
     from .operators.similarity import annotate_recall_vs_exact, knn_exact, knn_lsh
 
@@ -3104,7 +3304,7 @@ def minhash_banded_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     >=0.35 pair. Banding recall is probabilistic in general (a j=0.4
     pair is caught with P=1-(1-0.16)^8≈0.75), but the fixture's true
     pairs all have j >= 0.9 where P ≈ 1-2e-6 — and the signatures are
-    seeded, so the result is deterministic, not a lucky draw. A fixture
+    md5-derived, so the result is deterministic, not a lucky draw. A fixture
     with mid-band pairs would legitimately demote this to rows-only."""
     from .operators.dedup import minhash_neardup_pairs
 
@@ -3116,67 +3316,9 @@ def minhash_banded_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Oracle-grade deterministic MinHash (r9, VERDICT r8 #6): the banding
-# itself is replayed in SQL, so the CANDIDATE set gets a value-hash
-# verdict at ANY Jaccard level (minhash_banded_neardup's all-pairs
-# oracle is only an equality while fixture pairs sit where recall ≈ 1).
-# Constants are md5-derived Python literals — identical by construction
-# in the Spark plan and the SQL text.
-from .operators.dedup import minhash_det_constants as _mh_consts_fn
-
-_MH_P = 2147483647
-_MH_CONSTS = _mh_consts_fn(16)
-_MH_MINS_SQL = ",\n               ".join(
-    f"MIN(({a} * (v % {_MH_P}) + {b}) % {_MH_P}) AS h{j}"
-    for j, (a, b) in enumerate(_MH_CONSTS)
-)
-_MH_BANDS_SQL = "\n        UNION ALL ".join(
-    f"SELECT doc_id, {t} AS band, h{2 * t} * {_MH_P} + h{2 * t + 1} AS key FROM sig"
-    for t in range(8)
-)
-
-
 @query(
     "minhash_deterministic_candidates",
-    oracle=f"""
-    WITH g AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-            generate_series(1, GREATEST(len({_TOKS_SQL}) - 2, 1)),
-            i -> ('0x' || substr(md5(array_to_string(
-                     list_slice({_TOKS_SQL}, i, i + 2), ' ')), 1, 15))::BIGINT
-        ))) AS v
-        FROM documents
-    ), sig AS (
-        SELECT doc_id,
-               {_MH_MINS_SQL}
-        FROM g GROUP BY doc_id
-    ), bp AS (
-        {_MH_BANDS_SQL}
-    ), cand AS (
-        SELECT x.doc_id AS id_a, y.doc_id AS id_b,
-               CAST(COUNT(*) AS BIGINT) AS n_bands_shared
-        FROM bp x JOIN bp y ON x.band = y.band AND x.key = y.key
-                           AND x.doc_id < y.doc_id
-        GROUP BY 1, 2
-    ), sets AS (
-        SELECT doc_id, COUNT(*) AS sz FROM g GROUP BY doc_id
-    ), iv AS (
-        -- COUNT(gb.v) over the LEFT join: a band collision between
-        -- docs sharing zero grams (p-collision odds, ~2^-62) must
-        -- still emit the pair with jaccard 0, as the Spark side does
-        SELECT c.id_a, c.id_b, c.n_bands_shared, COUNT(gb.v) AS shared
-        FROM cand c
-        LEFT JOIN g ga ON ga.doc_id = c.id_a
-        LEFT JOIN g gb ON gb.doc_id = c.id_b AND gb.v = ga.v
-        GROUP BY 1, 2, 3
-    )
-    SELECT i.id_a, i.id_b, i.n_bands_shared,
-           ROUND(CAST(i.shared AS DOUBLE) / (sa.sz + sb.sz - i.shared), 6)
-             AS jaccard
-    FROM iv i JOIN sets sa ON sa.doc_id = i.id_a
-              JOIN sets sb ON sb.doc_id = i.id_b
-    ORDER BY id_a, id_b
-    """,
+    oracle=_minhash_oracle_sql(bands=8, rows_per_band=2),
 )
 def minhash_deterministic_candidates_q(
     spark: SparkSession, sf_dir: str
@@ -3185,9 +3327,9 @@ def minhash_deterministic_candidates_q(
     permutations (p = 2³¹−1, 8 bands × 2 rows), with the exact 60-bit
     gram-value Jaccard attached — the signature construction, the band
     collision set, AND the verify arithmetic all under one value hash
-    (`operators/dedup.minhash_deterministic_candidates`). The
-    engine-seeded Arrow-kernel banding stays the production path; this
-    is its correctness anchor at every Jaccard level."""
+    (`operators/dedup.minhash_deterministic_candidates`). The same
+    kernel is every MinHash query's (`minhash_neardup_pairs`), so this
+    oracle certifies their banding at every Jaccard level."""
     from .operators.dedup import minhash_deterministic_candidates
 
     d = _t(spark, sf_dir, "documents")
@@ -3198,38 +3340,7 @@ def minhash_deterministic_candidates_q(
 
 @query(
     "simhash_deterministic_candidates",
-    oracle=f"""
-    WITH g AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-            generate_series(1, GREATEST(len({_TOKS_SQL}) - 2, 1)),
-            i -> ('0x' || substr(md5(array_to_string(
-                     list_slice({_TOKS_SQL}, i, i + 2), ' ')), 1, 15))::BIGINT
-        ))) AS v
-        FROM documents
-    ), votes AS (
-        SELECT doc_id, b.b, SUM(((v >> b.b) & 1) * 2 - 1) AS vote
-        FROM g CROSS JOIN (SELECT unnest(generate_series(0, 59)) AS b) b
-        GROUP BY 1, 2
-    ), sig AS (
-        SELECT doc_id,
-               SUM(CASE WHEN vote > 0 THEN (CAST(1 AS BIGINT) << b)
-                   ELSE 0 END) AS sig
-        FROM votes GROUP BY doc_id
-    ), bp AS (
-        SELECT doc_id, t.t AS band, (sig >> (t.t * 15)) & 32767 AS val
-        FROM sig CROSS JOIN (SELECT unnest(generate_series(0, 3)) AS t) t
-    ), cand AS (
-        SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-        FROM bp x JOIN bp y ON x.band = y.band AND x.val = y.val
-                           AND x.doc_id < y.doc_id
-    )
-    SELECT c.id_a, c.id_b,
-           CAST(bit_count(xor(sa.sig, sb.sig)) AS BIGINT) AS hamming
-    FROM cand c JOIN sig sa ON sa.doc_id = c.id_a
-                JOIN sig sb ON sb.doc_id = c.id_b
-    WHERE bit_count(xor(sa.sig, sb.sig)) <= 8
-    ORDER BY id_a, id_b
-    """,
+    oracle=_simhash_oracle_sql(n=3, bands=4, band_bits=15, max_hamming=8),
 )
 def simhash_deterministic_candidates_q(
     spark: SparkSession, sf_dir: str
@@ -3237,9 +3348,9 @@ def simhash_deterministic_candidates_q(
     """ORACLE-GRADE SimHash (r9): 60-bit md5-gram signatures via
     explicit bit voting, 4×15-bit band candidates, bit_count-XOR
     Hamming verify ≤ 8 — voting, banding, AND distance all under one
-    value hash (`operators/dedup.simhash_deterministic_candidates`).
-    The xxhash64 Arrow-kernel `simhash_neardup_candidates` stays the
-    production path; this anchors its semantics."""
+    value hash (`operators/dedup.simhash_deterministic_candidates`,
+    one md5-vote Arrow kernel pass; `simhash_neardup_candidates` runs
+    the same kernel over bigrams)."""
     from .operators.dedup import simhash_deterministic_candidates
 
     d = _t(spark, sf_dir, "documents")
@@ -3935,37 +4046,9 @@ def video_frame_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "crossmodal_neardup_components",
     oracle=f"""
-    WITH RECURSIVE g AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-            generate_series(1, GREATEST(len({_TOKS_SQL}) - 2, 1)),
-            i -> ('0x' || substr(md5(array_to_string(
-                     list_slice({_TOKS_SQL}, i, i + 2), ' ')), 1, 15))::BIGINT
-        ))) AS v
-        FROM documents
-    ), sig AS (
-        SELECT doc_id,
-               {_MH_MINS_SQL}
-        FROM g GROUP BY doc_id
-    ), bp AS (
-        {_MH_BANDS_SQL}
-    ), mcand AS (
-        SELECT DISTINCT x.doc_id AS id_a, y.doc_id AS id_b
-        FROM bp x JOIN bp y ON x.band = y.band AND x.key = y.key
-                           AND x.doc_id < y.doc_id
-    ), sets AS (
-        SELECT doc_id, COUNT(*) AS sz FROM g GROUP BY doc_id
-    ), iv AS (
-        SELECT c.id_a, c.id_b, COUNT(gb.v) AS shared
-        FROM mcand c
-        LEFT JOIN g ga ON ga.doc_id = c.id_a
-        LEFT JOIN g gb ON gb.doc_id = c.id_b AND gb.v = ga.v
-        GROUP BY 1, 2
-    ), tpairs AS MATERIALIZED (
-        SELECT i.id_a, i.id_b
-        FROM iv i JOIN sets sa ON sa.doc_id = i.id_a
-                  JOIN sets sb ON sb.doc_id = i.id_b
-        WHERE CAST(i.shared AS DOUBLE)
-              / (sa.sz + sb.sz - i.shared) >= 0.5
+    WITH RECURSIVE tpairs AS MATERIALIZED (
+        SELECT id_a, id_b
+        FROM ({_minhash_oracle_sql(bands=8, rows_per_band=2, threshold=0.5)})
     ), {_IMG_PAIR_CTES}, edges AS (
         SELECT id_a AS a, id_b AS b FROM ipairs
         UNION SELECT id_b, id_a FROM ipairs
@@ -4599,7 +4682,7 @@ def neardup_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE, drop every doc that reaches a smaller one — the
     engine computes the same set via banding + adaptive CC without ever
     going quadratic. Equality holds for the same reason as
-    minhash_banded_neardup (seeded banding recall ≈ 1 at the fixture's
+    minhash_banded_neardup (md5-derived banding recall ≈ 1 at the fixture's
     j>=0.9 pairs; the verify + CC stages are exact). Survivors also
     pinned against a brute-force Python reference in unit tests."""
     from .operators.dedup import neardup_dedup
@@ -7793,39 +7876,8 @@ def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT a0.doc_id * 2 + 1 AS doc_id, bs.text
         FROM added0 a0 JOIN b_src bs ON bs.doc_id = a0.doc_id
         WHERE a0.doc_id NOT IN (SELECT aid FROM moved)
-    ), g AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-            generate_series(1, GREATEST(len({_TOKS_SQL}) - 2, 1)),
-            i -> ('0x' || substr(md5(array_to_string(
-                     list_slice({_TOKS_SQL}, i, i + 2), ' ')), 1, 15))::BIGINT
-        ))) AS v
-        FROM slice
-    ), sig AS (
-        SELECT doc_id,
-               {{_MH_MINS_SQL}}
-        FROM g GROUP BY doc_id
-    ), bp AS (
-        {{_MH_BANDS_SQL}}
-    ), cand AS (
-        SELECT x.doc_id AS id_a, y.doc_id AS id_b,
-               CAST(COUNT(*) AS BIGINT) AS n_bands_shared
-        FROM bp x JOIN bp y ON x.band = y.band AND x.key = y.key
-                           AND x.doc_id < y.doc_id
-        GROUP BY 1, 2
-    ), sets AS (
-        SELECT doc_id, COUNT(*) AS sz FROM g GROUP BY doc_id
-    ), iv AS (
-        SELECT c.id_a, c.id_b, c.n_bands_shared, COUNT(gb.v) AS shared
-        FROM cand c
-        LEFT JOIN g ga ON ga.doc_id = c.id_a
-        LEFT JOIN g gb ON gb.doc_id = c.id_b AND gb.v = ga.v
-        GROUP BY 1, 2, 3
     ), scored AS (
-        SELECT i.id_a, i.id_b, i.n_bands_shared,
-               ROUND(CAST(i.shared AS DOUBLE) / (sa.sz + sb.sz - i.shared),
-                     6) AS jaccard
-        FROM iv i JOIN sets sa ON sa.doc_id = i.id_a
-                  JOIN sets sb ON sb.doc_id = i.id_b
+        SELECT * FROM ({_minhash_oracle_sql(bands=8, rows_per_band=2, src="slice")})
     )
     SELECT CAST((CASE WHEN id_a % 2 = 0 THEN id_a ELSE id_b END) // 2
                 AS BIGINT) AS removed_id,
@@ -7835,8 +7887,7 @@ def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM scored
     WHERE (id_a % 2) != (id_b % 2) AND jaccard >= 0.5
     ORDER BY removed_id, added_id
-    """.replace("{_MH_MINS_SQL}", _MH_MINS_SQL)
-       .replace("{_MH_BANDS_SQL}", _MH_BANDS_SQL),
+    """,
 )
 def snapshot_neardup_moves(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOVED-AND-EDITED crawl diff (r11 — the r10 verdict's missing
@@ -9247,11 +9298,12 @@ def embedding_lsh_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF and PQ): hyperplanes are md5-derived Rademacher vectors (plane
     p, dim d → ±1 from the parity of md5(f"{p}:{d}")'s first hex
     digit), buckets are the 6-bit sign patterns of rounded dots, and
-    within-bucket pairs score by exact rounded cosine ≥ 0.2. The
-    engine-seeded `embedding_neardup_lsh`/`knn_lsh_approx` stay the
-    fresh-random-planes production recipes; this variant is the
-    replayable calibration/debug form (e.g. for auditing bucket skew
-    or collision rates against an independent engine)."""
+    within-bucket pairs score by exact rounded cosine ≥ 0.2.
+    `embedding_neardup_lsh` and `knn_lsh_approx` project onto the same
+    md5 planes (`similarity._md5_planes`); this one buckets by all 6
+    signs at once, the replayable calibration/debug form (e.g. for
+    auditing bucket skew or collision rates against an independent
+    engine)."""
     from .operators.similarity import (
         lsh_buckets_deterministic,
         semantic_dedup_pairs,

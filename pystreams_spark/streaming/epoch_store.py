@@ -126,7 +126,7 @@ def check_params(
     spark: SparkSession, state_dir: str, params: dict, who: str, why: str
 ) -> None:
     """Bind ``state_dir`` to ``params`` on first use and REFUSE different
-    ones later: a changed seed, banding or gram width against an
+    ones later: a changed hash grid, banding or gram width against an
     existing store would make new state silently never match the stored
     state. ``why`` names that failure in the refusal.
 

@@ -10,8 +10,9 @@ Per micro-batch (driven by ``foreachBatch``; the store plumbing is
    to the store (FileSystem calls, no Spark job), and the committed epochs
    ``< e`` are listed BEFORE anything is written,
 2. tokenize once, state write first: one kernel pass yields each doc's
-   hashed shingle set and banded MinHash signatures (the batch path's
-   kernel), written straight to the SIGNATURE STORE as ``sigs/epoch=e``
+   md5 gram values and banded MinHash keys (the batch path's kernel,
+   ``dedup._minhash_udf``), written straight to the SIGNATURE STORE as
+   ``sigs/epoch=e``
    — ALL batch docs, dropped ones included, so duplicate CHAINS work
    across batches exactly as in batch CC (c dropped because it matches
    b, even though b itself was dropped for matching a). That write is
@@ -37,8 +38,8 @@ online rule has already — correctly, at its decision time — kept both
 a and b and only drops c. No online algorithm can drop b before c
 exists; this is the standard streaming-dedup contract.
 
-Scale posture: the store holds (id, shingle hashes, band sigs) — ~8 B
-per shingle, no text. The per-batch cross join touches the store via a
+Scale posture: the store holds (id, gram values, band keys) — ~8 B
+per gram, no text. The per-batch cross join touches the store via a
 (band, sig) equi-join; at corpus scale lay the store out bucketed by
 (band, sig) so the join prunes to colliding buckets, and compact old
 epochs periodically (``io.compact_parquet``).
@@ -84,7 +85,6 @@ class NeardupIngest:
         rows_per_band: int = 2,
         text_col: str = "text",
         id_col: str = "doc_id",
-        seed: int = 42,
     ):
         self.state_dir = state_dir.rstrip("/")
         self.threshold = threshold
@@ -93,7 +93,6 @@ class NeardupIngest:
         self.rows_per_band = rows_per_band
         self.text_col = text_col
         self.id_col = id_col
-        self.seed = seed
         self._params_checked = False
 
     # -- state ---------------------------------------------------------------
@@ -102,15 +101,17 @@ class NeardupIngest:
         return {
             "threshold": self.threshold, "n": self.n, "bands": self.bands,
             "rows_per_band": self.rows_per_band, "text_col": self.text_col,
-            "id_col": self.id_col, "seed": self.seed,
+            "id_col": self.id_col,
         }
 
     def _check_params(self, spark: SparkSession) -> None:
         """Refuse a session that writes no ``_SUCCESS`` markers (every
         batch; conf-only) and a store bound to other parameters: a
-        changed seed or banding would make new signatures silently never
-        match the stored ones. The store's binding is immutable, so it
-        is checked once per instance."""
+        changed banding or gram width would make new signatures silently
+        never match the stored ones (so would a store written before the
+        signatures became md5-derived: its ``_params`` carry a
+        ``seed``). The store's binding is immutable, so it is checked
+        once per instance."""
         assert_markers_enabled(spark, "NeardupIngest")
         if not self._params_checked:
             check_params(
@@ -139,7 +140,7 @@ class NeardupIngest:
         # below reads
         sigs = write_epoch(
             _minhash_signatures(
-                batch, self.n, self.bands, self.rows_per_band, self.seed,
+                batch, self.n, self.bands, self.rows_per_band,
                 text_col=self.text_col, id_col=id_col,
             ),
             root,

@@ -306,63 +306,61 @@ def test_seeded_global_shuffle_permutation(spark, sf_dir):
 
 
 def test_band_sigs_kernel_vectorization():
-    # pure-kernel test (no session): the per-salt 1-D reduceat rewrite
-    # must (a) produce signatures identical to the straightforward 2-D
+    # pure-kernel test (no session): the per-permutation 1-D reduceat
+    # must (a) produce band keys identical to the straightforward 2-D
     # formulation and (b) stay ~memory-bandwidth fast at sf0.1 scale
-    # (~260k shingles x 16 salts; was 6.4 s with the 2-D reduceat trap)
+    # (~260k grams x 16 permutations; a 2-D reduceat strides k words
+    # per step and was the 6.4 s trap of the earlier kernel)
     import time
 
     import numpy as np
 
     from pystreams_spark.functions.text_kernels import (
-        _MASK,
-        _U64,
-        _band_sigs_from_hashes,
-        _mix,
+        _MINHASH_P,
+        _minhash_band_keys,
+        minhash_det_constants,
     )
 
-    def reference(h, counts, salts, bands, rows_per_band):
+    def reference(v, counts, bands, rows_per_band):
+        p = _MINHASH_P
         out = np.zeros((len(counts), bands), dtype=np.int64)
         nz = counts > 0
         if not nz.any():
             return out
-        mixed = _mix(h[:, None] ^ salts[None, :])
+        ab = np.array(minhash_det_constants(bands * rows_per_band), dtype=np.int64)
+        h = (ab[None, :, 0] * (v % p)[:, None] + ab[None, :, 1]) % p
         offsets = np.concatenate(([0], np.cumsum(counts[nz])[:-1]))
-        mins = np.minimum.reduceat(mixed, offsets, axis=0)
-        out[nz] = (
-            _mix(mins.reshape(-1, bands, rows_per_band)
-                 ^ salts.reshape(1, bands, rows_per_band))
-            .sum(axis=2, dtype=_U64)
-            .astype(np.int64)
-        )
+        mins = np.minimum.reduceat(h, offsets, axis=0).reshape(-1, bands, rows_per_band)
+        out[nz] = mins[:, :, 0] if rows_per_band == 1 else mins[:, :, 0] * p + mins[:, :, 1]
         return out
 
     rng = np.random.RandomState(7)
-    for bands, rpb in [(8, 2), (4, 1), (16, 1), (2, 8)]:
+    for bands, rpb in [(8, 2), (4, 1), (16, 1)]:
         counts = rng.randint(0, 40, size=rng.randint(1, 200)).astype(np.int64)
-        h = rng.randint(0, 2**63, size=int(counts.sum()), dtype=np.int64).astype(_U64)
-        salts = rng.randint(0, 2**63 - 1, size=bands * rpb, dtype=np.int64).astype(_U64)
+        v = rng.randint(0, 2**60, size=int(counts.sum()), dtype=np.int64)
         assert np.array_equal(
-            reference(h, counts, salts, bands, rpb),
-            _band_sigs_from_hashes(h, counts, salts, bands, rpb),
+            reference(v, counts, bands, rpb),
+            _minhash_band_keys(v, counts, bands, rpb),
         )
+    # a band key packs at most two 31-bit minima into one bigint
+    with pytest.raises(ValueError, match="rows_per_band"):
+        _minhash_band_keys(v, counts, 2, 3)
     # empty-corpus edge: all-zero counts
     z = np.zeros(5, dtype=np.int64)
-    assert _band_sigs_from_hashes(np.empty(0, dtype=_U64), z, salts, 8, 2).shape == (5, 8)
+    assert _minhash_band_keys(np.empty(0, dtype=np.int64), z, 8, 2).shape == (5, 8)
 
     # microbenchmark: sf0.1-corpus shape, single core. Best-of-3 with a
     # generous bound — this box has documented multi-second stalls, so
     # one slow sample must not flake the suite.
     counts = rng.randint(30, 80, size=5000).astype(np.int64)
-    h = rng.randint(0, 2**63, size=int(counts.sum()), dtype=np.int64).astype(_U64)
-    salts = rng.randint(0, 2**63 - 1, size=16, dtype=np.int64).astype(_U64)
+    v = rng.randint(0, 2**60, size=int(counts.sum()), dtype=np.int64)
     best = min(
-        (lambda t0: (_band_sigs_from_hashes(h, counts, salts, 8, 2), time.perf_counter() - t0)[1])(
+        (lambda t0: (_minhash_band_keys(v, counts, 8, 2), time.perf_counter() - t0)[1])(
             time.perf_counter()
         )
         for _ in range(3)
     )
-    assert best <= 1.0, f"band-sig kernel too slow: best-of-3 {best:.2f}s"
+    assert best <= 1.0, f"band-key kernel too slow: best-of-3 {best:.2f}s"
 
 
 def test_map_arrow_batches_columnar_kernel(spark, sf_dir):
@@ -709,9 +707,9 @@ def test_reliable_checkpoint_paths_match_local(spark, sf_dir, tmp_path):
 
 
 def test_simhash_similar_docs_close_hamming(spark):
-    from pystreams_spark.functions.text_kernels import simhash_from_text_udf
+    from pystreams_spark.functions.text_kernels import simhash_md5_udf
 
-    simhash = simhash_from_text_udf(2)
+    simhash = simhash_md5_udf(2)
     base = "the quick brown fox jumps over the lazy dog again and again today"
     near = base.replace("today", "tomorrow")
     far = "completely different words about database query optimization engines"
@@ -727,6 +725,69 @@ def test_simhash_similar_docs_close_hamming(spark):
     # determinism
     sigs2 = {r.doc_id: r.sig for r in df.select("doc_id", simhash("text").alias("sig")).collect()}
     assert sigs == sigs2
+
+
+# Values of the Column-algebra SimHash (60 md5 bits voted in Spark SQL
+# aggregates) and MinHash (16 universal-hash min-aggregates over md5
+# gram values) that the md5 kernels replaced, captured from that form
+# on edge texts: NULL, empty, one word, two words (shorter than n),
+# repeated grams (tied votes) and tab/newline whitespace.
+_EDGE_TEXTS = [None, "", "one", "two words", "a b a b a b", "tab\tand\nnewline  x\ty z"]
+_EDGE_SIMHASH = {
+    2: [955282973525019424, 955282973525019424, 1123584140357255089, 392916539397423897, 2273792414336002, 904128943844042153],
+    3: [955282973525019424, 955282973525019424, 1123584140357255089, 392916539397423897, 905277283068658192, 722831728128822600],
+}
+_EDGE_MINHASH_MINS_N3 = [
+    [1036531261, 1181634479, 1485125605, 948158908, 830633599, 1014450420, 918545003, 515927497, 1162968544, 1542798202, 1698467877, 2109545966, 1839973032, 405816098, 1200409554, 200475196],
+    [1036531261, 1181634479, 1485125605, 948158908, 830633599, 1014450420, 918545003, 515927497, 1162968544, 1542798202, 1698467877, 2109545966, 1839973032, 405816098, 1200409554, 200475196],
+    [433733788, 1083235930, 222598517, 1436619664, 1510797766, 1261227062, 685084414, 1860691692, 1037409499, 574472156, 1750431550, 1585438300, 1232506581, 65194495, 619476246, 1116070707],
+    [828943561, 923689798, 1419095060, 43468247, 693940003, 1979840109, 1669617071, 2074942551, 403116842, 754741662, 1082419323, 395688243, 1502955051, 552880707, 52449973, 1300098290],
+    [294839062, 1873887356, 651692344, 414913942, 639312719, 305111975, 536317539, 420946992, 1322883531, 1001685472, 1890436719, 104924603, 317509345, 845045261, 1454470531, 289597997],
+    [204215777, 76741743, 889694596, 326579826, 919416055, 60408562, 713345156, 24136254, 570483717, 90558260, 153135287, 40764755, 13176037, 367300069, 251136640, 622104580],
+]
+
+
+def test_md5_kernels_reproduce_column_form_on_edge_texts(spark):
+    """The SimHash and MinHash kernels reproduce the retired Column
+    form's signatures and minima value for value, and DuckDB replays
+    them through the oracles' own CTEs wherever it defines them: a NULL
+    or empty text has no gram row in SQL (DuckDB's array_to_string of
+    an empty token list is NULL), while both Spark forms hash it as ''."""
+    import duckdb
+
+    from pystreams_spark.functions.text_kernels import _MINHASH_P, simhash_md5_udf
+    from pystreams_spark.operators.dedup import _minhash_udf
+    from pystreams_spark.queries import _minhash_sig_ctes, _simhash_sig_ctes
+
+    df = spark.createDataFrame(list(enumerate(_EDGE_TEXTS)), "doc_id long, text string")
+
+    def column(expr):
+        return [r.v for r in df.orderBy("doc_id").select(expr.alias("v")).collect()]
+
+    for n, want in _EDGE_SIMHASH.items():
+        assert column(simhash_md5_udf(n)(F.col("text"))) == want, n
+    assert column(_minhash_udf(3, 16, 1)(F.col("text"))["_bands"]) == _EDGE_MINHASH_MINS_N3
+    p = _MINHASH_P
+    assert column(_minhash_udf(3, 8, 2)(F.col("text"))["_bands"]) == [
+        [m[2 * t] * p + m[2 * t + 1] for t in range(8)] for m in _EDGE_MINHASH_MINS_N3
+    ]
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame({"doc_id": range(6), "text": _EDGE_TEXTS}))
+    defined = range(2, 6)
+    for n, want in _EDGE_SIMHASH.items():
+        got = dict(con.execute(
+            f"WITH {_simhash_sig_ctes(n, 60)} SELECT doc_id, sig FROM sig"
+        ).fetchall())
+        assert sorted(got) == list(defined)
+        assert [got[i] for i in defined] == [want[i] for i in defined], n
+    cols = ", ".join(f"h{j}" for j in range(16))
+    rows = {
+        r[0]: list(r[1:])
+        for r in con.execute(f"WITH {_minhash_sig_ctes(16)} SELECT doc_id, {cols} FROM sig").fetchall()
+    }
+    assert sorted(rows) == list(defined)
+    assert [rows[i] for i in defined] == [_EDGE_MINHASH_MINS_N3[i] for i in defined]
 
 
 def test_asof_forward_and_tolerance_vs_pandas(spark):
@@ -2895,10 +2956,8 @@ def test_minhash_deterministic_candidates_invariants(spark):
     operator-level semantics.)"""
     import pytest as _pytest
 
-    from pystreams_spark.operators.dedup import (
-        minhash_det_constants,
-        minhash_deterministic_candidates,
-    )
+    from pystreams_spark.functions.text_kernels import minhash_det_constants
+    from pystreams_spark.operators.dedup import minhash_deterministic_candidates
 
     t = "alpha beta gamma delta epsilon zeta eta theta"
     rows = [(1, t), (2, t), (3, "totally different words entirely here now")]

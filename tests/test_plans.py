@@ -2,6 +2,7 @@
 pruning, broadcast, partial aggregation, and top-k short-circuits —
 the properties that decide whether a query survives 100 TB."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from pystreams_spark.io import load_table
@@ -94,7 +95,17 @@ def test_global_topk_never_full_sorts(spark, sf_dir):
     assert has_take_ordered(df)
 
 
-def test_no_rowwise_python_udfs_anywhere(spark, sf_dir):
+@pytest.fixture(scope="module")
+def all_plans(spark, sf_dir):
+    """{query name: executed plan string} for every registered query,
+    built once and shared by the three all-query sweeps below (each
+    build runs the query's construction-time jobs)."""
+    from pystreams_spark.plans import executed_plan
+
+    return {name: executed_plan(fn(spark, sf_dir)) for name, fn in QUERIES.items()}
+
+
+def test_no_rowwise_python_udfs_anywhere(all_plans):
     """Sweep every registered query plan for two Python-boundary
     invariants:
 
@@ -111,8 +122,6 @@ def test_no_rowwise_python_udfs_anywhere(spark, sf_dir):
        output got re-derived instead of reused — checkpoint it.
     """
     import re
-
-    from pystreams_spark.plans import executed_plan
 
     python_nodes = re.compile(
         r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas"
@@ -165,8 +174,7 @@ def test_no_rowwise_python_udfs_anywhere(spark, sf_dir):
         "video_frame_index": 3,
     }
 
-    for name, fn in QUERIES.items():
-        plan = executed_plan(fn(spark, sf_dir))
+    for name, plan in all_plans.items():
         # BatchEvalPythonUDTF is the (separate) UDTF node; scalar
         # row-wise UDFs plan as plain BatchEvalPython
         assert not re.search(r"BatchEvalPython(?!UDTF)", plan), (
@@ -180,7 +188,7 @@ def test_no_rowwise_python_udfs_anywhere(spark, sf_dir):
         )
 
 
-def test_no_repeated_expensive_exprs_anywhere(spark, sf_dir):
+def test_no_repeated_expensive_exprs_anywhere(all_plans):
     """Suite-wide W_REPEATED_EXPR sweep (VERDICT r6 #4): no registered
     query's plan may evaluate the same expensive sub-expression (regex
     split/extract/replace, JSON parse, levenshtein) more than twice —
@@ -197,7 +205,6 @@ def test_no_repeated_expensive_exprs_anywhere(spark, sf_dir):
     per-query rows, not the per-element trap. The pinned value is the
     DESIGNED occurrence count: any growth past it fails the sweep, so
     the next inlined-HOF regression can't ship anywhere."""
-    from pystreams_spark.plans import executed_plan
     from pystreams_spark.plans.lint import repeated_expensive_exprs
 
     allowed = {
@@ -211,8 +218,8 @@ def test_no_repeated_expensive_exprs_anywhere(spark, sf_dir):
         "length_bucketing_report": 3,  # bucket + waste branches
         "incremental_token_stats": 3,  # per-batch folds + recompute oracle share one tokenizer expr
     }
-    for name, fn in QUERIES.items():
-        rep = repeated_expensive_exprs(executed_plan(fn(spark, sf_dir)))
+    for name, plan in all_plans.items():
+        rep = repeated_expensive_exprs(plan)
         cap = allowed.get(name, 2)
         worst = max(rep.values(), default=0)
         assert worst <= cap, (
@@ -222,22 +229,19 @@ def test_no_repeated_expensive_exprs_anywhere(spark, sf_dir):
         )
 
 
-def test_cartesian_products_only_where_designed(spark, sf_dir):
+def test_cartesian_products_only_where_designed(all_plans):
     """Cross joins are legitimate only where the operator is explicitly
     all-pairs (kNN/cross query) — anywhere else a cartesian in the plan
     is a missing join condition."""
-    from pystreams_spark.plans import executed_plan
-
     allowed = {
         "region_nation_cross",
         "knn_exact_cosine",
         "knn_lsh_approx",
         "knn_ivf_approx",
     }
-    for name, fn in QUERIES.items():
+    for name, plan in all_plans.items():
         if name in allowed:
             continue
-        plan = executed_plan(fn(spark, sf_dir))
         assert "CartesianProduct" not in plan, f"{name} has an undeclared cartesian"
 
 

@@ -738,7 +738,7 @@ def test_neardup_ingest_under_structured_streaming(spark, tmp_path):
 
 def test_neardup_ingest_rejects_changed_params(spark, tmp_path):
     """The signature store is bound to its parameters: a restart with a
-    different seed/banding would silently never match stored signatures,
+    different banding would silently never match stored signatures,
     so it must refuse (review finding)."""
     from pystreams_spark.streaming.neardup_ingest import NeardupIngest
 
@@ -752,7 +752,7 @@ def test_neardup_ingest_rejects_changed_params(spark, tmp_path):
 
     NeardupIngest(state, threshold=0.6).process_batch(bdf(batches[0]), 0)
     with pytest.raises(ValueError, match="never match"):
-        NeardupIngest(state, threshold=0.6, seed=7).process_batch(bdf(batches[1]), 1)
+        NeardupIngest(state, threshold=0.6, bands=4).process_batch(bdf(batches[1]), 1)
     # same params resume fine
     resumed = NeardupIngest(state, threshold=0.6)
     resumed.process_batch(bdf(batches[1]), 1)
@@ -760,10 +760,31 @@ def test_neardup_ingest_rejects_changed_params(spark, tmp_path):
     # success (it cost a read job + driver collect EVERY micro-batch);
     # a FRESH instance against the same store must still re-check
     assert resumed._params_checked is True
-    fresh = NeardupIngest(state, threshold=0.6, seed=7)
+    fresh = NeardupIngest(state, threshold=0.6, bands=4)
     assert not getattr(fresh, "_params_checked", False)
     with pytest.raises(ValueError, match="never match"):
         fresh.process_batch(bdf(batches[2]), 2)
+
+
+def test_neardup_ingest_refuses_store_bound_with_a_seed(spark, tmp_path):
+    """A store whose ``_params`` still carry the ``"seed": 42`` of the
+    retired engine-seeded signatures holds SipHash-derived band keys the
+    md5 kernel never reproduces, so the ingest must refuse it."""
+    from pystreams_spark.streaming.epoch_store import check_params
+    from pystreams_spark.streaming.neardup_ingest import NeardupIngest
+
+    docs, batches = _ingest_corpus()
+    state = str(tmp_path / "state")
+    ingest = NeardupIngest(state, threshold=0.6)
+    check_params(
+        spark, state, {**ingest._params(), "seed": 42}, "NeardupIngest",
+        "signatures would silently never match",
+    )
+    bdf = spark.createDataFrame(
+        [(i, docs[i]) for i in batches[0]], "doc_id long, text string"
+    )
+    with pytest.raises(ValueError, match="never match"):
+        ingest.process_batch(bdf, 0)
 
 
 # ---------------------------------------------------------------------------
@@ -1410,7 +1431,7 @@ def test_epoch_store_refuses_markerless_session(spark, tmp_path):
 # ingest kind → (class, store subdirectory, parameter change that must
 # be refused, the refusal's own reason)
 _INGESTS = {
-    "neardup": ("NeardupIngest", "sigs", {"seed": 7}, "never match"),
+    "neardup": ("NeardupIngest", "sigs", {"bands": 4}, "never match"),
     "novelty": ("NoveltyIngest", "grams", {"n": 2}, "gram classes"),
     "imagedup": (
         "ImagedupIngest", "sigs", {"bands": 5, "band_bits": 12},
