@@ -1,7 +1,9 @@
 .PHONY: test parity-gate parity-sweep parity-aqe-off bench
 
+# The ROADMAP Tier-1 command: every test, cores from nproc.
 test:
-	python -m pytest tests/ -x -q
+	SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local \
+	  timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
 
 # The driver's correctness gate compares Spark vs DuckDB at sf0.01.
 # Run this before every round snapshot — sf0.001-only green can hide
@@ -11,7 +13,7 @@ parity-gate:
 
 # Partitioning-independence sweep: the whole parity suite under a
 # different shuffle-partition count — any query whose result depends on
-# partitioning fails the oracle compare. r4: green at 5 and 8; r5 final: green at 5, 8, and 97 (191 tests, 189 oracle-backed queries).
+# partitioning fails the oracle compare.
 parity-sweep:
 	PYSTREAMS_TEST_SHUFFLE=5 PYSTREAMS_TEST_SF_DIR=/root/testdata/sf0.01 python -m pytest tests/test_oracle_parity.py -q
 

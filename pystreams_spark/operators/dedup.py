@@ -109,7 +109,8 @@ def ngram_jaccard_pairs(
     id_col: str = "doc_id",
     round_to: int = 6,
 ) -> DataFrame:
-    """Exact word-n-gram Jaccard over all pairs (id_a < id_b).
+    """Exact word-n-gram Jaccard over all pairs (id_a < id_b), under the
+    family's one cut rule (``_pair_score``).
 
     Brute force (O(n²) pairs) — the correctness baseline that MinHash
     approximates. Sizes computed on distinct shingle sets; the division
@@ -117,13 +118,14 @@ def ngram_jaccard_pairs(
     sh = df.select(F.col(id_col), shingles(text_col, n).alias("_sh"))
     a = sh.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa"))
     b = sh.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb"))
-    inter = F.size(F.array_intersect("_sa", "_sb")).cast("double")
-    union = F.size(F.array_union("_sa", "_sb")).cast("double")
-    return (
-        a.join(b, F.col("id_a") < F.col("id_b"))
-        .withColumn("jaccard", F.round(inter / union, round_to))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    return _pair_score(
+        a.join(b, F.col("id_a") < F.col("id_b")),
+        "jaccard",
+        F.size(F.array_intersect("_sa", "_sb")).cast("double"),
+        F.size("_sa").cast("double"),
+        F.size("_sb").cast("double"),
+        threshold,
+        round_to,
     )
 
 
@@ -148,15 +150,29 @@ def _shingle_table(
     )
 
 
-def _pair_score(metric: str, inter, sza, szb):
-    """(column, name) for a set-overlap metric from intersection size
-    and the two set sizes — the single point where the Jaccard and
-    containment variants actually differ."""
+def _pair_score(
+    j: DataFrame, metric: str, inter, sza, szb, threshold: float | None, round_to: int
+) -> DataFrame:
+    """(id_a, id_b, ``metric``) for the candidate rows of ``j``, scored
+    from the intersection size and the two set sizes (double columns).
+    The one place the Jaccard and containment variants differ, and the
+    one cut rule of every exact set-overlap verify: keep pairs whose
+    UNROUNDED score is ≥ ``threshold`` (every row for ``None``) and
+    report the score rounded to ``round_to`` places.
+
+    The unrounded cut is the one prefix filtering can honour: its
+    prefix length bounds the overlap of pairs whose true ratio reaches
+    τ, so a pair just below τ whose rounded ratio reaches it would be
+    kept by brute force and missed by the prefix plan."""
     if metric == "jaccard":
-        return inter / (sza + szb - inter), "jaccard"
-    if metric == "containment":
-        return inter / F.least(sza, szb), "containment"
-    raise ValueError(f"unknown set-overlap metric {metric!r}")
+        score = inter / (sza + szb - inter)
+    elif metric == "containment":
+        score = inter / F.least(sza, szb)
+    else:
+        raise ValueError(f"unknown set-overlap metric {metric!r}")
+    if threshold is not None:
+        j = j.filter(score >= threshold)
+    return j.select("id_a", "id_b", F.round(score, round_to).alias(metric))
 
 
 def _verify_pairs_fullset(
@@ -183,18 +199,14 @@ def _verify_pairs_fullset(
         F.col("_sh").alias("_sb"),
         F.col("_sz").alias("_szb"),
     )
-    j = broadcast_if_small(cand).join(sa, "id_a").join(sb, "id_b")
-    inter = F.size(F.array_intersect("_sa", "_sb")).cast("double")
-    score, out_col = _pair_score(
-        metric, inter, F.col("_sza").cast("double"), F.col("_szb").cast("double")
-    )
-    return (
-        j.withColumn(out_col, F.round(score, round_to))
-        # threshold the ROUNDED value, like ngram_jaccard_pairs — raw
-        # would disagree with the brute-force baseline (and the DuckDB
-        # oracle) exactly at rounding-boundary pairs
-        .filter(F.col(out_col) >= threshold)
-        .select("id_a", "id_b", out_col)
+    return _pair_score(
+        broadcast_if_small(cand).join(sa, "id_a").join(sb, "id_b"),
+        metric,
+        F.size(F.array_intersect("_sa", "_sb")).cast("double"),
+        F.col("_sza").cast("double"),
+        F.col("_szb").cast("double"),
+        threshold,
+        round_to,
     )
 
 
@@ -252,17 +264,14 @@ def _shared_shingle_counts(
 def _score_shared_counts(
     shared: DataFrame, threshold: float, round_to: int, metric: str
 ) -> DataFrame:
-    score, out_col = _pair_score(
+    return _pair_score(
+        shared,
         metric,
         F.col("_c").cast("double"),
         F.col("_sza").cast("double"),
         F.col("_szb").cast("double"),
-    )
-    return (
-        shared.withColumn(out_col, F.round(score, round_to))
-        # threshold the ROUNDED value — see _verify_pairs_fullset
-        .filter(F.col(out_col) >= threshold)
-        .select("id_a", "id_b", out_col)
+        threshold,
+        round_to,
     )
 
 
@@ -310,6 +319,8 @@ def ngram_jaccard_pairs_inverted(
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs via an inverted index — same output as
     ``ngram_jaccard_pairs`` (for threshold > 0), radically cheaper.
+    Every path keeps pairs whose UNROUNDED Jaccard is ≥ ``threshold``
+    and reports it rounded to ``round_to`` places (``_pair_score``).
 
     Plan: shingle+hash in one Arrow kernel (distinct strings → distinct
     64-bit keys) → explode postings → self-equi-join on (blocks…, shingle) → count
@@ -364,7 +375,9 @@ def ngram_jaccard_pairs_prefix(
     al. 2006 / Bayardo et al. 2007 "AllPairs" — public set-similarity-
     join literature): same output as ``ngram_jaccard_pairs`` for any
     threshold τ > 0, with the hot-shingle df² blowup structurally
-    removed rather than capped.
+    removed rather than capped. Both keep pairs whose UNROUNDED Jaccard
+    is ≥ τ and report it rounded to ``round_to`` places
+    (``_pair_score``) — the only cut a prefix bound can honour.
 
     Why it stays exact: under a GLOBAL total order on shingles, two
     sets with |A∩B| ≥ α must share an element among each set's first
@@ -373,7 +386,10 @@ def ngram_jaccard_pairs_prefix(
     |X| − ⌈τ·|X|⌉ + 1 shingles finds every qualifying pair — for ANY
     total order. Candidates are then scored on their full sets
     (``_verify_pairs_fullset``), so a false candidate costs one array
-    intersect, never a wrong answer.
+    intersect, never a wrong answer. The product τ·|X| is taken with a
+    10⁻¹² relative slack: in doubles 0.55·100 is 55.00000000000001,
+    whose ceiling would shorten the prefix by one and miss a pair at
+    J = τ exactly; the slack can only lengthen a prefix.
 
     The order is the canonical AllPairs/PPJoin ascending-df order:
     every shingle ranked by its exact (block-scoped) document
@@ -420,7 +436,7 @@ def ngram_jaccard_pairs_prefix(
         )
     )
     sz = F.size("_ordst")
-    plen = (sz - F.ceil(F.lit(float(threshold)) * sz) + 1).cast("int")
+    plen = (sz - F.ceil(F.lit(float(threshold) * (1 - 1e-12)) * sz) + 1).cast("int")
     pre = ordered_tbl.select(
         id_col,
         *blocks,
@@ -552,6 +568,9 @@ def ngram_containment_pairs(
     does. ``max_df`` applies the same hot-shingle guard (candidates
     whose every shared shingle is boilerplate can be missed; surviving
     pairs are re-scored on FULL sets so reported scores stay exact).
+    Pairs are kept when the UNROUNDED containment is ≥ ``threshold`` and
+    reported rounded to ``round_to`` places, the rule of every exact
+    set-overlap verify (``_pair_score``).
 
     Prefix filtering is deliberately NOT offered here: its pruning
     bound derives each doc's prefix length from its OWN set size, which
@@ -1073,20 +1092,19 @@ def _verify_pairs_jaccard(
     the joined sides shuffle 8 bytes per gram instead of the n-gram
     text. The candidate list is broadcast (adaptive — see
     broadcast_if_small) into the first join so non-candidate rows never
-    shuffle their arrays. Keeps pairs whose UNROUNDED Jaccard is ≥
-    ``threshold`` (every candidate for ``None``) and reports it rounded
-    to ``round_to`` places as ``jaccard``."""
+    shuffle their arrays. Cuts and rounds by ``_pair_score``'s rule
+    (every candidate for ``threshold=None``), reporting ``jaccard``."""
     a = sh_a.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa"))
     b = sh_b.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb"))
-    inter = F.size(F.array_intersect("_sa", "_sb")).cast("double")
-    union = (
-        F.size("_sa").cast("double") + F.size("_sb").cast("double") - inter
+    return _pair_score(
+        a.join(broadcast_if_small(cands), "id_a").join(b, "id_b"),
+        "jaccard",
+        F.size(F.array_intersect("_sa", "_sb")).cast("double"),
+        F.size("_sa").cast("double"),
+        F.size("_sb").cast("double"),
+        threshold,
+        round_to,
     )
-    jac = inter / union
-    j = a.join(broadcast_if_small(cands), "id_a").join(b, "id_b")
-    if threshold is not None:
-        j = j.filter(jac >= threshold)
-    return j.select("id_a", "id_b", F.round(jac, round_to).alias("jaccard"))
 
 
 def _minhash_signatures(

@@ -79,6 +79,20 @@ _QUALITY_SQL = """ROUND(
 )
 
 
+def _grams_sql(n: int, text: str = "text") -> str:
+    """DuckDB list of the DISTINCT space-joined word ``n``-grams of the
+    ``text`` column: the gram classes of `functions.text.shingles` and
+    of the text kernels' `_doc_shingles`. A text shorter than ``n``
+    words is one gram, and a NULL or empty text is the one gram ''
+    (DuckDB's array_to_string of an empty list is NULL). The scalar
+    subquery splits the text once; a lambda naming the split
+    expression re-splits it for every gram (10× slower at sf0.1)."""
+    return f"""(SELECT list_distinct(list_transform(
+            generate_series(1, GREATEST(len(w) - {n - 1}, 1)),
+            i -> COALESCE(array_to_string(list_slice(w, i, i + {n - 1}), ' '), '')))
+        FROM (SELECT list_filter(string_split_regex({text}, '\\s+'), x -> x != '') AS w))"""
+
+
 # The two LSH text families' oracles (the md5 recipes of
 # `functions/text_kernels`): `g(doc_id, v)` holds each doc's distinct
 # first-60-bit md5 gram values, and the MinHash constants are
@@ -86,11 +100,8 @@ _QUALITY_SQL = """ROUND(
 # kernels and the SQL text.
 def _md5_grams_cte(n: int, src: str = "documents") -> str:
     return f"""g AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-            generate_series(1, GREATEST(len({_TOKS_SQL}) - {n - 1}, 1)),
-            i -> ('0x' || substr(md5(array_to_string(
-                     list_slice({_TOKS_SQL}, i, i + {n - 1}), ' ')), 1, 15))::BIGINT
-        ))) AS v
+        SELECT doc_id, unnest(list_transform({_grams_sql(n)},
+            x -> ('0x' || substr(md5(x), 1, 15))::BIGINT)) AS v
         FROM {src}
     )"""
 
@@ -214,6 +225,100 @@ def _simhash_oracle_sql(n: int, bands: int, band_bits: int, max_hamming: int) ->
     ORDER BY id_a, id_b
     """
 
+
+# The near-dup graph, stated once per engine: the all-pairs Jaccard and
+# closure CTEs the oracles compose, and the pinned pairs → labels →
+# component map the component queries build on the engine side.
+def _jaccard_pairs_ctes(threshold: float, block: str | None = None) -> str:
+    """`s(doc_id[, block], sh)`, each document's distinct word 3-grams,
+    then `pairs(id_a, id_b, jaccard)`: every pair id_a < id_b (within
+    one ``block``) whose UNROUNDED Jaccard is ≥ ``threshold`` > 0,
+    reported rounded to 6 places — the cut of `dedup._pair_score`.
+    Pairs sharing no gram (J = 0) are skipped by a cheap
+    `list_has_any` before the intersection sizes are computed."""
+    if not threshold > 0.0:
+        raise ValueError("_jaccard_pairs_ctes requires threshold > 0")
+    key = f", {block}" if block else ""
+    same = f"a.{block} = b.{block} AND " if block else ""
+    return f"""s AS (
+        SELECT doc_id{key}, {_grams_sql(3)} AS sh FROM documents
+    ), pairs AS MATERIALIZED (
+        SELECT id_a, id_b, ROUND(j, 6) AS jaccard FROM (
+            SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+                   CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+                     / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS j
+            FROM s a JOIN s b ON {same}a.doc_id < b.doc_id
+            WHERE list_has_any(a.sh, b.sh)
+        ) WHERE j >= CAST({float(threshold)!r} AS DOUBLE)
+    )"""
+
+
+def _components_ctes(pairs: str) -> str:
+    """`edges(a, b)`, both directions of the (id_a, id_b) CTE ``pairs``;
+    `comp(doc_id, component_id)`, every node of that graph with the min
+    doc_id of its connected component (the survivor `dedup.cc_keep_min`
+    keeps), by recursive closure; `sizes(component_id,
+    component_size)`. The statement must open with `WITH RECURSIVE`.
+    `edges` is materialized: the recursive step reads it every round,
+    and an inlined CTE would re-run its whole pair query each time."""
+    return f"""edges AS MATERIALIZED (
+        SELECT id_a AS a, id_b AS b FROM {pairs}
+        UNION
+        SELECT id_b AS a, id_a AS b FROM {pairs}
+    ), reach(a, b) AS (
+        SELECT a, b FROM edges
+        UNION
+        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a WHERE e.b != r.a
+    ), comp AS (
+        SELECT a AS doc_id, LEAST(a, MIN(b)) AS component_id FROM reach GROUP BY a
+    ), sizes AS (
+        SELECT component_id, CAST(COUNT(*) AS BIGINT) AS component_size
+        FROM comp GROUP BY component_id
+    )"""
+
+
+def _component_map(pairs: DataFrame, ids: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Connected components of a pinned (id_a, id_b) pair frame over the
+    doc_id frame ``ids``: the `cc_keep_min` labels (doc_id, cluster_id),
+    pinned lazily — the edge count inside `cc_keep_min` runs at
+    construction, the label pass with the first action, and every
+    consumer reads the pin — and the component map (doc_id,
+    component_id, component_size) of the components of size > 1 (the
+    oracles' `_components_ctes`)."""
+    from .io import materialize
+    from .operators.dedup import cc_keep_min
+
+    labels = materialize(cc_keep_min(pairs, ids), eager=False)
+    sizes = labels.groupBy("cluster_id").agg(
+        F.count(F.lit(1)).alias("component_size")
+    )
+    members = labels.join(
+        # no wrapper: sizes is an aggregate of the pinned labels frame —
+        # AQE's runtime stats make the broadcast decision from the
+        # exchange, with no checkpoint+count barrier
+        sizes.filter(F.col("component_size") > 1),
+        "cluster_id",
+    ).select(
+        "doc_id",
+        F.col("cluster_id").alias("component_id"),
+        F.col("component_size").cast("long").alias("component_size"),
+    )
+    return labels, members
+
+
+def _jaccard_components(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """(pairs, labels, component map) of the Jaccard-0.35 near-dup graph
+    of ``docs``: exact prefix-filtered pairs, pinned lazily so neither
+    the closure nor a second consumer can re-run the prefix join, then
+    `_component_map` — the oracles' `_jaccard_pairs_ctes(0.35)` +
+    `_components_ctes("pairs")`."""
+    from .io import materialize
+    from .operators.dedup import ngram_jaccard_pairs_prefix
+
+    pairs = materialize(
+        ngram_jaccard_pairs_prefix(docs, threshold=0.35, n=3), eager=False
+    )
+    return (pairs, *_component_map(pairs, docs.select("doc_id")))
 
 
 # Engine-exact average of a column whose values are exact multiples of
@@ -1437,22 +1542,9 @@ def word_freq_top20(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "ngram_jaccard_neardup",
-    oracle="""
-    WITH s AS (
-        SELECT doc_id, lang,
-               list_distinct(list_transform(
-                 generate_series(1, GREATEST(len(list_filter(string_split_regex(text, '\\s+'), x -> x != '')) - 2, 1)),
-                 i -> array_to_string(list_slice(list_filter(string_split_regex(text, '\\s+'), x -> x != ''), i, i + 2), ' ')
-               )) AS sh
-        FROM documents
-    )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                 / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS jaccard
-    FROM s a JOIN s b ON a.lang = b.lang AND a.doc_id < b.doc_id
-    WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-          / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.0999995
-    ORDER BY id_a, id_b
+    oracle=f"""
+    WITH {_jaccard_pairs_ctes(0.1, block="lang")}
+    SELECT id_a, id_b, jaccard FROM pairs ORDER BY id_a, id_b
     """,
 )
 def ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1467,7 +1559,7 @@ def ngram_jaccard_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = _t(spark, sf_dir, "documents")
     return ngram_jaccard_pairs_prefix(
-        d, threshold=0.0999995, n=3, block_cols=("lang",)
+        d, threshold=0.1, n=3, block_cols=("lang",)
     ).orderBy("id_a", "id_b")
 
 
@@ -3273,31 +3365,20 @@ def datetime_funcs_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "minhash_banded_neardup",
-    oracle="""
-    WITH s AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                 generate_series(1, GREATEST(len(list_filter(string_split_regex(text, '\\s+'), x -> x != '')) - 2, 1)),
-                 i -> array_to_string(list_slice(list_filter(string_split_regex(text, '\\s+'), x -> x != ''), i, i + 2), ' ')
-               )) AS sh
-        FROM documents
-    )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                 / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS exact_jaccard
-    FROM s a JOIN s b ON a.doc_id < b.doc_id
-    WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-          / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.35
-    ORDER BY id_a, id_b
+    oracle=f"""
+    WITH {_jaccard_pairs_ctes(0.35)}
+    SELECT id_a, id_b, jaccard AS exact_jaccard FROM pairs ORDER BY id_a, id_b
     """,
 )
 def minhash_banded_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Banded MinHash LSH (8 width-2 bands): sharply-thresholded
     candidate generation — P(candidate)=1-(1-j^r)^b — unlike width-1
     bands, which admit ~all pairs. Since r4 the query emits the
-    VERIFIED pairs (candidates filtered to exact 3-gram Jaccard >= 0.35,
-    unrounded, as the oracle does) and is checked against the naive
-    all-pairs exact-Jaccard oracle.
+    VERIFIED pairs and is checked against the naive all-pairs
+    exact-Jaccard oracle (`_jaccard_pairs_ctes`). Both sides apply the
+    one cut of every exact set-overlap verify (`dedup._pair_score`):
+    keep a pair whose UNROUNDED 3-gram Jaccard is ≥ 0.35, report it
+    rounded to 6 places.
 
     Honest scope of that equality (r3 verdict item #7): the verify stage
     is exact by construction, so agreement == the banding missed no
@@ -3505,29 +3586,10 @@ def image_neardup_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "image_neardup_components",
     oracle=f"""
-    WITH RECURSIVE {_IMG_PAIR_CTES}, edges AS (
-        SELECT id_a AS a, id_b AS b FROM ipairs
-        UNION
-        SELECT id_b AS a, id_a AS b FROM ipairs
-    ), reach(a, b) AS (
-        SELECT a, b FROM edges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-        WHERE e.b != r.a
-    ), closure AS (
-        SELECT a, b FROM reach
-        UNION
-        SELECT DISTINCT a, a FROM edges
-    ), comp AS (
-        SELECT a AS doc_id, MIN(b) AS component_id FROM closure GROUP BY a
-    ), sizes AS (
-        SELECT component_id, CAST(COUNT(*) AS BIGINT) AS component_size
-        FROM comp GROUP BY component_id
-    )
+    WITH RECURSIVE {_IMG_PAIR_CTES}, {_components_ctes("ipairs")}
     SELECT c.doc_id, c.component_id, z.component_size,
            c.doc_id = c.component_id AS keep
     FROM comp c JOIN sizes z USING (component_id)
-    WHERE z.component_size > 1
     ORDER BY doc_id
     """,
 )
@@ -3547,8 +3609,7 @@ def image_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     under one value hash. Scale shape: pair frame is dup-graph-sized
     (pinned before CC per the r8 variance fix); CC rounds touch the
     dup graph only, never the corpus."""
-    from .io import broadcast_if_small, materialize
-    from .operators.dedup import cc_keep_min
+    from .io import materialize
     from .operators.imagehash import image_dhash, image_dhash_candidates
 
     d = _t(spark, sf_dir, "documents")
@@ -3557,26 +3618,10 @@ def image_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = materialize(
         image_dhash_candidates(sig, max_hamming=8).select("id_a", "id_b")
     )
-    labels = materialize(cc_keep_min(pairs, d.select("doc_id")))
-    sizes = labels.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("component_size")
-    )
-    return (
-        labels.join(
-            # no wrapper: sizes is an aggregate of the pinned labels
-            # frame — AQE's runtime stats make the broadcast decision
-            # from the exchange, with no checkpoint+count barrier
-            sizes.filter(F.col("component_size") > 1),
-            "cluster_id",
-        )
-        .select(
-            "doc_id",
-            F.col("cluster_id").alias("component_id"),
-            F.col("component_size").cast("long").alias("component_size"),
-            (F.col("doc_id") == F.col("cluster_id")).alias("keep"),
-        )
-        .orderBy("doc_id")
-    )
+    _, members = _component_map(pairs, d.select("doc_id"))
+    return members.withColumn(
+        "keep", F.col("doc_id") == F.col("component_id")
+    ).orderBy("doc_id")
 
 
 def _synth_audio(d: DataFrame) -> DataFrame:
@@ -3880,29 +3925,10 @@ def video_neardup_candidates_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH RECURSIVE {_VID_PAIR_CTES}, vp AS (
         SELECT id_a, id_b FROM vtot WHERE total_hamming <= 10
-    ), vedges AS (
-        SELECT id_a AS a, id_b AS b FROM vp
-        UNION
-        SELECT id_b AS a, id_a AS b FROM vp
-    ), reach(a, b) AS (
-        SELECT a, b FROM vedges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN vedges e ON r.b = e.a
-        WHERE e.b != r.a
-    ), closure AS (
-        SELECT a, b FROM reach
-        UNION
-        SELECT DISTINCT a, a FROM vedges
-    ), comp AS (
-        SELECT a AS doc_id, MIN(b) AS component_id FROM closure GROUP BY a
-    ), sizes AS (
-        SELECT component_id, CAST(COUNT(*) AS BIGINT) AS component_size
-        FROM comp GROUP BY component_id
-    )
+    ), {_components_ctes("vp")}
     SELECT c.doc_id, c.component_id, z.component_size,
            c.doc_id = c.component_id AS keep
     FROM comp c JOIN sizes z USING (component_id)
-    WHERE z.component_size > 1
     ORDER BY doc_id
     """,
 )
@@ -3915,8 +3941,7 @@ def video_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitive closure, min-label components, sizes, and the keep
     flag. Scale shape: the pair frame is dup-graph-sized and pinned
     before CC; CC rounds never touch the corpus."""
-    from .io import broadcast_if_small, materialize
-    from .operators.dedup import cc_keep_min
+    from .io import materialize
     from .operators.videohash import (
         video_frame_hashes,
         video_neardup_candidates,
@@ -3931,26 +3956,10 @@ def video_neardup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             "id_a", "id_b"
         )
     )
-    labels = materialize(cc_keep_min(pairs, d.select("doc_id")))
-    sizes = labels.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("component_size")
-    )
-    return (
-        labels.join(
-            # no wrapper: sizes is an aggregate of the pinned labels
-            # frame — AQE's runtime stats make the broadcast decision
-            # from the exchange, with no checkpoint+count barrier
-            sizes.filter(F.col("component_size") > 1),
-            "cluster_id",
-        )
-        .select(
-            "doc_id",
-            F.col("cluster_id").alias("component_id"),
-            F.col("component_size").cast("long").alias("component_size"),
-            (F.col("doc_id") == F.col("cluster_id")).alias("keep"),
-        )
-        .orderBy("doc_id")
-    )
+    _, members = _component_map(pairs, d.select("doc_id"))
+    return members.withColumn(
+        "keep", F.col("doc_id") == F.col("component_id")
+    ).orderBy("doc_id")
 
 
 @query(
@@ -4049,26 +4058,9 @@ def video_frame_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     WITH RECURSIVE tpairs AS MATERIALIZED (
         SELECT id_a, id_b
         FROM ({_minhash_oracle_sql(bands=8, rows_per_band=2, threshold=0.5)})
-    ), {_IMG_PAIR_CTES}, edges AS (
-        SELECT id_a AS a, id_b AS b FROM ipairs
-        UNION SELECT id_b, id_a FROM ipairs
-        UNION SELECT id_a, id_b FROM tpairs
-        UNION SELECT id_b, id_a FROM tpairs
-    ), reach(a, b) AS (
-        SELECT a, b FROM edges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a
-        WHERE e.b != r.a
-    ), closure AS (
-        SELECT a, b FROM reach
-        UNION
-        SELECT DISTINCT a, a FROM edges
-    ), comp AS (
-        SELECT a AS doc_id, MIN(b) AS component_id FROM closure GROUP BY a
-    ), sizes AS (
-        SELECT component_id, CAST(COUNT(*) AS BIGINT) AS component_size
-        FROM comp GROUP BY component_id
-    ), icnt AS (
+    ), {_IMG_PAIR_CTES}, mpairs AS (
+        SELECT id_a, id_b FROM ipairs UNION ALL SELECT id_a, id_b FROM tpairs
+    ), {_components_ctes("mpairs")}, icnt AS (
         SELECT m.component_id, CAST(COUNT(*) AS BIGINT) AS n
         FROM ipairs p JOIN comp m ON m.doc_id = p.id_a GROUP BY 1
     ), tcnt AS (
@@ -4082,7 +4074,6 @@ def video_frame_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM comp c JOIN sizes z USING (component_id)
     LEFT JOIN icnt ic ON ic.component_id = c.component_id
     LEFT JOIN tcnt tc ON tc.component_id = c.component_id
-    WHERE z.component_size > 1
     ORDER BY doc_id
     """,
 )
@@ -4099,8 +4090,9 @@ def crossmodal_neardup_components(
     form together (img-dup A~B, caption-dup B~C ⇒ one component).
 
     Composition of two proven pair kernels over the SAME doc ids:
-    deterministic banded MinHash (md5 universal-hash permutations,
-    exact 60-bit-gram Jaccard verify ≥ 0.5) for captions, and the
+    banded MinHash (`minhash_neardup_pairs`, 8×2 bands: md5
+    universal-hash permutations, exact 60-bit-gram Jaccard whose
+    UNROUNDED value is ≥ 0.5, the oracle's cut) for captions, and the
     perceptual dHash banded-Hamming pairs (≤ 8) over the synthesized
     closed-form images, unioned into one edge set → adaptive connected
     components → keep-min survivor rule, with per-component edge
@@ -4117,11 +4109,8 @@ def crossmodal_neardup_components(
     At 100 TB this is exactly the LAION-style curation topology —
     modality-specific candidate generation feeding one shared
     component/survivor stage."""
-    from .io import broadcast_if_small, materialize, materialize_many
-    from .operators.dedup import (
-        cc_keep_min,
-        minhash_deterministic_candidates,
-    )
+    from .io import materialize_many
+    from .operators.dedup import minhash_neardup_pairs
     from .operators.imagehash import image_dhash, image_dhash_candidates
 
     d = _t(spark, sf_dir, "documents")
@@ -4131,11 +4120,9 @@ def crossmodal_neardup_components(
     sig = image_dhash(_synth_images(d), on_undecodable="error")
     tpairs, ipairs = materialize_many(
         [
-            minhash_deterministic_candidates(
-                d, n=3, bands=8, rows_per_band=2
-            )
-            .filter(F.col("jaccard") >= 0.5)
-            .select("id_a", "id_b"),
+            minhash_neardup_pairs(
+                d, n=3, bands=8, rows_per_band=2, threshold=0.5
+            ).select("id_a", "id_b"),
             image_dhash_candidates(sig, max_hamming=8).select(
                 "id_a", "id_b"
             ),
@@ -4144,10 +4131,8 @@ def crossmodal_neardup_components(
     # no materialize/distinct here: cc_keep_min dedups and pins its own
     # bidirectional edge union, and both pair frames are already cached
     # — the extra pass was a redundant shuffle + barrier (guide §2.4)
-    edges = tpairs.unionByName(ipairs)
-    labels = materialize(cc_keep_min(edges, d.select("doc_id")))
-    sizes = labels.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("component_size")
+    labels, members = _component_map(
+        tpairs.unionByName(ipairs), d.select("doc_id")
     )
     # r12: ONE tagged union + ONE labels join + ONE conditional agg for
     # both modality counts (was: two labels joins + two groupBys over
@@ -4156,32 +4141,34 @@ def crossmodal_neardup_components(
     mcnt = (
         tpairs.select("id_a", F.lit(1).alias("_is_text"))
         .unionByName(ipairs.select("id_a", F.lit(0).alias("_is_text")))
-        .join(labels.select(F.col("doc_id").alias("id_a"), "cluster_id"), "id_a")
-        .groupBy("cluster_id")
+        .join(
+            labels.select(
+                F.col("doc_id").alias("id_a"),
+                F.col("cluster_id").alias("component_id"),
+            ),
+            "id_a",
+        )
+        .groupBy("component_id")
         .agg(
             F.sum(1 - F.col("_is_text")).alias("n_image_edges"),
             F.sum("_is_text").alias("n_text_edges"),
         )
     )
     return (
-        labels.join(
-            # no wrappers: sizes/mcnt aggregate pinned frames —
-            # AQE's runtime stats decide the broadcast, no barriers
-            sizes.filter(F.col("component_size") > 1),
-            "cluster_id",
-        )
-        .join(mcnt, "cluster_id", "left")
+        # no wrapper: mcnt aggregates pinned frames — AQE's runtime
+        # stats decide the broadcast, no barrier
+        members.join(mcnt, "component_id", "left")
         .select(
             "doc_id",
-            F.col("cluster_id").alias("component_id"),
-            F.col("component_size").cast("long").alias("component_size"),
+            "component_id",
+            "component_size",
             F.coalesce(F.col("n_image_edges"), F.lit(0))
             .cast("long")
             .alias("n_image_edges"),
             F.coalesce(F.col("n_text_edges"), F.lit(0))
             .cast("long")
             .alias("n_text_edges"),
-            (F.col("doc_id") == F.col("cluster_id")).alias("keep"),
+            (F.col("doc_id") == F.col("component_id")).alias("keep"),
         )
         .orderBy("doc_id")
     )
@@ -4283,19 +4270,9 @@ def training_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "benchmark_decontamination",
-    oracle="""
-    WITH toks AS (
-        SELECT doc_id, list_filter(string_split_regex(text, '\\s+'), x -> x != '') AS w
-        FROM documents
-    ),
-    grams AS (
-        SELECT DISTINCT doc_id,
-               array_to_string(list_slice(w, i, i + 2), ' ') AS gram
-        FROM (
-            SELECT doc_id, w,
-                   unnest(generate_series(1, GREATEST(len(w) - 2, 1))) AS i
-            FROM toks
-        )
+    oracle=f"""
+    WITH grams AS (
+        SELECT doc_id, unnest({_grams_sql(3)}) AS gram FROM documents
     ),
     g AS (SELECT * FROM grams WHERE gram != ''),
     ev AS (SELECT gram, doc_id AS eval_id FROM g WHERE doc_id % 41 = 0),
@@ -4647,30 +4624,10 @@ def array_ops_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "neardup_dedup_pipeline",
-    oracle="""
-    WITH RECURSIVE s AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                 generate_series(1, GREATEST(len(list_filter(string_split_regex(text, '\\s+'), x -> x != '')) - 2, 1)),
-                 i -> array_to_string(list_slice(list_filter(string_split_regex(text, '\\s+'), x -> x != ''), i, i + 2), ' ')
-               )) AS sh
-        FROM documents
-    ), pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM s a JOIN s b ON a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-              / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.35
-    ), edges AS (
-        SELECT id_a AS a, id_b AS b FROM pairs
-        UNION
-        SELECT id_b AS a, id_a AS b FROM pairs
-    ), reach(a, b) AS (
-        SELECT a, b FROM edges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a WHERE e.b != r.a
-    )
+    oracle=f"""
+    WITH RECURSIVE {_jaccard_pairs_ctes(0.35)}, {_components_ctes("pairs")}
     SELECT d.doc_id, d.lang FROM documents d
-    WHERE d.doc_id NOT IN (SELECT DISTINCT a FROM reach WHERE b < a)
+    WHERE d.doc_id NOT IN (SELECT doc_id FROM comp WHERE component_id < doc_id)
     ORDER BY d.doc_id
     """,
 )
@@ -6864,11 +6821,7 @@ def token_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     "novelty_budget_selection",
     oracle=f"""
     WITH g AS (
-        SELECT doc_id, unnest(list_distinct(list_transform(
-            generate_series(1, GREATEST(len({_TOKS_SQL}) - 2, 1)),
-            i -> array_to_string(list_slice({_TOKS_SQL}, i, i + 2), ' ')
-        ))) AS gram
-        FROM documents
+        SELECT doc_id, unnest({_grams_sql(3)}) AS gram FROM documents
     ), f AS (
         SELECT gram, MIN(doc_id) AS first_doc FROM g GROUP BY gram
     ), nv AS (
@@ -9559,21 +9512,8 @@ def bpe_corpus_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("lang")
 
 
-_PAGERANK_ORACLE = r"""WITH
-    s AS (
-        SELECT doc_id, lang,
-               list_distinct(list_transform(
-                 generate_series(1, GREATEST(len(list_filter(string_split_regex(text, '\s+'), x -> x != '')) - 2, 1)),
-                 i -> array_to_string(list_slice(list_filter(string_split_regex(text, '\s+'), x -> x != ''), i, i + 2), ' ')
-               )) AS sh
-        FROM documents
-    ),
-    pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM s a JOIN s b ON a.lang = b.lang AND a.doc_id < b.doc_id
-        WHERE ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-              / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) >= 0.0999995
-    ),
+_PAGERANK_ORACLE = f"""WITH
+    {_jaccard_pairs_ctes(0.1, block="lang")},
     edges AS (
         SELECT id_a AS src, id_b AS dst FROM pairs
         UNION SELECT id_b, id_a FROM pairs
@@ -9820,7 +9760,7 @@ def pagerank_neardup_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would otherwise re-run the whole inverted-index join twice
     pairs = (
         ngram_jaccard_pairs_prefix(
-            d, threshold=0.0999995, n=3, block_cols=("lang",)
+            d, threshold=0.1, n=3, block_cols=("lang",)
         )
         .select("id_a", "id_b")
         .localCheckpoint(eager=False)
@@ -10045,15 +9985,8 @@ def events_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # language's doc count)); its jaccard is then exact over the full
     # sets. Without the cold-witness clause the two sides compute
     # different functions the moment a boilerplate shingle appears.
-    oracle=r"""
-    WITH s AS (
-        SELECT doc_id, lang,
-               list_distinct(list_transform(
-                 generate_series(1, GREATEST(len(list_filter(string_split_regex(text, '\s+'), x -> x != '')) - 2, 1)),
-                 i -> array_to_string(list_slice(list_filter(string_split_regex(text, '\s+'), x -> x != ''), i, i + 2), ' ')
-               )) AS sh
-        FROM documents
-    ),
+    oracle=f"""
+    WITH {_jaccard_pairs_ctes(0.02, block="lang")},
     nb AS (SELECT lang, COUNT(*) AS n_docs FROM s GROUP BY lang),
     dfreq AS (
         SELECT lang, gram, COUNT(*) AS df
@@ -10064,19 +9997,15 @@ def events_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         WHERE d.df <= CEIL(0.5 * nb.n_docs)
     ),
     sc AS (
-        SELECT s.doc_id, s.lang, s.sh,
-               COALESCE(ARRAY_AGG(c.gram), []) AS cold_sh
+        SELECT s.doc_id, COALESCE(ARRAY_AGG(c.gram), []) AS cold_sh
         FROM s LEFT JOIN (SELECT lang, gram FROM cold) c
           ON s.lang = c.lang AND list_contains(s.sh, c.gram)
-        GROUP BY s.doc_id, s.lang, s.sh
+        GROUP BY s.doc_id
     ),
     p AS (
-        SELECT ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-               / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) AS j
-        FROM sc a JOIN sc b ON a.lang = b.lang AND a.doc_id < b.doc_id
+        SELECT x.jaccard AS j
+        FROM pairs x JOIN sc a ON a.doc_id = x.id_a JOIN sc b ON b.doc_id = x.id_b
         WHERE len(list_intersect(a.cold_sh, b.cold_sh)) > 0
-          AND ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-              / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))), 6) >= 0.02
     )
     SELECT ROUND(FLOOR(j / 0.05) * 0.05, 2) AS sim_bucket,
            CAST(COUNT(*) AS BIGINT) AS n_pairs
@@ -10466,12 +10395,7 @@ def zipf_fit_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     "doc_minhash_cardinality",
     oracle=f"""
     WITH s AS (
-        SELECT doc_id, lang,
-               list_distinct(list_transform(
-                 generate_series(1, GREATEST(len({_TOKS_SQL}) - 2, 1)),
-                 i -> array_to_string(list_slice({_TOKS_SQL}, i, i + 2), ' ')
-               )) AS sh
-        FROM documents
+        SELECT doc_id, lang, {_grams_sql(3)} AS sh FROM documents
     ),
     h AS (
         SELECT doc_id, lang,
@@ -10526,10 +10450,7 @@ def doc_minhash_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id,
                ('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':split42'), 1, 8))::BIGINT
                  / 4294967296.0 AS frac,
-               list_distinct(list_transform(
-                 generate_series(1, GREATEST(len({_TOKS_SQL}) - 7, 1)),
-                 i -> array_to_string(list_slice({_TOKS_SQL}, i, i + 7), ' ')
-               )) AS grams
+               {_grams_sql(8)} AS grams
         FROM documents
     ),
     train_g AS (
@@ -11009,19 +10930,13 @@ def unicode_normalization_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ),
     eval_g AS (
         SELECT DISTINCT gram FROM (
-            SELECT unnest(list_distinct(list_transform(
-                     generate_series(1, GREATEST(len({_TOKS_SQL}) - 7, 1)),
-                     i -> array_to_string(list_slice({_TOKS_SQL}, i, i + 7), ' ')
-                   ))) AS gram
+            SELECT unnest({_grams_sql(8)}) AS gram
             FROM base WHERE frac >= 0.9
         ) WHERE gram != ''
     ),
     flagged AS (
         SELECT DISTINCT doc_id FROM (
-            SELECT d.doc_id, unnest(list_distinct(list_transform(
-                     generate_series(1, GREATEST(len(list_filter(string_split_regex(d.text, '\\s+'), x -> x != '')) - 7, 1)),
-                     i -> array_to_string(list_slice(list_filter(string_split_regex(d.text, '\\s+'), x -> x != ''), i, i + 7), ' ')
-                   ))) AS gram
+            SELECT d.doc_id, unnest({_grams_sql(8, "d.text")}) AS gram
             FROM dedup d
         ) g JOIN eval_g e ON g.gram = e.gram
     ),
@@ -12514,21 +12429,16 @@ def events_value_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "containment_neardup_pairs",
-    oracle="""
+    oracle=f"""
     WITH s AS (
-        SELECT doc_id, lang,
-               list_distinct(list_transform(
-                 generate_series(1, GREATEST(len(list_filter(string_split_regex(text, '\\s+'), x -> x != '')) - 2, 1)),
-                 i -> array_to_string(list_slice(list_filter(string_split_regex(text, '\\s+'), x -> x != ''), i, i + 2), ' ')
-               )) AS sh
-        FROM documents
+        SELECT doc_id, lang, {_grams_sql(3)} AS sh FROM documents
     )
-    SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-           ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                 / LEAST(len(a.sh), len(b.sh)), 6) AS containment
-    FROM s a JOIN s b ON a.lang = b.lang AND a.doc_id < b.doc_id
-    WHERE ROUND(CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                / LEAST(len(a.sh), len(b.sh)), 6) >= 0.3
+    SELECT id_a, id_b, ROUND(c, 6) AS containment FROM (
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+               CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
+                 / LEAST(len(a.sh), len(b.sh)) AS c
+        FROM s a JOIN s b ON a.lang = b.lang AND a.doc_id < b.doc_id
+    ) WHERE c >= CAST(0.3 AS DOUBLE)
     ORDER BY id_a, id_b
     """,
 )
@@ -12552,19 +12462,9 @@ def containment_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "source_content_overlap",
-    oracle="""
-    WITH toks AS (
-        SELECT source,
-               list_filter(string_split_regex(text, '\\s+'), x -> x != '') AS w
-        FROM documents
-    ),
-    sh AS (
-        SELECT DISTINCT source, array_to_string(list_slice(w, i, i + 4), ' ') AS g
-        FROM (
-            SELECT source, w,
-                   unnest(generate_series(1, GREATEST(len(w) - 4, 1))) AS i
-            FROM toks
-        )
+    oracle=f"""
+    WITH sh AS (
+        SELECT DISTINCT source, unnest({_grams_sql(5)}) AS g FROM documents
     ),
     tot AS (SELECT source, COUNT(*) AS n FROM sh GROUP BY source),
     shared AS (
@@ -12840,39 +12740,9 @@ def classifier_calibration_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "neardup_components_report",
-    oracle="""
-    WITH RECURSIVE s AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                 generate_series(1, GREATEST(len(list_filter(string_split_regex(text, '\\s+'), x -> x != '')) - 2, 1)),
-                 i -> array_to_string(list_slice(list_filter(string_split_regex(text, '\\s+'), x -> x != ''), i, i + 2), ' ')
-               )) AS sh
-        FROM documents
-    ), pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM s a JOIN s b ON a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-              / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.35
-    ), edges AS (
-        SELECT id_a AS a, id_b AS b FROM pairs
-        UNION
-        SELECT id_b AS a, id_a AS b FROM pairs
-    ), reach(a, b) AS (
-        SELECT a, b FROM edges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a WHERE e.b != r.a
-    ), closure AS (
-        SELECT a, b FROM reach
-        UNION
-        SELECT DISTINCT a, a FROM edges
-    ), comp AS (
-        SELECT a AS doc_id, MIN(b) AS component_id FROM closure GROUP BY a
-    ), sizes AS (
-        SELECT component_id, COUNT(*) AS component_size
-        FROM comp GROUP BY component_id
-    )
-    SELECT c.doc_id, c.component_id,
-           CAST(z.component_size AS BIGINT) AS component_size
+    oracle=f"""
+    WITH RECURSIVE {_jaccard_pairs_ctes(0.35)}, {_components_ctes("pairs")}
+    SELECT c.doc_id, c.component_id, z.component_size
     FROM comp c JOIN sizes z USING (component_id)
     ORDER BY doc_id
     """,
@@ -12887,81 +12757,16 @@ def neardup_components_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive CTE, the engine computes it via `cc_keep_min`'s adaptive
     union-find / alternating-stars over PREFIX-FILTERED exact-Jaccard
     pairs (exact for any τ>0 — no banding-recall caveat needed here)."""
-    from .io import materialize
-    from .operators.dedup import cc_keep_min, ngram_jaccard_pairs_prefix
-
-    d = _t(spark, sf_dir, "documents")
-    # Pin the VERIFIED pair frame (r8, VERDICT r7 #3): the CC loop and
-    # the downstream size join must never be able to recompute the
-    # prefix-join under memory pressure — the pair set is dup-graph-
-    # sized (tiny vs corpus), so the checkpoint is cheap and the 2×+
-    # run-to-run variance this query showed in r7 driver passes goes
-    # away with the recompute path. Lazy since r12: cc_keep_min's
-    # internal edge count materializes the pin immediately, with one
-    # driver barrier instead of two.
-    pairs = materialize(
-        ngram_jaccard_pairs_prefix(d, threshold=0.35, n=3), eager=False
-    )
-    # labels feeds BOTH the size agg and the final join — pin it so the
-    # union-find + isolated-node anti-join run once (2-col, corpus-id-
-    # sized: KBs/doc-count, not corpus bytes)
-    labels = materialize(cc_keep_min(pairs, d.select("doc_id")), eager=False)
-    sizes = labels.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).alias("component_size")
-    )
-    from .io import broadcast_if_small
-
-    return (
-        labels.join(
-            # no wrapper: sizes is an aggregate of the pinned labels
-            # frame — AQE's runtime stats make the broadcast decision
-            # from the exchange, with no checkpoint+count barrier
-            sizes.filter(F.col("component_size") > 1),
-            "cluster_id",
-        )
-        .select(
-            "doc_id",
-            F.col("cluster_id").alias("component_id"),
-            F.col("component_size").cast("long").alias("component_size"),
-        )
-        .orderBy("doc_id")
-    )
+    _, _, members = _jaccard_components(_t(spark, sf_dir, "documents"))
+    return members.orderBy("doc_id")
 
 
 @query(
     "effective_dataset_size",
     oracle=f"""
-    WITH RECURSIVE s AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                 generate_series(1, GREATEST(len({_TOKS_SQL}) - 2, 1)),
-                 i -> array_to_string(list_slice({_TOKS_SQL}, i, i + 2), ' ')
-               )) AS sh
-        FROM documents
-    ), pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM s a JOIN s b ON a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-              / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.35
-    ), edges AS (
-        SELECT id_a AS a, id_b AS b FROM pairs
-        UNION
-        SELECT id_b AS a, id_a AS b FROM pairs
-    ), reach(a, b) AS (
-        SELECT a, b FROM edges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a WHERE e.b != r.a
-    ), closure AS (
-        SELECT a, b FROM reach
-        UNION
-        SELECT DISTINCT a, a FROM edges
-    ), comp AS (
-        SELECT a AS doc_id, MIN(b) AS component_id FROM closure GROUP BY a
-    ), sizes AS (
-        SELECT component_id, COUNT(*) AS csize FROM comp GROUP BY component_id
-    ), t AS (
+    WITH RECURSIVE {_jaccard_pairs_ctes(0.35)}, {_components_ctes("pairs")}, t AS (
         SELECT d.lang, CAST(len({_TOKS_SQL}) AS BIGINT) AS n_tokens,
-               COALESCE(z.csize, 1) AS csize
+               COALESCE(z.component_size, 1) AS csize
         FROM documents d
         LEFT JOIN comp c ON c.doc_id = d.doc_id
         LEFT JOIN sizes z ON z.component_id = c.component_id
@@ -12988,19 +12793,10 @@ def effective_dataset_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     covers the pair set, the component labels, AND the weighting
     arithmetic in one report."""
     from .functions.text import token_count
-    from .io import materialize
-    from .operators.dedup import cc_keep_min, ngram_jaccard_pairs_prefix
 
     docs = _t(spark, sf_dir, "documents")
     d = docs.select("doc_id", "lang", token_count("text").alias("n_tokens"))
-    # lazy pins (r12, the batch-4 pattern): cc_keep_min's internal edge
-    # count is the first action and materializes the pair pin en route;
-    # the label pin materializes at its first consumer — still pinned,
-    # never recomputed under memory pressure (the r8 requirement)
-    pairs = materialize(
-        ngram_jaccard_pairs_prefix(docs, threshold=0.35, n=3), eager=False
-    )
-    labels = materialize(cc_keep_min(pairs, d.select("doc_id")), eager=False)
+    _, labels, _ = _jaccard_components(docs)
     # component size via a partition-only window (r12, guide §2.4): the
     # groupBy+join form paid the agg exchange AND a second join shuffle
     # of the weighted stream; one window over cluster_id attaches the
@@ -13120,27 +12916,17 @@ def part_price_size_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "neardup_graph_triangle_census",
-    oracle="""
-    WITH s AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                 generate_series(1, GREATEST(len(list_filter(string_split_regex(text, '\\s+'), x -> x != '')) - 2, 1)),
-                 i -> array_to_string(list_slice(list_filter(string_split_regex(text, '\\s+'), x -> x != ''), i, i + 2), ' ')
-               )) AS sh
-        FROM documents
-    ), pairs AS (
-        SELECT a.doc_id AS u, b.doc_id AS v
-        FROM s a JOIN s b ON a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-              / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.35
+    oracle=f"""
+    WITH {_jaccard_pairs_ctes(0.35)}, uv AS (
+        SELECT id_a AS u, id_b AS v FROM pairs
     ), tri AS (
         SELECT COUNT(*) AS t
-        FROM pairs e1
-        JOIN pairs e2 ON e1.v = e2.u
-        JOIN pairs e3 ON e1.u = e3.u AND e2.v = e3.v
+        FROM uv e1
+        JOIN uv e2 ON e1.v = e2.u
+        JOIN uv e3 ON e1.u = e3.u AND e2.v = e3.v
     ), deg AS (
         SELECT node, COUNT(*) AS d FROM (
-            SELECT u AS node FROM pairs UNION ALL SELECT v FROM pairs
+            SELECT u AS node FROM uv UNION ALL SELECT v FROM uv
         ) GROUP BY node
     )
     SELECT CAST(COUNT(*) AS BIGINT) AS n_nodes,
@@ -13520,11 +13306,7 @@ def last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ngram_novelty_report",
     oracle=f"""
     WITH g AS (
-        SELECT doc_id, lang, unnest(list_distinct(list_transform(
-            generate_series(1, GREATEST(len({_TOKS_SQL}) - 2, 1)),
-            i -> array_to_string(list_slice({_TOKS_SQL}, i, i + 2), ' ')
-        ))) AS gram
-        FROM documents
+        SELECT doc_id, lang, unnest({_grams_sql(3)}) AS gram FROM documents
     ), f AS (
         SELECT gram, MIN(doc_id) AS first_doc FROM g GROUP BY gram
     ), d AS (
@@ -13557,10 +13339,10 @@ def ngram_novelty_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio arithmetic under one value hash."""
     from .operators.dedup import ngram_novelty_scores
 
-    d = _t(spark, sf_dir, "documents")
-    scores = ngram_novelty_scores(d, n=3)
     from .io import broadcast_if_small
 
+    d = _t(spark, sf_dir, "documents")
+    scores = ngram_novelty_scores(d, n=3)
     return (
         d.select("doc_id", "lang")
         .join(broadcast_if_small(scores), "doc_id")
@@ -13671,33 +13453,7 @@ def cluster_balanced_sample_report(spark: SparkSession, sf_dir: str) -> DataFram
 @query(
     "split_leakage_report",
     oracle=f"""
-    WITH RECURSIVE s AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                 generate_series(1, GREATEST(len({_TOKS_SQL}) - 2, 1)),
-                 i -> array_to_string(list_slice({_TOKS_SQL}, i, i + 2), ' ')
-               )) AS sh
-        FROM documents
-    ), pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM s a JOIN s b ON a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-              / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.35
-    ), edges AS (
-        SELECT id_a AS a, id_b AS b FROM pairs
-        UNION
-        SELECT id_b AS a, id_a AS b FROM pairs
-    ), reach(a, b) AS (
-        SELECT a, b FROM edges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a WHERE e.b != r.a
-    ), closure AS (
-        SELECT a, b FROM reach
-        UNION
-        SELECT DISTINCT a, a FROM edges
-    ), comp AS (
-        SELECT a AS doc_id, MIN(b) AS component_id FROM closure GROUP BY a
-    ), assigned AS (
+    WITH RECURSIVE {_jaccard_pairs_ctes(0.35)}, {_components_ctes("pairs")}, assigned AS (
         SELECT doc_id,
                CASE WHEN frac < 0.8 THEN 'train'
                     WHEN frac < 0.9 THEN 'val' ELSE 'test' END AS split
@@ -13748,18 +13504,10 @@ def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the before-number that motivates it. Oracle replays pairs, the CC
     closure (recursive CTE), the split hash, and all the counts under
     one value hash."""
-    from .io import broadcast_if_small, materialize
-    from .operators.dedup import cc_keep_min, ngram_jaccard_pairs_prefix
+    from .io import broadcast_if_small
 
     d = _t(spark, sf_dir, "documents")
-    # lazy pins (r12): cc_keep_min's internal edge count is the first
-    # action and materializes the pair pin en route (still pinned —
-    # never recomputed under memory pressure, the r8 requirement); the
-    # label pin materializes at its first consumer
-    pairs = materialize(
-        ngram_jaccard_pairs_prefix(d, threshold=0.35, n=3), eager=False
-    )
-    labels = materialize(cc_keep_min(pairs, d.select("doc_id")), eager=False)
+    pairs, labels, _ = _jaccard_components(d)
     frac = (
         F.conv(
             F.substring(
@@ -13827,35 +13575,9 @@ def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "component_split_report",
     oracle=f"""
-    WITH RECURSIVE s AS (
-        SELECT doc_id,
-               list_distinct(list_transform(
-                 generate_series(1, GREATEST(len({_TOKS_SQL}) - 2, 1)),
-                 i -> array_to_string(list_slice({_TOKS_SQL}, i, i + 2), ' ')
-               )) AS sh
-        FROM documents
-    ), pairs AS (
-        SELECT a.doc_id AS id_a, b.doc_id AS id_b
-        FROM s a JOIN s b ON a.doc_id < b.doc_id
-        WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-              / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) >= 0.35
-    ), edges AS (
-        SELECT id_a AS a, id_b AS b FROM pairs
-        UNION
-        SELECT id_b AS a, id_a AS b FROM pairs
-    ), reach(a, b) AS (
-        SELECT a, b FROM edges
-        UNION
-        SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a WHERE e.b != r.a
-    ), closure AS (
-        SELECT a, b FROM reach
-        UNION
-        SELECT DISTINCT a, a FROM edges
-    ), comp AS (
+    WITH RECURSIVE {_jaccard_pairs_ctes(0.35)}, {_components_ctes("pairs")}, units AS (
         SELECT d.doc_id, COALESCE(c.component_id, d.doc_id) AS unit
-        FROM documents d LEFT JOIN (
-            SELECT a AS doc_id, MIN(b) AS component_id FROM closure GROUP BY a
-        ) c USING (doc_id)
+        FROM documents d LEFT JOIN comp c USING (doc_id)
     ), assigned AS (
         SELECT doc_id, unit,
                CASE WHEN frac < 0.8 THEN 'train'
@@ -13864,7 +13586,7 @@ def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             SELECT doc_id, unit,
                    ('0x' || substr(md5(CAST(unit AS VARCHAR) || ':split42'), 1, 8))::BIGINT
                      / 4294967296.0 AS frac
-            FROM comp
+            FROM units
         )
     ), leak AS (
         SELECT COUNT(*) AS n FROM (
@@ -13888,18 +13610,7 @@ def component_split_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     count, which is ZERO by construction — and the oracle proves that
     zero rather than asserting it, replaying pairs, closure, unit
     attribution and the unit-keyed hash."""
-    from .io import materialize
-    from .operators.dedup import cc_keep_min, ngram_jaccard_pairs_prefix
-
-    d = _t(spark, sf_dir, "documents")
-    # lazy pins (r12): cc_keep_min's internal edge count is the first
-    # action and materializes the pair pin en route (still pinned —
-    # never recomputed under memory pressure, the r8 requirement); the
-    # label pin materializes at its first consumer
-    pairs = materialize(
-        ngram_jaccard_pairs_prefix(d, threshold=0.35, n=3), eager=False
-    )
-    labels = materialize(cc_keep_min(pairs, d.select("doc_id")), eager=False)
+    _, labels, _ = _jaccard_components(_t(spark, sf_dir, "documents"))
     units = labels.select(
         "doc_id", F.col("cluster_id").alias("unit")
     )

@@ -463,19 +463,34 @@ def test_duplicate_clusters_on_synthetic_dups(spark):
     assert len(rows) == 1 and rows[0].n_copies == 3 and rows[0].keep_id == 1
 
 
+# J("a b c d e", "a b c d") = 2/3 over word 3-grams. Every exact path
+# keeps the pair at τ = 2/3 and drops it at τ = 0.6666668, which only
+# the rounded value 0.666667 reaches: a rounded cut would keep it in
+# brute force and lose it in the prefix plan, whose bound holds for
+# the unrounded ratio only.
+_TWO_THIRDS_DOCS = [(1, "a b c d e"), (2, "a b c d")]
+_TWO_THIRDS_TAUS = (2 / 3, 0.6666668)
+
+
+def _pair_rows(df, col="jaccard"):
+    return sorted((r.id_a, r.id_b, r[col]) for r in df.collect())
+
+
 def test_inverted_jaccard_equals_bruteforce(spark, sf_dir):
     from pystreams_spark.operators.dedup import ngram_jaccard_pairs_inverted
 
     docs = load_table(spark, sf_dir, "documents").limit(150)
-    brute = sorted(
-        (r.id_a, r.id_b, r.jaccard)
-        for r in ngram_jaccard_pairs(docs, threshold=0.05, n=3).collect()
-    )
-    inv = sorted(
-        (r.id_a, r.id_b, r.jaccard)
-        for r in ngram_jaccard_pairs_inverted(docs, threshold=0.05, n=3).collect()
-    )
+    brute = _pair_rows(ngram_jaccard_pairs(docs, threshold=0.05, n=3))
+    inv = _pair_rows(ngram_jaccard_pairs_inverted(docs, threshold=0.05, n=3))
     assert inv == brute
+
+    two = spark.createDataFrame(_TWO_THIRDS_DOCS, "doc_id long, text string")
+    for tau in _TWO_THIRDS_TAUS:
+        brute = _pair_rows(ngram_jaccard_pairs(two, threshold=tau, n=3))
+        assert brute == ([(1, 2, 0.666667)] if tau == 2 / 3 else []), tau
+        for max_df in (None, 2):  # count path, and the full-set verify
+            inv = ngram_jaccard_pairs_inverted(two, threshold=tau, n=3, max_df=max_df)
+            assert _pair_rows(inv) == brute, (tau, max_df)
 
 
 def _boilerplate_corpus(spark, n_docs=200):
@@ -499,20 +514,72 @@ def test_prefix_jaccard_equals_bruteforce(spark, sf_dir):
     from pystreams_spark.operators.dedup import ngram_jaccard_pairs_prefix
 
     docs = load_table(spark, sf_dir, "documents").limit(150)
-    brute = sorted(
-        (r.id_a, r.id_b, r.jaccard)
-        for r in ngram_jaccard_pairs(docs, threshold=0.05, n=3).collect()
-    )
-    pre = sorted(
-        (r.id_a, r.id_b, r.jaccard)
-        for r in ngram_jaccard_pairs_prefix(docs, threshold=0.05, n=3).collect()
-    )
+    brute = _pair_rows(ngram_jaccard_pairs(docs, threshold=0.05, n=3))
+    pre = _pair_rows(ngram_jaccard_pairs_prefix(docs, threshold=0.05, n=3))
     assert pre == brute
+
+    two = spark.createDataFrame(_TWO_THIRDS_DOCS, "doc_id long, text string")
+    for tau in _TWO_THIRDS_TAUS:
+        brute = _pair_rows(ngram_jaccard_pairs(two, threshold=tau, n=3))
+        pre = _pair_rows(ngram_jaccard_pairs_prefix(two, threshold=tau, n=3))
+        assert pre == brute, tau
+
+    # J = 55/100 = 0.55 exactly, the 55 shared grams last in the long
+    # doc's df order: its prefix of 100 − ⌈0.55·100⌉ + 1 grams must
+    # reach them although 0.55·100 is 55.00000000000001 in doubles
+    words = [f"w{i}" for i in range(102)]
+    sub = spark.createDataFrame(
+        [(1, " ".join(words)), (2, " ".join(words[45:]))], "doc_id long, text string"
+    )
+    brute = _pair_rows(ngram_jaccard_pairs(sub, threshold=0.55, n=3))
+    assert brute == [(1, 2, 0.55)]
+    assert _pair_rows(ngram_jaccard_pairs_prefix(sub, threshold=0.55, n=3)) == brute
 
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="threshold > 0"):
         ngram_jaccard_pairs_prefix(docs, threshold=0.0)
+
+
+@pytest.mark.parametrize("tau", _TWO_THIRDS_TAUS)
+def test_jaccard_cut_is_the_unrounded_ratio_on_every_path(spark, tau):
+    """The two-thirds pair through the remaining exact-Jaccard paths:
+    banded MinHash (16 single-minimum bands, so the pair is a
+    candidate) and the DuckDB pairs builder every Jaccard oracle uses
+    give brute force's pairs at both thresholds."""
+    import duckdb
+
+    from pystreams_spark.queries import _jaccard_pairs_ctes
+
+    two = spark.createDataFrame(_TWO_THIRDS_DOCS, "doc_id long, text string")
+    brute = _pair_rows(ngram_jaccard_pairs(two, threshold=tau, n=3))
+    assert brute == ([(1, 2, 0.666667)] if tau == 2 / 3 else [])
+    mh = minhash_neardup_pairs(two, n=3, bands=16, rows_per_band=1, threshold=tau)
+    assert _pair_rows(mh) == brute
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(_TWO_THIRDS_DOCS, columns=["doc_id", "text"]))
+    got = con.execute(
+        f"WITH {_jaccard_pairs_ctes(tau)} SELECT id_a, id_b, jaccard FROM pairs"
+    ).fetchall()
+    assert sorted(got) == brute
+
+
+@pytest.mark.parametrize("tau", _TWO_THIRDS_TAUS)
+def test_containment_cut_is_the_unrounded_ratio(spark, tau):
+    """C = |A∩B| / min(|A|, |B|) = 2/3 for "a b c d e" (3 grams) and
+    "a b c d f g" (4 grams, 2 shared): both containment paths keep the
+    pair exactly when the unrounded ratio reaches τ, the oracle's cut,
+    and report it rounded."""
+    from pystreams_spark.operators.dedup import ngram_containment_pairs
+
+    df = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f g")], "doc_id long, text string"
+    )
+    want = [(1, 2, 0.666667)] if 2 / 3 >= tau else []
+    for max_df in (None, 2):
+        got = ngram_containment_pairs(df, threshold=tau, n=3, max_df=max_df)
+        assert _pair_rows(got, "containment") == want, max_df
 
 
 def test_prefix_jaccard_bounds_boilerplate_blowup(spark):
@@ -750,9 +817,8 @@ _EDGE_MINHASH_MINS_N3 = [
 def test_md5_kernels_reproduce_column_form_on_edge_texts(spark):
     """The SimHash and MinHash kernels reproduce the retired Column
     form's signatures and minima value for value, and DuckDB replays
-    them through the oracles' own CTEs wherever it defines them: a NULL
-    or empty text has no gram row in SQL (DuckDB's array_to_string of
-    an empty token list is NULL), while both Spark forms hash it as ''."""
+    them through the oracles' own CTEs on every edge text: a NULL or
+    empty text is the one gram '' in both engines."""
     import duckdb
 
     from pystreams_spark.functions.text_kernels import _MINHASH_P, simhash_md5_udf
@@ -774,20 +840,17 @@ def test_md5_kernels_reproduce_column_form_on_edge_texts(spark):
 
     con = duckdb.connect()
     con.register("documents", pd.DataFrame({"doc_id": range(6), "text": _EDGE_TEXTS}))
-    defined = range(2, 6)
     for n, want in _EDGE_SIMHASH.items():
         got = dict(con.execute(
             f"WITH {_simhash_sig_ctes(n, 60)} SELECT doc_id, sig FROM sig"
         ).fetchall())
-        assert sorted(got) == list(defined)
-        assert [got[i] for i in defined] == [want[i] for i in defined], n
+        assert [got[i] for i in range(6)] == want, n
     cols = ", ".join(f"h{j}" for j in range(16))
     rows = {
         r[0]: list(r[1:])
         for r in con.execute(f"WITH {_minhash_sig_ctes(16)} SELECT doc_id, {cols} FROM sig").fetchall()
     }
-    assert sorted(rows) == list(defined)
-    assert [rows[i] for i in defined] == [_EDGE_MINHASH_MINS_N3[i] for i in defined]
+    assert [rows[i] for i in range(6)] == _EDGE_MINHASH_MINS_N3
 
 
 def test_asof_forward_and_tolerance_vs_pandas(spark):
