@@ -1,4 +1,4 @@
-.PHONY: test parity-gate parity-sweep parity-aqe-off bench
+.PHONY: test parity-gate parity-sweep parity-aqe-off bench loc
 
 # The ROADMAP Tier-1 command: every test, cores from nproc.
 test:
@@ -25,3 +25,8 @@ parity-aqe-off:
 
 bench:
 	python bench.py
+
+# Tracked line totals of the package and the tests (ROADMAP aim 2).
+loc:
+	@printf 'pystreams_spark %s\n' "$$(git ls-files pystreams_spark | xargs cat | wc -l)"
+	@printf 'tests %s\n' "$$(git ls-files tests | xargs cat | wc -l)"

@@ -44,16 +44,12 @@ reader defaults fill dropped fields, writer-only fields are skipped,
 int→long/float/double, long→float/double, float→double and
 string↔bytes promote; the first file's schema is the reader schema.
 Incompatible drift still refuses loudly naming the field.
-Codecs (ALL six spec codecs since r7): ``null``, ``deflate`` (zlib),
-``bzip2`` (bz2), ``xz`` (lzma), plus pure-Python ``snappy`` (full
-tag-stream decode incl. overlapping copies; r8: REAL greedy LZ77
-compression on encode, snappy-java-validated; Avro big-endian CRC32
-suffix) and ``zstandard`` (`formats/zstd.py` — full
-RFC 8878 decode with FSE/Huffman/sequences; raw-block stored encode),
-both implemented from the public format descriptions and
-differentially tested against snappy-java / zstd-jni on Spark's own
-classpath
-reason.
+Codecs: all six spec codecs — ``null``, ``deflate`` (zlib), ``bzip2``
+(bz2), ``xz`` (lzma), ``snappy`` (raw format plus the Avro big-endian
+CRC32 of the uncompressed block) and ``zstandard`` (level 3, Avro-Java's
+default) — the last two on the libsnappy / libzstd that pyarrow
+bundles. Both directions of both are differentially tested against
+snappy-java / zstd-jni on Spark's own classpath.
 """
 
 from __future__ import annotations
@@ -62,6 +58,7 @@ import json
 import struct
 import zlib
 
+import pyarrow as pa
 from pyspark.sql import types as T
 from pyspark.sql.datasource import (
     DataSource,
@@ -1086,178 +1083,66 @@ def expand_named_types(sc: object) -> object:
     return walk(sc, None, ())
 
 
-# "zstandard-stored" is a WRITE-SPEED variant, not a spec codec: it
-# emits stored-mode zstd frames (header name stays "zstandard", any
-# zstd reader decompresses them) for callers who preferred the pre-r9
-# throughput — the real "zstandard" encoder is pure-Python LZ77 +
-# FSE/Huffman and trades write speed for ratio (ADVICE r9: the r9
-# switch from stored to real compression was silent at this surface).
-_WRITE_CODECS = (
-    "null", "deflate", "bzip2", "xz", "snappy", "zstandard",
-    "zstandard-stored",
-)
+# The six spec codecs (Avro 1.11 "Required Codecs" and "Optional
+# Codecs"). snappy and zstandard run on the libsnappy / libzstd that
+# pyarrow bundles.
+_WRITE_CODECS = ("null", "deflate", "bzip2", "xz", "snappy", "zstandard")
+_ZSTD_LEVEL = 3  # Avro-Java's CodecFactory default
 
 
-# --- snappy (r7) ------------------------------------------------------------
-# Pure-Python raw-format snappy from the public format description
-# (google/snappy format_description.txt). The Avro "snappy" codec is the
-# raw format plus a 4-byte BIG-endian CRC32 of the UNCOMPRESSED block
-# (Avro 1.11 spec, "Required Codecs"). Decompression implements the full
-# tag stream — literals with all four length encodings and every copy
-# element form, overlap-correct — so blocks written by snappy-java /
-# libsnappy (the production default for Avro landing zones) read
-# offline with stdlib alone. Compression emits the spec-valid
-# ALL-LITERAL stream ("stored" mode): every conforming reader accepts
-# it, it just doesn't shrink — the same honesty trade as encode_gif's
-# CLEAR-per-symbol LZW, and the JVM differential proves snappy-java
-# reads it back.
+def snappy_compress(data: bytes) -> bytes:
+    """Raw-format snappy (not the framing format)."""
+    return pa.Codec("snappy").compress(data, asbytes=True)
 
 
 def snappy_decompress(data: bytes) -> bytes:
-    """Raw-format snappy → bytes (not the framing format)."""
-    # preamble: uncompressed length, little-endian varint
+    """Raw-format snappy → bytes; any failure is a ``ValueError``.
+
+    The declared length is checked before anything is allocated: a
+    3-byte copy element emits at most 64 bytes, so a tag stream of k
+    bytes yields at most 64·k/3. Without the check 5 untrusted bytes
+    can request a 4 GiB output buffer."""
     n = shift = pos = 0
     while True:
-        try:
-            b = data[pos]
-        except IndexError:
-            raise ValueError("snappy: truncated length varint") from None
+        if pos == len(data):
+            raise ValueError("snappy: truncated length varint")
+        b = data[pos]
         pos += 1
         n |= (b & 0x7F) << shift
         if not b & 0x80:
             break
         shift += 7
-        if shift > 35:
+        if shift > 28:
             raise ValueError("snappy: length varint overflow")
-    out = bytearray()
-    ln = len(data)
-    while pos < ln:
-        tag = data[pos]
-        pos += 1
-        kind = tag & 3
-        if kind == 0:  # literal
-            length = tag >> 2
-            if length >= 60:
-                nb = length - 59
-                if pos + nb > ln:
-                    raise ValueError("snappy: truncated literal length")
-                length = int.from_bytes(data[pos : pos + nb], "little")
-                pos += nb
-            length += 1
-            if pos + length > ln:
-                raise ValueError("snappy: truncated literal")
-            out += data[pos : pos + length]
-            pos += length
-            continue
-        nb = (0, 1, 2, 4)[kind]
-        if pos + nb > ln:
-            raise ValueError("snappy: truncated copy element")
-        if kind == 1:  # copy, 1-byte offset
-            length = ((tag >> 2) & 0x7) + 4
-            off = ((tag >> 5) << 8) | data[pos]
-            pos += 1
-        elif kind == 2:  # copy, 2-byte LE offset
-            length = (tag >> 2) + 1
-            off = int.from_bytes(data[pos : pos + 2], "little")
-            pos += 2
-        else:  # copy, 4-byte LE offset
-            length = (tag >> 2) + 1
-            off = int.from_bytes(data[pos : pos + 4], "little")
-            pos += 4
-        if off == 0 or off > len(out):
-            raise ValueError("snappy: copy offset outside produced output")
-        start = len(out) - off
-        if off >= length:
-            out += out[start : start + length]
-        else:  # overlapping copy = repeating pattern of period `off`
-            pattern = bytes(out[start:])
-            out += (pattern * (length // off + 1))[:length]
-    if len(out) != n:
+    if 3 * n > 64 * (len(data) - pos):
         raise ValueError(
-            f"snappy: declared {n} uncompressed bytes, produced {len(out)}"
+            f"snappy: declared {n} uncompressed bytes, more than "
+            f"{len(data) - pos} tag bytes can produce"
         )
-    return bytes(out)
+    try:
+        return pa.Codec("snappy").decompress(
+            data, decompressed_size=n, asbytes=True
+        )
+    except (OSError, ValueError) as e:
+        raise ValueError(f"snappy: {e}") from None
 
 
-def snappy_compress(data: bytes) -> bytes:
-    """Raw-format snappy with REAL compression (r8 — stored-mode-only
-    until then): greedy hash-match LZ77 per the public format
-    description — 4-byte hash candidates, match extension, copy-1
-    (len 4-11, offset < 2048) / copy-2 (16-bit offset) tags, long
-    copies split at 64 with the classic 60+remainder tail so every
-    piece stays ≥ 4. Output is validated against snappy-java's
-    decompressor on Spark's own classpath (both-direction
-    differentials in test_avro.py)."""
-    out = bytearray()
-    v = len(data)
-    while True:
-        b = v & 0x7F
-        v >>= 7
-        out.append(b | (0x80 if v else 0))
-        if not v:
-            break
-    n = len(data)
-    if n == 0:
-        return bytes(out)
+def zstd_compress(data: bytes) -> bytes:
+    """One zstd frame at Avro-Java's default level."""
+    return pa.Codec("zstd", compression_level=_ZSTD_LEVEL).compress(
+        data, asbytes=True
+    )
 
-    def emit_literal(lo: int, hi: int) -> None:
-        if hi <= lo:
-            return
-        lm1 = hi - lo - 1
-        if lm1 < 60:
-            out.append(lm1 << 2)
-        else:
-            nb = (lm1.bit_length() + 7) // 8
-            out.append((59 + nb) << 2)
-            out.extend(lm1.to_bytes(nb, "little"))
-        out.extend(data[lo:hi])
 
-    def one_copy(off: int, ln: int) -> None:
-        if 4 <= ln <= 11 and off < 2048:
-            out.append(0x01 | ((ln - 4) << 2) | ((off >> 8) << 5))
-            out.append(off & 0xFF)
-        else:
-            out.append(0x02 | ((ln - 1) << 2))
-            out.extend(off.to_bytes(2, "little"))
-
-    def emit_copy(off: int, ln: int) -> None:
-        while ln >= 68:
-            one_copy(off, 64)
-            ln -= 64
-        if ln > 64:
-            one_copy(off, 60)
-            ln -= 60
-        one_copy(off, ln)
-
-    table: dict = {}
-    i = 0
-    lit = 0
-    # skip heuristic (the reference encoder's): on incompressible data
-    # the probe stride grows, keeping the pure-Python loop near-linear
-    miss = 0
-    while i + 4 <= n:
-        key = data[i : i + 4]
-        cand = table.get(key, -1)
-        table[key] = i
-        if cand >= 0 and i - cand <= 0xFFFF:
-            j = i + 4
-            k = cand + 4
-            while j < n and data[j] == data[k]:
-                j += 1
-                k += 1
-            emit_literal(lit, i)
-            emit_copy(i - cand, j - i)
-            i = j
-            lit = i
-            miss = 0
-        else:
-            miss += 1
-            # stride grows every 32 misses, capped at 32 (the reference
-            # encoder's bound) so a block that turns compressible later
-            # is still probed densely enough to catch it
-            i += 1 + min(miss >> 5, 31)
-    emit_literal(lit, n)
-    return bytes(out)
+def zstd_decompress(data: bytes) -> bytes:
+    """Every zstd frame in ``data`` → bytes; any failure is a
+    ``ValueError``. Decoded as a stream: frames from zstd-jni's
+    streaming writer carry no content size, which the one-shot
+    ``Codec.decompress`` needs."""
+    try:
+        return pa.CompressedInputStream(pa.BufferReader(data), "zstd").read()
+    except (OSError, ValueError) as e:
+        raise ValueError(f"zstd: {e}") from None
 
 
 def _decompress(codec: str, payload: bytes) -> bytes:
@@ -1282,8 +1167,6 @@ def _decompress(codec: str, payload: bytes) -> bytes:
             raise ValueError("avro: snappy block CRC32 mismatch")
         return raw
     if codec == "zstandard":
-        from .zstd import zstd_decompress
-
         return zstd_decompress(payload)
     raise NotImplementedError(
         f"avro: codec '{codec}' unknown ({'/'.join(_WRITE_CODECS)} supported)"
@@ -1309,19 +1192,7 @@ def _compress(codec: str, payload: bytes) -> bytes:
             zlib.crc32(payload) & 0xFFFFFFFF
         ).to_bytes(4, "big")
     if codec == "zstandard":
-        # r9: REAL compression (LZ77 + predefined-FSE sequences +
-        # Huffman literals) — zstd-jni-differential-validated. Pure
-        # Python, so it trades write throughput for ratio; use
-        # 'zstandard-stored' to keep the pre-r9 write speed.
-        from .zstd import zstd_compress
-
         return zstd_compress(payload)
-    if codec == "zstandard-stored":
-        # stored-mode frames: spec-valid zstd any reader decompresses,
-        # ~zero encode cost, no ratio (the pre-r9 write path)
-        from .zstd import zstd_compress_stored
-
-        return zstd_compress_stored(payload)
     raise NotImplementedError(
         f"avro: write codec '{codec}' unsupported ({'/'.join(_WRITE_CODECS)})"
     )
@@ -1459,16 +1330,11 @@ def write_avro_file(
     n_total = 0
     with open(path, "wb") as f:
         f.write(MAGIC)
-        # header name for the stored variant is the SPEC codec name —
-        # readers (ours, org.apache.avro) see plain "zstandard"
-        header_codec = (
-            "zstandard" if codec == "zstandard-stored" else codec
-        )
         head = bytearray()
         _enc_long(2, head)
         for k, v in (
             (b"avro.schema", schema_bytes),
-            (b"avro.codec", header_codec.encode()),
+            (b"avro.codec", codec.encode()),
         ):
             _enc_long(len(k), head)
             head.extend(k)
@@ -1768,15 +1634,9 @@ def read_avro(spark, path: str, split_target_bytes: int = 32 << 20):
 
 def write_avro(df, path: str, codec: str = "deflate", mode: str = "append") -> None:
     """Avro sink (two-phase commit; ``codec`` null|deflate|bzip2|xz|
-    snappy|zstandard|zstandard-stored; ``mode`` append|overwrite —
-    appends accumulate per-job-token part files, overwrite clears prior
-    parts at commit time).
-
-    Codec trade (r10, ADVICE r9): ``zstandard`` is REAL pure-Python
-    compression (LZ77 + FSE/Huffman, libzstd-validated) — best ratio,
-    slowest writes; ``zstandard-stored`` writes stored-mode zstd frames
-    (header still says "zstandard", every reader decompresses them) at
-    ~zero encode cost for throughput-bound landing zones."""
+    snappy|zstandard; ``mode`` append|overwrite — appends accumulate
+    per-job-token part files, overwrite clears prior parts at commit
+    time)."""
     df.sparkSession.dataSource.register(AvroDataSource)
     (
         df.write.format("pyavro")

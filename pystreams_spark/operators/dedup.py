@@ -1033,13 +1033,14 @@ def minhash_deterministic_candidates(
     rows_per_band: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    round_to: int = 6,
+    threshold: float | None = None,
 ) -> DataFrame:
     """Banded MinHash candidates with their band-share count and exact
     Jaccard — every value replayable as DuckDB CTEs
     (``queries._minhash_oracle_sql``), so the candidate set itself gets
     a full value-hash verdict at any Jaccard level, not just the
-    post-verify pairs.
+    post-verify pairs. ``threshold`` keeps the candidates whose
+    UNROUNDED Jaccard is ≥ it (``_pair_score``'s cut; all for None).
 
     Construction, identical in both engines:
     - gram value v = first 60 bits of md5(space-joined word n-gram),
@@ -1070,7 +1071,7 @@ def minhash_deterministic_candidates(
     ).localCheckpoint(eager=False)
     hits = _banded_candidate_pairs(sigs, id_col=id_col, distinct=False)
     return (
-        _verify_pairs_jaccard(sigs, sigs, hits, None, id_col=id_col, round_to=round_to)
+        _verify_pairs_jaccard(sigs, sigs, hits, threshold, id_col=id_col)
         .groupBy("id_a", "id_b", "jaccard")
         .agg(F.count(F.lit(1)).cast("long").alias("n_bands_shared"))
         .select("id_a", "id_b", "n_bands_shared", "jaccard")
@@ -1083,7 +1084,6 @@ def _verify_pairs_jaccard(
     cands: DataFrame,
     threshold: float | None,
     id_col: str = "doc_id",
-    round_to: int = 6,
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate (id_a, id_b) pairs over
     gram-value frames (``id_col`` + ``_sh`` array<long>).
@@ -1103,7 +1103,7 @@ def _verify_pairs_jaccard(
         F.size("_sa").cast("double"),
         F.size("_sb").cast("double"),
         threshold,
-        round_to,
+        6,
     )
 
 

@@ -566,8 +566,8 @@ def decode_webp(payload: bytes):
 
 
 def _canonical_lengths(freqs: dict[int, int], max_len: int = 15) -> dict[int, int]:
-    """Huffman code lengths with exact Kraft equality (same repair
-    strategy as the zstd encoder's)."""
+    """Huffman code lengths capped at ``max_len``, repaired to exact
+    Kraft equality."""
     import heapq
 
     syms = sorted(freqs)

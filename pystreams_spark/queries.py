@@ -7830,7 +7830,7 @@ def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM added0 a0 JOIN b_src bs ON bs.doc_id = a0.doc_id
         WHERE a0.doc_id NOT IN (SELECT aid FROM moved)
     ), scored AS (
-        SELECT * FROM ({_minhash_oracle_sql(bands=8, rows_per_band=2, src="slice")})
+        SELECT * FROM ({_minhash_oracle_sql(8, 2, threshold=0.5, src="slice")})
     )
     SELECT CAST((CASE WHEN id_a % 2 = 0 THEN id_a ELSE id_b END) // 2
                 AS BIGINT) AS removed_id,
@@ -7838,7 +7838,7 @@ def corpus_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS added_id,
            n_bands_shared, jaccard
     FROM scored
-    WHERE (id_a % 2) != (id_b % 2) AND jaccard >= 0.5
+    WHERE (id_a % 2) != (id_b % 2)
     ORDER BY removed_id, added_id
     """,
 )
@@ -7923,7 +7923,7 @@ def snapshot_neardup_moves(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select((F.col("doc_id") * 2 + 1).alias("doc_id"), "text")
     )
     pairs = minhash_deterministic_candidates(
-        rem.unionByName(add), n=3, bands=8, rows_per_band=2
+        rem.unionByName(add), n=3, bands=8, rows_per_band=2, threshold=0.5
     )
     return (
         pairs.filter((F.col("id_a") % 2) != (F.col("id_b") % 2))
@@ -7937,7 +7937,6 @@ def snapshot_neardup_moves(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_bands_shared",
             "jaccard",
         )
-        .filter(F.col("jaccard") >= 0.5)
         .orderBy("removed_id", "added_id")
     )
 

@@ -384,8 +384,8 @@ def test_avro_bzip2_xz_codecs_jvm_differential(spark, tmp_path):
         got = list(iter_avro_file(theirs))
         assert got == rows
 
-    # r7: zstandard now WORKS (pure-Python RFC 8878 — see the dedicated
-    # differential test); only unknown codec names refuse
+    # snappy and zstandard have their own differentials; only unknown
+    # codec names refuse
     import pytest as _pytest
 
     with _pytest.raises(NotImplementedError, match="unsupported"):
@@ -869,10 +869,13 @@ def test_avro_landing_zone_monitor_pipeline_end_to_end(spark, sf_dir, tmp_path):
 
 
 def test_snappy_raw_format_unit():
-    """Pure-Python snappy (r7): roundtrip through our encoder, plus
-    hand-built tag streams exercising every copy form (1/2/4-byte
-    offsets) and the overlapping-copy repeat rule, plus malformed-input
-    refusals — the format_description.txt cases."""
+    """Raw-format snappy: roundtrip through our encoder, plus hand-built
+    tag streams exercising every copy form (1/2/4-byte offsets) and the
+    overlapping-copy repeat rule, plus malformed-input refusals — the
+    format_description.txt cases — and a declared length no tag stream
+    of that size can produce, refused before any allocation."""
+    import tracemalloc
+
     import pytest as _pytest
 
     from pystreams_spark.formats.avro import snappy_compress, snappy_decompress
@@ -901,21 +904,30 @@ def test_snappy_raw_format_unit():
     )
     assert snappy_decompress(s) == b"12341234"
 
-    with _pytest.raises(ValueError, match="offset"):
+    with _pytest.raises(ValueError, match="snappy"):
         snappy_decompress(bytes([4, (3 << 2) | 1, 99]))  # copy before start
-    with _pytest.raises(ValueError, match="declared"):
+    with _pytest.raises(ValueError, match="snappy"):
         snappy_decompress(bytes([9, (3 << 2) | 0]) + b"abcd")  # short output
-    with _pytest.raises(ValueError, match="truncated"):
+    with _pytest.raises(ValueError, match="snappy"):
         snappy_decompress(bytes([200]))  # unterminated varint
+
+    # 6 bytes declaring 2^32 - 1: one tag byte yields at most 64/3 bytes
+    tracemalloc.start()
+    try:
+        with _pytest.raises(ValueError, match="snappy: declared 4294967295"):
+            snappy_decompress(b"\xff\xff\xff\xff\x0f\x00")
+        assert tracemalloc.get_traced_memory()[1] < 1 << 20
+    finally:
+        tracemalloc.stop()
 
 
 def test_avro_snappy_codec_jvm_differential(spark, tmp_path):
     """Avro snappy codec differential vs snappy-java (on Spark's own
     classpath — the production default for Avro landing zones), both
     directions: REAL compressed blocks from snappy-java (copies, all
-    tag forms) decode with our pure-Python reader; our stored-mode
-    blocks + big-endian CRC read back through the reference stack.
-    Plus: a corrupted CRC refuses by name."""
+    tag forms) decode with our reader; our compressed blocks +
+    big-endian CRC read back through the reference stack. Plus: a
+    corrupted CRC refuses by name."""
     import json as _json
 
     from pystreams_spark.formats.avro import iter_avro_file, write_avro_file
@@ -984,19 +996,15 @@ def test_avro_snappy_codec_jvm_differential(spark, tmp_path):
 
 
 def test_zstd_decoder_differential_vs_zstd_jni(spark):
-    """Pure-Python zstd (r7, RFC 8878): REAL frames from zstd-jni (on
-    Spark's own classpath) across compression levels and payload shapes
-    — FSE-compressed sequence tables, 4-stream Huffman literals,
-    treeless blocks, repeat offsets, >128 KB multi-block frames —
-    decode byte-exactly; checksummed frames verify their xxh64 trailer
-    (tamper caught); our stored-mode frames read back through
-    zstd-jni."""
+    """REAL frames from zstd-jni (on Spark's own classpath) across
+    compression levels and payload shapes — FSE-compressed sequence
+    tables, 4-stream Huffman literals, treeless blocks, repeat offsets,
+    >128 KB multi-block frames — decode byte-exactly; checksummed
+    frames verify their xxh64 trailer (tamper caught); our frames read
+    back through zstd-jni."""
     import os
 
-    from pystreams_spark.formats.zstd import (
-        zstd_compress_stored,
-        zstd_decompress,
-    )
+    from pystreams_spark.formats.avro import zstd_compress, zstd_decompress
 
     jvm = spark._jvm
     Z = jvm.com.github.luben.zstd.Zstd
@@ -1031,20 +1039,20 @@ def test_zstd_decoder_differential_vs_zstd_jni(spark):
     with _pytest.raises(ValueError, match="checksum"):
         zstd_decompress(bytes(bad))
 
-    # stored frames: spec-valid per the reference decoder
+    # our frames: spec-valid per the reference decoder
     for name, payload in cases.items():
-        stored = zstd_compress_stored(payload)
+        ours = zstd_compress(payload)
         assert bytes(
-            Z.decompress(bytearray(stored), max(len(payload), 1))
+            Z.decompress(bytearray(ours), max(len(payload), 1))
         ) == payload, name
-        assert zstd_decompress(stored) == payload
+        assert zstd_decompress(ours) == payload
 
 
 def test_avro_zstandard_codec_jvm_differential(spark, tmp_path):
     """Avro zstandard codec both directions: the JVM writer's really-
     compressed blocks (CodecFactory.zstandardCodec) decode with our
-    pure-Python reader; our stored-mode blocks read back through the
-    reference stack."""
+    reader; our compressed blocks read back through the reference
+    stack."""
     import json as _json
 
     from pystreams_spark.formats.avro import iter_avro_file, write_avro_file
@@ -1297,16 +1305,14 @@ def test_avro_named_type_references(spark, tmp_path):
 
 
 def test_zstd_real_compressor_differential_vs_zstd_jni(spark):
-    """r9: the REAL compressor (`zstd_compress` — LZ77 sequences under
-    the predefined FSE tables, Huffman/RLE/raw literals) produces
-    frames that LIBZSTD (zstd-jni, Spark's classpath) decompresses
-    byte-exactly — the strongest validation available for an encoder:
-    the reference implementation is the decoder. Also: our own decoder
-    round-trips the same frames, and compression is REAL (repetitive
-    payloads shrink >5×), not stored-mode relabeled."""
+    """The compressor (`zstd_compress`) produces frames that zstd-jni
+    (Spark's classpath) decompresses byte-exactly across payload shapes
+    — literal-heavy, high-byte Huffman, runs, multi-block. Also: our
+    own decoder round-trips the same frames, and compression is REAL
+    (repetitive payloads shrink >5×), not stored-mode relabeled."""
     import os
 
-    from pystreams_spark.formats.zstd import zstd_compress, zstd_decompress
+    from pystreams_spark.formats.avro import zstd_compress, zstd_decompress
 
     jvm = spark._jvm
     Z = jvm.com.github.luben.zstd.Zstd
@@ -1347,38 +1353,35 @@ def test_zstd_real_compressor_differential_vs_zstd_jni(spark):
 
 
 def test_zstd_encoder_offset_cap_degrades_not_raises(spark):
-    """r10 (ADVICE r9): a back-reference farther than the predefined OF
-    table's reach (code 28) must be SKIPPED by the matcher — degraded
-    compression, never a ValueError from _fse_encode_chain. Exercised
-    at a small cap so the test doesn't need a 512 MB payload; the
-    output still round-trips through our decoder and libzstd."""
-    from pystreams_spark.formats.zstd import (
-        _find_sequences,
-        zstd_decompress,
-    )
-    from pystreams_spark.formats import zstd as zmod
+    """A repeat farther back than the encoder's window (2 MiB at
+    level 3) cannot become a back-reference: the frame carries it as
+    literals and still round-trips through zstd-jni and our decoder;
+    a repeat inside the window still compresses."""
+    import random
 
-    # marker appears at 0 and again far past the test cap
-    payload = b"UNIQ0123" + bytes(range(200)) * 30 + b"UNIQ0123" + b"tail"
-    seqs, lits = _find_sequences(payload, 0, len(payload), max_offset=1000)
-    assert all(off <= 1000 for _, off, _ in seqs)
-    # full-pipeline guard: monkeypatch the cap into the compressor path
-    orig = zmod._find_sequences
-    zmod._find_sequences = lambda d, lo, hi: orig(d, lo, hi, max_offset=1000)
-    try:
-        comp = zmod.zstd_compress(payload)
-    finally:
-        zmod._find_sequences = orig
-    assert zstd_decompress(comp) == payload
+    from pystreams_spark.formats.avro import zstd_compress, zstd_decompress
+
+    rng = random.Random(7)
+    marker = rng.randbytes(4096)
+    far = marker + rng.randbytes(5 << 19) + marker + b"tail"
+    near = marker + rng.randbytes(1 << 20) + marker + b"tail"
     jvm = spark._jvm
     Z = jvm.com.github.luben.zstd.Zstd
-    assert bytes(Z.decompress(bytearray(comp), len(payload))) == payload
+    for payload in (far, near):
+        comp = zstd_compress(payload)
+        assert zstd_decompress(comp) == payload
+        assert bytes(Z.decompress(bytearray(comp), len(payload))) == payload
+    # the near repeat is a back-reference; the far one costs its bytes
+    assert len(zstd_compress(near)) < len(near) - 3000
+    assert len(zstd_compress(far)) > len(far) - 1000
 
 
 def test_avro_zstandard_stored_codec(spark, tmp_path):
-    """r10 (ADVICE r9): 'zstandard-stored' writes stored-mode zstd
-    frames at ~zero encode cost; the header codec name stays the SPEC
-    name 'zstandard', so our reader AND org.apache.avro decode it."""
+    """``codec="zstandard"`` files read back through our reader and
+    org.apache.avro; the retired ``"zstandard-stored"`` write variant
+    refuses, listing the six spec codecs."""
+    import pytest as _pytest
+
     from pystreams_spark.formats.avro import iter_avro_file, write_avro_file
 
     schema = {
@@ -1389,13 +1392,17 @@ def test_avro_zstandard_stored_codec(spark, tmp_path):
         ],
     }
     rows = [(i, "payload " * 10 + str(i)) for i in range(500)]
-    path = str(tmp_path / "stored.avro")
-    write_avro_file(path, rows, schema, codec="zstandard-stored")
-    hdr = open(path, "rb").read(4096)
-    assert b"zstandard" in hdr and b"zstandard-stored" not in hdr
+    with _pytest.raises(
+        NotImplementedError, match="null/deflate/bzip2/xz/snappy/zstandard\\)"
+    ):
+        write_avro_file(
+            str(tmp_path / "stored.avro"), rows, schema, codec="zstandard-stored"
+        )
+    path = str(tmp_path / "zstd.avro")
+    write_avro_file(path, rows, schema, codec="zstandard")
     got = list(iter_avro_file(path))
     assert len(got) == 500 and got[0][0] == 0 and got[7][1] == rows[7][1]
-    # the reference stack reads the stored frames too
+    # the reference stack reads the frames too
     jvm = spark._jvm
     reader = jvm.org.apache.avro.file.DataFileReader(
         jvm.java.io.File(path),

@@ -1,6 +1,6 @@
 """Property tests for the spec-level Avro binary codec (formats/avro.py)
 — pure Python, no Spark session: encode→decode over generated records
-must be identity for every supported type, for both codecs, across
+must be identity for every supported type, for every spec codec, across
 block boundaries. Complements test_avro.py's JVM differentials."""
 
 import datetime
@@ -89,7 +89,10 @@ def test_record_codec_roundtrip_identity(rows):
 
 
 @settings(max_examples=50, deadline=None)
-@given(st.lists(_row, min_size=1, max_size=50), st.sampled_from(["null", "deflate", "bzip2", "xz"]))
+@given(
+    st.lists(_row, min_size=1, max_size=50),
+    st.sampled_from(["null", "deflate", "bzip2", "xz", "snappy", "zstandard"]),
+)
 def test_container_file_roundtrip_any_block_split(rows, codec):
     with tempfile.TemporaryDirectory() as d:
         path = os.path.join(d, "t.avro")
@@ -148,12 +151,9 @@ def test_snappy_decoder_total_on_garbage(blob):
 @settings(max_examples=200, deadline=None)
 @given(st.binary(min_size=0, max_size=4096))
 def test_zstd_stored_roundtrip(payload):
-    from pystreams_spark.formats.zstd import (
-        zstd_compress_stored,
-        zstd_decompress,
-    )
+    from pystreams_spark.formats.avro import zstd_compress, zstd_decompress
 
-    assert zstd_decompress(zstd_compress_stored(payload)) == payload
+    assert zstd_decompress(zstd_compress(payload)) == payload
 
 
 @settings(max_examples=200, deadline=None)
@@ -161,7 +161,7 @@ def test_zstd_stored_roundtrip(payload):
 def test_zstd_decoder_total_on_garbage(blob):
     """Terminate with ValueError or bytes on ANY input — landing-zone
     bytes are untrusted."""
-    from pystreams_spark.formats.zstd import zstd_decompress
+    from pystreams_spark.formats.avro import zstd_decompress
 
     try:
         zstd_decompress(b"\x28\xb5\x2f\xfd" + blob)
@@ -178,7 +178,7 @@ def test_zstd_truncated_raw_and_rle_blocks_raise():
     short must raise, not silently decode to fewer bytes."""
     import pytest
 
-    from pystreams_spark.formats.zstd import zstd_decompress
+    from pystreams_spark.formats.avro import zstd_decompress
 
     magic = b"\x28\xb5\x2f\xfd"
     # frame header: fcs_code=0 single-segment would REQUIRE a 1-byte FCS;
@@ -186,30 +186,21 @@ def test_zstd_truncated_raw_and_rle_blocks_raise():
     # frame legitimately carries no FCS to cross-check the length against.
     head = magic + bytes([0x00, 0x00])
     raw_hdr = (1 | (0 << 1) | (10 << 3)).to_bytes(3, "little")  # last raw, 10 bytes
-    with pytest.raises(ValueError, match="truncated raw block"):
+    with pytest.raises(ValueError, match="zstd"):
         zstd_decompress(head + raw_hdr + b"short")
     rle_hdr = (1 | (1 << 1) | (10 << 3)).to_bytes(3, "little")  # last RLE, 10 bytes
-    with pytest.raises(ValueError, match="truncated RLE block"):
+    with pytest.raises(ValueError, match="zstd"):
         zstd_decompress(head + rle_hdr)  # repeated byte missing entirely
 
 
 def test_zstd_stored_rejects_nothing_and_uses_8_byte_fcs_form():
-    """r8 ADVICE: fcs_code 3 (8-byte FCS) must be emitted for giant
-    inputs instead of crashing in int.to_bytes. We can't allocate 4 GiB
-    in a unit test, so check the header form directly at the boundary
-    via the encoder's own branch (monkeypatched length is not possible
-    without fakes — instead assert small inputs still decode and the
-    8-byte branch produces a self-consistent header)."""
-    from pystreams_spark.formats.zstd import zstd_compress_stored, zstd_decompress
+    """Our frames round-trip, and a frame whose header carries the
+    8-byte frame-content-size form (fcs_code 3, the form for inputs of
+    4 GiB and up) decodes."""
+    from pystreams_spark.formats.avro import zstd_compress, zstd_decompress
 
-    # normal path still round-trips
-    assert zstd_decompress(zstd_compress_stored(b"abc" * 100)) == b"abc" * 100
-    # exercise the fcs_code selection logic for the 8-byte form without
-    # materializing 4 GiB: replicate the encoder's branch arithmetic
-    n = 1 << 32
-    assert not (n < 256) and not (n - 256 < 65536) and not (n < 1 << 32)
-    # and the header the encoder would emit for such n is decodable:
-    # build a tiny frame that CLAIMS fcs via the 8-byte form with n=3
+    assert zstd_decompress(zstd_compress(b"abc" * 100)) == b"abc" * 100
+    # a tiny frame that CLAIMS its size via the 8-byte form with n=3
     magic = b"\x28\xb5\x2f\xfd"
     fhd = (3 << 6) | (1 << 5)  # fcs_code=3, single-segment
     frame = magic + bytes([fhd]) + (3).to_bytes(8, "little")
@@ -258,17 +249,17 @@ def test_snappy_really_compresses_and_survives_regime_change():
 
 
 def test_zstd_rle_blocks_collapse_runs():
-    """r8: runs ≥ 1 KiB emit RLE blocks — constant payloads collapse
-    ~128k:1, mixed payloads round-trip, short runs stay raw."""
+    """Constant payloads collapse ~10000:1, and mixed payloads with
+    long runs shrink and round-trip."""
     import os
 
-    from pystreams_spark.formats.zstd import zstd_compress_stored, zstd_decompress
+    from pystreams_spark.formats.avro import zstd_compress, zstd_decompress
 
     zeros = b"\x00" * 300_000
-    c = zstd_compress_stored(zeros)
+    c = zstd_compress(zeros)
     assert len(c) < 64 and zstd_decompress(c) == zeros
     mixed = os.urandom(100) + b"A" * 5000 + os.urandom(50) + b"B" * 1023
-    c2 = zstd_compress_stored(mixed)
+    c2 = zstd_compress(mixed)
     assert len(c2) < len(mixed) / 3
     assert zstd_decompress(c2) == mixed
 
@@ -276,9 +267,9 @@ def test_zstd_rle_blocks_collapse_runs():
 @settings(max_examples=200, deadline=None)
 @given(st.binary(min_size=0, max_size=4096))
 def test_zstd_real_compress_roundtrip(payload):
-    """r9: the REAL compressor round-trips arbitrary bytes through our
-    own decoder (the zstd-jni differential covers the libzstd side)."""
-    from pystreams_spark.formats.zstd import zstd_compress, zstd_decompress
+    """The compressor round-trips arbitrary bytes through our own
+    decoder (the zstd-jni differential covers the JVM side)."""
+    from pystreams_spark.formats.avro import zstd_compress, zstd_decompress
 
     assert zstd_decompress(zstd_compress(payload)) == payload
 
@@ -295,7 +286,7 @@ def test_zstd_real_compress_roundtrip_repetitive(chunks):
     """Repetition-heavy payloads exercise the sequence path (matches,
     long literal runs, multi-block when large) — the shapes the raw
     fallback would otherwise hide."""
-    from pystreams_spark.formats.zstd import zstd_compress, zstd_decompress
+    from pystreams_spark.formats.avro import zstd_compress, zstd_decompress
 
     payload = b"".join(c * k for c, k in chunks)
     assert zstd_decompress(zstd_compress(payload)) == payload

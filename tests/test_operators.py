@@ -544,23 +544,34 @@ def test_prefix_jaccard_equals_bruteforce(spark, sf_dir):
 @pytest.mark.parametrize("tau", _TWO_THIRDS_TAUS)
 def test_jaccard_cut_is_the_unrounded_ratio_on_every_path(spark, tau):
     """The two-thirds pair through the remaining exact-Jaccard paths:
-    banded MinHash (16 single-minimum bands, so the pair is a
-    candidate) and the DuckDB pairs builder every Jaccard oracle uses
-    give brute force's pairs at both thresholds."""
+    banded MinHash pairs and candidates (16 single-minimum bands, so
+    the pair is a candidate), the candidates' DuckDB replay and the
+    DuckDB pairs builder every Jaccard oracle uses give brute force's
+    pairs at both thresholds."""
     import duckdb
 
-    from pystreams_spark.queries import _jaccard_pairs_ctes
+    from pystreams_spark.operators.dedup import minhash_deterministic_candidates
+    from pystreams_spark.queries import _jaccard_pairs_ctes, _minhash_oracle_sql
 
     two = spark.createDataFrame(_TWO_THIRDS_DOCS, "doc_id long, text string")
     brute = _pair_rows(ngram_jaccard_pairs(two, threshold=tau, n=3))
     assert brute == ([(1, 2, 0.666667)] if tau == 2 / 3 else [])
     mh = minhash_neardup_pairs(two, n=3, bands=16, rows_per_band=1, threshold=tau)
     assert _pair_rows(mh) == brute
+    cand = minhash_deterministic_candidates(
+        two, bands=16, rows_per_band=1, threshold=tau
+    )
+    assert _pair_rows(cand) == brute
 
     con = duckdb.connect()
     con.register("documents", pd.DataFrame(_TWO_THIRDS_DOCS, columns=["doc_id", "text"]))
     got = con.execute(
         f"WITH {_jaccard_pairs_ctes(tau)} SELECT id_a, id_b, jaccard FROM pairs"
+    ).fetchall()
+    assert sorted(got) == brute
+    got = con.execute(
+        "SELECT id_a, id_b, jaccard FROM "
+        f"({_minhash_oracle_sql(16, 1, threshold=tau)})"
     ).fetchall()
     assert sorted(got) == brute
 
