@@ -54,7 +54,9 @@ snappy-java / zstd-jni on Spark's own classpath.
 
 from __future__ import annotations
 
+import bz2
 import json
+import lzma
 import struct
 import zlib
 
@@ -1088,6 +1090,10 @@ def expand_named_types(sc: object) -> object:
 # pyarrow bundles.
 _WRITE_CODECS = ("null", "deflate", "bzip2", "xz", "snappy", "zstandard")
 _ZSTD_LEVEL = 3  # Avro-Java's CodecFactory default
+# Most bytes one block may decode to: a Java array's size limit, so no
+# block Avro-Java can read is refused, and no untrusted block expands
+# past it in memory.
+_MAX_BLOCK_BYTES = 2**31 - 1
 
 
 def snappy_compress(data: bytes) -> bytes:
@@ -1119,6 +1125,7 @@ def snappy_decompress(data: bytes) -> bytes:
             f"snappy: declared {n} uncompressed bytes, more than "
             f"{len(data) - pos} tag bytes can produce"
         )
+    _check_block_size("snappy", n)
     try:
         return pa.Codec("snappy").decompress(
             data, decompressed_size=n, asbytes=True
@@ -1135,29 +1142,56 @@ def zstd_compress(data: bytes) -> bytes:
 
 
 def zstd_decompress(data: bytes) -> bytes:
-    """Every zstd frame in ``data`` → bytes; any failure is a
-    ``ValueError``. Decoded as a stream: frames from zstd-jni's
-    streaming writer carry no content size, which the one-shot
-    ``Codec.decompress`` needs."""
+    """Every zstd frame in ``data`` → bytes; any failure, and output
+    past ``_MAX_BLOCK_BYTES``, is a ``ValueError``. Decoded as a stream
+    in 1 MiB reads: frames from zstd-jni's streaming writer carry no
+    content size, which the one-shot ``Codec.decompress`` needs."""
+    out = bytearray()
     try:
-        return pa.CompressedInputStream(pa.BufferReader(data), "zstd").read()
+        with pa.CompressedInputStream(pa.BufferReader(data), "zstd") as f:
+            while chunk := f.read(min(1 << 20, _MAX_BLOCK_BYTES + 1 - len(out))):
+                out += chunk
     except (OSError, ValueError) as e:
         raise ValueError(f"zstd: {e}") from None
+    _check_block_size("zstd", len(out))
+    return bytes(out)
+
+
+def _check_block_size(codec: str, n: int) -> None:
+    if n > _MAX_BLOCK_BYTES:
+        raise ValueError(
+            f"{codec}: block expands past {_MAX_BLOCK_BYTES} bytes, the "
+            "largest block Avro-Java can read"
+        )
+
+
+def _stream_decompress(codec: str, d, payload: bytes) -> bytes:
+    """Decode the one stream a block holds with the zlib, bz2 or lzma
+    decompressor ``d``; bytes after it are ignored, as Avro-Java's
+    codecs ignore them. Any failure is a ``ValueError`` naming the
+    codec. Output stops one byte past ``_MAX_BLOCK_BYTES``, so an
+    untrusted block never expands in memory beyond the cap."""
+    try:
+        out = d.decompress(payload, _MAX_BLOCK_BYTES + 1)
+    except (OSError, zlib.error, lzma.LZMAError) as e:
+        raise ValueError(f"{codec}: {e}") from None
+    _check_block_size(codec, len(out))
+    if not d.eof:
+        raise ValueError(f"{codec}: block ends inside its stream")
+    return out
 
 
 def _decompress(codec: str, payload: bytes) -> bytes:
     if codec == "null":
         return payload
-    if codec == "deflate":
-        return zlib.decompress(payload, -15)  # RFC-1951 raw deflate
+    if codec == "deflate":  # RFC-1951 raw deflate
+        return _stream_decompress(codec, zlib.decompressobj(-15), payload)
     if codec == "bzip2":
-        import bz2
-
-        return bz2.decompress(payload)
+        return _stream_decompress(codec, bz2.BZ2Decompressor(), payload)
     if codec == "xz":
-        import lzma
-
-        return lzma.decompress(payload, format=lzma.FORMAT_XZ)
+        return _stream_decompress(
+            codec, lzma.LZMADecompressor(lzma.FORMAT_XZ), payload
+        )
     if codec == "snappy":
         if len(payload) < 4:
             raise ValueError("avro: snappy block too short for its CRC")
@@ -1180,12 +1214,8 @@ def _compress(codec: str, payload: bytes) -> bytes:
         z = zlib.compressobj(6, zlib.DEFLATED, -15)
         return z.compress(payload) + z.flush()
     if codec == "bzip2":
-        import bz2
-
         return bz2.compress(payload)
     if codec == "xz":
-        import lzma
-
         return lzma.compress(payload, format=lzma.FORMAT_XZ, preset=6)
     if codec == "snappy":
         return snappy_compress(payload) + (

@@ -268,89 +268,44 @@ def char_ngrams_udf(n: int = 3):
     return F.pandas_udf(kernel, "array<string>")
 
 
-def winnowing_fingerprints_udf(k: int = 5, w: int = 8):
-    """pandas UDF: text → array<long> winnowing fingerprints (sorted
-    distinct) — the rolling-hash document fingerprint scheme (Schleimer
-    et al., the MOSS algorithm, public knowledge):
+def winnow_fps(s: str, k: int = 5, w: int = 8, base: int = 257) -> np.ndarray:
+    """One document's DISTINCT winnowing fingerprints (Schleimer et
+    al., the MOSS algorithm), sorted int64: hash every char k-gram,
+    slide a window of ``w`` consecutive gram hashes and keep each
+    window's minimum. Fewer than ``k`` bytes → none.
 
-    1. polynomial ROLLING hash over every char k-gram (O(1) per step:
-       h' = (h − c₀·B^{k−1})·B + c_new, vectorized here as a cumulative
-       formulation),
-    2. slide a window of ``w`` consecutive k-gram hashes and keep each
-       window's minimum.
+    The gram hash is ENGINE-PORTABLE: the base-``base`` polynomial over
+    the k char codes, NO modulus. With k=5 at base 257 the maximum
+    value is < 2^41, so the arithmetic is exact in int64 — and exactly
+    expressible in any SQL engine as five ascii()/substr() terms, which
+    is what gives the winnowing query a full oracle hash-match. The
+    polynomial is injective on k-grams (base > every char code), so
+    minima selection is a deterministic total order.
 
     Guarantee: any shared substring of length ≥ w+k−1 between two docs
     contributes at least one SHARED fingerprint — the local property
     that makes winnowing robust to insertions/reordering, unlike a
-    whole-document hash. One narrow kernel pass, no shuffle."""
-    import pandas as pd
+    whole-document hash. ASCII assumption: codes are utf-8 bytes here
+    and codepoints in the SQL oracle — identical for ASCII corpora."""
+    from numpy.lib.stride_tricks import sliding_window_view
 
-    def kernel(texts):
-        out = []
-        for t in texts:
-            fps = _winnowing_doc_fps("" if t is None else t, k, w)
-            out.append(fps.astype(np.int64).tolist())
-        return pd.Series(out)
-
-    return F.pandas_udf(kernel, "array<long>")
-
-
-_ROLL_B = _U64(1000003)
-_ROLL_B_INV = _U64(pow(1000003, -1, 1 << 64))  # odd B is invertible mod 2^64
-
-
-def _winnowing_doc_fps(s: str, k: int, w: int) -> np.ndarray:
-    """One document's winnowing fingerprint set (sorted uint64)."""
-    b = np.frombuffer(s.encode("utf-8"), dtype=np.uint8).astype(_U64)
+    b = np.frombuffer(s.encode("utf-8"), dtype=np.uint8).astype(np.int64)
     if len(b) < k:
-        seed = b.sum(dtype=_U64) + _U64(len(b)) if len(b) else _U64(0)
-        return np.unique(_mix(np.array([seed], dtype=_U64)))
-    # All k-gram rolling hashes at once, exact mod-2^64 arithmetic
-    # (wraparound IS the modulus). With weights c_j·B^(n-1-j):
-    #   prefix[i]             = Σ_{j<i} c_j·B^(n-1-j)
-    #   prefix[i+k]-prefix[i] = h_i · B^(n-k-i),  h_i = Σ c_{i+j}·B^(k-1-j)
-    # so each difference is the gram hash position-scaled by B^(n-k-i);
-    # multiplying by inv_B^(n-k-i) recovers the position-independent h_i.
-    n = len(b)
-    n_grams = n - k + 1
-    desc_pow = np.empty(n, dtype=_U64)
-    desc_pow[0] = _U64(1)
-    np.multiply.accumulate(np.full(n - 1, _ROLL_B, dtype=_U64), out=desc_pow[1:])
-    weights = b * desc_pow[::-1]  # c_j · B^(n-1-j)
-    prefix = np.concatenate(([_U64(0)], np.cumsum(weights, dtype=_U64)))
-    diffs = (prefix[k:] - prefix[:n_grams]).astype(_U64)
-    inv_pow = np.empty(n_grams, dtype=_U64)
-    inv_pow[0] = _U64(1)
-    np.multiply.accumulate(
-        np.full(n_grams - 1, _ROLL_B_INV, dtype=_U64), out=inv_pow[1:]
-    )
-    grams = _mix(diffs * inv_pow[::-1])  # unscale by inv_B^(n-k-i)
-    # winnow: keep each w-window's minimum
-    if n_grams <= w:
+        return np.empty(0, dtype=np.int64)
+    powers = base ** np.arange(k - 1, -1, -1, dtype=np.int64)
+    grams = sliding_window_view(b, k) @ powers
+    if len(grams) <= w:
         sel = grams.min(keepdims=True)
     else:
-        from numpy.lib.stride_tricks import sliding_window_view
-
         sel = sliding_window_view(grams, w).min(axis=1)
     return np.unique(sel)
 
 
 def portable_winnow_fps_udf(k: int = 5, w: int = 8, base: int = 257):
-    """pandas UDF: text → array<long> of DISTINCT winnowing-selected
-    gram hashes, with an ENGINE-PORTABLE gram hash: the base-257
-    polynomial over the k char codes, NO modulus. With k=5 the maximum
-    value is < 2^41, so the arithmetic is exact in int64 — and exactly
-    expressible in any SQL engine as five ascii()/substr() terms, which
-    is what upgrades the winnowing query from rows-only to full
-    oracle hash-match. The polynomial is injective on k-grams (base >
-    every char code), so minima selection is a deterministic total
-    order; distribution quality only shifts WHERE the samples land, the
-    shared-substring guarantee is hash-independent.
-
-    Same vectorized one-pass shape as ``winnowing_fingerprints_udf``
-    (sliding_window_view minima, no shuffle); ASCII fixture assumption:
-    codes are utf-8 bytes here and codepoints in the SQL oracle —
-    identical for ASCII corpora (documented caveat for non-ASCII)."""
+    """pandas UDF: text → array<long> of ``winnow_fps`` (NULL is the
+    empty text). One narrow Arrow pass, no shuffle. Refuses a
+    ``base**k`` that overflows int64: past it the gram hash is no
+    longer exact, nor replayable in SQL."""
     import pandas as pd
 
     if base ** k >= 2 ** 63:
@@ -359,25 +314,11 @@ def portable_winnow_fps_udf(k: int = 5, w: int = 8, base: int = 257):
             "the exact-arithmetic / SQL-portability guarantee only holds for "
             f"k <= {int(np.floor(63 / np.log2(base)))} at base={base}"
         )
-    powers = (base ** np.arange(k - 1, -1, -1, dtype=np.int64)).astype(np.int64)
 
     def kernel(texts):
-        from numpy.lib.stride_tricks import sliding_window_view
-
-        out = []
-        for t in texts:
-            s = "" if t is None else t
-            b = np.frombuffer(s.encode("utf-8"), dtype=np.uint8).astype(np.int64)
-            if len(b) < k:
-                out.append([])
-                continue
-            grams = sliding_window_view(b, k) @ powers
-            if len(grams) <= w:
-                sel = grams.min(keepdims=True)
-            else:
-                sel = sliding_window_view(grams, w).min(axis=1)
-            out.append(np.unique(sel).tolist())
-        return pd.Series(out)
+        return pd.Series(
+            [winnow_fps("" if t is None else t, k, w, base).tolist() for t in texts]
+        )
 
     return F.pandas_udf(kernel, "array<long>")
 

@@ -10,6 +10,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .plans.introspect import executed_plan
 from .session import apply_session_confs
 
 TABLES = (
@@ -216,10 +217,17 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     vector math — to a handful of tasks. One cheap shuffle of the raw
     rows buys full-cluster parallelism for everything downstream. No-op
     when the input is already wide enough.
+
+    The width is probed only on a plan with no exchange: ``.rdd`` on a
+    scan lists files and runs no job, but on a plan that shuffles or
+    broadcasts, adaptive execution runs every exchange below the probe
+    as a construction-time job, and the action runs them again. Such an
+    input is repartitioned without the probe, so downstream kernels
+    keep their task count.
     """
     spark = df.sparkSession
     target = min_partitions or spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < target:
+    if "Exchange" in executed_plan(df) or df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
 

@@ -175,36 +175,34 @@ def _pair_score(
     return j.select("id_a", "id_b", F.round(score, round_to).alias(metric))
 
 
-def _verify_pairs_fullset(
-    sh: DataFrame,
-    cand: DataFrame,
+def _verify_pairs(
+    sh_a: DataFrame,
+    sh_b: DataFrame,
+    cands: DataFrame,
+    threshold: float | None,
     id_col: str,
-    threshold: float,
-    round_to: int,
+    round_to: int = 6,
     metric: str = "jaccard",
 ) -> DataFrame:
-    """Exact overlap score for each candidate (id_a, id_b) from the
-    FULL shingle arrays — candidate generation may have seen only a
-    subset of the postings (prefix / df-capped), the verify never does.
-    The candidate frame rides ``broadcast_if_small``, so the
-    corpus-sized shingle table is probed in place instead of shuffling
-    by id."""
-    sa = sh.select(
-        F.col(id_col).alias("id_a"),
-        F.col("_sh").alias("_sa"),
-        F.col("_sz").alias("_sza"),
-    )
-    sb = sh.select(
-        F.col(id_col).alias("id_b"),
-        F.col("_sh").alias("_sb"),
-        F.col("_sz").alias("_szb"),
-    )
+    """Exact set-overlap score of each candidate (id_a, id_b) from the
+    FULL gram arrays (``id_col`` + ``_sh`` array<long>) of ``sh_a`` and
+    ``sh_b`` — candidate generation may have seen only a subset of the
+    postings (prefix / df-capped / bands), the verify never does.
+
+    array_intersect over fixed-width longs instead of shingle strings —
+    the joined sides shuffle 8 bytes per gram instead of the n-gram
+    text. The candidate list rides ``broadcast_if_small`` into the
+    first join, so non-candidate rows never shuffle their arrays. Cuts
+    and rounds by ``_pair_score``'s rule (every candidate for
+    ``threshold=None``), reporting ``metric``."""
+    a = sh_a.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa"))
+    b = sh_b.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb"))
     return _pair_score(
-        broadcast_if_small(cand).join(sa, "id_a").join(sb, "id_b"),
+        broadcast_if_small(cands).join(a, "id_a").join(b, "id_b"),
         metric,
         F.size(F.array_intersect("_sa", "_sb")).cast("double"),
-        F.col("_sza").cast("double"),
-        F.col("_szb").cast("double"),
+        F.size("_sa").cast("double"),
+        F.size("_sb").cast("double"),
         threshold,
         round_to,
     )
@@ -354,9 +352,7 @@ def ngram_jaccard_pairs_inverted(
             broadcast_if_small(hot_keys), [*blocks, "_h"], "left_anti"
         )
         cand = _shared_shingle_candidates(posts, blocks, id_col)
-        return _verify_pairs_fullset(
-            sh, cand, id_col, threshold, round_to, "jaccard"
-        )
+        return _verify_pairs(sh, sh, cand, threshold, id_col, round_to)
 
     shared = _shared_shingle_counts(posts, blocks, id_col)
     return _score_shared_counts(shared, threshold, round_to, "jaccard")
@@ -385,7 +381,7 @@ def ngram_jaccard_pairs_prefix(
     endpoints, so indexing only each doc's first
     |X| − ⌈τ·|X|⌉ + 1 shingles finds every qualifying pair — for ANY
     total order. Candidates are then scored on their full sets
-    (``_verify_pairs_fullset``), so a false candidate costs one array
+    (``_verify_pairs``), so a false candidate costs one array
     intersect, never a wrong answer. The product τ·|X| is taken with a
     10⁻¹² relative slack: in doubles 0.55·100 is 55.00000000000001,
     whose ceiling would shorten the prefix by one and miss a pair at
@@ -447,9 +443,7 @@ def ngram_jaccard_pairs_prefix(
         ).alias("_h"),
     )
     cand = _shared_shingle_candidates(pre, blocks, id_col)
-    return _verify_pairs_fullset(
-        sh, cand, id_col, threshold, round_to, "jaccard"
-    )
+    return _verify_pairs(sh, sh, cand, threshold, id_col, round_to)
 
 
 def ngram_novelty_scores(
@@ -588,8 +582,8 @@ def ngram_containment_pairs(
             broadcast_if_small(hot_keys), [*blocks, "_h"], "left_anti"
         )
         cand = _shared_shingle_candidates(posts, blocks, id_col)
-        return _verify_pairs_fullset(
-            sh, cand, id_col, threshold, round_to, "containment"
+        return _verify_pairs(
+            sh, sh, cand, threshold, id_col, round_to, "containment"
         )
 
     shared = _shared_shingle_counts(posts, blocks, id_col)
@@ -1071,39 +1065,10 @@ def minhash_deterministic_candidates(
     ).localCheckpoint(eager=False)
     hits = _banded_candidate_pairs(sigs, id_col=id_col, distinct=False)
     return (
-        _verify_pairs_jaccard(sigs, sigs, hits, threshold, id_col=id_col)
+        _verify_pairs(sigs, sigs, hits, threshold, id_col)
         .groupBy("id_a", "id_b", "jaccard")
         .agg(F.count(F.lit(1)).cast("long").alias("n_bands_shared"))
         .select("id_a", "id_b", "n_bands_shared", "jaccard")
-    )
-
-
-def _verify_pairs_jaccard(
-    sh_a: DataFrame,
-    sh_b: DataFrame,
-    cands: DataFrame,
-    threshold: float | None,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Exact-Jaccard verification of candidate (id_a, id_b) pairs over
-    gram-value frames (``id_col`` + ``_sh`` array<long>).
-
-    array_intersect over fixed-width longs instead of shingle strings —
-    the joined sides shuffle 8 bytes per gram instead of the n-gram
-    text. The candidate list is broadcast (adaptive — see
-    broadcast_if_small) into the first join so non-candidate rows never
-    shuffle their arrays. Cuts and rounds by ``_pair_score``'s rule
-    (every candidate for ``threshold=None``), reporting ``jaccard``."""
-    a = sh_a.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa"))
-    b = sh_b.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb"))
-    return _pair_score(
-        a.join(broadcast_if_small(cands), "id_a").join(b, "id_b"),
-        "jaccard",
-        F.size(F.array_intersect("_sa", "_sb")).cast("double"),
-        F.size("_sa").cast("double"),
-        F.size("_sb").cast("double"),
-        threshold,
-        6,
     )
 
 
@@ -1149,7 +1114,7 @@ def minhash_neardup_pairs(
     run in one Arrow kernel (``_minhash_udf``, the recipe of
     ``minhash_deterministic_candidates``); the only corpus-scale
     shuffle is the (band, sig, id) equi-join, and the verify is exact
-    over the 60-bit gram values (``_verify_pairs_jaccard``), so
+    over the 60-bit gram values (``_verify_pairs``), so
     precision is 1 and only recall is probabilistic. ``threshold=0``
     returns every candidate pair. ``checkpoint_dir`` as in
     ``io.materialize``."""
@@ -1161,7 +1126,7 @@ def minhash_neardup_pairs(
         checkpoint_dir,
     )
     cands = _banded_candidate_pairs(sigs, id_col=id_col)
-    return _verify_pairs_jaccard(sigs, sigs, cands, threshold, id_col=id_col)
+    return _verify_pairs(sigs, sigs, cands, threshold, id_col)
 
 
 def neardup_dedup(

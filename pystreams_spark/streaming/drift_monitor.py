@@ -17,7 +17,7 @@ Design:
   `streaming/neardup_ingest`.
 
 Use with ``stream.writeStream.foreachBatch(monitor.foreach_batch())``;
-``history(spark)`` reads the accumulated (epoch, column, n_rows, psi)
+``history(spark)`` reads the committed epochs' (epoch, column, n_rows, psi)
 table for alerting/plotting.
 """
 
@@ -27,6 +27,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .epoch_store import read_committed
 
 __all__ = ["DriftMonitor"]
 
@@ -117,4 +119,5 @@ class DriftMonitor:
         return self.process_batch
 
     def history(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(f"{self.state_dir}/scores")
+        """The committed epochs' scores (column, n_rows, psi, epoch)."""
+        return read_committed(spark, f"{self.state_dir}/scores", "DriftMonitor")

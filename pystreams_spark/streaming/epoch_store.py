@@ -39,11 +39,19 @@ bugs, both now fail loudly instead of silently:
 
 A marker-less old directory with NO part files (crash between mkdir
 and the first task commit) genuinely carries no data and is skipped.
+
+Every reader of an epoch-partitioned directory goes through the same
+listing: the ingests' ``survivors``/``scores``, ``DriftMonitor.history``
+and the ``StatsMaintainer``/``SkylineMaintainer`` publishers read with
+the reader's horizon (``read_committed``), so an in-flight or torn
+newest epoch is never read and a marker-less old one raises instead of
+vanishing; the maintainers' replay skip asks ``epoch_committed``.
 """
 
 from __future__ import annotations
 
 import json
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -51,6 +59,8 @@ __all__ = [
     "assert_markers_enabled",
     "check_params",
     "committed_epoch_dirs",
+    "epoch_committed",
+    "read_committed",
     "write_epoch",
 ]
 
@@ -73,42 +83,63 @@ def assert_markers_enabled(spark: SparkSession, who: str) -> None:
         )
 
 
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) of ``path`` in the session's config."""
+    p = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
+
+def epoch_committed(spark: SparkSession, root: str, epoch: int) -> bool:
+    """Whether ``root/epoch=<epoch>`` carries its ``_SUCCESS`` marker."""
+    fs, marker = _fs_path(spark, f"{root}/epoch={int(epoch)}/_SUCCESS")
+    return bool(fs.exists(marker))
+
+
 def committed_epoch_dirs(
-    spark: SparkSession, root: str, before_epoch: int, who: str
+    spark: SparkSession, root: str, before_epoch: int | None, who: str
 ) -> list[str]:
-    """Paths of every ``epoch=N`` directory under ``root`` with
-    ``N < before_epoch`` and a ``_SUCCESS`` marker. Marker-less old
-    directories containing ``part-*`` files raise (committed-looking
-    data that would otherwise silently drop out of dedup); marker-less
-    EMPTY directories are skipped as torn. Missing ``root`` → []."""
-    jvm = spark.sparkContext._jvm
-    root_path = jvm.org.apache.hadoop.fs.Path(root)
-    fs = root_path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    """Paths of the committed (``_SUCCESS``-marked) ``epoch=N``
+    directories under ``root``, in epoch order; missing ``root`` → [].
+
+    ``before_epoch`` is the replay horizon. A writer passes the epoch it
+    is about to write and gets the committed epochs below it. A reader
+    passes None: the horizon is then the newest epoch directory, which
+    is listed if committed and otherwise left out as a write in flight
+    (or a torn one its replay will overwrite). Below the horizon, a
+    marker-less directory holding ``part-*`` files raises
+    (committed-looking data that would otherwise silently drop out of
+    dedup); a marker-less EMPTY one is skipped as torn."""
+    fs, root_path = _fs_path(spark, root)
     if not fs.exists(root_path):
         return []
-    committed: list[str] = []
-    for status in fs.listStatus(root_path):
-        name = status.getPath().getName()
-        if not name.startswith("epoch="):
-            continue
-        try:
-            epoch = int(name.split("=", 1)[1])
-        except ValueError:
-            continue
+    hpath = spark.sparkContext._jvm.org.apache.hadoop.fs.Path
+    epochs = sorted(
+        (
+            (int(st.getPath().getName()[6:]), st.getPath())
+            for st in fs.listStatus(root_path)
+            if re.fullmatch(r"epoch=\d+", st.getPath().getName())
+        ),
+        key=lambda e: e[0],
+    )
+    newest = []
+    if before_epoch is None and epochs:
+        before_epoch, path = epochs[-1]
+        newest = [path] if fs.exists(hpath(path, "_SUCCESS")) else []
+    committed = []
+    for epoch, path in epochs:
         if epoch >= before_epoch:
-            continue
-        marker = jvm.org.apache.hadoop.fs.Path(status.getPath(), "_SUCCESS")
-        if fs.exists(marker):
-            committed.append(status.getPath().toString())
+            break
+        if fs.exists(hpath(path, "_SUCCESS")):
+            committed.append(path)
             continue
         parts = [
             f.getPath().getName()
-            for f in fs.listStatus(status.getPath())
+            for f in fs.listStatus(path)
             if f.getPath().getName().startswith("part-")
         ]
         if parts:
             raise RuntimeError(
-                f"{who}: epoch directory {status.getPath()} has no "
+                f"{who}: epoch directory {path} has no "
                 f"_SUCCESS marker but holds {len(parts)} committed-"
                 "looking part file(s), and it is older than the replay "
                 "horizon so no replay will ever rewrite it. Reading on "
@@ -119,7 +150,20 @@ def committed_epoch_dirs(
             )
         # empty marker-less dir: torn between mkdir and first task
         # commit — carries no data, safe to skip
-    return committed
+    return [p.toString() for p in committed + newest]
+
+
+def read_committed(spark: SparkSession, root: str, who: str) -> DataFrame:
+    """Every committed epoch under ``root`` (``committed_epoch_dirs``
+    with the reader's horizon) as one frame with its ``epoch``
+    partition column. Raises ``ValueError`` while none has committed."""
+    dirs = committed_epoch_dirs(spark, root, None, who)
+    if not dirs:
+        raise ValueError(
+            f"{who}: no committed state under {root} yet — it is only "
+            "readable after the first micro-batch commits"
+        )
+    return spark.read.option("basePath", root).parquet(*dirs)
 
 
 def check_params(
@@ -137,8 +181,7 @@ def check_params(
     part file (a crash before the first write) is bound afresh."""
     sc = spark.sparkContext
     hpath = sc._jvm.org.apache.hadoop.fs.Path
-    path = hpath(f"{state_dir}/_params")
-    fs = path.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs, path = _fs_path(spark, f"{state_dir}/_params")
     listed = fs.listStatus(path) if fs.exists(path) else []
     parts = sorted(
         (st.getPath() for st in listed if st.getPath().getName().startswith("part-")),

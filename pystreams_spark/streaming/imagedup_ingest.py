@@ -52,6 +52,7 @@ from .epoch_store import (
     assert_markers_enabled,
     check_params,
     committed_epoch_dirs,
+    read_committed,
     write_epoch,
 )
 
@@ -114,8 +115,8 @@ class ImagedupIngest:
             self._params_checked = True
 
     def survivors(self, spark: SparkSession) -> DataFrame:
-        """All survivor rows emitted so far (union of epoch outputs)."""
-        return spark.read.parquet(f"{self.state_dir}/out")
+        """All survivor rows of the committed epoch outputs so far."""
+        return read_committed(spark, f"{self.state_dir}/out", "ImagedupIngest")
 
     # -- per-batch logic -------------------------------------------------------
 

@@ -53,13 +53,14 @@ from pyspark.sql import functions as F
 from ..operators.dedup import (
     _banded_candidate_pairs,
     _minhash_signatures,
-    _verify_pairs_jaccard,
+    _verify_pairs,
     cc_keep_min,
 )
 from .epoch_store import (
     assert_markers_enabled,
     check_params,
     committed_epoch_dirs,
+    read_committed,
     write_epoch,
 )
 
@@ -121,8 +122,8 @@ class NeardupIngest:
             self._params_checked = True
 
     def survivors(self, spark: SparkSession) -> DataFrame:
-        """All survivor rows emitted so far (union of epoch outputs)."""
-        return spark.read.parquet(f"{self.state_dir}/out")
+        """All survivor rows of the committed epoch outputs so far."""
+        return read_committed(spark, f"{self.state_dir}/out", "NeardupIngest")
 
     # -- per-batch logic -----------------------------------------------------
 
@@ -148,9 +149,9 @@ class NeardupIngest:
         )
 
         # 3. intra-batch: candidates → verify → CC → min-id survivors
-        intra_pairs = _verify_pairs_jaccard(
+        intra_pairs = _verify_pairs(
             sigs, sigs, _banded_candidate_pairs(sigs, id_col=id_col),
-            self.threshold, id_col=id_col,
+            self.threshold, id_col,
         )
         clusters = cc_keep_min(intra_pairs, batch.select(id_col), id_col=id_col)
         dropped = clusters.filter(
@@ -174,8 +175,8 @@ class NeardupIngest:
                 .select("id_a", "id_b")
                 .distinct()
             )
-            cross_pairs = _verify_pairs_jaccard(
-                store, sigs, cands, self.threshold, id_col=id_col,
+            cross_pairs = _verify_pairs(
+                store, sigs, cands, self.threshold, id_col,
             )
             # no distinct: the anti-join below ignores repeats
             dropped = dropped.unionByName(

@@ -50,6 +50,7 @@ from .epoch_store import (
     assert_markers_enabled,
     check_params,
     committed_epoch_dirs,
+    read_committed,
     write_epoch,
 )
 
@@ -95,8 +96,8 @@ class NoveltyIngest:
             self._params_checked = True
 
     def scores(self, spark: SparkSession) -> DataFrame:
-        """All scored rows emitted so far (union of epoch outputs)."""
-        return spark.read.parquet(f"{self.state_dir}/out")
+        """All scored rows of the committed epoch outputs so far."""
+        return read_committed(spark, f"{self.state_dir}/out", "NoveltyIngest")
 
     def _batch_posts(self, batch: DataFrame) -> DataFrame:
         """(id, g) with g = xxhash64 of each DISTINCT word n-gram —

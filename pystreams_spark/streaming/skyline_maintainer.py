@@ -30,6 +30,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.topk import pareto_frontier
+from .epoch_store import committed_epoch_dirs, epoch_committed
 
 __all__ = ["SkylineMaintainer"]
 
@@ -41,43 +42,21 @@ class SkylineMaintainer:
         self.state_dir = state_dir.rstrip("/")
         self.dims = [(c, d) for c, d in dims]
 
-    def _fs_and_path(self, spark: SparkSession, path: str):
-        jvm = spark.sparkContext._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-        return fs, p
-
-    def _committed_epochs(self, spark: SparkSession) -> list[int]:
-        fs, p = self._fs_and_path(spark, f"{self.state_dir}/state")
-        if not fs.exists(p):
-            return []
-        out = []
-        for status in fs.listStatus(p):
-            name = status.getPath().getName()
-            if not name.startswith("epoch="):
-                continue
-            fs2, mp = self._fs_and_path(
-                spark, status.getPath().toString() + "/_SUCCESS"
-            )
-            if fs2.exists(mp):
-                out.append(int(name.split("=", 1)[1]))
-        return sorted(out)
-
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
-        part = f"{self.state_dir}/state/epoch={int(epoch_id)}"
-        fs, p = self._fs_and_path(spark, part + "/_SUCCESS")
-        if fs.exists(p):
+        root = f"{self.state_dir}/state"
+        if epoch_committed(spark, root, epoch_id):
             return  # completed epoch: replay is a no-op (exactly-once)
-        prev_epochs = [e for e in self._committed_epochs(spark) if e < int(epoch_id)]
+        prev = committed_epoch_dirs(spark, root, int(epoch_id), "SkylineMaintainer")
         merged = batch
-        if prev_epochs:
-            prev = spark.read.parquet(
-                f"{self.state_dir}/state/epoch={prev_epochs[-1]}"
+        if prev:
+            merged = (
+                spark.read.parquet(prev[-1]).select(batch.columns).unionByName(batch)
             )
-            merged = prev.select(batch.columns).unionByName(batch)
         frontier = pareto_frontier(merged, self.dims)
-        frontier.coalesce(1).write.mode("overwrite").parquet(part)
+        frontier.coalesce(1).write.mode("overwrite").parquet(
+            f"{root}/epoch={int(epoch_id)}"
+        )
 
     def foreach_batch(self):
         return self.process_batch
@@ -85,11 +64,13 @@ class SkylineMaintainer:
     def current(self, spark: SparkSession) -> DataFrame:
         """The latest committed frontier. Raises before the first epoch
         commits (nothing to publish yet)."""
-        epochs = self._committed_epochs(spark)
-        if not epochs:
+        dirs = committed_epoch_dirs(
+            spark, f"{self.state_dir}/state", None, "SkylineMaintainer"
+        )
+        if not dirs:
             raise ValueError(
                 f"SkylineMaintainer: no committed state under "
                 f"{self.state_dir}/state yet — current() is only "
                 "meaningful after the first micro-batch commits"
             )
-        return spark.read.parquet(f"{self.state_dir}/state/epoch={epochs[-1]}")
+        return spark.read.parquet(dirs[-1])

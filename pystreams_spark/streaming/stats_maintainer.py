@@ -37,6 +37,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.incremental import finalize_stats, merge_stats, stats_state
+from .epoch_store import epoch_committed, read_committed
 
 __all__ = ["StatsMaintainer"]
 
@@ -62,12 +63,6 @@ class StatsMaintainer:
                 "name rule merge_stats enforces)"
             )
 
-    def _fs_and_path(self, spark: SparkSession, path: str):
-        jvm = spark.sparkContext._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        fs = p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-        return fs, p
-
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         # idempotent per-epoch commit: a COMPLETED epoch partition
         # (_SUCCESS present) is never rewritten — a replayed epoch
@@ -75,13 +70,13 @@ class StatsMaintainer:
         # removes the delete-then-rewrite window a concurrent
         # ``current()`` could otherwise read through (an incomplete
         # partition, no _SUCCESS, is rewritten)
-        spark = batch.sparkSession
-        part = f"{self.state_dir}/state/epoch={int(epoch_id)}"
-        fs, p = self._fs_and_path(spark, part + "/_SUCCESS")
-        if fs.exists(p):
+        root = f"{self.state_dir}/state"
+        if epoch_committed(batch.sparkSession, root, epoch_id):
             return
         state = stats_state(batch, self.group_cols, self.value_col)
-        state.coalesce(1).write.mode("overwrite").parquet(part)
+        state.coalesce(1).write.mode("overwrite").parquet(
+            f"{root}/epoch={int(epoch_id)}"
+        )
 
     def foreach_batch(self):
         return self.process_batch
@@ -94,40 +89,14 @@ class StatsMaintainer:
         stream's first trigger).
 
         Commit filter: only ``epoch=N`` partitions containing a
-        ``_SUCCESS`` marker are read. A blanket ``read.parquet(state/)``
-        could list a FIRST-ATTEMPT epoch directory mid-write (part
-        files visible, _SUCCESS not yet committed) and transiently
-        double-count or read partial state; enumerating committed
-        epochs closes that window (ADVICE r5)."""
-        fs, p = self._fs_and_path(spark, f"{self.state_dir}/state")
-        if not fs.exists(p):
-            raise ValueError(
-                f"StatsMaintainer: no committed state under "
-                f"{self.state_dir}/state yet — current() is only "
-                "meaningful after the first micro-batch commits"
-            )
-        committed = []
-        for status in fs.listStatus(p):
-            name = status.getPath().getName()
-            if not name.startswith("epoch="):
-                continue
-            marker = status.getPath().toString() + "/_SUCCESS"
-            fs2, mp = self._fs_and_path(spark, marker)
-            if fs2.exists(mp):
-                committed.append(status.getPath().toString())
-        if not committed:
-            raise ValueError(
-                f"StatsMaintainer: no committed (_SUCCESS) epoch under "
-                f"{self.state_dir}/state yet — current() is only "
-                "meaningful after the first micro-batch commits"
-            )
-        # basePath keeps the epoch partition column derivable; the
-        # explicit path list reads ONLY committed partitions
-        all_states = (
-            spark.read.option("basePath", f"{self.state_dir}/state")
-            .parquet(*committed)
-            .drop("epoch")
-        )
+        ``_SUCCESS`` marker are read (``epoch_store.read_committed``). A
+        blanket ``read.parquet(state/)`` could list a FIRST-ATTEMPT
+        epoch directory mid-write (part files visible, _SUCCESS not yet
+        committed) and transiently double-count or read partial state;
+        enumerating committed epochs closes that window (ADVICE r5)."""
+        all_states = read_committed(
+            spark, f"{self.state_dir}/state", "StatsMaintainer"
+        ).drop("epoch")
         return finalize_stats(
             merge_stats(all_states, group_cols=self.group_cols),
             round_to=round_to,

@@ -1416,3 +1416,32 @@ def test_avro_zstandard_stored_codec(spark, tmp_path):
         n += 1
     reader.close()
     assert n == 500
+
+
+@pytest.mark.parametrize("codec", ["zstandard", "deflate", "bzip2", "xz"])
+def test_block_decode_is_bounded(monkeypatch, codec):
+    """A small block that expands past the per-block cap is refused by
+    name before it is held in memory: with the cap at 1 MiB, 8 MiB of
+    zeros never allocate more than a few MiB of output."""
+    import tracemalloc
+
+    from pystreams_spark.formats import avro
+
+    zeros = bytes(8 << 20)
+    block = avro._compress(codec, zeros)
+    assert len(block) < 1 << 20
+    assert avro._decompress(codec, block) == zeros  # under the real cap
+    del zeros
+    monkeypatch.setattr(avro, "_MAX_BLOCK_BYTES", 1 << 20)
+    name = "zstd" if codec == "zstandard" else codec
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match=f"{name}: block expands past {1 << 20}"):
+            avro._decompress(codec, block)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    # the xz decoder allocates the dictionary its header declares up
+    # front: 8 MiB at the writer's preset 6, whatever the output
+    window = 8 << 20 if codec == "xz" else 0
+    assert peak < (4 << 20) + window, f"{codec}: traced peak {peak} bytes"

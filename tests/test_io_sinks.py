@@ -574,3 +574,32 @@ def test_export_jsonl_shards_utf8_bytes_and_ties(spark, tmp_path):
                 for line in open(os.path.join(root, f), encoding="utf-8"):
                     seen.add(json.loads(line)["text"])
     assert len(seen) == 200
+
+
+def _jobs_in(spark, group, fn):
+    """(fn(), number of Spark jobs it submitted)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)  # type: ignore[arg-type]
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_ensure_parallelism_runs_no_job(spark, sf_dir):
+    """``ensure_parallelism`` widens a narrow scan and a shuffling input
+    alike without submitting a Spark job: the partition probe only
+    lists files, and an input whose plan holds an exchange is not
+    probed (``.rdd`` would run its shuffle at construction)."""
+    from pystreams_spark.io import ensure_parallelism
+
+    scan = load_table(spark, sf_dir, "lineitem")
+    grouped = scan.groupBy("l_returnflag").agg(F.count("*").alias("n"))
+    for name, df in (("scan", scan), ("grouped", grouped)):
+        out, jobs = _jobs_in(
+            spark, f"ensure-parallelism-{name}", lambda: ensure_parallelism(df, 7)
+        )
+        assert jobs == 0, f"{name}: {jobs} Spark job(s) at construction"
+        assert out.rdd.getNumPartitions() == 7, name
+        assert sorted(out.collect()) == sorted(df.collect()), name

@@ -193,23 +193,23 @@ def test_pack_sequences_invariants(spark, sf_dir):
 
 def test_winnowing_shared_substring_guarantee():
     # pure-kernel test (no session): the winnowing locality property
-    from pystreams_spark.functions.text_kernels import _winnowing_doc_fps
+    from pystreams_spark.functions.text_kernels import winnow_fps
 
     k, w = 5, 8
     a = "the quick brown fox jumps over the lazy dog and keeps running far"
     b = "ANOTHER START the quick brown fox jumps over the lazy dog NEW END"
     c = "zzzz qqqq xxxx wwww vvvv uuuu tttt ssss"
-    fa = set(_winnowing_doc_fps(a, k, w))
-    assert fa == set(_winnowing_doc_fps(a, k, w))  # deterministic
+    fa = set(winnow_fps(a, k, w))
+    assert fa == set(winnow_fps(a, k, w))  # deterministic
     # docs sharing a substring >= w+k-1 chars must share a fingerprint
-    assert fa & set(_winnowing_doc_fps(b, k, w))
+    assert fa & set(winnow_fps(b, k, w))
     # disjoint character content shares nothing
-    assert not (fa & set(_winnowing_doc_fps(c, k, w)))
-    # position independence of the rolling hash: same text shifted
-    # by a prefix still yields the same gram hashes (implied by the
-    # overlap above, asserted directly here)
+    assert not (fa & set(winnow_fps(c, k, w)))
+    # position independence of the gram hash: same text shifted by a
+    # prefix still yields the same gram hashes (implied by the overlap
+    # above, asserted directly here)
     shifted = "XY" + a
-    assert fa & set(_winnowing_doc_fps(shifted, k, w))
+    assert fa & set(winnow_fps(shifted, k, w))
 
 
 def test_decontaminate_planted_overlap(spark):
@@ -1385,25 +1385,10 @@ def test_portable_winnow_kernel_guarantee_and_hash():
     """The portable (base-257, modulus-free) winnowing kernel keeps the
     shared-substring guarantee, and its gram hash equals the documented
     5-term polynomial the SQL oracle computes."""
-    import numpy as np
-
-    from pystreams_spark.functions.text_kernels import portable_winnow_fps_udf
-
-    # reach the inner kernel through the pandas_udf wrapper's closure
-    k, w, base = 5, 8, 257
+    from pystreams_spark.functions.text_kernels import winnow_fps
 
     def fps(s):
-        b = np.frombuffer(s.encode(), dtype=np.uint8).astype(np.int64)
-        from numpy.lib.stride_tricks import sliding_window_view
-
-        powers = (base ** np.arange(k - 1, -1, -1, dtype=np.int64))
-        grams = sliding_window_view(b, k) @ powers
-        sel = (
-            grams.min(keepdims=True)
-            if len(grams) <= w
-            else sliding_window_view(grams, w).min(axis=1)
-        )
-        return set(np.unique(sel).tolist())
+        return set(winnow_fps(s, k=5, w=8, base=257).tolist())
 
     a = "the quick brown fox jumps over the lazy dog and keeps running far"
     b = "ANOTHER START the quick brown fox jumps over the lazy dog NEW END"
@@ -1418,6 +1403,7 @@ def test_portable_winnow_kernel_guarantee_and_hash():
     )
     assert fps(g) == {expected}
     assert expected < 2**41  # no-modulus exactness bound
+    assert fps("abcd") == set()  # shorter than k: no fingerprint
 
 
 def test_remove_repeated_spans_planted(spark):

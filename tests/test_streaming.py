@@ -1598,3 +1598,50 @@ def test_check_params_verifies_spark_text_layout_and_runs_no_job(
     assert os.path.exists(f"{new}/_params/_SUCCESS")
     (line,) = spark.read.text(f"{new}/_params").collect()
     assert json.loads(line.value) == params
+
+
+def _plant_torn_epoch(spark, root, src_epoch, epoch):
+    """Copy ``root/epoch=<src_epoch>`` to ``root/epoch=<epoch>`` and
+    drop the copy's ``_SUCCESS``: part files with no commit marker."""
+    dst = f"{root}/epoch={epoch}"
+    spark.read.parquet(f"{root}/epoch={src_epoch}").write.parquet(dst)
+    os.remove(os.path.join(dst, "_SUCCESS"))
+
+
+@pytest.mark.parametrize("kind", sorted(_INGESTS))
+def test_ingest_readers_skip_a_torn_newest_epoch(spark, tmp_path, kind):
+    """``survivors()``/``scores()`` read only committed output epochs: a
+    marker-less newest ``epoch=N`` holding a part file (a write in
+    flight) is left out, and a marker-less epoch below a committed one
+    raises instead of silently vanishing."""
+    ingest = _make_ingest(kind, tmp_path / "state")
+    for epoch, frame in enumerate(_ingest_frames(spark, kind)[:2]):
+        ingest.process_batch(frame, epoch)
+    read = ingest.scores if kind == "novelty" else ingest.survivors
+
+    def rows():
+        return sorted(tuple(r) for r in read(spark).collect())
+
+    want = rows()
+    assert want
+    out = str(tmp_path / "state" / "out")
+    _plant_torn_epoch(spark, out, 0, 9)
+    assert rows() == want
+    os.remove(os.path.join(out, "epoch=0", "_SUCCESS"))
+    with pytest.raises(RuntimeError, match="no _SUCCESS marker"):
+        read(spark)
+
+
+def test_drift_history_skips_a_torn_newest_epoch(spark, tmp_path):
+    from pystreams_spark.streaming.drift_monitor import DriftMonitor
+
+    def vdf(lo):
+        return spark.createDataFrame([(float(lo + i),) for i in range(50)], "v double")
+
+    monitor = DriftMonitor(str(tmp_path / "mon"), vdf(0), ["v"])
+    monitor.process_batch(vdf(0), 0)
+    monitor.process_batch(vdf(30), 1)
+    want = sorted(tuple(r) for r in monitor.history(spark).collect())
+    assert [r[-1] for r in want] == [0, 1]
+    _plant_torn_epoch(spark, str(tmp_path / "mon" / "scores"), 1, 7)
+    assert sorted(tuple(r) for r in monitor.history(spark).collect()) == want
