@@ -1094,6 +1094,10 @@ _ZSTD_LEVEL = 3  # Avro-Java's CodecFactory default
 # block Avro-Java can read is refused, and no untrusted block expands
 # past it in memory.
 _MAX_BLOCK_BYTES = 2**31 - 1
+# Most memory the xz decoder may take for the dictionary a block's
+# header declares: Avro-Java's largest preset (9) declares 64 MiB and
+# decodes in 66 MiB, while LZMA2 headers can declare up to 4 GiB.
+_XZ_MEMLIMIT = 128 << 20
 
 
 def snappy_compress(data: bytes) -> bytes:
@@ -1190,7 +1194,9 @@ def _decompress(codec: str, payload: bytes) -> bytes:
         return _stream_decompress(codec, bz2.BZ2Decompressor(), payload)
     if codec == "xz":
         return _stream_decompress(
-            codec, lzma.LZMADecompressor(lzma.FORMAT_XZ), payload
+            codec,
+            lzma.LZMADecompressor(lzma.FORMAT_XZ, memlimit=_XZ_MEMLIMIT),
+            payload,
         )
     if codec == "snappy":
         if len(payload) < 4:

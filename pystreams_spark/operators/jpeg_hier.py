@@ -1,77 +1,62 @@
-"""Hierarchical / differential JPEG (ITU-T T.81 Annex J) and
-arithmetic-coded lossless JPEG (Annex H) — r9, closing the r8
-verdict's #7.
+"""Hierarchical JPEG (ITU-T T.81 Annex J): the reference arithmetic
+the decoder applies between frames, and the fixture encoders.
 
-A hierarchical stream is DHP (frame-collection header, SOF syntax)
-followed by a sequence of FRAMES: the first non-differential (any
-supported mode) at a reduced resolution, later frames DIFFERENTIAL —
-each codes the difference between the source at that resolution and a
-REFERENCE built from the previous frames, optionally doubled first by
-the EXP marker's Eh/Ev flags through the §J.1.1.2 upsampling filter
-(output even samples copy the input, odd samples are the rounded
-average of their neighbors, the trailing edge replicates). Decoded
-differential data is ADDED to the reference: DCT frames add the
-un-level-shifted IDCT output and clamp to [0, 2^P−1]; lossless frames
-add modulo 2^16 (so a final lossless differential frame reproduces
-the source EXACTLY no matter how lossy the pyramid below it was — the
-classic "lossy preview + lossless residual" layout, and this module's
-strongest self-check).
+A hierarchical stream is DHP (the frame-collection header, SOF
+syntax) followed by frames: the first non-differential, at a reduced
+resolution, the later ones DIFFERENTIAL — each codes the difference
+between the source at its resolution and a REFERENCE built from the
+frames before it, first doubled as the EXP marker's Eh/Ev flags ask
+through the §J.1.1.2 filter (`_upsample_ref`). A differential frame's
+decoded samples are ADDED to the reference (`_add_to_ref`): DCT frames
+add the un-level-shifted IDCT output and clamp to [0, 2^P−1];
+lossless frames add modulo 2^16, so a final lossless differential
+frame reproduces the source EXACTLY however lossy the pyramid below
+it was. `multimodal._decode_jpeg_parse` parses these streams and
+decodes every frame with the single-frame scan walks; differential
+frames code DC coefficients and lossless samples without prediction
+(§J.1, F.1.4.1, H.1) and apply no level shift.
 
-Supported frame types inside a hierarchy: SOF0/1/9 (non-differential
-sequential, Huffman/arithmetic), SOF3 (non-differential lossless),
-SOF5/SOF13 (differential sequential DCT, Huffman/arithmetic),
-SOF6/SOF14 (differential progressive DCT — the scans reuse
-`multimodal`'s Annex G machinery with prediction pinned to zero),
-SOF7/SOF15 (differential lossless, Huffman/arithmetic). Standalone
-SOF11 (arithmetic lossless, non-differential) is also decoded here
-via the Annex H statistical model in `jpeg_arith.py`. Hierarchical
-frames are restricted to 1×1 sampling (every component at the frame's
-own resolution — per-frame resolution change IS the hierarchy's
-subsampling mechanism); fractional EXP geometries refuse by name.
-
-Differential-frame coding differences from ordinary frames, per
-§J.1/F.1.4.1/H.1: DC coefficients and lossless samples are coded
-WITHOUT prediction (the coded value is the difference-image value
-itself; conditioning statistics still classify the coded values), and
-DCT reconstruction applies no level shift.
-
-Validation honesty (same protocol as `jpeg_arith.py`): no codec in
-this offline container reads OR writes hierarchical or
-arithmetic-lossless JPEG (Java ImageIO: none of them), so interop
-cannot be differentially tested here. What IS tested: mirror-encoder
-fixtures round-trip (the lossless-final pyramid is pixel-EXACT by
-construction, which checks the upsampler, the reference arithmetic,
-and both entropy layers end-to-end), the constant-plane closed form
-(bit-exact through every path, used by the media_decode_report
-oracle), cross-entropy equivalence (the same pyramid through Huffman
-and arithmetic differential frames must decode identically), and
-hypothesis totality fuzz (corrupt bytes must raise ValueError, never
-IndexError/hang). Pinned for re-verification if an external codec
-ever lands: the Annex H bin layout choices (see jpeg_arith.py) and
-the §J.1.1.2 trailing-edge convention (replicate vs mirror — affects
-only the last row/column of upsampled references).
+Validation: no codec in this offline container reads or writes
+hierarchical or arithmetic-lossless JPEG (Java ImageIO: none of
+them), so interop cannot be differentially tested here. What is
+tested: mirror-encoder fixtures round-trip (the lossless-final
+pyramid is pixel-EXACT by construction, which checks the upsampler,
+the reference arithmetic, and both entropy layers end-to-end), the
+constant-plane closed form (bit-exact through every path, used by the
+media_decode_report oracle), cross-entropy equivalence (the same
+pyramid through Huffman and arithmetic differential frames must
+decode identically), and hypothesis totality fuzz (corrupt bytes must
+raise ValueError, never IndexError or a hang). Pinned for
+re-verification if an external codec ever lands: the Annex H bin
+layout choices (see jpeg_arith.py) and the §J.1.1.2 trailing-edge
+convention (replicate vs mirror — affects only the last row/column of
+upsampled references).
 """
 
 from __future__ import annotations
 
-# markers
-_DHP = 0xDE
-_EXP = 0xDF
-_DIFF_SOFS = {0xC5, 0xC6, 0xC7, 0xCD, 0xCE, 0xCF}
-_NONDIFF_SOFS = {0xC0, 0xC1, 0xC2, 0xC3, 0xC9, 0xCA, 0xCB}
+import numpy as np
 
-
-def _np():
-    import numpy as np
-
-    return np
+from .multimodal import (
+    _JFIF,
+    _JpegBitWriter,
+    _fdct_zz,
+    _huff_lossless_table,
+    _huff_seq_tables,
+    _jpeg_idct,
+    _jpeg_ll_predict,
+    _jpeg_source_planes,
+    _put_ll_diff,
+    _seg,
+    _sof_body,
+    _sos_body,
+)
 
 
 def _upsample_ref(plane, eh: int, ev: int, fh: int, fw: int):
     """§J.1.1.2 reference upsampling: double horizontally (Eh) and/or
     vertically (Ev) with the rounded-average interpolation filter,
     then crop to the next frame's (fh, fw)."""
-    np = _np()
     p = plane
     if eh:
         n = p.shape[1]
@@ -97,637 +82,12 @@ def _upsample_ref(plane, eh: int, ev: int, fh: int, fw: int):
     return p[:fh, :fw]
 
 
-def _idct_int(coef_grid, h: int, w: int, level: float):
-    """Dequantized zigzag coefficient grid (nby, nbx, 64) → rounded
-    int64 spatial plane cropped to (h, w). ``level`` = 2^(P−1) for
-    non-differential frames, 0 for differential ones."""
-    np = _np()
-    from .multimodal import _JPEG_ZIGZAG, _jpeg_dct_basis
-
-    zz = np.asarray(_JPEG_ZIGZAG)
-    nat = np.zeros_like(coef_grid)
-    nat[:, :, zz] = coef_grid
-    r, q = nat.shape[0], nat.shape[1]
-    blocks = nat.reshape(r, q, 8, 8).astype(np.float64)
-    basis = _jpeg_dct_basis()
-    spatial = np.einsum("ux,rcuv,vy->rcxy", basis, blocks, basis) + level
-    plane = spatial.transpose(0, 2, 1, 3).reshape(r * 8, q * 8)
-    return np.round(plane[:h, :w]).astype(np.int64)
-
-
-# ---------------------------------------------------------------------------
-# frame scan decoders (1×1 sampling, one interleaved scan) → per-cid
-# DEQUANTIZED zigzag grids (DCT) or raw sample/difference planes
-# (lossless)
-# ---------------------------------------------------------------------------
-
-
-def _check_frame_comps(comps, scan, nc):
-    if any(c["h"] != 1 or c["v"] != 1 for c in comps):
-        raise ValueError(
-            "JPEG hierarchical frame with subsampled components "
-            "unsupported (frames carry their own resolution instead)"
-        )
-    if len(scan) != nc:
-        raise ValueError("JPEG hierarchical frame must use one full scan")
-
-
-def _decode_frame_dct_huff(data, fh, fw, comps, scan, qt, huff_dc, huff_ac,
-                           ri, differential):
-    np = _np()
-    from .multimodal import (
-        _jpeg_decode_block,
-        _jpeg_entropy_intervals,
-        _JpegBits,
-    )
-
-    _check_frame_comps(comps, scan, len(comps))
-    nby, nbx = -(-fh // 8), -(-fw // 8)
-    plan = []
-    for cid, td, ta in scan:
-        c = next((x for x in comps if x["id"] == cid), None)
-        if c is None:
-            raise ValueError("JPEG scan references unknown component")
-        if td not in huff_dc or ta not in huff_ac or c["tq"] not in qt:
-            raise ValueError("JPEG scan references a missing DHT/DQT table")
-        grid = np.zeros((nby, nbx, 64), np.int64)
-        plan.append((cid, huff_dc[td], huff_ac[ta], qt[c["tq"]], grid))
-    segs = _jpeg_entropy_intervals(data)
-    bits = _JpegBits(segs[0])
-    seg_i = 0
-    preds = {cid: 0 for cid, _t, _a in scan}
-    mcu = 0
-    for byi in range(nby):
-        for bxi in range(nbx):
-            if ri and mcu and mcu % ri == 0:
-                seg_i += 1
-                if seg_i >= len(segs):
-                    raise ValueError("JPEG missing expected restart marker")
-                bits = _JpegBits(segs[seg_i])
-                preds = {cid: 0 for cid, _t, _a in scan}
-            for cid, dct, act, q_zz, grid in plan:
-                if differential:
-                    preds[cid] = 0  # §J.1: no DC prediction
-                grid[byi, bxi] = _jpeg_decode_block(
-                    bits, dct, act, q_zz, preds, cid
-                )
-            mcu += 1
-    return {cid: grid for cid, _d, _a, _q, grid in plan}
-
-
-def _decode_frame_dct_arith(data, fh, fw, comps, scan, qt, dc_cond, ac_cond,
-                            ri, differential):
-    np = _np()
-    from . import jpeg_arith as ja
-    from .multimodal import _jpeg_entropy_intervals
-
-    _check_frame_comps(comps, scan, len(comps))
-    nby, nbx = -(-fh // 8), -(-fw // 8)
-    plan = []
-    scan_comps = []
-    for cid, td, ta in scan:
-        c = next((x for x in comps if x["id"] == cid), None)
-        if c is None:
-            raise ValueError("JPEG scan references unknown component")
-        if c["tq"] not in qt:
-            raise ValueError("JPEG scan references a missing DQT table")
-        grid = np.zeros((nby, nbx, 64), np.int64)
-        plan.append((cid, td, ta, np.asarray(qt[c["tq"]], np.int64), grid))
-        scan_comps.append({"id": cid, "td": td, "ta": ta})
-    segs = _jpeg_entropy_intervals(data)
-    cs = ja._CondState(scan_comps, dc_cond, ac_cond)
-    cs.reset(scan_comps)
-    dec = ja.ArithDecoder(segs[0], destuffed=True)
-    seg_i = 0
-    mcu = 0
-    for byi in range(nby):
-        for bxi in range(nbx):
-            if ri and mcu and mcu % ri == 0:
-                seg_i += 1
-                if seg_i >= len(segs):
-                    raise ValueError("JPEG missing expected restart marker")
-                dec = ja.ArithDecoder(segs[seg_i], destuffed=True)
-                cs.reset(scan_comps)
-            for cid, td, ta, q_zz, grid in plan:
-                zz = np.zeros(64, np.int64)
-                zz[0] = ja._decode_dc(dec, cs, cid, td, differential)
-                ja._decode_ac(dec, cs, ta, zz)
-                grid[byi, bxi] = zz * q_zz
-            mcu += 1
-    return {cid: grid for cid, _t, _a, _q, grid in plan}
-
-
-def _decode_frame_lossless_huff(data, fh, fw, comps, scan, huff_dc,
-                                pred_sel, pt, ri, differential):
-    """Annex H Huffman DPCM scan → per-cid int64 planes. Differential:
-    prediction is zero (the decoded value IS the difference, mod-2^16
-    signed); non-differential: the 7 spec predictors."""
-    np = _np()
-    from .multimodal import (
-        _jpeg_entropy_intervals,
-        _jpeg_extend,
-        _jpeg_huff_decode,
-        _JpegBits,
-    )
-
-    _check_frame_comps(comps, scan, len(comps))
-    if differential:
-        if pred_sel != 0:
-            raise ValueError(
-                "JPEG differential lossless scan must select predictor 0"
-            )
-    elif not 1 <= pred_sel <= 7:
-        raise ValueError(f"JPEG lossless predictor {pred_sel} invalid (1-7)")
-    for _cid, td, _ta in scan:
-        if td not in huff_dc:
-            raise ValueError("JPEG lossless scan references a missing DHT")
-    planes = {cid: np.zeros((fh, fw), np.int64) for cid, _t, _a in scan}
-    # prec of the SOURCE frame drives the non-differential default;
-    # passed by the caller through pred default below
-    segs = _jpeg_entropy_intervals(data)
-    seg_i = 0
-    bits = _JpegBits(segs[0])
-    restart = True
-    mcu = 0
-    start_row = {cid: 0 for cid, _t, _a in scan}
-    default = 1 << (comps[0].get("prec", 8) - 1 - pt)
-
-    def predict(p, y, x, x0row):
-        if differential:
-            return 0
-        if y == x0row and x == 0:
-            return default
-        if x == 0:
-            return int(p[y - 1, 0])
-        a = int(p[y, x - 1])
-        if y == x0row:
-            return a
-        b = int(p[y - 1, x])
-        c = int(p[y - 1, x - 1])
-        return (
-            a if pred_sel == 1 else
-            b if pred_sel == 2 else
-            c if pred_sel == 3 else
-            a + b - c if pred_sel == 4 else
-            a + ((b - c) >> 1) if pred_sel == 5 else
-            b + ((a - c) >> 1) if pred_sel == 6 else
-            (a + b) >> 1
-        )
-
-    for y in range(fh):
-        for x in range(fw):
-            if ri and mcu and mcu % ri == 0:
-                seg_i += 1
-                if seg_i >= len(segs):
-                    raise ValueError("JPEG missing expected restart marker")
-                bits = _JpegBits(segs[seg_i])
-                restart = True
-            if restart:
-                for cid in planes:
-                    start_row[cid] = y
-                restart = False
-            for cid, td, _ta in scan:
-                s = _jpeg_huff_decode(bits, huff_dc[td])
-                if s > 16:
-                    raise ValueError("JPEG lossless category out of range")
-                diff = 32768 if s == 16 else _jpeg_extend(bits.read(s), s)
-                p = planes[cid]
-                val = (predict(p, y, x, start_row[cid]) + diff) & 0xFFFF
-                p[y, x] = val
-            mcu += 1
-    return planes
-
-
-def _decode_frame_lossless_arith(data, fh, fw, comps, scan, dc_cond,
-                                 pred_sel, pt, ri, differential):
-    """Annex H ARITHMETIC DPCM scan (SOF11/SOF15) → per-cid int64
-    planes. The 2D statistical model conditions each difference on the
-    classifications of the left and above differences
-    (`jpeg_arith._decode_ll`); restarts reset the coder, the
-    statistics, the difference histories, and prediction."""
-    np = _np()
-    from . import jpeg_arith as ja
-    from .multimodal import _jpeg_entropy_intervals
-
-    _check_frame_comps(comps, scan, len(comps))
-    if differential:
-        if pred_sel != 0:
-            raise ValueError(
-                "JPEG differential lossless scan must select predictor 0"
-            )
-    elif not 1 <= pred_sel <= 7:
-        raise ValueError(f"JPEG lossless predictor {pred_sel} invalid (1-7)")
-    planes = {cid: np.zeros((fh, fw), np.int64) for cid, _t, _a in scan}
-    stats = {td: ja.new_stats(ja.LL_STAT_BINS) for _c, td, _a in scan}
-    cond = {td: dc_cond.get(td, (0, 1)) for _c, td, _a in scan}
-    segs = _jpeg_entropy_intervals(data)
-    seg_i = 0
-    dec = ja.ArithDecoder(segs[0], destuffed=True)
-    default = 1 << (comps[0].get("prec", 8) - 1 - pt)
-    # per-component difference histories for the 2D conditioning
-    above = {cid: np.zeros(fw, np.int64) for cid, _t, _a in scan}
-    left = {cid: 0 for cid, _t, _a in scan}
-    start_row = {cid: 0 for cid, _t, _a in scan}
-    restart = True
-    mcu = 0
-
-    def predict(p, cid, y, x):
-        if differential:
-            return 0
-        x0row = start_row[cid]
-        if y == x0row and x == 0:
-            return default
-        if x == 0:
-            return int(p[y - 1, 0])
-        a = int(p[y, x - 1])
-        if y == x0row:
-            return a
-        b = int(p[y - 1, x])
-        c = int(p[y - 1, x - 1])
-        return (
-            a if pred_sel == 1 else
-            b if pred_sel == 2 else
-            c if pred_sel == 3 else
-            a + b - c if pred_sel == 4 else
-            a + ((b - c) >> 1) if pred_sel == 5 else
-            b + ((a - c) >> 1) if pred_sel == 6 else
-            (a + b) >> 1
-        )
-
-    for y in range(fh):
-        for cid, _t, _a in scan:
-            left[cid] = 0  # row start: Da = 0
-        for x in range(fw):
-            if ri and mcu and mcu % ri == 0:
-                seg_i += 1
-                if seg_i >= len(segs):
-                    raise ValueError("JPEG missing expected restart marker")
-                dec = ja.ArithDecoder(segs[seg_i], destuffed=True)
-                for st in stats.values():
-                    for b in st:
-                        b[0] = b[1] = 0
-                for cid, _t, _a in scan:
-                    above[cid][:] = 0
-                    left[cid] = 0
-                restart = True
-            if restart:
-                for cid, _t, _a in scan:
-                    start_row[cid] = y
-                restart = False
-            for cid, td, _ta in scan:
-                lo, up = cond[td]
-                da = left[cid]
-                db = int(above[cid][x]) if y > start_row[cid] else 0
-                v = ja._decode_ll(dec, stats[td], da, db, lo, up)
-                p = planes[cid]
-                p[y, x] = (predict(p, cid, y, x) + v) & 0xFFFF
-                left[cid] = v
-                above[cid][x] = v
-            mcu += 1
-    return planes
-
-
-def decode_jpeg_lossless_arith_scan(data, sof, comps, scan, dc_cond,
-                                    pred_sel, pt, ri):
-    """Standalone SOF11 render path, mirroring the tail of
-    `multimodal._jpeg_decode_scan_lossless` (uint8 feature-domain
-    scaling, gray replicate / 3-component stack)."""
-    np = _np()
-
-    H, W, _nc, prec = sof
-    for c in comps:
-        c["prec"] = prec
-    planes = _decode_frame_lossless_arith(
-        data, H, W, comps, scan, dc_cond, pred_sel, pt, ri, False
-    )
-    maxv = float((1 << prec) - 1)
-
-    def to_u8(p):
-        a = np.clip(p << pt, 0, maxv).astype(np.float64)
-        if prec != 8 or pt:
-            a = np.round(a * (255.0 / maxv))
-        return a.astype(np.uint8)
-
-    if len(comps) == 1:
-        g = to_u8(planes[comps[0]["id"]])
-        return np.repeat(g[:, :, None], 3, axis=2)
-    if len(comps) == 3:
-        return np.stack([to_u8(planes[c["id"]]) for c in comps], axis=2)
-    raise ValueError(
-        f"JPEG lossless with {len(comps)} components unsupported"
-    )
-
-
-# ---------------------------------------------------------------------------
-# hierarchical stream driver
-# ---------------------------------------------------------------------------
-
-
-def decode_jpeg_hierarchical(payload: bytes):
-    """Full hierarchical decode: DHP → frame sequence with EXP-driven
-    reference expansion → final (H, W, 3) uint8 RGB through the same
-    rendering conventions as the single-frame decoder."""
-    import struct
-
-    np = _np()
-    from .multimodal import _jpeg_entropy_end
-
-    if payload[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG payload")
-    pos = 2
-    qt: dict[int, object] = {}
-    huff_dc: dict[int, object] = {}
-    huff_ac: dict[int, object] = {}
-    dc_cond: dict[int, tuple] = {}
-    ac_cond: dict[int, int] = {}
-    ri = 0
-    dhp = None  # (prec, H, W, [comp ids])
-    refs: dict[int, object] = {}
-    pending_exp: tuple | None = None
-    frame = None  # open frame state dict
-
-    def clamp_max(prec):
-        return (1 << prec) - 1
-
-    def apply_planes(fr, planes):
-        """Fold a completed frame's decoded data into the references."""
-        maxv = clamp_max(fr["prec"])
-        for cid, arr in planes.items():
-            if fr["differential"]:
-                if cid not in refs:
-                    raise ValueError(
-                        "JPEG differential frame with no reference component"
-                    )
-                ref = refs[cid]
-                if ref.shape != arr.shape:
-                    raise ValueError(
-                        "JPEG differential frame size mismatch "
-                        f"{ref.shape} vs {arr.shape}"
-                    )
-                if fr["lossless"]:
-                    refs[cid] = (ref + arr) & 0xFFFF
-                else:
-                    refs[cid] = np.clip(ref + arr, 0, maxv)
-            else:
-                refs[cid] = np.clip(arr, 0, maxv)
-
-    def finalize_frame():
-        nonlocal frame
-        if frame is None:
-            return
-        fr = frame
-        frame = None
-        if fr["progressive"]:
-            if not fr["grids"]:
-                raise ValueError("JPEG hierarchical frame has no SOS scan")
-            planes = {}
-            for c in fr["comps"]:
-                if c["id"] not in fr["grids"]:
-                    raise ValueError(
-                        "progressive JPEG missing a component's scans"
-                    )
-                if c["tq"] not in qt:
-                    raise ValueError("progressive JPEG missing a DQT table")
-                q = np.asarray(qt[c["tq"]], np.int64)
-                coef = fr["grids"][c["id"]] * q[None, None, :]
-                level = 0.0 if fr["differential"] else float(
-                    1 << (fr["prec"] - 1)
-                )
-                planes[c["id"]] = _idct_int(coef, fr["h"], fr["w"], level)
-            apply_planes(fr, planes)
-        elif not fr["done"]:
-            raise ValueError("JPEG hierarchical frame has no SOS scan")
-
-    while pos + 1 < len(payload):
-        if payload[pos] != 0xFF:
-            raise ValueError("JPEG marker sync lost")
-        marker = payload[pos + 1]
-        if marker == 0xFF:
-            pos += 1
-            continue
-        pos += 2
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            continue
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack_from(">H", payload, pos)
-        seg = payload[pos + 2 : pos + seglen]
-        pos += seglen
-        if marker == 0xDB:
-            p = 0
-            while p < len(seg):
-                pq, tq = seg[p] >> 4, seg[p] & 15
-                p += 1
-                if pq == 0:
-                    qt[tq] = np.frombuffer(seg, np.uint8, 64, p).astype(
-                        np.int64
-                    )
-                    p += 64
-                else:
-                    qt[tq] = np.frombuffer(seg, ">u2", 64, p).astype(np.int64)
-                    p += 128
-        elif marker == 0xC4:
-            from .multimodal import _build_jpeg_huff
-
-            p = 0
-            while p < len(seg):
-                tc, th = seg[p] >> 4, seg[p] & 15
-                p += 1
-                counts = list(seg[p : p + 16])
-                p += 16
-                n = sum(counts)
-                syms = list(seg[p : p + n])
-                p += n
-                (huff_dc if tc == 0 else huff_ac)[th] = _build_jpeg_huff(
-                    counts, syms
-                )
-        elif marker == 0xCC:
-            p = 0
-            while p + 1 < len(seg):
-                tc, tb = seg[p] >> 4, seg[p] & 15
-                cs_val = seg[p + 1]
-                p += 2
-                if tc == 0:
-                    dc_cond[tb] = (cs_val & 15, cs_val >> 4)
-                else:
-                    ac_cond[tb] = cs_val
-        elif marker == 0xDD:
-            (ri,) = struct.unpack_from(">H", seg, 0)
-        elif marker == _DHP:
-            if dhp is not None:
-                raise ValueError("JPEG stream with two DHP headers")
-            h, w = struct.unpack_from(">HH", seg, 1)
-            nc = seg[5]
-            dhp = (int(seg[0]), int(h), int(w),
-                   [seg[6 + 3 * i] for i in range(nc)])
-        elif marker == _EXP:
-            finalize_frame()
-            pending_exp = (seg[0] >> 4, seg[0] & 15)
-        elif marker in _NONDIFF_SOFS or marker in _DIFF_SOFS:
-            finalize_frame()
-            if dhp is None:
-                raise ValueError("JPEG hierarchical frame before DHP")
-            differential = marker in _DIFF_SOFS
-            prec = int(seg[0])
-            fh, fw = struct.unpack_from(">HH", seg, 1)
-            nc = seg[5]
-            comps = [
-                {
-                    "id": seg[6 + 3 * i],
-                    "h": seg[7 + 3 * i] >> 4,
-                    "v": seg[7 + 3 * i] & 15,
-                    "tq": seg[8 + 3 * i],
-                    "prec": prec,
-                }
-                for i in range(nc)
-            ]
-            unknown = [c["id"] for c in comps if c["id"] not in dhp[3]]
-            if unknown:
-                raise ValueError(
-                    f"JPEG frame components {unknown} not declared in DHP"
-                )
-            if differential:
-                eh, ev = pending_exp if pending_exp else (0, 0)
-                for cid in [c["id"] for c in comps]:
-                    if cid not in refs:
-                        raise ValueError(
-                            "JPEG differential frame with no reference"
-                        )
-                    refs[cid] = _upsample_ref(
-                        refs[cid], eh, ev, int(fh), int(fw)
-                    )
-            pending_exp = None
-            frame = {
-                "marker": marker,
-                "differential": differential,
-                "progressive": marker in (0xC2, 0xC6, 0xCA, 0xCE),
-                "arith": marker in (0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF),
-                "lossless": marker in (0xC3, 0xC7, 0xCB, 0xCF),
-                "prec": prec,
-                "h": int(fh),
-                "w": int(fw),
-                "comps": comps,
-                "grids": {},
-                "done": False,
-            }
-        elif marker == 0xDA:
-            if frame is None:
-                raise ValueError("JPEG SOS without an open frame")
-            ns = seg[0]
-            scan = [
-                (seg[1 + 2 * i], seg[2 + 2 * i] >> 4, seg[2 + 2 * i] & 15)
-                for i in range(ns)
-            ]
-            band = seg[1 + 2 * ns : 4 + 2 * ns]
-            end = _jpeg_entropy_end(payload, pos)
-            data = payload[pos:end]
-            fr = frame
-            if fr["lossless"]:
-                dec_fn = (
-                    _decode_frame_lossless_arith
-                    if fr["arith"]
-                    else _decode_frame_lossless_huff
-                )
-                tables = dc_cond if fr["arith"] else huff_dc
-                planes = dec_fn(
-                    data, fr["h"], fr["w"], fr["comps"], scan, tables,
-                    band[0], band[2] & 15, ri, fr["differential"],
-                )
-                if band[2] & 15:  # point transform: samples scale up
-                    planes = {c: (p << (band[2] & 15)) for c, p in
-                              planes.items()}
-                apply_planes(fr, planes)
-                fr["done"] = True
-            elif fr["progressive"]:
-                from .multimodal import (
-                    _jpeg_progressive_scan,
-                    _jpeg_progressive_scan_arith,
-                )
-
-                soft = (fr["h"], fr["w"], len(fr["comps"]), fr["prec"])
-                b4 = (band[0], band[1], band[2] >> 4, band[2] & 15)
-                if fr["arith"]:
-                    _jpeg_progressive_scan_arith(
-                        data, fr["grids"], soft, fr["comps"], scan, b4,
-                        dc_cond, ac_cond, ri, fr["differential"],
-                    )
-                else:
-                    _jpeg_progressive_scan(
-                        data, fr["grids"], soft, fr["comps"], scan, b4,
-                        huff_dc, huff_ac, ri, fr["differential"],
-                    )
-            else:
-                dec_fn = (
-                    _decode_frame_dct_arith
-                    if fr["arith"]
-                    else _decode_frame_dct_huff
-                )
-                grids = dec_fn(
-                    data, fr["h"], fr["w"], fr["comps"], scan, qt,
-                    dc_cond if fr["arith"] else huff_dc,
-                    ac_cond if fr["arith"] else huff_ac,
-                    ri, fr["differential"],
-                )
-                level = 0.0 if fr["differential"] else float(
-                    1 << (fr["prec"] - 1)
-                )
-                planes = {
-                    cid: _idct_int(g, fr["h"], fr["w"], level)
-                    for cid, g in grids.items()
-                }
-                apply_planes(fr, planes)
-                fr["done"] = True
-            pos = end
-        # APPn / COM: skipped
-    finalize_frame()
-    if dhp is None:
-        raise ValueError("JPEG hierarchical stream without DHP")
-    prec, H, W, cids = dhp
-    missing = [cid for cid in cids if cid not in refs]
-    if missing:
-        raise ValueError(f"JPEG hierarchy never coded components {missing}")
-    planes = [refs[cid] for cid in cids]
-    if any(p.shape != (H, W) for p in planes):
-        raise ValueError(
-            "JPEG hierarchy ended below the DHP resolution "
-            f"({[p.shape for p in planes]} vs {(H, W)})"
-        )
-    return _planes_to_rgb(planes, prec)
-
-
-def _planes_to_rgb(planes, prec: int):
-    """Final render, matching `multimodal._jpeg_render`'s conventions:
-    1 component → gray replicate, 3 → JFIF YCbCr→RGB; precision > 8
-    scales to the uint8 feature domain."""
-    np = _np()
-    level = float(1 << (prec - 1))
-    maxv = float((1 << prec) - 1)
-
-    def to_u8(a):
-        a = np.clip(np.round(a), 0, maxv)
-        if prec != 8:
-            a = np.round(a * (255.0 / maxv))
-        return a.astype(np.uint8)
-
-    if len(planes) == 1:
-        g = to_u8(planes[0].astype(np.float64))
-        return np.repeat(g[:, :, None], 3, axis=2)
-    if len(planes) != 3:
-        raise ValueError(
-            f"JPEG hierarchical with {len(planes)} components unsupported"
-        )
-    y = planes[0].astype(np.float64)
-    cb = planes[1].astype(np.float64) - level
-    cr = planes[2].astype(np.float64) - level
-    rgb = np.stack(
-        [
-            y + 1.402 * cr,
-            y - 0.344136 * cb - 0.714136 * cr,
-            y + 1.772 * cb,
-        ],
-        axis=2,
-    )
-    return to_u8(rgb)
+def _add_to_ref(ref, diff, lossless: bool, maxv: int):
+    """A differential frame's decoded samples added to its reference:
+    modulo 2^16 in a lossless frame, else clamped to [0, maxv]."""
+    if lossless:
+        return (ref + diff) & 0xFFFF
+    return np.clip(ref + diff, 0, maxv)
 
 
 # ---------------------------------------------------------------------------
@@ -735,55 +95,9 @@ def _planes_to_rgb(planes, prec: int):
 # ---------------------------------------------------------------------------
 
 
-def _fdct_zz(plane, quant: int, level: float):
-    """float plane → quantized zigzag blocks (nby, nbx, 64)."""
-    np = _np()
-    from .multimodal import _JPEG_ZIGZAG, _jpeg_dct_basis
-
-    h, w = plane.shape
-    nby, nbx = -(-h // 8), -(-w // 8)
-    padded = np.pad(
-        plane.astype(np.float64),
-        ((0, nby * 8 - h), (0, nbx * 8 - w)),
-        mode="edge",
-    )
-    blocks = padded.reshape(nby, 8, nbx, 8).transpose(0, 2, 1, 3) - level
-    basis = _jpeg_dct_basis()
-    coef = np.einsum("ux,rcxy,vy->rcuv", basis, blocks, basis)
-    q = np.round(coef / float(quant)).astype(np.int64)
-    zz = np.asarray(_JPEG_ZIGZAG)
-    return q.reshape(nby, nbx, 64)[:, :, zz]
-
-
-def _seg(marker: int, body: bytes) -> bytes:
-    import struct
-
-    return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-
-def _huff_seq_tables():
-    """The fixture single-length tables `encode_jpeg` uses (DC 4-bit
-    categories 0-11, AC 8-bit) as (dc_code, ac_code, DHT segments)."""
-    dc_code = {s: (s, 4) for s in range(12)}
-    ac_order = [0x00, 0xF0] + [
-        (r << 4) | s for r in range(16) for s in range(1, 11)
-    ]
-    ac_code = {sym: (i, 8) for i, sym in enumerate(ac_order)}
-    dht_dc = bytes([0x00]) + bytes(
-        [12 if n == 4 else 0 for n in range(1, 17)]
-    ) + bytes(range(12))
-    dht_ac = bytes([0x10]) + bytes(
-        [len(ac_order) if n == 8 else 0 for n in range(1, 17)]
-    ) + bytes(ac_order)
-    return dc_code, ac_code, _seg(0xC4, dht_dc) + _seg(0xC4, dht_ac)
-
-
 def _emit_dct_frame_huff(blocks_per_comp, differential, progressive):
     """Entropy bytes for a (differential) DCT frame, Huffman. Returns
     (scan list of (sos_body, entropy_bytes), dht_segments)."""
-    np = _np()
-    from .multimodal import _JpegBitWriter
-
     dc_code, ac_code, dht = _huff_seq_tables()
     nc = len(blocks_per_comp)
     nby, nbx = blocks_per_comp[0].shape[:2]
@@ -827,11 +141,7 @@ def _emit_dct_frame_huff(blocks_per_comp, differential, progressive):
                         preds[ci] = dc
                     put_ac(wtr, zzb, 1, 63)
         wtr.pad_to_byte()
-        sos = bytes([nc])
-        for i in range(nc):
-            sos += bytes([i + 1, 0x00])
-        sos += bytes([0, 63, 0])
-        scans.append((sos, bytes(wtr.out)))
+        scans.append((_sos_body(range(nc), 0, 63), bytes(wtr.out)))
         return scans, dht
     # progressive: one interleaved DC scan + one AC scan per component
     wtr = _JpegBitWriter()
@@ -844,20 +154,14 @@ def _emit_dct_frame_huff(blocks_per_comp, differential, progressive):
                 if not differential:
                     preds[ci] = dc
     wtr.pad_to_byte()
-    sos = bytes([nc])
-    for i in range(nc):
-        sos += bytes([i + 1, 0x00])
-    sos += bytes([0, 0, 0])
-    scans.append((sos, bytes(wtr.out)))
+    scans.append((_sos_body(range(nc), 0, 0), bytes(wtr.out)))
     for ci, blocks in enumerate(blocks_per_comp):
         wtr = _JpegBitWriter()
         for byi in range(nby):
             for bxi in range(nbx):
                 put_ac(wtr, blocks[byi, bxi], 1, 63)
         wtr.pad_to_byte()
-        scans.append(
-            (bytes([1, ci + 1, 0x00, 1, 63, 0]), bytes(wtr.out))
-        )
+        scans.append((_sos_body([ci], 1, 63), bytes(wtr.out)))
     return scans, dht
 
 
@@ -884,11 +188,7 @@ def _emit_dct_frame_arith(blocks_per_comp, differential, progressive):
                         enc, cs, ci + 1, 0, int(zzb[0]), differential
                     )
                     ja._encode_ac(enc, cs, 0, zzb)
-        sos = bytes([nc])
-        for i in range(nc):
-            sos += bytes([i + 1, 0x00])
-        sos += bytes([0, 63, 0])
-        scans.append((sos, enc.flush()))
+        scans.append((_sos_body(range(nc), 0, 63), enc.flush()))
         return scans, dac
     # progressive: DC scan then per-component AC scans, each its own
     # coder + statistics (scans are independent entropy intervals)
@@ -902,11 +202,7 @@ def _emit_dct_frame_arith(blocks_per_comp, differential, progressive):
                     enc, cs, ci + 1, 0, int(blocks[byi, bxi, 0]),
                     differential,
                 )
-    sos = bytes([nc])
-    for i in range(nc):
-        sos += bytes([i + 1, 0x00])
-    sos += bytes([0, 0, 0])
-    scans.append((sos, enc.flush()))
+    scans.append((_sos_body(range(nc), 0, 0), enc.flush()))
     for ci, blocks in enumerate(blocks_per_comp):
         cs = ja._CondState(scan_comps, {0: (0, 1)}, {0: 5})
         cs.reset(scan_comps)
@@ -914,63 +210,30 @@ def _emit_dct_frame_arith(blocks_per_comp, differential, progressive):
         for byi in range(nby):
             for bxi in range(nbx):
                 ja._encode_ac(enc, cs, 0, blocks[byi, bxi], 1, 63, 0)
-        scans.append((bytes([1, ci + 1, 0x00, 1, 63, 0]), enc.flush()))
+        scans.append((_sos_body([ci], 1, 63), enc.flush()))
     return scans, dac
 
 
 def _emit_lossless_frame_huff(planes, differential):
     """Entropy bytes for a (differential) lossless frame, Huffman
-    (5-bit category table). Values are coded mod-2^16."""
-    from .multimodal import _JpegBitWriter
-
-    code = {s: (s, 5) for s in range(17)}
-    dht = _seg(
-        0xC4,
-        bytes([0x00])
-        + bytes([17 if n == 5 else 0 for n in range(1, 17)])
-        + bytes(range(17)),
-    )
+    (`_huff_lossless_table`), predictor 1 when non-differential."""
+    code, dht = _huff_lossless_table()
     h, w = planes[0].shape
     wtr = _JpegBitWriter()
-    preds = None if differential else [None] * len(planes)
     for y in range(h):
         for x in range(w):
-            for ci, p in enumerate(planes):
-                if differential:
-                    diff = int(p[y, x])
-                else:
-                    # non-differential path unused by the fixtures;
-                    # predictor 1 with the spec row/default rules
-                    if y == 0 and x == 0:
-                        pred = 128
-                    elif x == 0:
-                        pred = int(p[y - 1, 0])
-                    else:
-                        pred = int(p[y, x - 1])
-                    diff = int(p[y, x]) - pred
-                diff &= 0xFFFF
-                if diff >= 0x8000:
-                    diff -= 0x10000
-                if diff in (-32768, 32768):
-                    wtr.put(*code[16])
-                else:
-                    s = abs(diff).bit_length()
-                    wtr.put(*code[s])
-                    if s:
-                        wtr.put(diff if diff >= 0 else diff + (1 << s) - 1, s)
+            for p in planes:
+                pred = _jpeg_ll_predict(p, y, x, 0, 0 if differential else 1, 128)
+                _put_ll_diff(wtr, code, int(p[y, x]) - pred)
     wtr.pad_to_byte()
-    nc = len(planes)
-    sos = bytes([nc])
-    for i in range(nc):
-        sos += bytes([i + 1, 0x00])
-    sos += bytes([0 if differential else 1, 0, 0])
+    sos = _sos_body(range(len(planes)), 0 if differential else 1, 0)
     return [(sos, bytes(wtr.out))], dht
 
 
 def _emit_lossless_frame_arith(planes, differential):
     """Entropy bytes for a (differential) lossless frame, arithmetic
-    (Annex H model, default L=0 U=1 conditioning)."""
-    np = _np()
+    (Annex H model, default L=0 U=1 conditioning), predictor 1 when
+    non-differential."""
     from . import jpeg_arith as ja
 
     dac = _seg(0xCC, bytes([0x00, 0x10]))
@@ -984,38 +247,16 @@ def _emit_lossless_frame_arith(planes, differential):
             left[ci] = 0
         for x in range(w):
             for ci, p in enumerate(planes):
-                if differential:
-                    diff = int(p[y, x])
-                else:
-                    if y == 0 and x == 0:
-                        pred = 128
-                    elif x == 0:
-                        pred = int(p[y - 1, 0])
-                    else:
-                        pred = int(p[y, x - 1])
-                    diff = int(p[y, x]) - pred
-                diff &= 0xFFFF
+                pred = _jpeg_ll_predict(p, y, x, 0, 0 if differential else 1, 128)
+                diff = (int(p[y, x]) - pred) & 0xFFFF
                 if diff >= 0x8000:
                     diff -= 0x10000
                 db = int(above[ci][x]) if y > 0 else 0
                 ja._encode_ll(enc, stats, left[ci], db, 0, 1, diff)
                 left[ci] = diff
                 above[ci][x] = diff
-    nc = len(planes)
-    sos = bytes([nc])
-    for i in range(nc):
-        sos += bytes([i + 1, 0x00])
-    sos += bytes([0 if differential else 1, 0, 0])
+    sos = _sos_body(range(len(planes)), 0 if differential else 1, 0)
     return [(sos, enc.flush())], dac
-
-
-def _sof_body(prec, h, w, nc):
-    import struct
-
-    body = struct.pack(">BHHB", prec, h, w, nc)
-    for i in range(nc):
-        body += bytes([i + 1, 0x11, 0])
-    return body
 
 
 def encode_jpeg_lossless_arith(arr, predictor: int = 1) -> bytes:
@@ -1024,8 +265,6 @@ def encode_jpeg_lossless_arith(arr, predictor: int = 1) -> bytes:
     rules of predictor 1 (the `_emit_lossless_frame_arith` layout).
     Only predictor 1 is emitted (the fixture side codes pred=left with
     the spec's row-start/first-sample rules)."""
-    np = _np()
-
     if predictor != 1:
         raise ValueError("encode_jpeg_lossless_arith: only predictor 1")
     arr = np.asarray(arr, dtype=np.uint8)
@@ -1064,8 +303,6 @@ def encode_jpeg_hierarchical(
     the decoder's reconstruction bit-for-bit (same IDCT/rounding/
     clamp/upsample arithmetic), so every differential frame codes the
     true residual."""
-    np = _np()
-
     if entropy not in ("huffman", "arith"):
         raise ValueError("encode_jpeg_hierarchical: entropy huffman|arith")
     if diff_mode not in ("seq", "prog", "lossless"):
@@ -1075,25 +312,8 @@ def encode_jpeg_hierarchical(
     if levels < 2:
         raise ValueError("encode_jpeg_hierarchical: levels must be >= 2")
     arr = np.asarray(arr, dtype=np.uint8)
-    gray = arr.ndim == 2
     h, w = arr.shape[:2]
-    if gray:
-        src_planes = [arr.astype(np.float64)]
-    else:
-        rgb = arr.astype(np.float64)
-        r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
-        src_planes = [
-            np.clip(np.round(0.299 * r + 0.587 * g + 0.114 * b), 0, 255),
-            np.clip(
-                np.round(-0.168736 * r - 0.331264 * g + 0.5 * b + 128.0),
-                0, 255,
-            ),
-            np.clip(
-                np.round(0.5 * r - 0.418688 * g - 0.081312 * b + 128.0),
-                0, 255,
-            ),
-        ]
-    src_planes = [p.astype(np.int64) for p in src_planes]
+    src_planes = [p.astype(np.int64) for p in _jpeg_source_planes(arr)]
     nc = len(src_planes)
 
     # source pyramid: 2× box-downsample per level (encoder's choice —
@@ -1114,7 +334,7 @@ def encode_jpeg_hierarchical(
         pyramid.insert(0, ds)
 
     out = bytearray(b"\xff\xd8")
-    out += _seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+    out += _seg(0xE0, _JFIF)
     out += _seg(0xDE, _sof_body(8, h, w, nc))  # DHP at full resolution
     out += _seg(0xDB, bytes([0x00]) + bytes([quant]) * 64)
 
@@ -1140,9 +360,7 @@ def encode_jpeg_hierarchical(
             sof_marker = 0xC9 if arith else 0xC0
             # decoder-mirror reconstruction
             recon = [
-                np.clip(
-                    _idct_int(b * quant, fh, fw, 128.0), 0, 255
-                )
+                np.clip(_jpeg_idct(b * quant, fh, fw, 128.0), 0, 255)
                 for b in blocks
             ]
         elif diff_mode == "lossless":
@@ -1159,7 +377,7 @@ def encode_jpeg_hierarchical(
             )
             sof_marker = 0xCF if arith else 0xC7
             recon = [
-                (r + d) & 0xFFFF for r, d in zip(recon, diffs)
+                _add_to_ref(r, d, True, 255) for r, d in zip(recon, diffs)
             ]
         else:
             prog = diff_mode == "prog"
@@ -1176,7 +394,7 @@ def encode_jpeg_hierarchical(
                 (0xCE if prog else 0xCD) if arith else (0xC6 if prog else 0xC5)
             )
             recon = [
-                np.clip(r + _idct_int(b * quant, fh, fw, 0.0), 0, 255)
+                _add_to_ref(r, _jpeg_idct(b * quant, fh, fw, 0.0), False, 255)
                 for r, b in zip(recon, blocks)
             ]
         out += _seg(sof_marker, _sof_body(8, fh, fw, nc))

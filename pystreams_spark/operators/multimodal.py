@@ -11,18 +11,19 @@ Decode tiers:
   (P6), baseline TIFF (r6: uncompressed strips, both byte orders),
   GIF87a/89a (r6: pure-Python LZW + interlace, first frame),
   PNG from the W3C spec (r6: stdlib zlib inflate + scanline unfilter;
-  8-bit gray/RGB/RGBA/palette), and (r7) JPEG from ITU-T T.81 — both
-  baseline-sequential AND progressive (spectral selection, successive
-  approximation): canonical-Huffman entropy decode, dequant,
-  vectorized IDCT, chroma upsample, YCbCr→RGB — verified against Java
-  ImageIO both directions — with numpy + stdlib alone: header parse →
+  8-bit gray/RGB/RGBA/palette), and JPEG from ITU-T T.81 — every SOF
+  process (sequential, progressive, lossless and hierarchical, Huffman
+  or arithmetic coded) through one decoder: entropy decode, dequant,
+  vectorized IDCT, integer samples, chroma upsample, YCbCr→RGB —
+  verified against Java ImageIO both directions where ImageIO reads
+  the process — with numpy + stdlib alone: header parse →
   ``np.frombuffer`` → per-modality features (dims, mean RGB, grayscale
   thumbnail; sample rate, duration, RMS, zero-crossing rate). This is
   the production kernel shape (bytes→array→features inside an Arrow
   batch), not a mock.
-- Arithmetic-coded JPEG and audio/video codecs (MP3/MP4...) need
-  external codec libs NOT in this container: those payloads yield
-  NULL features with a reason (or raise, policy-switchable).
+- Audio/video codecs (MP3/MP4...) need external codec libraries that
+  are not dependencies: those payloads yield NULL features with a
+  reason (or raise, policy-switchable).
   ``decode_features``'s hash-stub path remains for plumbing tests.
 """
 
@@ -808,7 +809,7 @@ def _decode_gif(payload: bytes):
     raise ValueError("GIF contains no image data")
 
 
-# --- baseline JPEG (ITU-T T.81, public spec) -------------------------------
+# --- JPEG (ITU-T T.81, public spec) ----------------------------------------
 
 # zigzag index -> natural (row-major) coefficient index, T.81 Figure 5
 _JPEG_ZIGZAG = (
@@ -829,6 +830,141 @@ def _jpeg_dct_basis():
     a = np.full(8, np.sqrt(0.25))
     a[0] = np.sqrt(0.125)
     return a[:, None] * c
+
+
+def _jpeg_idct(coef, h: int, w: int, level: float):
+    """Dequantized zigzag coefficient grid (rows, cols, 64) → the
+    rounded int64 sample plane cropped to (h, w): de-zigzag, one
+    vectorized 8×8 inverse DCT over all blocks, plus ``level`` —
+    2^(P−1), or 0 in a differential frame."""
+    import numpy as np
+
+    nat = np.zeros_like(coef)
+    nat[:, :, np.asarray(_JPEG_ZIGZAG)] = coef
+    r, q = nat.shape[0], nat.shape[1]
+    blocks = nat.reshape(r, q, 8, 8).astype(np.float64)
+    basis = _jpeg_dct_basis()
+    spatial = np.einsum("ux,rcuv,vy->rcxy", basis, blocks, basis) + level
+    plane = spatial.transpose(0, 2, 1, 3).reshape(r * 8, q * 8)
+    return np.round(plane[:h, :w]).astype(np.int64)
+
+
+def _fdct_zz(plane, quant: int, level: float):
+    """Float sample plane → quantized zigzag blocks (nby, nbx, 64):
+    edge-padded to whole blocks, minus ``level``, forward DCT, divided
+    by the flat ``quant`` and rounded."""
+    import numpy as np
+
+    h, w = plane.shape
+    nby, nbx = -(-h // 8), -(-w // 8)
+    padded = np.pad(
+        plane.astype(np.float64),
+        ((0, nby * 8 - h), (0, nbx * 8 - w)),
+        mode="edge",
+    )
+    blocks = padded.reshape(nby, 8, nbx, 8).transpose(0, 2, 1, 3) - level
+    basis = _jpeg_dct_basis()
+    coef = np.einsum("ux,rcxy,vy->rcuv", basis, blocks, basis)
+    q = np.round(coef / float(quant)).astype(np.int64)
+    return q.reshape(nby, nbx, 64)[:, :, np.asarray(_JPEG_ZIGZAG)]
+
+
+def _jpeg_source_planes(arr, level: float = 128.0, maxv: int = 255):
+    """Fixture-encoder input → float component planes: an (H, W) array
+    is one gray plane; an (H, W, 3) RGB array becomes JFIF YCbCr,
+    rounded and clipped to [0, maxv]."""
+    import numpy as np
+
+    if arr.ndim == 2:
+        return [arr.astype(np.float64)]
+    rgb = arr.astype(np.float64)
+    r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
+    return [
+        np.clip(np.round(p), 0, maxv)
+        for p in (
+            0.299 * r + 0.587 * g + 0.114 * b,
+            -0.168736 * r - 0.331264 * g + 0.5 * b + level,
+            0.5 * r - 0.418688 * g - 0.081312 * b + level,
+        )
+    ]
+
+
+_JFIF = b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"  # APP0 body
+
+
+def _seg(marker: int, body: bytes) -> bytes:
+    """One marker segment: FF, the marker, the length, the body."""
+    import struct
+
+    return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
+
+
+def _sof_body(prec: int, h: int, w: int, nc: int) -> bytes:
+    """SOF (or DHP) body of the fixture encoders: components 1..nc, all
+    1×1 sampled, all on quantization table 0."""
+    import struct
+
+    body = struct.pack(">BHHB", prec, h, w, nc)
+    for i in range(nc):
+        body += bytes([i + 1, 0x11, 0])
+    return body
+
+
+def _sos_body(idx, ss: int, se: int, ahal: int = 0) -> bytes:
+    """SOS body of the fixture encoders: the 0-based component indexes
+    ``idx`` (ids i+1, entropy tables 0), then Ss, Se and Ah<<4|Al."""
+    body = bytes([len(idx)])
+    for i in idx:
+        body += bytes([i + 1, 0x00])
+    return body + bytes([ss, se, ahal])
+
+
+def _huff_seq_tables(precision: int = 8):
+    """The fixture encoders' single-length canonical Huffman tables as
+    (dc_code, ac_code, DHT segments): DC symbols at 4 bits (8-bit: 12
+    symbols) or 5 bits (12-bit: 16 symbols — 16 four-bit codes would
+    use the forbidden all-ones code), AC symbols at 8 bits. Spec-valid:
+    the all-ones code of each length stays unused (T.81 Annex C)."""
+    n_dc = 12 if precision == 8 else 16
+    dc_bits = 4 if precision == 8 else 5
+    max_sz = 10 if precision == 8 else 14
+    dc_code = {s: (s, dc_bits) for s in range(n_dc)}
+    ac_order = [0x00, 0xF0] + [
+        (r << 4) | s for r in range(16) for s in range(1, max_sz + 1)
+    ]
+    ac_code = {sym: (i, 8) for i, sym in enumerate(ac_order)}
+    dht_dc = bytes([0x00]) + bytes(
+        [n_dc if n == dc_bits else 0 for n in range(1, 17)]
+    ) + bytes(range(n_dc))
+    dht_ac = bytes([0x10]) + bytes(
+        [len(ac_order) if n == 8 else 0 for n in range(1, 17)]
+    ) + bytes(ac_order)
+    return dc_code, ac_code, _seg(0xC4, dht_dc) + _seg(0xC4, dht_ac)
+
+
+def _huff_lossless_table():
+    """The lossless fixture encoders' Huffman table: categories 0..16
+    at 5 bits, as (code, DHT segment)."""
+    dht = bytes([0x00]) + bytes(
+        [17 if n == 5 else 0 for n in range(1, 17)]
+    ) + bytes(range(17))
+    return {s: (s, 5) for s in range(17)}, _seg(0xC4, dht)
+
+
+def _put_ll_diff(wtr, code, diff: int) -> None:
+    """One lossless difference, taken modulo 2^16 to its signed
+    representative: the category code, then the magnitude bits
+    (category 16, ±32768, has none)."""
+    diff &= 0xFFFF
+    if diff >= 0x8000:
+        diff -= 0x10000
+    if diff == -32768:
+        wtr.put(*code[16])
+        return
+    s = abs(diff).bit_length()
+    wtr.put(*code[s])
+    if s:
+        wtr.put(diff if diff >= 0 else diff + (1 << s) - 1, s)
 
 
 def _build_jpeg_huff(counts, symbols):
@@ -906,9 +1042,9 @@ def _jpeg_extend(v: int, s: int) -> int:
     return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
 
-def _jpeg_decode_block(bits, dc_tbl, ac_tbl, q_zz, pred, cid, dc_max=11):
-    """One 8×8 block: DC diff + RLE'd AC coefficients, dequantized, in
-    zigzag order (int32[64]). ``dc_max`` = 11 at 8-bit precision, 15
+def _jpeg_decode_block(bits, dc_tbl, ac_tbl, pred, cid, dc_max=11):
+    """One 8×8 block: DC diff + RLE'd AC coefficients, quantized, in
+    zigzag order (int64[64]). ``dc_max`` = 11 at 8-bit precision, 15
     at 12-bit (T.81 Table F.1)."""
     import numpy as np
 
@@ -917,7 +1053,7 @@ def _jpeg_decode_block(bits, dc_tbl, ac_tbl, q_zz, pred, cid, dc_max=11):
     if s > dc_max:
         raise ValueError("JPEG DC category out of range")
     pred[cid] += _jpeg_extend(bits.read(s), s)
-    zz[0] = pred[cid] * int(q_zz[0])
+    zz[0] = pred[cid]
     k = 1
     while k < 64:
         rs = _jpeg_huff_decode(bits, ac_tbl)
@@ -930,7 +1066,7 @@ def _jpeg_decode_block(bits, dc_tbl, ac_tbl, q_zz, pred, cid, dc_max=11):
         k += r
         if k > 63:
             raise ValueError("JPEG AC coefficient index overrun")
-        zz[k] = _jpeg_extend(bits.read(s), s) * int(q_zz[k])
+        zz[k] = _jpeg_extend(bits.read(s), s)
         k += 1
     return zz
 
@@ -973,29 +1109,35 @@ def _decode_jpeg(payload: bytes):
         raise ValueError(f"malformed JPEG: {exc}") from None
 
 
+# SOF0–3, 5–7, 9–11 and 13–15 (T.81 Table B.1)
+_JPEG_SOFS = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+
+
 def _decode_jpeg_parse(payload: bytes):
-    """Huffman-coded JPEG (ITU-T T.81, public spec) → (H, W, 3) uint8
-    RGB: marker/segment parse → canonical-Huffman entropy decode (flat
-    16-bit-prefix lookup) → dequantize → vectorized 8×8 IDCT (one
-    einsum per component over all blocks) → chroma upsample (sample
-    replication) → JFIF YCbCr→RGB. Supports baseline/extended
-    sequential (SOF0/SOF1) AND progressive (SOF2 — spectral selection,
-    successive approximation, EOB runs; r7, T.81 Annex G), 1- or
-    3-component scans, arbitrary integer sampling ratios (4:4:4 /
-    4:2:2 / 4:2:0), restart intervals, and stuffed-byte framing.
-    r8 additions: ARITHMETIC coding, sequential AND progressive
-    (SOF9/SOF10 + DAC — the T.81 Annex D/F QM coder in
-    `jpeg_arith.py`); LOSSLESS (SOF3, Annex H DPCM, all 7 predictors);
-    12-bit precision (SOF1); 4-component Adobe CMYK/YCCK (APP14).
-    r9 additions: HIERARCHICAL/differential (DHP/EXP + SOF5-7/13-15,
-    Annex J — `jpeg_hier.py`) and ARITHMETIC LOSSLESS (SOF11, Annex H
-    statistical model). Every T.81 SOF process now decodes; the only
-    remaining media refusals are environmental (MP3/MP4 — no ffmpeg).
-    A differential SOF with no DHP refuses as malformed, by name —
-    same honest-refusal policy as the TIFF/Avro codecs."""
+    """JPEG (ITU-T T.81, public spec) → (H, W, 3) uint8 RGB, for every
+    SOF process.
+
+    One segment loop reads the tables (DQT, DHT, DAC, DRI, APP14) and
+    the frames. A frame's scans decode into per-component coefficient
+    grids — sequential (`_jpeg_decode_scan`, `_jpeg_decode_scan_arith`)
+    or progressive (`_jpeg_progressive_scan*`), Huffman or arithmetic
+    coded (Annexes F, G and D) — or into sample planes (lossless DPCM,
+    Annex H, `_jpeg_decode_scan_lossless`). A finished frame is
+    reconstructed once: IDCT, then each component rounded and clamped
+    to P-bit integer samples. A plain stream has one frame. A
+    hierarchical stream (DHP, Annex J) has several: a non-differential
+    frame sets the reference planes, and a differential frame (SOF5–7,
+    SOF13–15) adds its samples to them, first upsampled as the
+    preceding EXP marker asks (`jpeg_hier`). The final planes, at the
+    frame's or the DHP's size, go through the one colour render
+    (`_jpeg_render`). Sampling factors must be whole ratios, and
+    lossless and hierarchical frames 1×1. A differential SOF outside
+    a DHP stream refuses as malformed, by name."""
     import struct
 
     import numpy as np
+
+    from .jpeg_hier import _add_to_ref, _upsample_ref
 
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG payload")
@@ -1003,16 +1145,48 @@ def _decode_jpeg_parse(payload: bytes):
     qt: dict[int, object] = {}
     huff_dc: dict[int, object] = {}
     huff_ac: dict[int, object] = {}
-    sof = None
-    comps: list[dict] = []
-    restart_interval = 0
-    progressive = False
-    arith = False  # SOF9: sequential arithmetic (r8, T.81 Annex D/F)
-    lossless = False  # SOF3 (r8, T.81 Annex H)
     dc_cond: dict[int, tuple] = {}  # DAC: table id → (L, U)
     ac_cond: dict[int, int] = {}  # DAC: table id → Kx
+    ri = 0
     adobe: int | None = None  # APP14 transform: 0 CMYK/RGB, 1 YCbCr, 2 YCCK
-    grids: dict[int, object] = {}  # progressive: cid → raw coef grid
+    dhp = None  # a hierarchical stream's DHP: (sof, comps)
+    exp = (0, 0)  # EXP (Eh, Ev) for the next differential frame
+    # the open frame: (SOF marker, sof, comps, grids, quant); grids maps
+    # cid → coefficient grid (DCT) or sample plane (lossless), quant
+    # maps cid → the DQT table in force at its first scan
+    frame = None
+    last = None  # the last frame opened
+    refs: dict[int, object] = {}  # cid → reconstructed integer plane
+
+    def close_frame():
+        nonlocal frame
+        if frame is None:
+            return
+        marker, (h, w, _nc, prec), comps, grids, quant = frame
+        frame = None
+        if not grids:
+            raise ValueError("JPEG frame has no SOS scan")
+        hmax = max(c["h"] for c in comps)
+        vmax = max(c["v"] for c in comps)
+        maxv = (1 << prec) - 1
+        for c in comps:
+            cid = c["id"]
+            if cid not in grids:
+                continue
+            if marker & 3 == 3:  # lossless: grids hold samples
+                plane = grids[cid]
+            else:
+                plane = _jpeg_idct(
+                    grids[cid] * quant[cid],
+                    -(-h * c["v"] // vmax),
+                    -(-w * c["h"] // hmax),
+                    0.0 if marker & 4 else float(1 << (prec - 1)),
+                )
+            if marker & 4:
+                refs[cid] = _add_to_ref(refs[cid], plane, marker & 3 == 3, maxv)
+            else:
+                refs[cid] = np.clip(plane, 0, maxv)
+
     while pos + 1 < len(payload):
         if payload[pos] != 0xFF:
             raise ValueError("JPEG marker sync lost")
@@ -1065,28 +1239,35 @@ def _decode_jpeg_parse(payload: bytes):
                     dc_cond[tb] = (cs_val & 15, cs_val >> 4)  # (L, U)
                 else:
                     ac_cond[tb] = cs_val  # Kx
-        elif marker == 0xDE:  # DHP: hierarchical stream (r9, Annex J)
-            from .jpeg_hier import decode_jpeg_hierarchical
-
-            return decode_jpeg_hierarchical(payload)
-        elif marker in (0xC0, 0xC1, 0xC2, 0xC3, 0xC9, 0xCA, 0xCB):
-            # SOF0/SOF1 sequential, SOF2 progressive, SOF3 lossless
-            # (r8), SOF9 sequential arithmetic, SOF10 progressive
-            # arithmetic (both r8), SOF11 arithmetic lossless (r9,
-            # Annex H model in jpeg_arith/jpeg_hier)
-            if marker in (0xC3, 0xCB):
-                if not 2 <= seg[0] <= 16:
-                    raise ValueError(
-                        f"JPEG lossless precision {seg[0]} invalid (2-16)"
-                    )
-            elif seg[0] not in (8, 12):
+        elif marker == 0xDD:  # DRI
+            (ri,) = struct.unpack_from(">H", seg, 0)
+        elif marker == 0xDF and dhp is not None:  # EXP
+            close_frame()
+            exp = (seg[0] >> 4, seg[0] & 15)
+        elif marker == 0xDE or marker in _JPEG_SOFS:
+            # SOF marker bits: 2 = differential; 1–0 = sequential (0,
+            # 1), progressive (2) or lossless (3); 3 = arithmetic
+            if marker != 0xDE and marker & 4 and dhp is None:
                 raise ValueError(
-                    f"JPEG {seg[0]}-bit precision unsupported (8 or 12)"
+                    f"JPEG differential SOF marker 0x{marker:02X} outside a "
+                    "hierarchical (DHP) stream — malformed"
                 )
-            h, w = struct.unpack_from(">HH", seg, 1)
-            nc = seg[5]
+            close_frame()
+            prec, nc = seg[0], seg[5]
+            if marker == 0xDE or marker & 3 == 3:
+                if not 2 <= prec <= 16:
+                    raise ValueError(
+                        f"JPEG lossless/hierarchical precision {prec} "
+                        "invalid (2-16)"
+                    )
+            elif prec not in (8, 12):
+                raise ValueError(
+                    f"JPEG {prec}-bit precision unsupported (8 or 12)"
+                )
             if nc not in (1, 3, 4):
                 raise ValueError(f"JPEG with {nc} components unsupported")
+            h, w = struct.unpack_from(">HH", seg, 1)
+            sof = (int(h), int(w), nc, prec)
             comps = [
                 {
                     "id": seg[6 + 3 * i],
@@ -1096,86 +1277,155 @@ def _decode_jpeg_parse(payload: bytes):
                 }
                 for i in range(nc)
             ]
-            sof = (int(h), int(w), int(nc), int(seg[0]))
-            progressive = marker in (0xC2, 0xCA)
-            arith = marker in (0xC9, 0xCA, 0xCB)
-            lossless = marker in (0xC3, 0xCB)
-        elif marker in (0xC5, 0xC6, 0xC7, 0xCD, 0xCE, 0xCF):
-            raise ValueError(
-                f"JPEG differential SOF marker 0x{marker:02X} outside a "
-                "hierarchical (DHP) stream — malformed"
-            )
-        elif marker == 0xDD:  # DRI
-            (restart_interval,) = struct.unpack_from(">H", seg, 0)
+            hmax = max(c["h"] for c in comps)
+            vmax = max(c["v"] for c in comps)
+            for c in comps:
+                if c["h"] < 1 or c["v"] < 1 or hmax % c["h"] or vmax % c["v"]:
+                    raise ValueError("JPEG fractional sampling ratio unsupported")
+            if hmax * vmax > 1 and (
+                marker & 3 == 3 or marker == 0xDE or dhp is not None
+            ):
+                raise ValueError(
+                    "JPEG lossless or hierarchical frame with subsampled "
+                    "components unsupported"
+                )
+            if marker == 0xDE:
+                if dhp is not None or last is not None:
+                    raise ValueError("JPEG DHP must come once, before every frame")
+                dhp = (sof, comps)
+                continue
+            if dhp is not None:
+                declared = {c["id"] for c in dhp[1]}
+                unknown = [c["id"] for c in comps if c["id"] not in declared]
+                if unknown:
+                    raise ValueError(
+                        f"JPEG frame components {unknown} not declared in DHP"
+                    )
+                if marker & 4:
+                    for c in comps:
+                        if c["id"] not in refs:
+                            raise ValueError(
+                                "JPEG differential frame with no reference"
+                            )
+                        refs[c["id"]] = _upsample_ref(refs[c["id"]], *exp, h, w)
+                exp = (0, 0)
+            frame = last = (marker, sof, comps, {}, {})
         elif marker == 0xDA:  # SOS
-            if sof is None:
+            if frame is None:
                 raise ValueError("JPEG SOS before SOF")
+            fm, sof, comps, grids, quant = frame
             ns = seg[0]
             scan = [
                 (seg[1 + 2 * i], seg[2 + 2 * i] >> 4, seg[2 + 2 * i] & 15)
                 for i in range(ns)
             ]
-            if lossless:
-                if ns != sof[2]:
-                    raise ValueError("JPEG multi-scan lossless unsupported")
-                band = seg[1 + 2 * ns : 4 + 2 * ns]  # Ss=pred, Se, Ah<<4|Al
-                if arith:  # SOF11 (r9)
-                    from .jpeg_hier import decode_jpeg_lossless_arith_scan
-
-                    return decode_jpeg_lossless_arith_scan(
-                        payload[pos:], sof, comps, scan, dc_cond,
-                        band[0], band[2] & 15, restart_interval,
-                    )
-                return _jpeg_decode_scan_lossless(
-                    payload[pos:], sof, comps, scan, huff_dc,
-                    band[0], band[2] & 15, restart_interval,
-                )
-            if arith and not progressive:
-                if ns != sof[2]:
-                    raise ValueError("JPEG multi-scan sequential unsupported")
-                return _jpeg_decode_scan_arith(
-                    payload[pos:], sof, comps, scan, qt, dc_cond, ac_cond,
-                    restart_interval, adobe,
-                )
-            if not progressive:
-                if ns != sof[2]:
-                    raise ValueError("JPEG multi-scan sequential unsupported")
-                return _jpeg_decode_scan(
-                    payload[pos:], sof, comps, scan, qt, huff_dc, huff_ac,
-                    restart_interval, adobe,
-                )
-            band = tuple(seg[1 + 2 * ns : 4 + 2 * ns])  # Ss, Se, Ah<<4|Al
+            ss, se, ahal = seg[1 + 2 * ns], seg[2 + 2 * ns], seg[3 + 2 * ns]
+            by_id = {c["id"]: c for c in comps}
+            for cid, _td, _ta in scan:
+                if cid not in by_id:
+                    raise ValueError("JPEG scan references unknown component")
+                if fm & 3 != 3 and cid not in quant:
+                    if by_id[cid]["tq"] not in qt:
+                        raise ValueError(
+                            "JPEG scan references a missing DQT table"
+                        )
+                    quant[cid] = qt[by_id[cid]["tq"]]
             end = _jpeg_entropy_end(payload, pos)
-            if arith:
-                _jpeg_progressive_scan_arith(
-                    payload[pos:end], grids, sof, comps, scan,
-                    (band[0], band[1], band[2] >> 4, band[2] & 15),
-                    dc_cond, ac_cond, restart_interval,
+            data = payload[pos:end]
+            pos = end
+            diff = bool(fm & 4)
+            if fm & 3 == 2:
+                band = (ss, se, ahal >> 4, ahal & 15)
+                if fm & 8:
+                    _jpeg_progressive_scan_arith(
+                        data, grids, sof, comps, scan, band, dc_cond,
+                        ac_cond, ri, diff,
+                    )
+                else:
+                    _jpeg_progressive_scan(
+                        data, grids, sof, comps, scan, band, huff_dc,
+                        huff_ac, ri, diff,
+                    )
+                continue
+            if ns != sof[2]:
+                raise ValueError("JPEG multi-scan sequential/lossless unsupported")
+            if fm & 3 == 3:
+                if diff != (ss == 0) or ss > 7:
+                    raise ValueError(
+                        f"JPEG lossless predictor {ss} invalid "
+                        f"({'0' if diff else '1-7'})"
+                    )
+                grids.update(_jpeg_decode_scan_lossless(
+                    data, sof, scan, dc_cond if fm & 8 else huff_dc, ss,
+                    ahal & 15, ri, fm & 8,
+                ))
+            elif fm & 8:
+                _jpeg_decode_scan_arith(
+                    data, grids, sof, comps, scan, dc_cond, ac_cond, ri, diff
                 )
             else:
-                _jpeg_progressive_scan(
-                    payload[pos:end], grids, sof, comps, scan,
-                    (band[0], band[1], band[2] >> 4, band[2] & 15),
-                    huff_dc, huff_ac, restart_interval,
+                _jpeg_decode_scan(
+                    data, grids, sof, comps, scan, huff_dc, huff_ac, ri, diff
                 )
-            pos = end
+            if dhp is None:
+                break  # a plain sequential frame ends with its one scan
         # APPn / COM / others: skipped
-    if progressive and grids:
-        import numpy as np
+    close_frame()
+    if dhp is None and last is None:
+        raise ValueError("JPEG has no SOS scan")
+    (H, W, nc, prec), comps = dhp or last[1:3]
+    missing = [c["id"] for c in comps if c["id"] not in refs]
+    if missing:
+        raise ValueError(f"JPEG never coded components {missing}")
+    hmax = max(c["h"] for c in comps)
+    vmax = max(c["v"] for c in comps)
+    planes = []
+    for c in comps:
+        p = refs[c["id"]]
+        if dhp is not None and p.shape != (H, W):
+            raise ValueError(
+                "JPEG hierarchy ended below the DHP resolution "
+                f"({p.shape} vs {(H, W)})"
+            )
+        p = np.repeat(p, vmax // c["v"], axis=0)
+        planes.append(np.repeat(p, hmax // c["h"], axis=1)[:H, :W])
+    # three components are YCbCr, except in a plain lossless stream
+    # (`encode_jpeg_lossless` codes RGB); four are YCCK under APP14
+    # transform 2, else CMYK
+    if nc == 4:
+        ycc = adobe == 2
+    else:
+        ycc = dhp is not None or last[0] & 3 != 3
+    return _jpeg_render(planes, prec, ycc)
 
-        comp_grids = []
-        for c in comps:
-            if c["id"] not in grids:
-                raise ValueError("progressive JPEG missing a component's scans")
-            if c["tq"] not in qt:
-                raise ValueError("progressive JPEG missing a DQT table")
-            q = np.asarray(qt[c["tq"]], dtype=np.int64)
-            comp_grids.append((c, grids[c["id"]] * q[None, None, :]))
-        H, W, _nc, _prec = sof
-        hmax = max(c["h"] for c in comps)
-        vmax = max(c["v"] for c in comps)
-        return _jpeg_render(comp_grids, H, W, hmax, vmax, _prec, adobe)
-    raise ValueError("JPEG has no SOS scan")
+
+def _jpeg_render(planes, prec: int, ycc: bool):
+    """Integer P-bit component planes at full size → (H, W, 3) uint8:
+    one plane is gray; three are JFIF YCbCr when ``ycc``, else RGB;
+    four are Adobe CMYK, with YCbCr in the first three when ``ycc``.
+    CMYK samples are stored in the Adobe-INVERTED convention (maxv =
+    no ink), the one libjpeg and every mainstream consumer assume; no
+    external CMYK codec exists offline to differential against, so
+    our encoder and this render pin it. P ≠ 8 scales to the uint8
+    feature domain by round(v·255/(2^P−1))."""
+    import numpy as np
+
+    level = float(1 << (prec - 1))
+    maxv = float((1 << prec) - 1)
+    p = [a.astype(np.float64) for a in planes]
+    if len(p) > 1 and ycc:
+        y, cb, cr = p[0], p[1] - level, p[2] - level
+        p[:3] = [
+            y + 1.402 * cr,
+            y - 0.344136 * cb - 0.714136 * cr,
+            y + 1.772 * cb,
+        ]
+    if len(p) == 4:
+        p = [a * p[3] / maxv for a in p[:3]]
+    out = np.clip(np.round(np.stack(p * 3 if len(p) == 1 else p, axis=2)), 0, maxv)
+    if prec != 8:
+        out = np.round(out * (255.0 / maxv))
+    return out.astype(np.uint8)
 
 
 def _jpeg_entropy_end(payload: bytes, pos: int) -> int:
@@ -1203,8 +1453,8 @@ def _jpeg_progressive_scan(
     raw-coefficient grids: DC first/refinement scans (interleaved MCU
     order, or block-raster when single-component), AC first/refinement
     scans (always single-component, spectral band Ss..Se, EOBRUN runs,
-    successive-approximation bit plane Al). ``differential`` (r9,
-    hierarchical SOF6 frames — §J.1): DC values are coded without
+    successive-approximation bit plane Al). ``differential``
+    (hierarchical SOF6 frames, §J.1): DC values are coded without
     prediction; AC machinery is unchanged."""
     import numpy as np
 
@@ -1216,9 +1466,7 @@ def _jpeg_progressive_scan(
     my = -(-H // (8 * vmax))
     ss, se, ah, al = band
     for cid, td, ta in scan:
-        c = by_id.get(cid)
-        if c is None:
-            raise ValueError("JPEG scan references unknown component")
+        c = by_id[cid]
         if ss == 0 and ah == 0 and td not in huff_dc:
             raise ValueError("JPEG scan references a missing DC DHT table")
         if ss > 0 and ta not in huff_ac:
@@ -1377,33 +1625,30 @@ def _jpeg_progressive_scan(
                     eobrun -= 1
 
 
-def _jpeg_decode_scan(data, sof, comps, scan, qt, huff_dc, huff_ac, ri,
-                      adobe=None):
+def _jpeg_decode_scan(data, grids, sof, comps, scan, huff_dc, huff_ac, ri,
+                      differential=False):
+    """One interleaved sequential Huffman scan (T.81 Annex F) → the
+    quantized coefficient grid of every scan component, in MCU order
+    with restart intervals. ``differential`` (hierarchical SOF5
+    frames, §J.1): DC values are coded without prediction."""
     import numpy as np
 
-    H, W, _nc, _prec = sof
+    H, W, _nc, prec = sof
     by_id = {c["id"]: c for c in comps}
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
-    for c in comps:
-        if c["h"] < 1 or c["v"] < 1 or hmax % c["h"] or vmax % c["v"]:
-            raise ValueError("JPEG fractional sampling ratio unsupported")
     mx = -(-W // (8 * hmax))
     my = -(-H // (8 * vmax))
-    plan = []  # (comp, dc_tbl, ac_tbl, q_zz, grid) per scan component
     for cid, td, ta in scan:
-        c = by_id.get(cid)
-        if c is None:
-            raise ValueError("JPEG scan references unknown component")
-        if td not in huff_dc or ta not in huff_ac or c["tq"] not in qt:
-            raise ValueError("JPEG scan references a missing DHT/DQT table")
-        grid = np.zeros((my * c["v"], mx * c["h"], 64), np.int64)
-        plan.append((c, huff_dc[td], huff_ac[ta], qt[c["tq"]], grid))
+        if td not in huff_dc or ta not in huff_ac:
+            raise ValueError("JPEG scan references a missing DHT table")
+        c = by_id[cid]
+        grids[cid] = np.zeros((my * c["v"], mx * c["h"], 64), np.int64)
 
     segs = _jpeg_entropy_intervals(data)
     bits = _JpegBits(segs[0])
     seg_i = 0
-    preds = {c["id"]: 0 for c in comps}
+    preds = {cid: 0 for cid, _td, _ta in scan}
     mcu = 0
     for myi in range(my):
         for mxi in range(mx):
@@ -1412,29 +1657,27 @@ def _jpeg_decode_scan(data, sof, comps, scan, qt, huff_dc, huff_ac, ri,
                 if seg_i >= len(segs):
                     raise ValueError("JPEG missing expected restart marker")
                 bits = _JpegBits(segs[seg_i])
-                preds = {c["id"]: 0 for c in comps}
-            for c, dct, act, q_zz, grid in plan:
+                preds = {cid: 0 for cid, _td, _ta in scan}
+            for cid, td, ta in scan:
+                c = by_id[cid]
                 for byi in range(c["v"]):
                     for bxi in range(c["h"]):
-                        grid[myi * c["v"] + byi, mxi * c["h"] + bxi] = (
+                        if differential:
+                            preds[cid] = 0
+                        grids[cid][myi * c["v"] + byi, mxi * c["h"] + bxi] = (
                             _jpeg_decode_block(
-                                bits, dct, act, q_zz, preds, c["id"],
-                                11 if _prec == 8 else 15,
+                                bits, huff_dc[td], huff_ac[ta], preds, cid,
+                                11 if prec == 8 else 15,
                             )
                         )
             mcu += 1
-
-    return _jpeg_render(
-        [(c, grid) for c, _dct, _act, _q, grid in plan], H, W, hmax, vmax,
-        _prec, adobe,
-    )
 
 
 def _jpeg_progressive_scan_arith(
     data, grids, sof, comps, scan, band, dc_cond, ac_cond, ri,
     differential=False,
 ):
-    """One PROGRESSIVE arithmetic scan (SOF10, r8 — T.81 Annex G with
+    """One PROGRESSIVE arithmetic scan (SOF10/SOF14 — T.81 Annex G with
     the Annex D/F coder): DC first scans run the sequential DC model
     in the point-transformed domain, DC refinements are one fixed-bin
     decision per block, AC first scans run the banded AC model with
@@ -1454,9 +1697,7 @@ def _jpeg_progressive_scan_arith(
     my = -(-H // (8 * vmax))
     ss, se, ah, al = band
     for cid, _td, _ta in scan:
-        c = by_id.get(cid)
-        if c is None:
-            raise ValueError("JPEG scan references unknown component")
+        c = by_id[cid]
         if cid not in grids:
             grids[cid] = np.zeros((my * c["v"], mx * c["h"], 64), np.int64)
 
@@ -1551,34 +1792,10 @@ def encode_jpeg_progressive_arith(arr, quant: int = 1,
     from . import jpeg_arith as ja
 
     arr = np.asarray(arr, dtype=np.uint8)
-    gray = arr.ndim == 2
     h, w = arr.shape[:2]
-    if gray:
-        planes = [arr.astype(np.float64)]
-    else:
-        rgb = arr.astype(np.float64)
-        r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
-        planes = [
-            np.round(0.299 * r + 0.587 * g + 0.114 * b),
-            np.round(-0.168736 * r - 0.331264 * g + 0.5 * b + 128.0),
-            np.round(0.5 * r - 0.418688 * g - 0.081312 * b + 128.0),
-        ]
-        planes = [np.clip(p, 0, 255) for p in planes]
-
-    basis = _jpeg_dct_basis()
-    zz = np.asarray(_JPEG_ZIGZAG)
-    nby, nbx = -(-h // 8), -(-w // 8)
-    comp_blocks = []
-    for p in planes:
-        padded = np.pad(p, ((0, nby * 8 - h), (0, nbx * 8 - w)), mode="edge")
-        blocks = (
-            padded.reshape(nby, 8, nbx, 8).transpose(0, 2, 1, 3) - 128.0
-        )
-        coef = np.einsum("ux,rcxy,vy->rcuv", basis, blocks, basis)
-        q = np.round(coef / float(quant)).astype(np.int64)
-        comp_blocks.append(q.reshape(nby, nbx, 64)[:, :, zz])
-
-    nc = 1 if gray else 3
+    comp_blocks = [_fdct_zz(p, quant, 128.0) for p in _jpeg_source_planes(arr)]
+    nby, nbx = comp_blocks[0].shape[:2]
+    nc = len(comp_blocks)
     parts = []  # (sos_body, entropy)
 
     def run_scan(scan_ids, band):
@@ -1614,11 +1831,8 @@ def encode_jpeg_progressive_arith(arr, quant: int = 1,
                         ja._encode_ac_refine(enc, cs, 0, zzb, ss, se, al)
                 unit += 1
         chunks.append(enc.flush())
-        sos = bytes([len(scan_ids)])
-        for i in scan_ids:
-            sos += bytes([i + 1, 0x00])
-        sos += bytes([ss, se, (ah << 4) | al])
-        parts.append((sos, b"".join(chunks)))
+        parts.append((_sos_body(scan_ids, ss, se, (ah << 4) | al),
+                      b"".join(chunks)))
 
     all_ids = list(range(nc))
     run_scan(all_ids, (0, 0, 0, 1))  # DC first, Al=1
@@ -1628,29 +1842,23 @@ def encode_jpeg_progressive_arith(arr, quant: int = 1,
     for i in all_ids:
         run_scan([i], (1, 63, 1, 0))  # AC refinement → Al=0
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    sof_body = struct.pack(">BHHB", 8, h, w, nc)
-    for i in range(nc):
-        sof_body += bytes([i + 1, 0x11, 0])
     out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, bytes([0x00]) + bytes([quant]) * 64)
-    out += seg(0xCA, sof_body)
-    out += seg(0xCC, bytes([0x00, 0x10, 0x10, 0x05]))
+    out += _seg(0xE0, _JFIF)
+    out += _seg(0xDB, bytes([0x00]) + bytes([quant]) * 64)
+    out += _seg(0xCA, _sof_body(8, h, w, nc))
+    out += _seg(0xCC, bytes([0x00, 0x10, 0x10, 0x05]))
     if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
+        out += _seg(0xDD, struct.pack(">H", restart_interval))
     for sos_body, entropy in parts:
-        out += seg(0xDA, sos_body)
+        out += _seg(0xDA, sos_body)
         out += entropy
     out += b"\xff\xd9"
     return bytes(out)
 
 
-def _jpeg_decode_scan_arith(data, sof, comps, scan, qt, dc_cond, ac_cond, ri,
-                            adobe=None):
-    """Sequential ARITHMETIC scan (SOF9, r8): same MCU walk as
+def _jpeg_decode_scan_arith(data, grids, sof, comps, scan, dc_cond, ac_cond,
+                            ri, differential=False):
+    """Sequential ARITHMETIC scan (SOF9/SOF13): same MCU walk as
     `_jpeg_decode_scan` with the entropy layer swapped for the T.81
     Annex D/F QM decoder (`operators/jpeg_arith.py`). Restart markers
     re-init the coder AND zero every statistics bin + predictor, per
@@ -1663,22 +1871,12 @@ def _jpeg_decode_scan_arith(data, sof, comps, scan, qt, dc_cond, ac_cond, ri,
     by_id = {c["id"]: c for c in comps}
     hmax = max(c["h"] for c in comps)
     vmax = max(c["v"] for c in comps)
-    for c in comps:
-        if c["h"] < 1 or c["v"] < 1 or hmax % c["h"] or vmax % c["v"]:
-            raise ValueError("JPEG fractional sampling ratio unsupported")
     mx = -(-W // (8 * hmax))
     my = -(-H // (8 * vmax))
-    plan = []
-    scan_comps = []
-    for cid, td, ta in scan:
-        c = by_id.get(cid)
-        if c is None:
-            raise ValueError("JPEG scan references unknown component")
-        if c["tq"] not in qt:
-            raise ValueError("JPEG scan references a missing DQT table")
-        grid = np.zeros((my * c["v"], mx * c["h"], 64), np.int64)
-        plan.append((c, td, ta, np.asarray(qt[c["tq"]], np.int64), grid))
-        scan_comps.append({"id": cid, "td": td, "ta": ta})
+    for cid, _td, _ta in scan:
+        c = by_id[cid]
+        grids[cid] = np.zeros((my * c["v"], mx * c["h"], 64), np.int64)
+    scan_comps = [{"id": cid, "td": td, "ta": ta} for cid, td, ta in scan]
 
     segs = _jpeg_entropy_intervals(data)
     cs = ja._CondState(scan_comps, dc_cond, ac_cond)
@@ -1694,20 +1892,14 @@ def _jpeg_decode_scan_arith(data, sof, comps, scan, qt, dc_cond, ac_cond, ri,
                     raise ValueError("JPEG missing expected restart marker")
                 dec = ja.ArithDecoder(segs[seg_i], destuffed=True)
                 cs.reset(scan_comps)
-            for c, td, ta, q_zz, grid in plan:
+            for cid, td, ta in scan:
+                c = by_id[cid]
                 for byi in range(c["v"]):
                     for bxi in range(c["h"]):
-                        zz = np.zeros(64, np.int64)
-                        zz[0] = ja._decode_dc(dec, cs, c["id"], td)
+                        zz = grids[cid][myi * c["v"] + byi, mxi * c["h"] + bxi]
+                        zz[0] = ja._decode_dc(dec, cs, cid, td, differential)
                         ja._decode_ac(dec, cs, ta, zz)
-                        grid[myi * c["v"] + byi, mxi * c["h"] + bxi] = (
-                            zz * q_zz
-                        )
             mcu += 1
-    return _jpeg_render(
-        [(c, grid) for c, _td, _ta, _q, grid in plan], H, W, hmax, vmax,
-        _prec, adobe,
-    )
 
 
 def encode_jpeg_arith(arr, quant: int = 1, restart_interval: int = 0) -> bytes:
@@ -1724,34 +1916,10 @@ def encode_jpeg_arith(arr, quant: int = 1, restart_interval: int = 0) -> bytes:
     from . import jpeg_arith as ja
 
     arr = np.asarray(arr, dtype=np.uint8)
-    gray = arr.ndim == 2
     h, w = arr.shape[:2]
-    if gray:
-        planes = [arr.astype(np.float64)]
-    else:
-        rgb = arr.astype(np.float64)
-        r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
-        planes = [
-            np.round(0.299 * r + 0.587 * g + 0.114 * b),
-            np.round(-0.168736 * r - 0.331264 * g + 0.5 * b + 128.0),
-            np.round(0.5 * r - 0.418688 * g - 0.081312 * b + 128.0),
-        ]
-        planes = [np.clip(p, 0, 255) for p in planes]
-
-    basis = _jpeg_dct_basis()
-    zz = np.asarray(_JPEG_ZIGZAG)
-    nby, nbx = -(-h // 8), -(-w // 8)
-    comp_blocks = []
-    for p in planes:
-        padded = np.pad(p, ((0, nby * 8 - h), (0, nbx * 8 - w)), mode="edge")
-        blocks = (
-            padded.reshape(nby, 8, nbx, 8).transpose(0, 2, 1, 3) - 128.0
-        )
-        coef = np.einsum("ux,rcxy,vy->rcuv", basis, blocks, basis)
-        q = np.round(coef / float(quant)).astype(np.int64)
-        comp_blocks.append(q.reshape(nby, nbx, 64)[:, :, zz])
-
-    nc = 1 if gray else 3
+    comp_blocks = [_fdct_zz(p, quant, 128.0) for p in _jpeg_source_planes(arr)]
+    nby, nbx = comp_blocks[0].shape[:2]
+    nc = len(comp_blocks)
     scan_comps = [{"id": i + 1, "td": 0, "ta": 0} for i in range(nc)]
     cs = ja._CondState(scan_comps, {0: (0, 1)}, {0: 5})
     cs.reset(scan_comps)
@@ -1773,126 +1941,114 @@ def encode_jpeg_arith(arr, quant: int = 1, restart_interval: int = 0) -> bytes:
                 ja._encode_ac(enc, cs, 0, zzb)
             mcu += 1
     entropy_parts.append(enc.flush())
-    entropy = b"".join(entropy_parts)
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    sof_body = struct.pack(">BHHB", 8, h, w, nc)
-    sos_body = bytes([nc])
-    for i in range(nc):
-        sof_body += bytes([i + 1, 0x11, 0])
-        sos_body += bytes([i + 1, 0x00])
-    sos_body += bytes([0, 63, 0])
     out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    out += seg(0xDB, bytes([0x00]) + bytes([quant]) * 64)
-    out += seg(0xC9, sof_body)
+    out += _seg(0xE0, _JFIF)
+    out += _seg(0xDB, bytes([0x00]) + bytes([quant]) * 64)
+    out += _seg(0xC9, _sof_body(8, h, w, nc))
     # DAC: DC table 0 → Cs = (U<<4)|L = 0x10; AC table 0 → Kx = 5
-    out += seg(0xCC, bytes([0x00, 0x10, 0x10, 0x05]))
+    out += _seg(0xCC, bytes([0x00, 0x10, 0x10, 0x05]))
     if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    out += seg(0xDA, sos_body)
-    out += entropy
+        out += _seg(0xDD, struct.pack(">H", restart_interval))
+    out += _seg(0xDA, _sos_body(range(nc), 0, 63))
+    out += b"".join(entropy_parts)
     out += b"\xff\xd9"
     return bytes(out)
 
 
-def _jpeg_decode_scan_lossless(data, sof, comps, scan, huff_dc, pred_sel,
-                               pt, ri):
-    """LOSSLESS JPEG scan (SOF3, r8 — T.81 Annex H): per-sample DPCM
-    with the 7 spec predictors (Ss selects; a=left, b=above,
-    c=above-left), Huffman-coded difference categories (DC-table
-    style; category 16 ⇒ diff 32768 with no extra bits), modulo-2^16
-    arithmetic, point transform Pt, restart-interval predictor resets.
-    Supports the common 1×1-sampling layout (every component same
-    resolution — the DNG/scientific-data shape); subsampled lossless
-    refuses by name."""
+def _jpeg_ll_predict(p, y, x, y0, pred_sel, default):
+    """T.81 H.1.2.1 prediction of sample (y, x) of plane ``p`` by
+    predictor ``pred_sel`` (a = left, b = above, c = above-left). Row
+    ``y0``, the first since the last restart, predicts from the left
+    and its first sample predicts ``default``; the first column
+    predicts from above. Predictor 0 (differential frames) predicts 0."""
+    if pred_sel == 0:
+        return 0
+    if y == y0 and x == 0:
+        return default
+    if x == 0:
+        return int(p[y - 1, 0])
+    a = int(p[y, x - 1])
+    if y == y0:
+        return a
+    b = int(p[y - 1, x])
+    c = int(p[y - 1, x - 1])
+    return (
+        a if pred_sel == 1 else
+        b if pred_sel == 2 else
+        c if pred_sel == 3 else
+        a + b - c if pred_sel == 4 else
+        a + ((b - c) >> 1) if pred_sel == 5 else
+        b + ((a - c) >> 1) if pred_sel == 6 else
+        (a + b) >> 1
+    )
+
+
+def _jpeg_decode_scan_lossless(data, sof, scan, tables, pred_sel, pt, ri,
+                               arith):
+    """One LOSSLESS scan (T.81 Annex H) → cid → int64 sample plane,
+    scaled by the point transform 2^Pt: per-sample DPCM
+    (`_jpeg_ll_predict`) modulo 2^16, prediction starting afresh at
+    every restart. Differences are Huffman-coded categories (DC-table
+    style; category 16 ⇒ 32768 with no extra bits) from the DHT DC
+    ``tables`` or, with ``arith`` (SOF11/SOF15), Annex H statistical
+    model decisions (`jpeg_arith._decode_ll`) conditioned on the left
+    and above differences under the DAC (L, U) ``tables``; there a
+    restart also resets the coder, the statistics and the difference
+    histories."""
     import numpy as np
 
+    from . import jpeg_arith as ja
+
     H, W, _nc, prec = sof
-    for c in comps:
-        if c["h"] != 1 or c["v"] != 1:
-            raise ValueError(
-                "JPEG lossless with subsampled components unsupported"
-            )
-    if not 1 <= pred_sel <= 7:
-        raise ValueError(f"JPEG lossless predictor {pred_sel} invalid (1-7)")
+    if not arith and any(td not in tables for _cid, td, _ta in scan):
+        raise ValueError("JPEG lossless scan references a missing DHT")
     default = 1 << (prec - 1 - pt)
-    planes = {c["id"]: np.zeros((H, W), np.int64) for c in comps}
-
+    planes = {cid: np.zeros((H, W), np.int64) for cid, _td, _ta in scan}
+    stats = {td: ja.new_stats(ja.LL_STAT_BINS) for _cid, td, _ta in scan}
+    above = {cid: np.zeros(W, np.int64) for cid in planes}
     segs = _jpeg_entropy_intervals(data)
-    seg_i = 0
-    bits = _JpegBits(segs[0])
-    restart = True
-    mcu = 0
-    order = [cid for cid, _td, _ta in scan]
-    for _cid, td, _ta in scan:
-        if td not in huff_dc:
-            raise ValueError("JPEG lossless scan references a missing DHT")
-    start_row = {cid: 0 for cid in order}  # row where the segment began
 
-    def predict(p, y, x, x0row):
-        if y == x0row and x == 0:
-            return default
-        if x == 0:
-            return int(p[y - 1, 0])
-        a = int(p[y, x - 1])
-        if y == x0row:
-            return a
-        b = int(p[y - 1, x])
-        c = int(p[y - 1, x - 1])
-        return (
-            a if pred_sel == 1 else
-            b if pred_sel == 2 else
-            c if pred_sel == 3 else
-            a + b - c if pred_sel == 4 else
-            a + ((b - c) >> 1) if pred_sel == 5 else
-            b + ((a - c) >> 1) if pred_sel == 6 else
-            (a + b) >> 1
-        )
+    def interval(i):
+        if i >= len(segs):
+            raise ValueError("JPEG missing expected restart marker")
+        if not arith:
+            return _JpegBits(segs[i])
+        for st in stats.values():
+            for b in st:
+                b[0] = b[1] = 0
+        for a in above.values():
+            a[:] = 0
+        return ja.ArithDecoder(segs[i], destuffed=True)
 
+    seg_i = y0 = mcu = 0
+    src = interval(0)
     for y in range(H):
+        left = dict.fromkeys(planes, 0)  # Da = 0 at a row start
         for x in range(W):
             if ri and mcu and mcu % ri == 0:
                 seg_i += 1
-                if seg_i >= len(segs):
-                    raise ValueError("JPEG missing expected restart marker")
-                bits = _JpegBits(segs[seg_i])
-                restart = True
-            if restart:
-                for cid in order:
-                    start_row[cid] = y
-                restart = False
+                src = interval(seg_i)
+                left = dict.fromkeys(planes, 0)
+                y0 = y
             for cid, td, _ta in scan:
-                s = _jpeg_huff_decode(bits, huff_dc[td])
-                if s > 16:
-                    raise ValueError("JPEG lossless category out of range")
-                diff = 32768 if s == 16 else _jpeg_extend(bits.read(s), s)
+                if arith:
+                    db = int(above[cid][x]) if y > y0 else 0
+                    v = ja._decode_ll(
+                        src, stats[td], left[cid], db, *tables.get(td, (0, 1))
+                    )
+                    left[cid] = above[cid][x] = v
+                else:
+                    s = _jpeg_huff_decode(src, tables[td])
+                    if s > 16:
+                        raise ValueError("JPEG lossless category out of range")
+                    v = 32768 if s == 16 else _jpeg_extend(src.read(s), s)
                 p = planes[cid]
-                # NOTE: after a restart the first sample of the segment
-                # restarts prediction from the default, and rows within
-                # the segment predict off the segment's own first row
-                val = (predict(p, y, x, start_row[cid]) + diff) & 0xFFFF
-                p[y, x] = val
+                p[y, x] = (
+                    _jpeg_ll_predict(p, y, x, y0, pred_sel, default) + v
+                ) & 0xFFFF
             mcu += 1
-
-    maxv = float((1 << prec) - 1)
-
-    def to_u8(p):
-        a = np.clip(p << pt, 0, maxv).astype(np.float64)
-        if prec != 8 or pt:
-            a = np.round(a * (255.0 / maxv))
-        return a.astype(np.uint8)
-
-    if len(comps) == 1:
-        g = to_u8(planes[comps[0]["id"]])
-        return np.repeat(g[:, :, None], 3, axis=2)
-    if len(comps) == 3:
-        return np.stack([to_u8(planes[c["id"]]) for c in comps], axis=2)
-    raise ValueError(
-        f"JPEG lossless with {len(comps)} components unsupported"
-    )
+    return {cid: p << pt for cid, p in planes.items()}
 
 
 def encode_jpeg_lossless(arr, predictor: int = 4, precision: int = 8,
@@ -1916,8 +2072,7 @@ def encode_jpeg_lossless(arr, predictor: int = 4, precision: int = 8,
     ]
     default = 1 << (precision - 1)
 
-    # single-length DC-style table: categories 0..16 at 5 bits
-    code = {s: (s, 5) for s in range(17)}
+    code, dht = _huff_lossless_table()
     wtr = _JpegBitWriter()
     entropy_parts = []
     rst = 0
@@ -1933,131 +2088,22 @@ def encode_jpeg_lossless(arr, predictor: int = 4, precision: int = 8,
                 wtr = _JpegBitWriter()
                 start_row = y
             for p in planes:
-                if y == start_row and x == 0:
-                    pred = default
-                elif x == 0:
-                    pred = int(p[y - 1, 0])
-                elif y == start_row:
-                    pred = int(p[y, x - 1])
-                else:
-                    a, b, c = int(p[y, x - 1]), int(p[y - 1, x]), int(p[y - 1, x - 1])
-                    pred = (
-                        a if predictor == 1 else
-                        b if predictor == 2 else
-                        c if predictor == 3 else
-                        a + b - c if predictor == 4 else
-                        a + ((b - c) >> 1) if predictor == 5 else
-                        b + ((a - c) >> 1) if predictor == 6 else
-                        (a + b) >> 1
-                    )
-                diff = (int(p[y, x]) - pred) & 0xFFFF
-                if diff >= 0x8000:
-                    diff -= 0x10000  # modulo-2^16 signed representative
-                if diff == -32768 or diff == 32768:
-                    wtr.put(*code[16])
-                else:
-                    s = abs(diff).bit_length()
-                    wtr.put(*code[s])
-                    if s:
-                        wtr.put(diff if diff >= 0 else diff + (1 << s) - 1, s)
+                pred = _jpeg_ll_predict(p, y, x, start_row, predictor, default)
+                _put_ll_diff(wtr, code, int(p[y, x]) - pred)
             mcu += 1
     wtr.pad_to_byte()
     entropy_parts.append(bytes(wtr.out))
-    entropy = b"".join(entropy_parts)
 
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
-
-    sof_body = struct.pack(">BHHB", precision, h, w, nc)
-    sos_body = bytes([nc])
-    for i in range(nc):
-        sof_body += bytes([i + 1, 0x11, 0])
-        sos_body += bytes([i + 1, 0x00])
-    sos_body += bytes([predictor, 0, 0])  # Ss=predictor, Se=0, Ah/Al=0
-    dht = bytes([0x00]) + bytes(
-        [17 if n == 5 else 0 for n in range(1, 17)]
-    ) + bytes(range(17))
     out = bytearray(b"\xff\xd8")
-    out += seg(0xDB, bytes([0x00]) + bytes([1]) * 64)  # unused by lossless
-    out += seg(0xC3, sof_body)
-    out += seg(0xC4, dht)
+    out += _seg(0xDB, bytes([0x00]) + bytes([1]) * 64)  # unused by lossless
+    out += _seg(0xC3, _sof_body(precision, h, w, nc))
+    out += dht
     if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    out += seg(0xDA, sos_body)
-    out += entropy
+        out += _seg(0xDD, struct.pack(">H", restart_interval))
+    out += _seg(0xDA, _sos_body(range(nc), predictor, 0))  # Ss = predictor
+    out += b"".join(entropy_parts)
     out += b"\xff\xd9"
     return bytes(out)
-
-
-def _jpeg_render(comp_grids, H, W, hmax, vmax, prec: int = 8, adobe=None):
-    """Shared reconstruction tail: per-component DEQUANTIZED zigzag
-    coefficient grids → de-zigzag → vectorized IDCT → crop/replicate
-    upsample → gray replicate or JFIF YCbCr→RGB. 12-bit precision
-    (r8): level shift 2^(P−1), clip to 2^P−1, then scale to the uint8
-    feature domain by round(v·255/(2^P−1))."""
-    import numpy as np
-
-    level = float(1 << (prec - 1))
-    maxv = float((1 << prec) - 1)
-
-    def to_u8(a):
-        a = np.clip(np.round(a), 0, maxv)
-        if prec != 8:
-            a = np.round(a * (255.0 / maxv))
-        return a.astype(np.uint8)
-
-    basis = _jpeg_dct_basis()
-    zz = np.asarray(_JPEG_ZIGZAG)
-    planes = []
-    for c, grid in comp_grids:
-        nat = np.zeros_like(grid)
-        nat[:, :, zz] = grid  # de-zigzag
-        r, q = nat.shape[0], nat.shape[1]
-        blocks = nat.reshape(r, q, 8, 8).astype(np.float64)
-        spatial = np.einsum("ux,rcuv,vy->rcxy", basis, blocks, basis) + level
-        plane = spatial.transpose(0, 2, 1, 3).reshape(r * 8, q * 8)
-        # crop to the component's true resolution, then replicate up to
-        # full frame resolution
-        ch = -(-H * c["v"] // vmax)
-        cw = -(-W * c["h"] // hmax)
-        plane = plane[:ch, :cw]
-        plane = np.repeat(plane, vmax // c["v"], axis=0)
-        plane = np.repeat(plane, hmax // c["h"], axis=1)
-        planes.append(plane[:H, :W])
-
-    if len(planes) == 1:
-        g = to_u8(planes[0])
-        return np.repeat(g[:, :, None], 3, axis=2)
-    if len(planes) == 4:
-        # Adobe 4-component (r8): APP14 transform 2 = YCCK (YCbCr over
-        # the first three), else CMYK-direct. Samples are stored in the
-        # Adobe-INVERTED convention (maxv = no ink) — the convention
-        # libjpeg and every mainstream consumer assume; no external
-        # CMYK codec exists offline to differential against, so the
-        # inversion is pinned by our own encoder + documented here.
-        if adobe == 2:
-            y, cb, cr = planes[0], planes[1] - level, planes[2] - level
-            c_st = y + 1.402 * cr
-            m_st = y - 0.344136 * cb - 0.714136 * cr
-            y_st = y + 1.772 * cb
-        else:
-            c_st, m_st, y_st = planes[0], planes[1], planes[2]
-        k_st = planes[3]
-        rgb = np.stack(
-            [c_st * k_st / maxv, m_st * k_st / maxv, y_st * k_st / maxv],
-            axis=2,
-        )
-        return to_u8(rgb)
-    y, cb, cr = planes[0], planes[1] - level, planes[2] - level
-    rgb = np.stack(
-        [
-            y + 1.402 * cr,
-            y - 0.344136 * cb - 0.714136 * cr,
-            y + 1.772 * cb,
-        ],
-        axis=2,
-    )
-    return to_u8(rgb)
 
 
 class _JpegBitWriter:
@@ -2094,15 +2140,14 @@ def encode_jpeg(arr, quant: int = 1, restart_interval: int = 0,
     gray plane round-trips bit-exactly through DCT+flat quantization,
     which the media_decode_report oracle exploits). Uses a flat
     quantization table (all ``quant``; 1 → near-lossless) and
-    single-length canonical Huffman tables (all DC codes 4 bits, all
-    AC codes 8 bits — spec-valid: the all-ones code of each length
-    stays unused, as T.81 Annex C requires). Optional restart markers
-    every ``restart_interval`` MCUs exercise the DRI/RST decode path.
-    A test/fixture encoder (the Java ImageIO differential reads its
-    output), not a rate-optimized one. ``precision=12`` (r8) takes a
-    uint16 array with values 0..4095, level-shifts by 2048, and emits
-    SOF1 extended-sequential with 5-bit DC codes (categories to 15)
-    and AC sizes to 14 per T.81 Table F.1."""
+    single-length canonical Huffman tables (`_huff_seq_tables`).
+    Optional restart markers every ``restart_interval`` MCUs exercise
+    the DRI/RST decode path. A test/fixture encoder (the Java ImageIO
+    differential reads its output), not a rate-optimized one.
+    ``precision=12`` takes a uint16 array with values 0..4095,
+    level-shifts by 2048, and emits SOF1 extended-sequential with 5-bit
+    DC codes (categories to 15) and AC sizes to 14 per T.81 Table F.1.
+    An (H, W, 4) array is Adobe-inverted CMYK (APP14 transform 0)."""
     import struct
 
     import numpy as np
@@ -2114,48 +2159,15 @@ def encode_jpeg(arr, quant: int = 1, restart_interval: int = 0,
     arr = np.asarray(arr, dtype=np.uint8 if precision == 8 else np.uint16)
     if precision == 12 and arr.max(initial=0) > maxv:
         raise ValueError("encode_jpeg: 12-bit samples must be 0..4095")
-    gray = arr.ndim == 2
     cmyk = arr.ndim == 3 and arr.shape[2] == 4
     h, w = arr.shape[:2]
-    if gray:
-        planes = [arr.astype(np.float64)]
-    elif cmyk:
-        # channels are Adobe-INVERTED CMYK stored samples (transform 0)
+    if cmyk:
         planes = [arr[:, :, i].astype(np.float64) for i in range(4)]
     else:
-        rgb = arr.astype(np.float64)
-        r, g, b = rgb[:, :, 0], rgb[:, :, 1], rgb[:, :, 2]
-        planes = [
-            np.round(0.299 * r + 0.587 * g + 0.114 * b),
-            np.round(-0.168736 * r - 0.331264 * g + 0.5 * b + level),
-            np.round(0.5 * r - 0.418688 * g - 0.081312 * b + level),
-        ]
-        planes = [np.clip(p, 0, maxv) for p in planes]
-
-    basis = _jpeg_dct_basis()
-    zz = np.asarray(_JPEG_ZIGZAG)
-    nby, nbx = -(-h // 8), -(-w // 8)
-    comp_blocks = []
-    for p in planes:
-        padded = np.pad(p, ((0, nby * 8 - h), (0, nbx * 8 - w)), mode="edge")
-        blocks = (
-            padded.reshape(nby, 8, nbx, 8).transpose(0, 2, 1, 3) - level
-        )
-        coef = np.einsum("ux,rcxy,vy->rcuv", basis, blocks, basis)
-        q = np.round(coef / float(quant)).astype(np.int64)
-        comp_blocks.append(q.reshape(nby, nbx, 64)[:, :, zz])  # zigzag order
-
-    # single-length canonical tables: DC symbols at 4 bits (8-bit: 12
-    # symbols) or 5 bits (12-bit: 16 symbols — 16 four-bit codes would
-    # use the forbidden all-ones code), AC symbols at 8 bits
-    n_dc = 12 if precision == 8 else 16
-    dc_bits = 4 if precision == 8 else 5
-    max_sz = 10 if precision == 8 else 14
-    dc_code = {s: (s, dc_bits) for s in range(n_dc)}
-    ac_order = [0x00, 0xF0] + [
-        (r << 4) | s for r in range(16) for s in range(1, max_sz + 1)
-    ]
-    ac_code = {sym: (i, 8) for i, sym in enumerate(ac_order)}
+        planes = _jpeg_source_planes(arr, level, maxv)
+    comp_blocks = [_fdct_zz(p, quant, level) for p in planes]
+    nby, nbx = comp_blocks[0].shape[:2]
+    dc_code, ac_code, dht = _huff_seq_tables(precision)
 
     def emit_block(wtr, zz_block, pred, dc_c, ac_c):
         diff = int(zz_block[0]) - pred
@@ -2203,36 +2215,19 @@ def encode_jpeg(arr, quant: int = 1, restart_interval: int = 0,
             mcu += 1
     wtr.pad_to_byte()
     entropy_parts.append(bytes(wtr.out))
-    entropy = b"".join(entropy_parts)
-
-    def seg(marker: int, body: bytes) -> bytes:
-        return struct.pack(">BBH", 0xFF, marker, len(body) + 2) + body
 
     nc = len(planes)
-    sof_body = struct.pack(">BHHB", precision, h, w, nc)
-    sos_body = bytes([nc])
-    for i in range(nc):
-        sof_body += bytes([i + 1, 0x11, 0])
-        sos_body += bytes([i + 1, 0x00])
-    sos_body += bytes([0, 63, 0])
-    dht_dc = bytes([0x00]) + bytes(
-        [n_dc if n == dc_bits else 0 for n in range(1, 17)]
-    ) + bytes(range(n_dc))
-    dht_ac = bytes([0x10]) + bytes(
-        [len(ac_order) if n == 8 else 0 for n in range(1, 17)]
-    ) + bytes(ac_order)
     out = bytearray(b"\xff\xd8")
-    out += seg(0xE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
+    out += _seg(0xE0, _JFIF)
     if cmyk:  # APP14: Adobe, version 100, flags 0/0, transform 0
-        out += seg(0xEE, b"Adobe" + bytes([0, 100, 0, 0, 0, 0, 0]))
-    out += seg(0xDB, bytes([0x00]) + bytes([quant]) * 64)
-    out += seg(0xC0 if precision == 8 else 0xC1, sof_body)
-    out += seg(0xC4, dht_dc)
-    out += seg(0xC4, dht_ac)
+        out += _seg(0xEE, b"Adobe" + bytes([0, 100, 0, 0, 0, 0, 0]))
+    out += _seg(0xDB, bytes([0x00]) + bytes([quant]) * 64)
+    out += _seg(0xC0 if precision == 8 else 0xC1, _sof_body(precision, h, w, nc))
+    out += dht
     if restart_interval:
-        out += seg(0xDD, struct.pack(">H", restart_interval))
-    out += seg(0xDA, sos_body)
-    out += entropy
+        out += _seg(0xDD, struct.pack(">H", restart_interval))
+    out += _seg(0xDA, _sos_body(range(nc), 0, 63))
+    out += b"".join(entropy_parts)
     out += b"\xff\xd9"
     return bytes(out)
 

@@ -1445,3 +1445,30 @@ def test_block_decode_is_bounded(monkeypatch, codec):
     # front: 8 MiB at the writer's preset 6, whatever the output
     window = 8 << 20 if codec == "xz" else 0
     assert peak < (4 << 20) + window, f"{codec}: traced peak {peak} bytes"
+
+
+def _xz_with_dictionary_byte(dict_byte):
+    """A valid xz stream of b"hello" whose one LZMA2 block header
+    declares the dictionary size ``dict_byte`` encodes, with the block
+    header's CRC32 recomputed. Built from a small stream, so nothing
+    ever compresses with the declared dictionary."""
+    import lzma
+    import zlib
+
+    b = bytearray(lzma.compress(b"hello", format=lzma.FORMAT_XZ))
+    h = 12  # the block header follows the 12-byte stream header
+    b[h + 4] = dict_byte
+    b[h + 8 : h + 12] = zlib.crc32(bytes(b[h : h + 8])).to_bytes(4, "little")
+    return bytes(b)
+
+
+def test_xz_block_dictionary_is_memory_limited():
+    """The xz decoder runs under a memory limit: a block declaring the
+    64 MiB dictionary of Avro-Java's preset 9 decodes, and one
+    declaring 4 GiB is refused by name before the dictionary is
+    allocated."""
+    from pystreams_spark.formats import avro
+
+    assert avro._decompress("xz", _xz_with_dictionary_byte(28)) == b"hello"
+    with pytest.raises(ValueError, match="xz: Memory usage limit"):
+        avro._decompress("xz", _xz_with_dictionary_byte(40))

@@ -674,6 +674,36 @@ def _imageio_progressive_jpg(spark, img):
     return bytes(baos.toByteArray())
 
 
+def test_jpeg_rgb_decode_matches_imageio_samples(spark):
+    """Colour frames render as T.81/JFIF decoders do: each component is
+    rounded and clamped to integer samples before the YCbCr→RGB
+    conversion. On seeded noisy 4:4:4 files from `encode_jpeg` (8×8
+    tiles of uniform colours plus ±20 noise, flat quant 1, 4 and 16),
+    at least 90% of our channel values equal Java ImageIO's read of
+    the same bytes, and none is more than 3 apart."""
+    import numpy as np
+
+    from pystreams_spark.operators.multimodal import _decode_jpeg, encode_jpeg
+
+    rng = np.random.default_rng(1)
+    equal = total = worst = 0
+    for h in range(24, 72, 8):
+        tiles = np.kron(
+            rng.integers(0, 256, (h // 8, 5, 3)), np.ones((8, 8, 1), np.int64)
+        )
+        noise = rng.integers(-20, 21, tiles.shape)
+        img = np.clip(tiles + noise, 0, 255).astype(np.uint8)
+        for quant in (1, 4, 16):
+            payload = encode_jpeg(img, quant=quant)
+            ref = _imageio_read_rgb(spark, payload, h, 40)
+            d = np.abs(_decode_jpeg(payload).astype(int) - ref)
+            equal += int((d == 0).sum())
+            total += d.size
+            worst = max(worst, int(d.max()))
+    assert equal >= 0.9 * total, equal / total
+    assert worst <= 3, worst
+
+
 def test_jpeg_progressive_decode_differential_vs_java_imageio(spark):
     """PROGRESSIVE JPEG (SOF2 — spectral selection + successive
     approximation, T.81 Annex G) decodes for real: files written by
@@ -1475,6 +1505,40 @@ def test_jpeg_hierarchical_dct_final_near_exact(spark):
                 )
             )
             assert (out == 173).all(), (entropy, mode)
+
+
+def test_jpeg_dhp_wrapped_frame_decodes_like_bare_frame(spark):
+    """A hierarchical stream cut to its first frame (a DHP sized to that
+    frame, then EOI) decodes to exactly the array of the same bytes
+    without the DHP segment: hierarchical and plain frames share one
+    reconstruction and one colour render."""
+    import numpy as np
+
+    from pystreams_spark.operators.jpeg_hier import encode_jpeg_hierarchical
+    from pystreams_spark.operators.multimodal import _decode_jpeg
+
+    rng = np.random.default_rng(12)
+    for shape in ((16, 16), (24, 40), (16, 16, 3), (24, 40, 3)):
+        img = rng.integers(0, 256, shape, dtype=np.uint8)
+        for entropy in ("huffman", "arith"):
+            p = encode_jpeg_hierarchical(
+                img, quant=2, entropy=entropy, diff_mode="seq"
+            )
+            # entropy bytes stuff every FF, so the first FF DF is EXP
+            cut = p.find(b"\xff\xdf")
+            dhp = p.find(b"\xff\xde")
+            sof = p.find(b"\xff\xc9" if entropy == "arith" else b"\xff\xc0")
+            assert 0 < dhp < sof < cut
+            dhp_end = dhp + 2 + int.from_bytes(p[dhp + 2 : dhp + 4], "big")
+            # DHP body: P, then Y and X — set them to the first frame's
+            wrapped = p[: dhp + 5] + p[sof + 5 : sof + 9] + p[dhp + 9 : cut]
+            bare = p[:dhp] + p[dhp_end:cut]
+            a = _decode_jpeg(wrapped + b"\xff\xd9")
+            b = _decode_jpeg(bare + b"\xff\xd9")
+            assert a.shape == b.shape == (
+                -(-shape[0] // 2), -(-shape[1] // 2), 3
+            )
+            assert (a == b).all(), (shape, entropy)
 
 
 def test_jpeg_lossless_arith_sof11_exact(spark):

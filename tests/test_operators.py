@@ -2012,7 +2012,7 @@ def test_normalize_zero_vector_no_crash(spark):
     np.testing.assert_allclose(got[1], [0.6, 0.8, 0.0])
 
 
-def test_portable_winnow_rejects_overflowing_k():
+def test_portable_winnow_rejects_overflowing_k(spark):
     from pystreams_spark.functions.text_kernels import portable_winnow_fps_udf
 
     with pytest.raises(ValueError, match="overflows int64"):
