@@ -196,22 +196,14 @@ def chunk_text(text: Column | str, size: int, stride: int) -> Column:
     return F.transform(idx, lambda i: t.substr(i, F.lit(size)))
 
 
-def fingerprint(text: Column | str) -> Column:
-    """64-bit rolling document fingerprint: xxhash64 of the sorted
-    distinct token multiset — stable under token reordering, which makes
-    it a cheap near-dup pre-filter key. Engine-specific hash → rows-only."""
-    toks = F.array_sort(F.array_distinct(tokens(F.col(text) if isinstance(text, str) else text)))
-    return F.xxhash64(F.concat_ws("", toks))
-
-
 def fingerprint_md5(text: Column | str) -> Column:
     """Engine-portable 60-bit token-set fingerprint: md5 of the sorted
     distinct tokens joined by ' ', first 15 hex chars converted to a
-    BIGINT. Same order-invariance as ``fingerprint`` but reproducible in
-    any SQL engine (DuckDB: ``('0x' || substr(md5(...),1,15))::BIGINT``),
-    so fingerprint equality — the near-dup pre-filter join key — carries
-    across systems. md5 runs JVM-side (codegen) like xxhash64; ~2x the
-    per-row hash cost, irrelevant next to the tokenize."""
+    BIGINT — stable under token reordering, which makes it a cheap
+    near-dup pre-filter key, and reproducible in any SQL engine
+    (DuckDB: ``('0x' || substr(md5(...),1,15))::BIGINT``), so
+    fingerprint equality carries across systems. md5 runs JVM-side
+    (codegen); its per-row cost is irrelevant next to the tokenize."""
     toks = F.array_sort(
         F.array_distinct(tokens(F.col(text) if isinstance(text, str) else text))
     )

@@ -8,18 +8,16 @@ pass for the Column version vs ~0.2 s for one Arrow-batched kernel.
 Each kernel does tokenize → shingle → hash in ONE narrow pass over the
 text column — no shuffle, one JVM↔Python Arrow round-trip.
 
-Two gram hashes, each over the exact ``" ".join(tokens[i:i+n])``
-shingle strings the Column-algebra ``functions.text.shingles`` builds:
-
-- ``_hashed_shingle_sets``: ``pandas.util.hash_array`` (SipHash with
-  pandas' fixed key) — the inverted-index Jaccard family, whose
-  oracles replay string sets, so only gram identity matters.
-- ``_md5_gram_values``: the first 60 bits of md5(gram), the value the
-  DuckDB oracles spell ``('0x' || substr(md5(gram), 1, 15))::BIGINT``.
-  Both LSH text families read it: the SimHash kernel votes its 60
-  bits, the MinHash kernel takes universal-hash minima over it with
-  md5-derived constants (``minhash_det_constants``), so every
-  signature and band key is replayable in SQL.
+One gram hash, over the exact ``" ".join(tokens[i:i+n])`` shingle
+strings the Column-algebra ``functions.text.shingles`` builds:
+``_md5_gram_values``, the first 60 bits of md5(gram), the value the
+DuckDB oracles spell ``('0x' || substr(md5(gram), 1, 15))::BIGINT``.
+Every gram-set reader takes it: the SimHash kernel votes its 60 bits,
+the MinHash kernel takes universal-hash minima over it with
+md5-derived constants (``minhash_det_constants``), the KMV sketch
+reads its k-th minimum, and the exact set-overlap joins use it as the
+gram key, so every signature, band key and sketch is replayable in
+SQL.
 """
 
 from __future__ import annotations
@@ -85,37 +83,13 @@ def _doc_shingles(texts, n: int) -> tuple[np.ndarray, np.ndarray]:
     return out, n_sh
 
 
-def _distinct_per_doc(vals: np.ndarray, n_sh: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
-    """(flat per-gram values, grams per doc) → (the DISTINCT values of
-    each doc, sorted within the doc, and per-doc distinct counts)."""
-    doc_idx = np.repeat(np.arange(len(n_sh)), n_sh)
-    # distinct per doc: sort by (doc, value), keep first of each run
-    order = np.lexsort((vals, doc_idx))
-    d, h = doc_idx[order], vals[order]
-    keep = np.ones(len(h), dtype=bool)
-    if len(h) > 1:
-        keep[1:] = (d[1:] != d[:-1]) | (h[1:] != h[:-1])
-    d, h = d[keep], h[keep]
-    counts = np.bincount(d, minlength=len(n_sh)).astype(np.int64)
-    return h, counts
-
-
-def _hashed_shingle_sets(texts, n: int) -> tuple[np.ndarray, np.ndarray]:
-    """texts → (flat uint64 hashes of the DISTINCT shingles of each doc,
-    per-doc distinct counts). One pd.util.hash_array call per batch."""
-    import pandas as pd
-
-    flat, n_sh = _doc_shingles(texts, n)
-    hashes = pd.util.hash_array(flat) if len(flat) else np.empty(0, dtype=_U64)
-    return _distinct_per_doc(hashes, n_sh)
-
-
 def _md5_gram_values(texts, n: int) -> tuple[np.ndarray, np.ndarray]:
-    """texts → (flat int64 DISTINCT gram values of each doc, per-doc
-    distinct counts). A gram's value is the first 60 bits of md5 over
-    its UTF-8 bytes — SQL's ``('0x' || substr(md5(g), 1, 15))::BIGINT``.
-    Every doc has ≥ 1 gram: a NULL, empty or shorter-than-``n`` text
-    yields its whole token string as its one gram, as ``shingles`` does."""
+    """texts → (flat int64 DISTINCT gram values of each doc, sorted
+    within the doc, and per-doc distinct counts). A gram's value is the
+    first 60 bits of md5 over its UTF-8 bytes — SQL's
+    ``('0x' || substr(md5(g), 1, 15))::BIGINT``. Every doc has ≥ 1
+    gram: a NULL, empty or shorter-than-``n`` text yields its whole
+    token string as its one gram, as ``shingles`` does."""
     import hashlib
 
     flat, n_sh = _doc_shingles(texts, n)
@@ -123,7 +97,22 @@ def _md5_gram_values(texts, n: int) -> tuple[np.ndarray, np.ndarray]:
     # the first 8 digest bytes, big-endian, shifted down to 60 bits
     raw = b"".join(md5(g.encode("utf-8")).digest()[:8] for g in flat)
     vals = (np.frombuffer(raw, dtype=">u8") >> np.uint64(4)).astype(np.int64)
-    return _distinct_per_doc(vals, n_sh)
+    doc_idx = np.repeat(np.arange(len(n_sh)), n_sh)
+    # distinct per doc: sort by (doc, value), keep first of each run
+    order = np.lexsort((vals, doc_idx))
+    d, h = doc_idx[order], vals[order]
+    keep = np.ones(len(h), dtype=bool)
+    if len(h) > 1:
+        keep[1:] = (d[1:] != d[:-1]) | (h[1:] != h[:-1])
+    counts = np.bincount(d[keep], minlength=len(n_sh)).astype(np.int64)
+    return h[keep], counts
+
+
+def _per_doc_lists(v: np.ndarray, counts: np.ndarray) -> list[list[int]]:
+    """(flat values, per-doc counts) → one Python list per doc, the
+    ``array<long>`` cells of a kernel's output column."""
+    offsets = np.concatenate(([0], np.cumsum(counts)))
+    return [v[offsets[i] : offsets[i + 1]].tolist() for i in range(len(counts))]
 
 
 _MINHASH_P = 2147483647  # 2^31 − 1 (Mersenne prime): universal-hash modulus
@@ -212,18 +201,13 @@ def simhash_md5_udf(n: int = 3, n_bits: int = 60):
 
 
 def hashed_shingles_udf(n: int = 3):
-    """pandas UDF: text → array<long> of the doc's distinct hashed word
-    n-gram shingles (sorted). The scale-path replacement for
-    ``transform(shingles(text, n), xxhash64)``."""
+    """pandas UDF: text → array<long> of the doc's distinct md5 gram
+    values (``_md5_gram_values``, sorted) — the gram sets of the exact
+    set-overlap joins, equal to the ``_sh`` of the MinHash kernel."""
     import pandas as pd
 
     def kernel(texts):
-        h, counts = _hashed_shingle_sets(texts.to_numpy(dtype=object), n)
-        signed = h.astype(np.int64)
-        offsets = np.concatenate(([0], np.cumsum(counts)))
-        return pd.Series(
-            [signed[offsets[i] : offsets[i + 1]].tolist() for i in range(len(counts))]
-        )
+        return pd.Series(_per_doc_lists(*_md5_gram_values(texts.to_numpy(dtype=object), n)))
 
     return F.pandas_udf(kernel, "array<long>")
 
@@ -323,46 +307,29 @@ def portable_winnow_fps_udf(k: int = 5, w: int = 8, base: int = 257):
     return F.pandas_udf(kernel, "array<long>")
 
 
-def kmv_cardinality_udf(n: int = 3, k: int = 24, hex_digits: int = 12):
+def kmv_cardinality_udf(n: int = 3, k: int = 24):
     """pandas UDF: text → struct(exact_distinct, kmv_est, rel_err) —
     the whole KMV distinct-shingle estimate in one vectorized pass.
 
-    Hashing is md5 (first ``hex_digits`` hex chars → [0,1) fraction),
-    so the sketch is bit-identical to a SQL replication (engine-
-    portable — the DuckDB oracle checks the ESTIMATE, not just the
-    exact count). The interpreted-HOF Column form (transform + md5 +
-    conv per element) measured ~5x slower at sf0.1 — same lesson as
-    the winnowing kernel: per-element Column lambdas don't codegen.
-    """
-    import hashlib
-
+    The sketch reads the md5 gram values (``_md5_gram_values``: a
+    doc's distinct values, sorted), each as the [0, 1) fraction
+    DOUBLE(v) / 2⁶⁰, so the k-th minimum is an index lookup and the
+    estimate (k − 1) / h_k is bit-identical to its SQL replay (the
+    DuckDB oracle checks the ESTIMATE, not just the exact count)."""
     import pandas as pd
 
-    scale = float(16 ** hex_digits)
-
     def kernel(texts):
-        flat, n_sh = _doc_shingles(texts.to_numpy(dtype=object), n)
-        offsets = np.concatenate(([0], np.cumsum(n_sh)))
-        ex_out = np.empty(len(n_sh), dtype=np.int64)
-        est_out = np.empty(len(n_sh), dtype=np.float64)
-        rel_out = np.empty(len(n_sh), dtype=np.float64)
-        for i in range(len(n_sh)):
-            sh = dict.fromkeys(flat[offsets[i] : offsets[i + 1]])
-            hs = sorted(
-                {
-                    int(hashlib.md5(s.encode("utf-8")).hexdigest()[:hex_digits], 16)
-                    / scale
-                    for s in sh
-                }
-            )
-            exact = len(sh)
-            est = float(len(hs)) if len(hs) < k else (k - 1) / hs[k - 1]
-            ex_out[i] = exact
-            est_out[i] = round(est, 4)
-            rel_out[i] = round(abs(est - exact) / exact, 4)
-        return pd.DataFrame(
-            {"exact_distinct": ex_out, "kmv_est": est_out, "rel_err": rel_out}
-        )
+        v, counts = _md5_gram_values(texts.to_numpy(dtype=object), n)
+        exact = counts.astype(np.float64)
+        est = exact.copy()
+        big = counts >= k
+        kth = v[(np.cumsum(counts) - counts)[big] + k - 1]
+        est[big] = (k - 1) / (kth.astype(np.float64) / 2.0**60)
+        return pd.DataFrame({
+            "exact_distinct": counts,
+            "kmv_est": [round(float(e), 4) for e in est],
+            "rel_err": [round(float(e), 4) for e in np.abs(est - exact) / exact],
+        })
 
     return F.pandas_udf(
         kernel, "exact_distinct bigint, kmv_est double, rel_err double"

@@ -88,37 +88,29 @@ def decontaminate(
     return train.join(flagged, id_col, "left_anti")
 
 
-def shuffle_key(id_col: str, seed: int, hash_fn: str = "md5"):
-    """Deterministic per-row shuffle sort key.
-
-    ``md5`` (default): md5 hex of ``"<id>:<seed>"`` — engine-portable
-    (DuckDB/Trino/Spark all produce the identical digest), so the
-    resulting order is oracle-checkable. ``xxhash64``: Spark's native
-    64-bit hash — ~2-3x cheaper per row, same statistical quality, but
-    engine-specific; use it when portability of the exact order doesn't
-    matter (it rarely does for a training shuffle — the md5 default is
-    chosen for verifiability)."""
-    if hash_fn == "xxhash64":
-        return F.xxhash64(F.col(id_col), F.lit(seed))
+def shuffle_key(id_col: str, seed: int):
+    """Deterministic per-row shuffle sort key: md5 hex of
+    ``"<id>:<seed>"`` — engine-portable (DuckDB/Trino/Spark all produce
+    the identical digest), so the resulting order is oracle-checkable."""
     return F.md5(
         F.concat_ws(":", F.col(id_col).cast("string"), F.lit(str(seed)))
     )
 
 
 def seeded_global_shuffle(
-    df: DataFrame, seed: int = 42, id_col: str = "doc_id", hash_fn: str = "md5"
+    df: DataFrame, seed: int = 42, id_col: str = "doc_id"
 ) -> DataFrame:
     """Deterministic global random permutation — the final step of every
     training-data pipeline (examples must arrive in hash-random order,
     reproducibly, across any number of output shards).
 
-    Sort key = hash(id, seed) (see ``shuffle_key``; md5 default → the
-    order is reproducible in ANY engine, which is what makes the r4
+    Sort key = md5(id, seed) (see ``shuffle_key``; the order is
+    reproducible in ANY engine, which is what makes the r4
     oracle check possible), tie-broken by id: fully distributed
     (range-partitioned sort, no driver involvement), stable across runs
     and cluster sizes, and re-seedable per epoch. At 100 TB this is one
     range-exchange — the same cost as any global sort — and writing the
     result partitioned preserves the order per shard."""
     return df.orderBy(
-        shuffle_key(id_col, seed, hash_fn).asc(), F.col(id_col).asc()
+        shuffle_key(id_col, seed).asc(), F.col(id_col).asc()
     )

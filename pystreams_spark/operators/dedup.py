@@ -132,12 +132,13 @@ def ngram_jaccard_pairs(
 def _shingle_table(
     df: DataFrame, n: int, text_col: str, id_col: str, blocks: list
 ) -> DataFrame:
-    """(id, blocks…, _sh: array<long>, _sz) — the checkpointed shingle
-    table both inverted-index variants candidate-generate and verify
-    against. Checkpointing means every downstream branch reads the
-    materialized blocks instead of re-running the tokenize→hash kernel
-    (2.3x measured at sf0.1, and at scale it halves the Python-worker
-    load)."""
+    """(id, blocks…, _sh: array<long>, _sz) — the checkpointed gram
+    table the count join and the prefix plan candidate-generate and
+    verify against. ``_sh`` is the doc's sorted distinct md5 gram
+    values, the ``_sh`` of the MinHash kernel. Checkpointing means every
+    downstream branch reads the materialized blocks instead of
+    re-running the tokenize→hash kernel (2.3x measured at sf0.1, and at
+    scale it halves the Python-worker load)."""
     return (
         ensure_parallelism(df)
         .select(
@@ -187,7 +188,7 @@ def _verify_pairs(
     """Exact set-overlap score of each candidate (id_a, id_b) from the
     FULL gram arrays (``id_col`` + ``_sh`` array<long>) of ``sh_a`` and
     ``sh_b`` — candidate generation may have seen only a subset of the
-    postings (prefix / df-capped / bands), the verify never does.
+    postings (prefix / bands), the verify never does.
 
     array_intersect over fixed-width longs instead of shingle strings —
     the joined sides shuffle 8 bytes per gram instead of the n-gram
@@ -208,60 +209,52 @@ def _verify_pairs(
     )
 
 
-def _shared_shingle_candidates(
-    posts: DataFrame, blocks: list, id_col: str
-) -> DataFrame:
-    """Distinct (id_a, id_b) pairs sharing ≥1 posting key within a
-    block — the candidate self-join every inverted-index variant
-    (capped Jaccard, containment, prefix) builds from its own posting
-    frame."""
-    a = posts.select(
-        F.col(id_col).alias("id_a"),
-        *[F.col(c).alias(f"_ba_{c}") for c in blocks],
-        "_h",
-    )
-    b = posts.select(
-        F.col(id_col).alias("id_b"),
-        *[F.col(c).alias(f"_bb_{c}") for c in blocks],
-        "_h",
-    )
-    return (
-        a.join(b, on="_h")
-        .filter(_pair_cond(blocks))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+def _shared_gram_rows(posts: DataFrame, blocks: list, id_col: str) -> DataFrame:
+    """The one posting self-join of the exact set-overlap plans: a row
+    per gram (``_h``) that two docs id_a < id_b of one block share.
+    Every other posting column ``c`` comes through as ``ca``/``cb``
+    (the count join's set size ``_sz``). The count join aggregates it;
+    the prefix plan takes its distinct pairs."""
+    rest = [c for c in posts.columns if c not in (id_col, *blocks, "_h")]
+
+    def side(s: str) -> DataFrame:
+        return posts.select(
+            F.col(id_col).alias(f"id_{s}"),
+            *[F.col(c).alias(f"_b{s}_{c}") for c in blocks],
+            *[F.col(c).alias(f"{c}{s}") for c in rest],
+            "_h",
+        )
+
+    cond = F.col("id_a") < F.col("id_b")
+    for c in blocks:
+        cond = cond & (F.col(f"_ba_{c}") == F.col(f"_bb_{c}"))
+    return side("a").join(side("b"), on="_h").filter(cond)
 
 
-def _shared_shingle_counts(
-    posts: DataFrame, blocks: list, id_col: str
+def _inverted_pairs(
+    df: DataFrame,
+    threshold: float,
+    n: int,
+    text_col: str,
+    id_col: str,
+    block_cols: tuple,
+    round_to: int,
+    metric: str,
 ) -> DataFrame:
-    """(id_a, id_b, _sza, _szb, _c) — shared-shingle counts per pair,
-    for the uncapped paths that score straight from counts + set sizes
-    (no verify join needed: every posting participated)."""
-    a = posts.select(
-        F.col(id_col).alias("id_a"),
-        *[F.col(c).alias(f"_ba_{c}") for c in blocks],
-        F.col("_sz").alias("_sza"),
-        "_h",
-    )
-    b = posts.select(
-        F.col(id_col).alias("id_b"),
-        *[F.col(c).alias(f"_bb_{c}") for c in blocks],
-        F.col("_sz").alias("_szb"),
-        "_h",
-    )
-    return (
-        a.join(b, on="_h")
-        .filter(_pair_cond(blocks))
+    """The inverted count join behind ``ngram_jaccard_pairs_inverted``
+    and ``ngram_containment_pairs``: explode the gram table to postings,
+    self-join them on (blocks…, gram), count the shared grams per pair
+    and score each pair by ``metric`` from the count and the two set
+    sizes (``_pair_score``). Every posting takes part, so no verify
+    join is needed."""
+    blocks = list(block_cols)
+    sh = _shingle_table(df, n, text_col, id_col, blocks)
+    posts = sh.select(id_col, *blocks, "_sz", F.explode("_sh").alias("_h"))
+    shared = (
+        _shared_gram_rows(posts, blocks, id_col)
         .groupBy("id_a", "id_b", "_sza", "_szb")
         .agg(F.count(F.lit(1)).alias("_c"))
     )
-
-
-def _score_shared_counts(
-    shared: DataFrame, threshold: float, round_to: int, metric: str
-) -> DataFrame:
     return _pair_score(
         shared,
         metric,
@@ -273,38 +266,6 @@ def _score_shared_counts(
     )
 
 
-def _pair_cond(blocks: list):
-    cond = F.col("id_a") < F.col("id_b")
-    for c in blocks:
-        cond = cond & (F.col(f"_ba_{c}") == F.col(f"_bb_{c}"))
-    return cond
-
-
-def _hot_shingle_keys(
-    sh: DataFrame, posts: DataFrame, blocks: list, max_df: int | float
-) -> DataFrame:
-    """(blocks…, _h) of shingles whose per-block document frequency
-    exceeds ``max_df`` (absolute count, or fraction of the block's doc
-    count). The df aggregation is the only posting-sized job — a
-    partial-agg'd groupBy whose shuffle carries distinct (block,
-    shingle) keys; its hot survivors are boilerplate-few."""
-    dfreq = posts.groupBy(*blocks, "_h").agg(F.count(F.lit(1)).alias("_df"))
-    if isinstance(max_df, float):
-        if not 0.0 < max_df <= 1.0:
-            raise ValueError(
-                f"max_df as a fraction must be in (0, 1], got {max_df}"
-            )
-        per_block = sh.groupBy(*blocks).agg(F.count(F.lit(1)).alias("_nb"))
-        if blocks:
-            dfreq = dfreq.join(broadcast_if_small(per_block), blocks)
-        else:
-            dfreq = dfreq.crossJoin(F.broadcast(per_block))
-        return dfreq.filter(
-            F.col("_df") > F.ceil(F.lit(max_df) * F.col("_nb"))
-        ).select(*blocks, "_h")
-    return dfreq.filter(F.col("_df") > int(max_df)).select(*blocks, "_h")
-
-
 def ngram_jaccard_pairs_inverted(
     df: DataFrame,
     threshold: float,
@@ -313,49 +274,29 @@ def ngram_jaccard_pairs_inverted(
     id_col: str = "doc_id",
     block_cols: tuple = (),
     round_to: int = 6,
-    max_df: int | float | None = None,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs via an inverted index — same output as
     ``ngram_jaccard_pairs`` (for threshold > 0), radically cheaper.
-    Every path keeps pairs whose UNROUNDED Jaccard is ≥ ``threshold``
-    and reports it rounded to ``round_to`` places (``_pair_score``).
+    Keeps pairs whose UNROUNDED Jaccard is ≥ ``threshold`` and reports
+    it rounded to ``round_to`` places (``_pair_score``).
 
-    Plan: shingle+hash in one Arrow kernel (distinct strings → distinct
-    64-bit keys) → explode postings → self-equi-join on (blocks…, shingle) → count
-    shared shingles per pair → Jaccard from counts and set sizes. Pairs
-    sharing zero shingles never materialize, so cost is Σ df(shingle)²
-    instead of |docs|² — the standard IR trick that survives 100 TB.
-    Measured at sf0.1: 272 s (brute force) → seconds (inverted).
+    Plan (``_inverted_pairs``): md5 gram values in one Arrow kernel →
+    explode postings → self-equi-join on (blocks…, gram) → count shared
+    grams per pair → Jaccard from counts and set sizes. Pairs sharing
+    zero grams never materialize, so cost is Σ df(gram)² instead of
+    |docs|² — the standard IR trick. Measured at sf0.1: 272 s (brute
+    force) → seconds (inverted).
 
-    ``max_df`` is the hot-shingle guard for boilerplate-heavy corpora,
-    where one shingle shared by 1M docs would alone emit 10¹² join
-    rows: shingles with document frequency above the cap (an absolute
-    count, or a fraction of the block's doc count) are EXCLUDED from
-    candidate generation, and every surviving candidate is then scored
-    on its FULL shingle sets — so each reported pair's Jaccard is still
-    exact. What the cap sacrifices is pairs whose every shared shingle
-    is hot: a pair similar only through boilerplate can be missed. For
-    guaranteed-exact output above the threshold at bounded cost, use
-    ``ngram_jaccard_pairs_prefix`` instead. For candidate-cost
-    triage before picking a cap, see ``shingle_df_profile``.
+    The trade against ``ngram_jaccard_pairs_prefix``: at τ = 0.35,
+    unblocked, 4 cores, this plan took 1.33 s (6 jobs) against
+    prefix's 2.11 s (11 jobs) at sf0.01 and 1.96 s against 5.05 s at
+    sf0.1, on the same pairs. Its Σ df² term is what grows when one
+    gram is shared by a large share of a block (boilerplate); the
+    prefix plan is the one measured linear there (SCALE.md).
     """
-    blocks = list(block_cols)
-    sh = _shingle_table(df, n, text_col, id_col, blocks)
-    posts = sh.select(id_col, *blocks, "_sz", F.explode("_sh").alias("_h"))
-
-    if max_df is not None:
-        # hot shingles are FEW by definition (df above the cap), so the
-        # exclusion is a broadcast ANTI-join against the hot-key set —
-        # the posting table itself never shuffles for the guard
-        hot_keys = _hot_shingle_keys(sh, posts, blocks, max_df)
-        posts = posts.join(
-            broadcast_if_small(hot_keys), [*blocks, "_h"], "left_anti"
-        )
-        cand = _shared_shingle_candidates(posts, blocks, id_col)
-        return _verify_pairs(sh, sh, cand, threshold, id_col, round_to)
-
-    shared = _shared_shingle_counts(posts, blocks, id_col)
-    return _score_shared_counts(shared, threshold, round_to, "jaccard")
+    return _inverted_pairs(
+        df, threshold, n, text_col, id_col, block_cols, round_to, "jaccard"
+    )
 
 
 def ngram_jaccard_pairs_prefix(
@@ -371,9 +312,9 @@ def ngram_jaccard_pairs_prefix(
     al. 2006 / Bayardo et al. 2007 "AllPairs" — public set-similarity-
     join literature): same output as ``ngram_jaccard_pairs`` for any
     threshold τ > 0, with the hot-shingle df² blowup structurally
-    removed rather than capped. Both keep pairs whose UNROUNDED Jaccard
-    is ≥ τ and report it rounded to ``round_to`` places
-    (``_pair_score``) — the only cut a prefix bound can honour.
+    removed. Both keep pairs whose UNROUNDED Jaccard is ≥ τ and report
+    it rounded to ``round_to`` places (``_pair_score``) — the only cut
+    a prefix bound can honour.
 
     Why it stays exact: under a GLOBAL total order on shingles, two
     sets with |A∩B| ≥ α must share an element among each set's first
@@ -395,12 +336,13 @@ def ngram_jaccard_pairs_prefix(
     doc is itself nearly all boilerplate. It costs LINEAR
     posting-table shuffles (the df window + per-doc regroup) and
     removes the quadratic candidate term — measured r8 (SCALE.md):
-    shuffle exponent ≈1 when content repeats at scale, and a win on
-    unique content too (69 vs 83 MB shuffle against a binary hot/cold
-    order). Prefer this over ``ngram_jaccard_pairs_inverted`` whenever
-    τ ≳ 0.3 or the corpus carries boilerplate; at very low τ the
-    prefix approaches the whole set and the plain inverted index
-    (optionally df-capped) costs the same with fewer stages.
+    shuffle exponent 0.94 when content repeats at scale, against 1.39
+    for an order-free prefix, and a win on unique content too (69 vs
+    83 MB shuffle against a binary hot/cold order). On corpora without
+    boilerplate it costs more than the count join of
+    ``ngram_jaccard_pairs_inverted``: at τ = 0.35, unblocked, 4 cores,
+    2.11 s (11 jobs) against 1.33 s (6 jobs) at sf0.01 and 5.05 s
+    against 1.96 s at sf0.1, on the same pairs.
     """
     if not threshold > 0.0:
         raise ValueError(
@@ -442,8 +384,42 @@ def ngram_jaccard_pairs_prefix(
             )
         ).alias("_h"),
     )
-    cand = _shared_shingle_candidates(pre, blocks, id_col)
+    cand = _shared_gram_rows(pre, blocks, id_col).select("id_a", "id_b").distinct()
     return _verify_pairs(sh, sh, cand, threshold, id_col, round_to)
+
+
+def _novelty_posts(
+    df: DataFrame, n: int, text_col: str, id_col: str, hash_grams: bool
+) -> DataFrame:
+    """(id, g): one row per DISTINCT word n-gram of each doc — the
+    space-joined token window (a doc shorter than ``n`` is its whole
+    token string), or with ``hash_grams`` its xxhash64, taken inside
+    the window lambda so the per-doc array is born 8-byte wide and no
+    string gram crosses an exchange. The gram posts of
+    ``ngram_novelty_scores`` and ``NoveltyIngest``."""
+    from ..functions.text import tokens
+
+    base = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
+
+    # bind _toks as a column BEFORE the lambda: an interpreted HOF
+    # re-evaluates free expressions per element (W_REPEATED_EXPR)
+    def gram(i):
+        g = F.concat_ws(" ", F.slice(F.col("_toks"), i, n))
+        return F.xxhash64(g) if hash_grams else g
+
+    grams = base.select(
+        id_col,
+        F.array_distinct(
+            F.transform(
+                F.sequence(
+                    F.lit(1),
+                    F.greatest(F.size("_toks") - (n - 1), F.lit(1)),
+                ),
+                gram,
+            )
+        ).alias("_grams"),
+    )
+    return grams.select(id_col, F.explode("_grams").alias("g"))
 
 
 def ngram_novelty_scores(
@@ -472,51 +448,23 @@ def ngram_novelty_scores(
     over hashed shingles so the DuckDB oracle can replay the exact
     equivalence classes. ``hash_grams=True`` is the PRODUCTION path
     for that recipe (r8 verdict #2): ``xxhash64`` collapses each gram
-    to 8 bytes BEFORE the explode, so the groupBy/join shuffle moves
-    fixed-width longs instead of corpus-length strings — the r8 curve
-    measured a 1.12 shuffle-BYTE exponent in string mode purely
-    because grams lengthen with the fixture corpus; hashing removes
-    that term (semantics unchanged up to 64-bit collisions, ~N²/2⁶⁵
-    expected across distinct grams — zero at any real corpus size
+    to 8 bytes BEFORE the explode (``_novelty_posts``), so the
+    groupBy/join shuffle moves fixed-width longs instead of
+    corpus-length strings — the r8 curve measured a 1.12 shuffle-BYTE
+    exponent in string mode purely because grams lengthen with the
+    fixture corpus; hashing removes that term (semantics unchanged up
+    to 64-bit collisions, ~N²/2⁶⁵ expected across distinct grams —
+    zero at any real corpus size
     worth naming). The registered oracle query stays string mode;
     ``test_ngram_novelty_hashed_matches_string`` pins the two modes
     equal on real data."""
-    from ..functions.text import tokens
-
-    base = ensure_parallelism(df).select(
-        F.col(id_col), tokens(F.col(text_col)).alias("_toks")
-    )
-    # bind _toks as a column BEFORE the lambda: an interpreted HOF
-    # re-evaluates free expressions per element (W_REPEATED_EXPR)
-    grams = base.select(
-        id_col,
-        F.array_distinct(
-            F.transform(
-                F.sequence(
-                    F.lit(1),
-                    F.greatest(F.size("_toks") - (n - 1), F.lit(1)),
-                ),
-                lambda i: F.concat_ws(" ", F.slice(F.col("_toks"), i, n)),
-            )
-        ).alias("_grams"),
-    )
-    if hash_grams:
-        # hash INSIDE the array (still one row per doc), then explode:
-        # the exploded frame — the input to both shuffles — is born
-        # 8-byte-wide and no string gram ever crosses an exchange
-        grams = grams.select(
-            id_col,
-            F.transform("_grams", lambda g: F.xxhash64(g)).alias("_grams"),
-        )
-    posts = grams.select(id_col, F.explode("_grams").alias("_g"))
+    posts = _novelty_posts(ensure_parallelism(df), n, text_col, id_col, hash_grams)
     # first-seen via a partition-only window min (r12): ONE shuffle of
     # the exploded gram table instead of groupBy(min) + a gram-keyed
     # join back over the same rows — the min over an unordered gram
     # partition is exactly the old join's _first, so results are
     # bit-identical while the plan drops the aggregate + sort-merge.
-    from pyspark.sql import Window
-
-    first_w = F.min(id_col).over(Window.partitionBy("_g")).alias("_first")
+    first_w = F.min(id_col).over(Window.partitionBy("g")).alias("_first")
     return (
         posts.select(id_col, first_w)
         .groupBy(id_col)
@@ -541,7 +489,6 @@ def ngram_containment_pairs(
     id_col: str = "doc_id",
     block_cols: tuple = (),
     round_to: int = 6,
-    max_df: int | float | None = None,
 ) -> DataFrame:
     """Exact n-gram CONTAINMENT pairs via the shared inverted index:
     C(A,B) = |A∩B| / min(|A|,|B|) (Broder's asymmetric containment,
@@ -553,18 +500,12 @@ def ngram_containment_pairs(
     containment for quote/subset inclusion (the 'this doc is a chunk of
     that doc' case that plagues scraped corpora).
 
-    Plan shape is identical to ``ngram_jaccard_pairs_inverted``: one
-    Arrow shingle kernel into the checkpointed shingle table, explode
-    to postings, self-equi-join on (blocks…, shingle), count shared
-    shingles per pair, score from counts + set sizes. Cost Σ df² — and
-    because high-containment pairs must share most of the SMALL side's
-    set, candidate generation never needs more pruning than Jaccard
-    does. ``max_df`` applies the same hot-shingle guard (candidates
-    whose every shared shingle is boilerplate can be missed; surviving
-    pairs are re-scored on FULL sets so reported scores stay exact).
-    Pairs are kept when the UNROUNDED containment is ≥ ``threshold`` and
-    reported rounded to ``round_to`` places, the rule of every exact
-    set-overlap verify (``_pair_score``).
+    The plan is ``ngram_jaccard_pairs_inverted``'s count join
+    (``_inverted_pairs``) scored by containment: cost Σ df², the same
+    measured trade against the prefix plan. Pairs are kept when the
+    UNROUNDED containment is ≥ ``threshold`` and reported rounded to
+    ``round_to`` places, the rule of every exact set-overlap verify
+    (``_pair_score``).
 
     Prefix filtering is deliberately NOT offered here: its pruning
     bound derives each doc's prefix length from its OWN set size, which
@@ -572,53 +513,8 @@ def ngram_containment_pairs(
     (Jaccard); containment's bound scales with min(|A|,|B|), unknown at
     index time, so the prefix trick would silently drop qualifying
     pairs."""
-    blocks = list(block_cols)
-    sh = _shingle_table(df, n, text_col, id_col, blocks)
-    posts = sh.select(id_col, *blocks, "_sz", F.explode("_sh").alias("_h"))
-
-    if max_df is not None:
-        hot_keys = _hot_shingle_keys(sh, posts, blocks, max_df)
-        posts = posts.join(
-            broadcast_if_small(hot_keys), [*blocks, "_h"], "left_anti"
-        )
-        cand = _shared_shingle_candidates(posts, blocks, id_col)
-        return _verify_pairs(
-            sh, sh, cand, threshold, id_col, round_to, "containment"
-        )
-
-    shared = _shared_shingle_counts(posts, blocks, id_col)
-    return _score_shared_counts(shared, threshold, round_to, "containment")
-
-
-def shingle_df_profile(
-    df: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 8,
-) -> DataFrame:
-    """Document-frequency histogram of shingles in log₂ buckets, with
-    each bucket's Σ df² — the inverted-index join-row bill. Run this
-    before picking ``max_df``: the top buckets' pair_cost column IS the
-    boilerplate blowup the cap removes."""
-    posts = (
-        ensure_parallelism(df)
-        .select(hashed_shingles_udf(n)(F.col(text_col)).alias("_sh"))
-        .select(F.explode("_sh").alias("_h"))
-    )
-    dfreq = posts.groupBy("_h").agg(F.count(F.lit(1)).alias("_df"))
-    bucket = F.least(
-        F.floor(F.log2(F.col("_df").cast("double"))).cast("int"),
-        F.lit(n_buckets - 1),
-    )
-    return (
-        dfreq.groupBy(bucket.alias("df_bucket_log2"))
-        .agg(
-            F.count(F.lit(1)).alias("n_shingles"),
-            F.max("_df").alias("max_df"),
-            F.sum(F.col("_df") * F.col("_df")).alias("pair_cost"),
-        )
-        .orderBy("df_bucket_log2")
+    return _inverted_pairs(
+        df, threshold, n, text_col, id_col, block_cols, round_to, "containment"
     )
 
 
@@ -892,7 +788,11 @@ def _minhash_udf(n: int, bands: int, rows_per_band: int):
     import numpy as np
     import pandas as pd
 
-    from ..functions.text_kernels import _md5_gram_values, _minhash_band_keys
+    from ..functions.text_kernels import (
+        _md5_gram_values,
+        _minhash_band_keys,
+        _per_doc_lists,
+    )
 
     # validate at construction, not inside the first Arrow batch
     _minhash_band_keys(np.empty(0, np.int64), np.empty(0, np.int64), bands, rows_per_band)
@@ -900,11 +800,7 @@ def _minhash_udf(n: int, bands: int, rows_per_band: int):
     def kernel(texts):
         v, counts = _md5_gram_values(texts.to_numpy(dtype=object), n)
         keys = _minhash_band_keys(v, counts, bands, rows_per_band)
-        offsets = np.concatenate(([0], np.cumsum(counts)))
-        return pd.DataFrame({
-            "_sh": [v[offsets[i] : offsets[i + 1]].tolist() for i in range(len(counts))],
-            "_bands": keys.tolist(),
-        })
+        return pd.DataFrame({"_sh": _per_doc_lists(v, counts), "_bands": keys.tolist()})
 
     return F.pandas_udf(kernel, "struct<_sh: array<long>, _bands: array<long>>")
 

@@ -2063,6 +2063,11 @@ def encode_jpeg_lossless(arr, predictor: int = 4, precision: int = 8,
 
     if precision not in (8, 12, 16):
         raise ValueError("encode_jpeg_lossless: precision must be 8/12/16")
+    if predictor not in range(1, 8):
+        # T.81 H.1.2.1: Ss 0 is reserved for differential frames
+        raise ValueError(
+            f"encode_jpeg_lossless: predictor must be 1-7, got {predictor}"
+        )
     arr = np.asarray(arr)
     gray = arr.ndim == 2
     h, w = arr.shape[:2]

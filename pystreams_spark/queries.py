@@ -17,6 +17,7 @@ Each callable takes (spark, sf_dir) and returns an un-collected DataFrame.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -1886,12 +1887,11 @@ def doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-invariant document fingerprints. Since r4 keyed on md5
     (``fingerprint_md5``: 60-bit int from the digest of the sorted
     distinct tokens) — bit-identical in DuckDB, so the fingerprint
-    VALUES are oracle-checked, not just row counts. The xxhash64
-    ``fingerprint`` stays as the library fast path (pytest-covered).
-    r12: per-row tokenize+sort+md5 spread via ensure_parallelism (the
-    1-row-group fixture scan otherwise runs it in ONE task; no-op on
-    wide inputs) — per-row values are partitioning-independent and the
-    final orderBy fixes the output order."""
+    VALUES are oracle-checked, not just row counts. r12: per-row
+    tokenize+sort+md5 spread via ensure_parallelism (the 1-row-group
+    fixture scan otherwise runs it in ONE task; no-op on wide inputs) —
+    per-row values are partitioning-independent and the final orderBy
+    fixes the output order."""
     from .functions.text import fingerprint_md5, token_count
     from .io import ensure_parallelism
 
@@ -5400,52 +5400,12 @@ def hll_sketch_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("event_type")
 
 
-@query("count_min_user_events")
-def count_min_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-min sketch frequency estimation (§2.D sketches; operators/
-    sketches.py): one narrow pass builds a 5x2048 counter matrix over
-    events.user_id (partial matrices treeAggregate-summed executor-side
-    — the sketch is linear, so this is exact composition), then every
-    distinct key's frequency is estimated from the broadcast matrix and
-    audited against the exact count in the same row. CMS guarantees
-    no undercount ever and overcount <= ceil(e/width * N) w.h.p. —
-    emitted as self-check columns (overcount, within_bound), so the
-    rows-only hash pins the actual estimates. Hash-seeded → rows-only;
-    error/merge guarantees unit-tested."""
-    import math
-
-    from .operators.sketches import build_count_min, cms_estimate_udf, cms_total
-
-    width, depth = 2048, 5
-    ev = _t(spark, sf_dir, "events")
-    hashed = ev.select("user_id", F.xxhash64("user_id").alias("h"))
-    cms = build_count_min(hashed, "h", width=width, depth=depth)
-    n_total = cms_total(cms, depth)
-    bound = int(math.ceil(math.e / width * n_total))
-    est = cms_estimate_udf(spark, cms, depth)
-    exact = hashed.groupBy("user_id", "h").agg(F.count(F.lit(1)).alias("exact_n"))
-    from .gates import gate_rows
-
-    out = (
-        exact.select(
-            "user_id", "exact_n", est(F.col("h")).alias("cms_est")
-        )
-        .withColumn("overcount", F.col("cms_est") - F.col("exact_n"))
-        .withColumn("within_bound", F.col("overcount") <= F.lit(bound))
-    )
-    # r6 invariant gates: CMS NEVER undercounts (hard guarantee) and
-    # stays within the e/width overcount bound (w.h.p. contract)
-    out = gate_rows(
-        out, F.col("overcount") >= 0, "count_min: sketch undercounted a key"
-    )
-    return gate_rows(
-        out, F.col("within_bound"), f"count_min: overcount exceeds bound {bound}"
-    ).orderBy("user_id")
-
-
-@query(
-    "count_min_deterministic",
-    oracle="""
+def _count_min_oracle_sql(within_bound: bool = False) -> str:
+    """DuckDB replay of the count-min queries: the md5 pair of
+    `_cms_md5_pair`, every (row, cell) count of the 5x2048 matrix and
+    each user's min-probe; ``within_bound`` adds overcount ≤
+    CEIL(e / 2048 · N), in DOUBLE and in the Python's operation order."""
+    sql = """
     WITH h AS (
         SELECT user_id,
                ('0x' || substr(md5(CAST(user_id AS VARCHAR) || ':cms1'),
@@ -5468,30 +5428,20 @@ def count_min_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM keys k
     JOIN cells c ON c.pos = (k.h1 + c.d * k.h2) % 2048
     GROUP BY k.user_id, k.exact_n
-    ORDER BY user_id
-    """,
-)
-def count_min_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ORACLE-GRADE count-min sketch (r9, the r8 verdict's #6 recipe
-    applied to the sketch family): the same distributed build skeleton
-    as `count_min_user_events` — per-partition local matrices in an
-    Arrow kernel, treeAggregate sum (the sketch is linear, so partial
-    sums compose exactly) — but the Kirsch–Mitzenmacher hash pair is
-    md5-derived 60-bit COLUMNS and positions are (h1 + d·h2) mod width
-    bigint arithmetic, so DuckDB replays the ENTIRE sketch — every
-    cell count, every point estimate, the per-key overcounts — under
-    one value hash. The engine-hash query stays the production path;
-    this pins the matrix construction and the min-probe exactly. CMS's
-    no-undercount guarantee stays an in-plan gate here too."""
-    from .gates import gate_rows
-    from .operators.sketches import (
-        _cms_positions_portable,
-        build_count_min,
-        cms_estimate_udf,
-    )
+    """
+    if not within_bound:
+        return sql + "ORDER BY user_id"
+    return f"""
+    SELECT *, overcount <= CEIL(CAST({math.e!r} AS DOUBLE) / 2048
+                               * (SELECT COUNT(*) FROM events)) AS within_bound
+    FROM ({sql}) ORDER BY user_id
+    """
 
-    width, depth = 2048, 5
-    ev = _t(spark, sf_dir, "events")
+
+def _cms_md5_pair(ev: DataFrame) -> DataFrame:
+    """(user_id, h1, h2): the Kirsch–Mitzenmacher pair of the count-min
+    queries, the first 60 bits of md5(user_id || ':cms1') and of
+    md5(user_id || ':cms2') with the low bit set (an odd stride)."""
     uid = F.col("user_id").cast("string")
     h1 = F.conv(
         F.substring(F.md5(F.concat(uid, F.lit(":cms1"))), 1, 15), 16, 10
@@ -5499,11 +5449,22 @@ def count_min_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     h2 = F.conv(
         F.substring(F.md5(F.concat(uid, F.lit(":cms2"))), 1, 15), 16, 10
     ).cast("long").bitwiseOR(F.lit(1))
-    hashed = ev.select("user_id", h1.alias("h1"), h2.alias("h2"))
-    cms = build_count_min(
-        hashed, ["h1", "h2"], width, depth, positions=_cms_positions_portable
-    )
-    est = cms_estimate_udf(spark, cms, depth, positions=_cms_positions_portable)
+    return ev.select("user_id", h1.alias("h1"), h2.alias("h2"))
+
+
+def _count_min_user_estimates(
+    spark: SparkSession, sf_dir: str
+) -> tuple[DataFrame, int]:
+    """(user_id, exact_n, cms_est, overcount) of every events user from a
+    5 x 2048 count-min sketch of `_cms_md5_pair`, gated on CMS's hard
+    guarantee (no undercount), and N, the sketch's total."""
+    from .gates import gate_rows
+    from .operators.sketches import build_count_min, cms_estimate_udf, cms_total
+
+    width, depth = 2048, 5
+    hashed = _cms_md5_pair(_t(spark, sf_dir, "events"))
+    cms = build_count_min(hashed, ["h1", "h2"], width, depth)
+    est = cms_estimate_udf(spark, cms, depth)
     out = (
         hashed.groupBy("user_id", "h1", "h2")
         .agg(F.count(F.lit(1)).alias("exact_n"))
@@ -5523,7 +5484,42 @@ def count_min_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = gate_rows(
         out, F.col("overcount") >= 0, "count_min: sketch undercounted a key"
     )
-    return out.orderBy("user_id")
+    return out, cms_total(cms, depth)
+
+
+@query("count_min_user_events", oracle=_count_min_oracle_sql(within_bound=True))
+def count_min_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Count-min sketch frequency estimation (§2.D sketches; operators/
+    sketches.py): one narrow pass builds a 5x2048 counter matrix over
+    events.user_id (partial matrices treeAggregate-summed executor-side
+    — the sketch is linear, so this is exact composition), then every
+    distinct key's frequency is estimated from the broadcast matrix and
+    audited against the exact count in the same row. CMS guarantees
+    no undercount ever and overcount <= ceil(e/width * N) w.h.p. —
+    both gated in the plan, the bound also emitted as ``within_bound``.
+    The sketch is `count_min_deterministic`'s, so the oracle replays
+    every estimate and the bound."""
+    from .gates import gate_rows
+
+    out, n_total = _count_min_user_estimates(spark, sf_dir)
+    bound = int(math.ceil(math.e / 2048 * n_total))
+    out = out.withColumn("within_bound", F.col("overcount") <= F.lit(bound))
+    return gate_rows(
+        out, F.col("within_bound"), f"count_min: overcount exceeds bound {bound}"
+    ).orderBy("user_id")
+
+
+@query("count_min_deterministic", oracle=_count_min_oracle_sql())
+def count_min_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """ORACLE-GRADE count-min sketch (r9, the r8 verdict's #6 recipe
+    applied to the sketch family): per-partition local matrices in an
+    Arrow kernel, treeAggregate sum (the sketch is linear, so partial
+    sums compose exactly), with the Kirsch–Mitzenmacher hash pair as
+    md5-derived 60-bit COLUMNS and positions (h1 + d·h2) mod width
+    bigint arithmetic, so DuckDB replays the ENTIRE sketch — every
+    cell count, every point estimate, the per-key overcounts — under
+    one value hash. CMS's no-undercount guarantee is an in-plan gate."""
+    return _count_min_user_estimates(spark, sf_dir)[0].orderBy("user_id")
 
 
 @query(
@@ -9978,58 +9974,26 @@ def events_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "jaccard_similarity_histogram",
-    # The oracle models the SAME df-capped semantics the Spark plan
-    # runs (max_df=0.5): a pair enters the histogram only if it shares
-    # at least one COLD shingle (per-language df ≤ ceil(0.5 × the
-    # language's doc count)); its jaccard is then exact over the full
-    # sets. Without the cold-witness clause the two sides compute
-    # different functions the moment a boilerplate shingle appears.
     oracle=f"""
-    WITH {_jaccard_pairs_ctes(0.02, block="lang")},
-    nb AS (SELECT lang, COUNT(*) AS n_docs FROM s GROUP BY lang),
-    dfreq AS (
-        SELECT lang, gram, COUNT(*) AS df
-        FROM (SELECT lang, unnest(sh) AS gram FROM s) GROUP BY lang, gram
-    ),
-    cold AS (
-        SELECT d.lang, d.gram FROM dfreq d JOIN nb USING (lang)
-        WHERE d.df <= CEIL(0.5 * nb.n_docs)
-    ),
-    sc AS (
-        SELECT s.doc_id, COALESCE(ARRAY_AGG(c.gram), []) AS cold_sh
-        FROM s LEFT JOIN (SELECT lang, gram FROM cold) c
-          ON s.lang = c.lang AND list_contains(s.sh, c.gram)
-        GROUP BY s.doc_id
-    ),
-    p AS (
-        SELECT x.jaccard AS j
-        FROM pairs x JOIN sc a ON a.doc_id = x.id_a JOIN sc b ON b.doc_id = x.id_b
-        WHERE len(list_intersect(a.cold_sh, b.cold_sh)) > 0
-    )
-    SELECT ROUND(FLOOR(j / 0.05) * 0.05, 2) AS sim_bucket,
+    WITH {_jaccard_pairs_ctes(0.02, block="lang")}
+    SELECT ROUND(FLOOR(jaccard / 0.05) * 0.05, 2) AS sim_bucket,
            CAST(COUNT(*) AS BIGINT) AS n_pairs
-    FROM p GROUP BY 1 ORDER BY sim_bucket
+    FROM pairs GROUP BY 1 ORDER BY sim_bucket
     """,
 )
 def jaccard_similarity_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Threshold-calibration curve for the near-dup stack: how many
     candidate pairs live in each 0.05-wide Jaccard band (above a 0.02
-    floor). The number a curator reads before choosing the dedup
-    threshold — a fat tail near 1.0 means true copies; mass near the
-    floor is shingle noise. Executed on the inverted-index pair plan
-    (cost Σ df², not n²), same as `ngram_jaccard_neardup`, with the
-    hot-shingle guard engaged: shingles present in > half a language's
-    documents are boilerplate by definition and are excluded from
-    candidate generation (each surviving pair still scores on its full
-    sets, so every reported jaccard is exact — see
-    `ngram_jaccard_pairs_inverted(max_df=...)`). The oracle replicates
-    the SAME capped semantics (cold-shared-shingle witness clause), so
-    the parity check holds even on boilerplate-bearing corpora."""
+    floor), per-language pairs only. The number a curator reads before
+    choosing the dedup threshold — a fat tail near 1.0 means true
+    copies; mass near the floor is shingle noise. Executed on the
+    inverted-index count join (cost Σ df², not n²); the oracle buckets
+    the all-pairs Jaccard CTE."""
     from .operators.dedup import ngram_jaccard_pairs_inverted
 
     d = _t(spark, sf_dir, "documents")
     pairs = ngram_jaccard_pairs_inverted(
-        d, threshold=0.02, n=3, block_cols=("lang",), max_df=0.5
+        d, threshold=0.02, n=3, block_cols=("lang",)
     )
     return (
         pairs.groupBy(
@@ -10399,15 +10363,16 @@ def zipf_fit_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     h AS (
         SELECT doc_id, lang,
                CAST(len(sh) AS BIGINT) AS exact_distinct,
-               list_sort(list_distinct(list_transform(sh,
-                 x -> ('0x' || substr(md5(x), 1, 12))::BIGINT
-                        / 281474976710656.0))) AS hs
+               list_sort(list_transform(sh,
+                 x -> ('0x' || substr(md5(x), 1, 15))::BIGINT)) AS hs
         FROM s
     ),
     est AS (
         SELECT doc_id, lang, exact_distinct,
                CASE WHEN len(hs) < 24 THEN CAST(len(hs) AS DOUBLE)
-                    ELSE 23.0 / hs[24] END AS kmv_raw
+                    ELSE 23.0 / (CAST(hs[24] AS DOUBLE)
+                                 / CAST(1152921504606846976 AS DOUBLE)) END
+                 AS kmv_raw
         FROM h
     )
     SELECT doc_id, lang, exact_distinct,
@@ -10420,7 +10385,8 @@ def zipf_fit_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_minhash_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-minimum-values distinct-shingle estimator per document
     (Bar-Yossef et al. 2002 — the sketch family HLL generalizes),
-    deterministic via md5 hashing so the SKETCH ITSELF is
+    deterministic via the md5 gram values (the k-th smallest, as the
+    fraction DOUBLE(v) / 2⁶⁰) so the SKETCH ITSELF is
     oracle-checkable — rare among sketches, and the point: the exact
     count sits beside the estimate, so the oracle pins both the
     estimator's arithmetic and its actual error. The whole sketch runs

@@ -11,9 +11,9 @@ Per micro-batch (driven by ``foreachBatch``; the store plumbing is
 1. params check and store listing: the gram width is bound to the
    store (FileSystem calls, no Spark job), and the committed epochs ``< e``
    are listed BEFORE anything is written,
-2. gram once: the production hashed-gram construction (word n-gram →
-   xxhash64 inside the per-doc array, Column algebra only — identical
-   classes to ``ngram_novelty_scores(hash_grams=True)``), pinned: the
+2. gram once: ``dedup._novelty_posts`` with ``hash_grams`` (word
+   n-gram → xxhash64 inside the per-doc array, Column algebra only —
+   the posts of ``ngram_novelty_scores(hash_grams=True)``), pinned: the
    first-seen aggregate and the score join both read it,
 3. intra-batch first-seen: per-gram MIN(doc id) inside the batch,
 4. state write first: a gram is NOVEL iff its batch-first doc owns it
@@ -46,6 +46,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import _novelty_posts
 from .epoch_store import (
     assert_markers_enabled,
     check_params,
@@ -99,31 +100,6 @@ class NoveltyIngest:
         """All scored rows of the committed epoch outputs so far."""
         return read_committed(spark, f"{self.state_dir}/out", "NoveltyIngest")
 
-    def _batch_posts(self, batch: DataFrame) -> DataFrame:
-        """(id, g) with g = xxhash64 of each DISTINCT word n-gram —
-        the `hash_grams=True` construction, verbatim."""
-        from ..functions.text import tokens
-
-        n, id_col = self.n, self.id_col
-        base = batch.select(
-            F.col(id_col), tokens(F.col(self.text_col)).alias("_toks")
-        )
-        grams = base.select(
-            id_col,
-            F.array_distinct(
-                F.transform(
-                    F.sequence(
-                        F.lit(1),
-                        F.greatest(F.size("_toks") - (n - 1), F.lit(1)),
-                    ),
-                    lambda i: F.xxhash64(
-                        F.concat_ws(" ", F.slice(F.col("_toks"), i, n))
-                    ),
-                )
-            ).alias("_grams"),
-        )
-        return grams.select(id_col, F.explode("_grams").alias("g"))
-
     def process_batch(self, batch: DataFrame, epoch_id: int) -> None:
         spark = batch.sparkSession
         id_col, epoch_id = self.id_col, int(epoch_id)
@@ -134,7 +110,9 @@ class NoveltyIngest:
         dirs = committed_epoch_dirs(spark, root, epoch_id, "NoveltyIngest")
 
         # one gram pass, pinned: posts feed first-seen and the scores
-        posts = self._batch_posts(batch).localCheckpoint(eager=True)
+        posts = _novelty_posts(
+            batch, self.n, self.text_col, id_col, hash_grams=True
+        ).localCheckpoint(eager=True)
         batch_first = posts.groupBy("g").agg(F.min(id_col).alias("_novel_owner"))
 
         fresh = batch_first.select("g")

@@ -1355,6 +1355,19 @@ def test_jpeg_lossless_decodes_exactly(spark):
     assert (img[:, :, 0] == np.round(g12 * (255 / 4095)).astype(np.uint8)).all()
 
 
+@pytest.mark.parametrize("predictor", [0, 8, -1])
+def test_jpeg_lossless_encoder_refuses_invalid_predictor(predictor):
+    """A non-differential lossless scan's Ss must be one of the seven
+    predictors (T.81 H.1.2.1): 0 and 8 would give a stream the decoder
+    refuses, so the encoder raises instead of writing one."""
+    import numpy as np
+
+    from pystreams_spark.operators.multimodal import encode_jpeg_lossless
+
+    with pytest.raises(ValueError, match="predictor must be 1-7"):
+        encode_jpeg_lossless(np.zeros((8, 8), dtype=np.uint8), predictor=predictor)
+
+
 def test_tiff_old_style_jpeg_compression6(spark):
     """r8: old-style JPEG-in-TIFF (compression 6) — the interoperable
     JPEGInterchangeFormat variant holds one complete JPEG stream;

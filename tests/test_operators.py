@@ -488,9 +488,32 @@ def test_inverted_jaccard_equals_bruteforce(spark, sf_dir):
     for tau in _TWO_THIRDS_TAUS:
         brute = _pair_rows(ngram_jaccard_pairs(two, threshold=tau, n=3))
         assert brute == ([(1, 2, 0.666667)] if tau == 2 / 3 else []), tau
-        for max_df in (None, 2):  # count path, and the full-set verify
-            inv = ngram_jaccard_pairs_inverted(two, threshold=tau, n=3, max_df=max_df)
-            assert _pair_rows(inv) == brute, (tau, max_df)
+        inv = ngram_jaccard_pairs_inverted(two, threshold=tau, n=3)
+        assert _pair_rows(inv) == brute, tau
+
+
+def test_gram_table_values_are_the_minhash_values(spark):
+    """The exact set-overlap plans and MinHash read one gram value: for
+    every doc, the checkpointed gram table's ``_sh`` is the MinHash
+    kernel's ``_sh`` (sorted distinct md5 values), NULL, empty and
+    shorter-than-n texts included."""
+    from pystreams_spark.operators.dedup import _minhash_signatures, _shingle_table
+
+    docs = spark.createDataFrame(
+        [
+            (1, None),
+            (2, ""),
+            (3, "a"),
+            (4, "a b"),
+            (5, "a b c"),
+            (6, "the cat sat on the mat the cat sat"),
+            (7, "  spaced   out\ttext  with tabs "),
+        ],
+        "doc_id long, text string",
+    )
+    table = {r.doc_id: r._sh for r in _shingle_table(docs, 3, "text", "doc_id", []).collect()}
+    mh = {r.doc_id: r._sh for r in _minhash_signatures(docs, 3, 8, 2).collect()}
+    assert len(table) == 7 and table == mh
 
 
 def _boilerplate_corpus(spark, n_docs=200):
@@ -579,7 +602,7 @@ def test_jaccard_cut_is_the_unrounded_ratio_on_every_path(spark, tau):
 @pytest.mark.parametrize("tau", _TWO_THIRDS_TAUS)
 def test_containment_cut_is_the_unrounded_ratio(spark, tau):
     """C = |A∩B| / min(|A|, |B|) = 2/3 for "a b c d e" (3 grams) and
-    "a b c d f g" (4 grams, 2 shared): both containment paths keep the
+    "a b c d f g" (4 grams, 2 shared): the containment join keeps the
     pair exactly when the unrounded ratio reaches τ, the oracle's cut,
     and report it rounded."""
     from pystreams_spark.operators.dedup import ngram_containment_pairs
@@ -588,9 +611,8 @@ def test_containment_cut_is_the_unrounded_ratio(spark, tau):
         [(1, "a b c d e"), (2, "a b c d f g")], "doc_id long, text string"
     )
     want = [(1, 2, 0.666667)] if 2 / 3 >= tau else []
-    for max_df in (None, 2):
-        got = ngram_containment_pairs(df, threshold=tau, n=3, max_df=max_df)
-        assert _pair_rows(got, "containment") == want, max_df
+    got = ngram_containment_pairs(df, threshold=tau, n=3)
+    assert _pair_rows(got, "containment") == want
 
 
 def test_prefix_jaccard_bounds_boilerplate_blowup(spark):
@@ -620,43 +642,6 @@ def test_prefix_jaccard_bounds_boilerplate_blowup(spark):
     ]
     assert join_rows, "expected join nodes with row metrics"
     assert max(join_rows) < 4000, f"hot-shingle blowup not bounded: {join_rows}"
-
-
-def test_inverted_jaccard_max_df_guard(spark):
-    """With a df cap, reported pairs keep their EXACT jaccard (verify
-    runs on full sets) and boilerplate-only pairs are the only loss."""
-    from pystreams_spark.operators.dedup import ngram_jaccard_pairs_inverted
-
-    docs = _boilerplate_corpus(spark)
-    brute = sorted(
-        (r.id_a, r.id_b, r.jaccard)
-        for r in ngram_jaccard_pairs(docs, threshold=0.5, n=3).collect()
-    )
-    for cap in (10, 0.05):  # absolute count and fraction-of-docs forms
-        capped = sorted(
-            (r.id_a, r.id_b, r.jaccard)
-            for r in ngram_jaccard_pairs_inverted(
-                docs, threshold=0.5, n=3, max_df=cap
-            ).collect()
-        )
-        assert capped == brute, f"cap={cap}"
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="fraction"):
-        ngram_jaccard_pairs_inverted(docs, threshold=0.5, max_df=1.5)
-
-
-def test_shingle_df_profile_flags_boilerplate(spark):
-    from pystreams_spark.operators.dedup import shingle_df_profile
-
-    docs = _boilerplate_corpus(spark)
-    prof = shingle_df_profile(docs, n=3).collect()
-    top = max(prof, key=lambda r: r.df_bucket_log2)
-    # the boilerplate shingles sit in the top bucket with df≈203 and
-    # dominate the pair-cost column
-    assert top.max_df >= 200
-    assert top.pair_cost > sum(r.pair_cost for r in prof) * 0.9
 
 
 def test_pack_contiguous_invariants_and_partition_independence(spark, sf_dir):
@@ -1196,19 +1181,20 @@ def test_count_min_no_undercount_and_bound(spark, sf_dir):
         cms_estimate_udf,
         cms_total,
     )
+    from pystreams_spark.queries import _cms_md5_pair
 
     width, depth = 1024, 5
     ev = load_table(spark, sf_dir, "events")
-    hashed = ev.select(F.xxhash64("user_id").alias("h"))
-    cms = build_count_min(hashed, "h", width=width, depth=depth)
+    hashed = _cms_md5_pair(ev)
+    cms = build_count_min(hashed, ["h1", "h2"], width=width, depth=depth)
     n = cms_total(cms, depth)
     assert n == ev.count()  # every row of the matrix sums to N
 
     est = cms_estimate_udf(spark, cms, depth)
     rows = (
-        hashed.groupBy("h")
+        hashed.groupBy("h1", "h2")
         .agg(F.count(F.lit(1)).alias("exact_n"))
-        .select("h", "exact_n", est(F.col("h")).alias("est_n"))
+        .select("exact_n", est(F.col("h1"), F.col("h2")).alias("est_n"))
         .collect()
     )
     bound = math.ceil(math.e / width * n)
@@ -1225,14 +1211,16 @@ def test_count_min_is_linear(spark):
     import numpy as np
 
     from pystreams_spark.operators.sketches import build_count_min
+    from pystreams_spark.queries import _cms_md5_pair
 
-    a = spark.range(0, 5000).selectExpr("xxhash64(id % 37) AS h")
-    b = spark.range(5000, 8000).selectExpr("xxhash64(id % 11) AS h")
+    a = _cms_md5_pair(spark.range(0, 5000).selectExpr("id % 37 AS user_id"))
+    b = _cms_md5_pair(spark.range(5000, 8000).selectExpr("id % 11 AS user_id"))
     whole = a.unionAll(b)
-    sa = np.frombuffer(build_count_min(a, "h", 256, 3), dtype=np.int64)
-    sb = np.frombuffer(build_count_min(b, "h", 256, 3), dtype=np.int64)
-    sw = np.frombuffer(build_count_min(whole, "h", 256, 3), dtype=np.int64)
-    assert ((sa + sb) == sw).all()
+
+    def sketch(df):
+        return np.frombuffer(build_count_min(df, ["h1", "h2"], 256, 3), dtype=np.int64)
+
+    assert ((sketch(a) + sketch(b)) == sketch(whole)).all()
 
 
 def test_pii_redaction_semantics(spark):
@@ -2674,35 +2662,6 @@ def test_containment_catches_quote_inclusion_jaccard_misses(spark):
     assert cont[(1, 2)] == 1.0  # doc 1 fully contained in doc 2
     jac = ngram_jaccard_pairs(df, threshold=0.5, n=3).collect()
     assert not jac  # Jaccard can't see the inclusion at any useful tau
-
-
-def test_containment_capped_matches_uncapped_scores(spark):
-    from pystreams_spark.operators.dedup import ngram_containment_pairs
-
-    # every doc shares the same boilerplate prefix; real inclusion pair
-    # (1,2) must survive the df-cap with an EXACT full-set score
-    boiler = "common header line for all docs"
-    body = " ".join(f"t{i}" for i in range(30))
-    rows = [
-        (1, boiler + " " + body),
-        (2, boiler + " " + body + " extra tail tokens here"),
-        (3, boiler + " something else entirely different words"),
-        (4, boiler + " yet another unrelated document body text"),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    full = {
-        (r.id_a, r.id_b): r.containment
-        for r in ngram_containment_pairs(df, threshold=0.5, n=3).collect()
-    }
-    capped = {
-        (r.id_a, r.id_b): r.containment
-        for r in ngram_containment_pairs(
-            df, threshold=0.5, n=3, max_df=3
-        ).collect()
-    }
-    assert (1, 2) in capped
-    for pair, score in capped.items():
-        assert score == full[pair]  # capped scores stay exact
 
 
 def test_cross_source_overlap_planted_resale(spark):
