@@ -56,8 +56,11 @@ def gate_summary(
     The assert runs in a projection over the summary rows; on success
     ``assert_true`` returns NULL, so the IS-NOT-NULL filter drops every
     summary row — a data-dependent predicate the optimizer cannot fold
-    away, which is what makes the branch unprunable. ``df``-side rows
-    pass through untouched. This closes the vacuous-pass hole of
+    away, which is what makes the branch unprunable. The branch's
+    columns are casts of that assert result, not NULL literals: a
+    downstream join or filter infers IS NOT NULL on its keys and pushes
+    it into the union, where a literal NULL column would fold the
+    branch away unevaluated. ``df``-side rows pass through untouched. This closes the vacuous-pass hole of
     ``gate_rows``/``gate_global``: a gate written as a filter over
     ``df``'s own rows never evaluates when the frame is empty — exactly
     the case (zero candidates) where a quality contract matters most
@@ -69,7 +72,7 @@ def gate_summary(
         .filter(F.col("_z").isNotNull())
         .select(
             *[
-                F.lit(None).cast(f.dataType).alias(f.name)
+                F.col("_z").cast(f.dataType).alias(f.name)
                 for f in df.schema.fields
             ]
         )

@@ -304,26 +304,30 @@ def materialize_many(
     return out
 
 
-def broadcast_if_small(df: DataFrame, max_rows: int = 1_000_000) -> DataFrame:
-    """Adaptive broadcast: hint only when the frame is verifiably small.
+# Row cap under which ``broadcast_if_small`` hints its frame.
+BROADCAST_MAX_ROWS = 1_000_000
 
-    Data-dependent intermediates (e.g. LSH candidate-pair lists, whose
-    size is the band-collision count — near-quadratic on a dup-heavy
-    corpus) must not carry an unconditional ``F.broadcast`` hint: the
-    hint overrides AQE's size check and fails at the 8 GB broadcast /
-    driver-memory cap exactly on the corpora dedup exists for. This
-    materializes the frame once (localCheckpoint, so the count and the
-    downstream join share one computation), counts it, and broadcasts
-    only under ``max_rows``; above, it returns the checkpointed frame
-    and the join falls back to a shuffle join (AQE may still decide to
-    broadcast from its own runtime size estimate).
+
+def broadcast_if_small(df: DataFrame) -> DataFrame:
+    """Broadcast hint for the build side of a cross join, set only when
+    a count shows the frame has at most ``BROADCAST_MAX_ROWS`` rows.
+
+    Everywhere else AQE picks the join strategy from the measured size
+    of the finished shuffle stage, so no size probe is needed. A cross
+    join has no exchange to measure: unhinted it plans as a
+    ``CartesianProduct`` that AQE cannot re-plan, and an unconditional
+    ``F.broadcast`` fails at the broadcast / driver-memory cap on a
+    large build side. So this pins the frame (``localCheckpoint``; the
+    count and the join share one computation), counts it, and hints it
+    only under the cap. ``similarity.margin_bitext_mine`` is its one
+    caller.
     """
     from pyspark.sql import functions as F
 
     # lazy pin: the count() below materializes the checkpoint inside its
     # own job, so the size probe costs ONE driver barrier, not two
     mat = df.localCheckpoint(eager=False)
-    if mat.count() <= max_rows:
+    if mat.count() <= BROADCAST_MAX_ROWS:
         return F.broadcast(mat)
     return mat
 

@@ -24,8 +24,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..io import broadcast_if_small
-
 
 def pair_cooccurrence(
     df: DataFrame,
@@ -63,10 +61,10 @@ def pair_cooccurrence(
     # n_baskets: the denominator of lift's expected co-occurrence
     n_baskets = b.select("_bk").distinct().count()
     # `frequent` feeds three consumers (the kept prune and both count
-    # ratio joins) — materialize/hint it ONCE; its projections below
-    # inherit the broadcast hint instead of re-running the groupBy and
-    # re-checkpointing per consumer
-    frequent = broadcast_if_small(
+    # ratio joins): an aggregate of the pinned `b`, so each consumer
+    # re-reads the pin, and AQE picks each join's strategy from the
+    # finished aggregate's size
+    frequent = (
         b.groupBy("_it")
         .agg(F.count(F.lit(1)).alias("_ic"))
         .filter(F.col("_ic") >= min_support)
@@ -74,15 +72,15 @@ def pair_cooccurrence(
     kept = b.join(frequent.select("_it"), "_it", "left_semi")
     if max_basket_size is not None:
         # anti-join against the OVER-cap baskets: mega-baskets are few
-        # by the guard's own premise, so the exclusion set broadcasts —
-        # the complement (≈ every basket id) never materializes
+        # by the guard's own premise, so AQE broadcasts the exclusion
+        # set — the complement (≈ every basket id) never materializes
         big = (
             kept.groupBy("_bk")
             .agg(F.count(F.lit(1)).alias("_bs"))
             .filter(F.col("_bs") > int(max_basket_size))
             .select("_bk")
         )
-        kept = kept.join(broadcast_if_small(big), "_bk", "left_anti")
+        kept = kept.join(big, "_bk", "left_anti")
     # the self-join reads `kept` twice and (with the cap) its lineage
     # holds a second aggregation over itself — cut it once
     kept = kept.localCheckpoint(eager=True)
@@ -140,7 +138,7 @@ def pmi_collocations(
     vocabulary-sized. Scale shape: ONE corpus scan to the bigram
     stream, one grouped count (shuffle keys = distinct bigrams, not
     corpus rows), marginals derived from the count table (never a
-    second corpus pass), broadcast-while-small joins back, and top-k
+    second corpus pass), joins back broadcast by AQE while small, and top-k
     (when requested) plans as TakeOrdered."""
     from ..functions.text import adjacent_token_pairs, tokens
     from ..io import ensure_parallelism
@@ -168,8 +166,8 @@ def pmi_collocations(
     n = c12.agg(F.sum("pair_count").alias("_n"))
     scored = (
         c12.filter(F.col("pair_count") >= int(min_count))
-        .join(broadcast_if_small(c1), "w1")
-        .join(broadcast_if_small(c2), "w2")
+        .join(c1, "w1")
+        .join(c2, "w2")
         .crossJoin(F.broadcast(n))
     )
     pmi = F.log(

@@ -127,7 +127,7 @@ def incremental_exact_dedup(
     No false negatives (every corpus text's hash is in the bloom), so
     skipping bloom-negative rows in verification is exact.
     """
-    from ..io import broadcast_if_small, ensure_parallelism
+    from ..io import ensure_parallelism, materialize
 
     spark = new_df.sparkSession
     h = F.xxhash64(F.col(text_col))
@@ -142,16 +142,20 @@ def incremental_exact_dedup(
         "_h", num_bits, k,
     )
     probe = bloom_might_contain_udf(spark, bloom, k)
-    pos_keys = (
+    # lazy pin: unpinned, the optimizer infers the probe filter onto
+    # the corpus side of the semi-join below and runs the kernel over
+    # every corpus row, all of which pass (no false negatives)
+    pos_keys = materialize(
         new_df.select(h.alias("_h"))
         .filter(F.col("_h").isNotNull())
         .filter(probe(F.col("_h")))
-        .distinct()
+        .distinct(),
+        eager=False,
     )
     matched_texts = (
         corpus_df.select(F.col(text_col), h.alias("_h"))
-        .join(broadcast_if_small(pos_keys), "_h", "left_semi")
+        .join(pos_keys, "_h", "left_semi")
         .select(text_col)
         .distinct()
     )
-    return new_df.join(broadcast_if_small(matched_texts), text_col, "left_anti")
+    return new_df.join(matched_texts, text_col, "left_anti")

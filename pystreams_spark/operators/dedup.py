@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.text import shingles
 from ..functions.text_kernels import hashed_shingles_udf, simhash_md5_udf
-from ..io import broadcast_if_small, ensure_parallelism, materialize
+from ..io import ensure_parallelism, materialize
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -61,14 +61,14 @@ def exact_dedup_hashed(
     So document bytes move for the duplicate-candidate slice only; the
     r4 runtime-metrics probe measures this (shuffle bytes ≪ corpus text
     bytes), where the previous form — window over (hash, len, text) —
-    silently dragged every document through the exchange. The dup-key
-    frame rides ``broadcast_if_small`` (falls back to a key-only
+    silently dragged every document through the exchange. AQE
+    broadcasts the dup-key frame from its measured size (a key-only
     shuffle join when dup cardinality is huge)."""
     keyed = df.withColumn("_h", F.xxhash64(text_col)).withColumn(
         "_len", F.length(text_col)
     )
     keys = keyed.select(id_col, "_h", "_len")
-    dup_keys = broadcast_if_small(
+    dup_keys = (
         keys.groupBy("_h", "_len")
         .agg(F.count(F.lit(1)).alias("_n"))
         .filter(F.col("_n") > 1)
@@ -192,14 +192,14 @@ def _verify_pairs(
 
     array_intersect over fixed-width longs instead of shingle strings —
     the joined sides shuffle 8 bytes per gram instead of the n-gram
-    text. The candidate list rides ``broadcast_if_small`` into the
-    first join, so non-candidate rows never shuffle their arrays. Cuts
+    text. AQE broadcasts the candidate list into the first join while
+    it is small, so non-candidate rows never shuffle their arrays. Cuts
     and rounds by ``_pair_score``'s rule (every candidate for
     ``threshold=None``), reporting ``metric``."""
     a = sh_a.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sa"))
     b = sh_b.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sb"))
     return _pair_score(
-        broadcast_if_small(cands).join(a, "id_a").join(b, "id_b"),
+        cands.join(a, "id_a").join(b, "id_b"),
         metric,
         F.size(F.array_intersect("_sa", "_sb")).cast("double"),
         F.size("_sa").cast("double"),
@@ -562,12 +562,8 @@ def cross_source_shingle_overlap(
         .groupBy("source_a", "source_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-    ta = broadcast_if_small(
-        tot.select(F.col("_src").alias("source_a"), F.col("_n").alias("n_grams_a"))
-    )
-    tb = broadcast_if_small(
-        tot.select(F.col("_src").alias("source_b"), F.col("_n").alias("n_grams_b"))
-    )
+    ta = tot.select(F.col("_src").alias("source_a"), F.col("_n").alias("n_grams_a"))
+    tb = tot.select(F.col("_src").alias("source_b"), F.col("_n").alias("n_grams_b"))
     return (
         shared.join(ta, "source_a")
         .join(tb, "source_b")
@@ -903,7 +899,7 @@ def banded_hamming_pairs(
     sa = sig.select(F.col(id_col).alias("id_a"), F.col(sig_col).alias("_sa"))
     sb = sig.select(F.col(id_col).alias("id_b"), F.col(sig_col).alias("_sb"))
     return (
-        sa.join(broadcast_if_small(pairs), "id_a")
+        sa.join(pairs, "id_a")
         .join(sb, "id_b")
         .select(
             "id_a",
@@ -948,13 +944,12 @@ def minhash_deterministic_candidates(
 
     Scale shape: one narrow kernel pass (``_minhash_udf``) pinned for
     its three readers, a (band, key)-keyed self-join whose row bill is
-    the band-collision count (the LSH design parameter), and a
-    broadcast verify of the collision rows — ``minhash_neardup_pairs``
-    with every candidate kept. The band-share count is taken after the
-    verify, so the pair aggregation runs with the action and not in
-    the broadcast's construction-time size probe."""
-    # lazy pin: the collision list's broadcast_if_small count runs at
-    # construction and its lineage passes through the pin
+    the band-collision count (the LSH design parameter), and a verify
+    of the collision rows — ``minhash_neardup_pairs`` with every
+    candidate kept. The band-share count is taken after the verify, so
+    the pair aggregation runs once, with the action."""
+    # lazy pin: the band self-join and both verify sides read it, and
+    # the kernel runs once, with the first action
     sigs = _minhash_signatures(
         ensure_parallelism(df), n, bands, rows_per_band,
         text_col=text_col, id_col=id_col,
@@ -978,8 +973,8 @@ def _minhash_signatures(
 ) -> DataFrame:
     """Lazy (``id_col``, ``_sh`` md5 gram values, ``_bands`` band keys)
     frame from one narrow kernel pass over the text. The banded
-    self-join, broadcast_if_small's count and the exact-Jaccard verify
-    all read it, so callers pin it once — ``materialize`` in the batch
+    self-join and both sides of the exact-Jaccard verify all read it,
+    so callers pin it once — ``materialize`` in the batch
     path, the state write in ``NeardupIngest`` — or each consumer
     re-runs the kernel stage (the reproducible 30× r2 bench regression
     on the near-dup pipeline)."""

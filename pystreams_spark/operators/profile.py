@@ -249,16 +249,12 @@ def robust_outlier_report(
             "median"
         )
     )
-    from ..io import broadcast_if_small
-
-    joined = df.join(broadcast_if_small(med), gc)
+    joined = df.join(med, gc)
     dev = F.abs(F.col(value_col) - F.col("median"))
     with_mad = joined.groupBy(*gc).agg(
         F.round(F.percentile(dev, F.lit(0.5)), round_to).alias("mad")
     )
-    scored = joined.join(
-        broadcast_if_small(with_mad.select(*gc, "mad")), gc
-    ).withColumn(
+    scored = joined.join(with_mad.select(*gc, "mad"), gc).withColumn(
         "_z",
         F.round(
             F.try_divide(dev, F.lit(1.4826) * F.col("mad")), round_to

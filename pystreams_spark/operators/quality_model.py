@@ -13,9 +13,9 @@ the engine must provide is the **distributed scoring pass**, and its
 scale shape is fixed:
 
 - the model is a (bucket → weight) table of ``n_buckets`` rows — KBs to
-  MBs, broadcast onto the token stream (``broadcast_if_small`` keeps the
-  honesty check: an oversized model degrades to a hash join rather than
-  blowing the broadcast cap),
+  MBs, which AQE broadcasts onto the token stream from its measured
+  size (an oversized model runs as a hash join rather than blowing the
+  broadcast cap),
 - the corpus is scanned ONCE: explode tokens → hash to bucket (one
   md5 per token, JVM-side codegen) → join weights → per-doc mean,
 - nothing else grows with corpus size.
@@ -63,7 +63,6 @@ def score_linear_model(
     id_col: str = "doc_id",
     carry_cols: Sequence[str] = (),
     bias: float = 0.0,
-    weights_broadcast_max: int = 20_000_000,
 ) -> DataFrame:
     """Score each document with a hashed bag-of-words linear model:
     ``score = sigmoid(mean_over_tokens(weight[bucket(token)]) + bias)``.
@@ -73,10 +72,9 @@ def score_linear_model(
 
     ``weights`` must be a (bucket BIGINT, weight DOUBLE) frame covering
     every bucket in [0, n_buckets); ``demo_weights`` builds a
-    deterministic one. One corpus scan; the model broadcasts while it is
-    verifiably small and falls back to a hash join above the cap."""
+    deterministic one. One corpus scan; AQE broadcasts the model while
+    it is small and runs a hash join above its threshold."""
     from ..functions.text import tokens
-    from ..io import broadcast_if_small
 
     occ = docs.select(
         F.col(id_col),
@@ -87,10 +85,9 @@ def score_linear_model(
         *[F.col(c) for c in carry_cols],
         hashed_feature_bucket("word", n_buckets),
     )
-    w = broadcast_if_small(weights, max_rows=weights_broadcast_max)
     s = F.avg("weight") + F.lit(float(bias))
     return (
-        occ.join(w, "bucket")
+        occ.join(weights, "bucket")
         .groupBy(F.col(id_col), *[F.col(c) for c in carry_cols])
         .agg((F.lit(1.0) / (F.lit(1.0) + F.exp(-s))).alias("score"))
     )

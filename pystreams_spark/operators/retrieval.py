@@ -115,7 +115,7 @@ def distinctive_terms(
     never a second scan. Per-group top-k is a local k-cut after one
     group-key shuffle of the vocabulary-sized scored frame."""
     from ..functions.text import tokens
-    from ..io import broadcast_if_small, ensure_parallelism
+    from ..io import ensure_parallelism
 
     cgw = (
         ensure_parallelism(docs)
@@ -130,8 +130,8 @@ def distinctive_terms(
         F.sum("_ygw").alias("_n"), F.count_distinct(F.col("w")).alias("_v")
     )
     j = (
-        cgw.join(broadcast_if_small(cw), "w")
-        .join(broadcast_if_small(ng), "_g")
+        cgw.join(cw, "w")
+        .join(ng, "_g")
         .crossJoin(F.broadcast(glob))
     )
     a = F.lit(float(alpha))

@@ -435,7 +435,6 @@ def bigram_surprisal_scores(
     id_col: str = "doc_id",
     carry_cols: Sequence[str] = (),
     alpha: float = 0.5,
-    vocab_broadcast_max: int = 5_000_000,
 ) -> DataFrame:
     """Per-document mean bigram surprisal −ln p(w₂|w₁) under a
     corpus-self-fit add-α bigram model — one step up the CCNet/KenLM
@@ -452,11 +451,13 @@ def bigram_surprisal_scores(
     stream; the bigram count table comes off it with a grouped count,
     the context count table is DERIVED from the bigram table (a
     vocabulary-sized regroup, never a second corpus pass), and both join
-    back broadcast-while-small / hash-partitioned above the cap, exactly
-    like the unigram path. No UDF — ln/avg are codegen'd.
+    back by the strategy AQE picks from their measured sizes (broadcast
+    while small, a hash-partitioned shuffle join at web-scale
+    vocabularies), exactly like the unigram path. No UDF — ln/avg are
+    codegen'd.
     """
     from ..functions.text import adjacent_token_pairs, tokens
-    from ..io import broadcast_if_small, ensure_parallelism
+    from ..io import ensure_parallelism, materialize
 
     # tokenize ONCE behind a projected attribute — inlining tokens()
     # into the pair-building HOF re-splits per element (O(tokens²)/doc,
@@ -484,32 +485,23 @@ def bigram_surprisal_scores(
     )
     # materialize the bigram table ONCE; the context table and vocab
     # size derive from it (vocabulary-sized regroups, never a second
-    # corpus pass). The broadcast hint goes only on the JOIN inputs —
-    # hinting the frame the regroup reads would be a no-op that logs a
-    # HintErrorLogger warning per run.
-    # lazy: the vocab_broadcast_max count below materializes the pin.
+    # corpus pass). Lazy pin: its input shuffle runs at construction,
+    # the count stage with the first action.
     # Carry w1 through the groupBy (F.first is exact here: w1 is the
     # text before the separator space and whitespace tokens cannot
     # contain whitespace, so w1 is functionally determined by bg) — the
     # context regroup then never re-splits bg, keeping the repeated-
     # expensive-expr lint clean with NO extra pin (+0.5 s measured) and
     # no wider shuffle key (still hash(bg)).
-    mat12 = (
-        occ.groupBy("bg")
-        .agg(F.count(F.lit(1)).alias("c12"), F.first("w1").alias("w1"))
-        .localCheckpoint(eager=False)
+    mat12 = materialize(
+        occ.groupBy("bg").agg(
+            F.count(F.lit(1)).alias("c12"), F.first("w1").alias("w1")
+        ),
+        eager=False,
     )
+    c12 = mat12.drop("w1")
     c1 = mat12.groupBy("w1").agg(F.sum("c12").alias("c1"))
     v = c1.agg(F.count(F.lit(1)).alias("v"))
-    small = mat12.count() <= vocab_broadcast_max
-    c12 = F.broadcast(mat12.drop("w1")) if small else mat12.drop("w1")
-    # |c1| ≤ |mat12| always (c1 is a regroup of mat12), so when mat12
-    # fits the broadcast budget c1 does too — hint it directly instead
-    # of paying broadcast_if_small's own pin+count barrier (r12). The
-    # size-probing wrapper is only needed when mat12 overflowed.
-    c1 = F.broadcast(c1) if small else broadcast_if_small(
-        c1, max_rows=vocab_broadcast_max
-    )
     a = F.lit(float(alpha))
     p = (F.col("c12") + a) / (F.col("c1") + a * F.col("v"))
     return (
@@ -606,30 +598,30 @@ def unigram_surprisal_scores(
     text_col: str = "text",
     id_col: str = "doc_id",
     carry_cols: Sequence[str] = (),
-    vocab_broadcast_max: int = 5_000_000,
 ) -> DataFrame:
     """Per-document mean unigram surprisal −ln p(w) under a
     corpus-self-fit unigram model (the cheap stand-in for the KenLM
     perplexity filters of CCNet/Gopher). Returns
     (id, carry_cols…, surprisal).
 
-    Scale switch: the vocab (word, count) frame broadcasts onto the
-    token stream only while it is verifiably small
-    (``broadcast_if_small`` under ``vocab_broadcast_max``); above the
-    cap — a web-scale corpus's unigram vocabulary easily exceeds any
-    broadcast budget — the SAME plan falls back to a hash-partitioned
-    shuffle join on the word key. Pass ``vocab_broadcast_max=0`` to
-    force the shuffle form. No UDF anywhere — ln/avg are codegen'd.
+    Scale switch: the vocab (word, count) frame is pinned (its total
+    and the join both read it, and the token split runs once for it),
+    and AQE broadcasts it onto the token stream from its measured size
+    only while it is small; above its threshold — a web-scale corpus's
+    unigram vocabulary easily exceeds any broadcast budget — the SAME
+    plan runs a hash-partitioned shuffle join on the word key. No UDF
+    anywhere — ln/avg are codegen'd.
     """
     from ..functions.text import tokens
-    from ..io import broadcast_if_small
+    from ..io import materialize
 
     toks = docs.select(
         F.col(id_col), *[F.col(c) for c in carry_cols],
         F.explode(tokens(text_col)).alias("word"),
     )
-    vocab = toks.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
-    vocab = broadcast_if_small(vocab, max_rows=vocab_broadcast_max)
+    vocab = materialize(
+        toks.groupBy("word").agg(F.count(F.lit(1)).alias("cnt")), eager=False
+    )
     tot = vocab.agg(F.sum("cnt").alias("n"))
     return (
         toks.join(vocab, "word")

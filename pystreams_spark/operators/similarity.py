@@ -31,7 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vector import cosine
-from ..io import broadcast_if_small, ensure_parallelism
+from ..io import ensure_parallelism, materialize
 from .topk import top_k_per_group
 
 
@@ -366,13 +366,18 @@ def cosine_lsh_pairs(
                 }
             )
 
-    sigs = ensure_parallelism(df).mapInPandas(
-        band_sigs, f"{id_col} long, _bands array<long>"
+    # lazy pin: both sides of the band self-join read the signatures,
+    # and the kernel runs once, with the first action
+    sigs = materialize(
+        ensure_parallelism(df).mapInPandas(
+            band_sigs, f"{id_col} long, _bands array<long>"
+        ),
+        eager=False,
     )
     cands = _banded_candidate_pairs(sigs, id_col=id_col)
     a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va"))
     b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
-    joined = a.join(broadcast_if_small(cands), "id_a").join(b, "id_b")
+    joined = a.join(cands, "id_a").join(b, "id_b")
 
     def verify(batches):
         thr_q = quantized_threshold(threshold, 10**6)
@@ -1215,12 +1220,12 @@ def knn_pq_refined(
     raw ADC@k — while full-precision distance work drops from |corpus|
     to nq × shortlist.
 
-    Scale shape: the shortlist (nq × shortlist id pairs — KBs) rides
-    ``broadcast_if_small`` back onto the corpus scan, so candidate
-    vectors are fetched by a broadcast semi-probe, never a corpus
-    shuffle; the re-rank itself is nq × shortlist rows of Column
-    algebra. Returns (query_id, corpus_id, dist) — exact L2 on the
-    survivors."""
+    Scale shape: the shortlist (nq × shortlist id pairs — KBs) is
+    pinned, so the ADC kernel runs once, and AQE broadcasts it back
+    onto the corpus scan from its measured size, so candidate vectors
+    are fetched by a broadcast probe, never a corpus shuffle; the
+    re-rank itself is nq × shortlist rows of Column algebra. Returns
+    (query_id, corpus_id, dist) — exact L2 on the survivors."""
     from ..functions.vector import as_double, dot, l2_norm
 
     cand = knn_pq_deterministic(
@@ -1235,6 +1240,7 @@ def knn_pq_refined(
         vec_col=vec_col,
         round_to=round_to,
     ).select(query_id, corpus_id)
+    cand = materialize(cand, eager=False)
     cvec = corpus.select(
         F.col(corpus_id),
         as_double(vec_col).alias("_cvec"),
@@ -1245,9 +1251,7 @@ def knn_pq_refined(
         as_double(vec_col).alias("_qvec"),
         l2_norm(vec_col).alias("_qnorm"),
     )
-    fetched = cvec.join(broadcast_if_small(cand), corpus_id).join(
-        F.broadcast(qvec), query_id
-    )
+    fetched = cvec.join(cand, corpus_id).join(F.broadcast(qvec), query_id)
     dist = F.sqrt(
         F.greatest(
             F.col("_qnorm") * F.col("_qnorm")
@@ -1413,7 +1417,7 @@ def semantic_dedup(
         df, threshold, id_col, vec_col, cluster_col, n_cells
     )
     dropped = pairs.select(F.col("id_b").alias(id_col)).distinct()
-    return df.join(broadcast_if_small(dropped), on=id_col, how="left_anti")
+    return df.join(dropped, on=id_col, how="left_anti")
 
 
 def margin_bitext_mine(
@@ -1465,7 +1469,7 @@ def margin_bitext_mine(
     from pyspark.sql import Window
 
     from ..functions.vector import as_double, dot, l2_norm
-    from ..io import broadcast_if_small, ensure_parallelism
+    from ..io import broadcast_if_small
 
     xs = ensure_parallelism(x).select(
         F.col(x_id),
@@ -1504,8 +1508,6 @@ def _margin_mine_from_scored(
     side, integer ppm margin, mutual-best, threshold."""
     from pyspark.sql import Window
 
-    from ..io import broadcast_if_small
-
     wx = Window.partitionBy(x_id).orderBy(F.desc("cos_micros"), y_id)
     wy = Window.partitionBy(y_id).orderBy(F.desc("cos_micros"), x_id)
     dx = (
@@ -1521,8 +1523,8 @@ def _margin_mine_from_scored(
         .agg(F.sum("cos_micros").alias("_dy"))
     )
     m = (
-        scored.join(broadcast_if_small(dx), x_id)
-        .join(broadcast_if_small(dy), y_id)
+        scored.join(dx, x_id)
+        .join(dy, y_id)
         .withColumn(
             "margin_ppm",
             F.expr(f"({2 * k} * 1000000 * cos_micros) div (_dx + _dy)"),
@@ -1611,7 +1613,6 @@ def margin_bitext_mine_blocked(
     import pandas as pd  # noqa: F401 (probe kernel)
 
     from ..functions.vector import as_double, dot, l2_norm
-    from ..io import broadcast_if_small, ensure_parallelism
 
     ux = x.select((F.col(x_id) * 2).alias("_uid"), F.col(vec_col).alias("_v"))
     uy = y.select(
@@ -1688,7 +1689,7 @@ def margin_bitext_mine_blocked(
     # distance matrix per row — on a 1-file parquet side the kernel
     # otherwise runs in ONE task), and pin each probed side once: xs
     # feeds BOTH candidate branches (all-ranks join + home-only join)
-    # and ys feeds both broadcast sides — unpinned, each probe kernel
+    # and ys feeds both join sides — unpinned, each probe kernel
     # ran twice (guide §2.4 / §4). Concurrent materialization: the two
     # sides are independent (guide §2.6).
     from ..io import materialize_many
@@ -1713,11 +1714,11 @@ def margin_bitext_mine_blocked(
     xh = xs.filter(F.col("_rank") == 1).drop("_rank")
     b1 = (
         xs.drop("_rank")
-        .join(broadcast_if_small(yh), "_cell")
+        .join(yh, "_cell")
         .select(x_id, y_id, cos_micros.alias("cos_micros"))
     )
     b2 = (
-        xh.join(broadcast_if_small(ys.drop("_rank")), "_cell")
+        xh.join(ys.drop("_rank"), "_cell")
         .select(x_id, y_id, cos_micros.alias("cos_micros"))
     )
     # the two branches overlap (home⋈home pairs appear in both) and a
@@ -1778,8 +1779,6 @@ def margin_bitext_mine_blocked(
         )
         # one row ALWAYS (global agg), even over an empty sample; eager
         # localCheckpoint so the 4 margin consumers reuse ONE evaluation
-        # — and so a violated floor raises at construction, like the
-        # candidate set's own eager checkpoint above
         recall = (
             hit_flag.agg(
                 F.sum("_hit").alias("_nh"), F.count(F.lit(1)).alias("_n")
@@ -1795,8 +1794,8 @@ def margin_bitext_mine_blocked(
         # evaluates the assert only on candidate rows, so zero
         # candidates (home/probe cells fully disjoint — 0% recall, the
         # worst case) bypassed the gate and returned empty silently
-        # (ADVICE r11). The union branch always executes — it raises at
-        # construction via the margin pipeline's eager checkpoints.
+        # (ADVICE r11). The union branch always executes — it raises
+        # when the margin pipeline runs.
         from ..gates import gate_summary
 
         scored = gate_summary(

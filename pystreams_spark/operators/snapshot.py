@@ -94,10 +94,8 @@ def snapshot_diff(
     m_in = moved.select(
         F.col("_aid").alias(id_col), F.col("_rid").alias("_mid")
     )
-    from ..io import broadcast_if_small
-
     out = (
-        both.join(broadcast_if_small(m_away.unionByName(m_in)), id_col, "left")
+        both.join(m_away.unionByName(m_in), id_col, "left")
         .select(
             id_col,
             F.when(

@@ -57,7 +57,8 @@ def pareto_frontier(
        own batch (sound: local domination implies global). Frontiers
        are tiny for correlated data, so this is the 100 TB → KB cut.
     2. EXACT finish: the surviving candidate set self-joins on the
-       dominance predicate (broadcast — candidates are frontier-sized)
+       dominance predicate (a non-equi anti-join, which Spark plans as
+       a broadcast nested-loop join — candidates are frontier-sized)
        and dominated stragglers fall to a left_anti. No global sort,
        no corpus shuffle; the corpus is read exactly once."""
     import numpy as np
@@ -118,11 +119,7 @@ def pareto_frontier(
 
     cand = df.mapInPandas(local_prune, df.schema).localCheckpoint(eager=True)
 
-    from ..io import broadcast_if_small
-
-    other = broadcast_if_small(
-        cand.select(*[F.col(c).alias(f"_o_{c}") for c in cols]).distinct()
-    )
+    other = cand.select(*[F.col(c).alias(f"_o_{c}") for c in cols]).distinct()
     at_least_as_good = F.lit(True)
     strictly_better = F.lit(False)
     for (c, d) in dims:

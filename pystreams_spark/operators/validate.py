@@ -137,14 +137,10 @@ def check(df: DataFrame, rules: list[Rule]) -> DataFrame:
             )
             reports.append(dup)
         elif r.kind == "foreign_key":
-            from ..io import broadcast_if_small
-
             orphans = (
                 df.select(F.col(r.column))
                 .join(
-                    broadcast_if_small(
-                        r.dim.select(F.col(r.dim_col).alias(r.column)).distinct()
-                    ),
+                    r.dim.select(F.col(r.dim_col).alias(r.column)).distinct(),
                     r.column,
                     "left_anti",
                 )

@@ -358,8 +358,6 @@ def video_neardup_candidates(
     rows (undecodable payloads under ``on_undecodable='keep'``) drop
     before banding. The caller's hash frame is pinned here (three
     consumers: two band sides + the slot-aligned verify join)."""
-    from ..io import broadcast_if_small
-
     mask = (1 << band_bits) - 1
     clean = hashes.filter(F.col("fhash").isNotNull()).select(
         id_col, "slot", "fhash"
@@ -398,8 +396,7 @@ def video_neardup_candidates(
         F.col("fhash").alias("_fb"),
     )
     return (
-        broadcast_if_small(pairs)
-        .join(ha, "id_a")
+        pairs.join(ha, "id_a")
         .join(
             hb,
             (F.col("id_b") == F.col("_idb"))

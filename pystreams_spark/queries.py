@@ -231,25 +231,26 @@ def _simhash_oracle_sql(n: int, bands: int, band_bits: int, max_hamming: int) ->
 # closure CTEs the oracles compose, and the pinned pairs → labels →
 # component map the component queries build on the engine side.
 def _jaccard_pairs_ctes(threshold: float, block: str | None = None) -> str:
-    """`s(doc_id[, block], sh)`, each document's distinct word 3-grams,
-    then `pairs(id_a, id_b, jaccard)`: every pair id_a < id_b (within
-    one ``block``) whose UNROUNDED Jaccard is ≥ ``threshold`` > 0,
-    reported rounded to 6 places — the cut of `dedup._pair_score`.
-    Pairs sharing no gram (J = 0) are skipped by a cheap
-    `list_has_any` before the intersection sizes are computed."""
+    """`s(doc_id[, block], n, g)`, a row per distinct word 3-gram g of
+    each document with the document's gram count n, then
+    `pairs(id_a, id_b, jaccard)`: every pair id_a < id_b (within one
+    ``block``) whose UNROUNDED Jaccard is ≥ ``threshold`` > 0, reported
+    rounded to 6 places — the cut of `dedup._pair_score`. The pairs
+    come from the gram-posting self-join, so a pair sharing no gram
+    (J = 0) never forms, and |A ∩ B| is its count of shared grams."""
     if not threshold > 0.0:
         raise ValueError("_jaccard_pairs_ctes requires threshold > 0")
     key = f", {block}" if block else ""
     same = f"a.{block} = b.{block} AND " if block else ""
     return f"""s AS (
-        SELECT doc_id{key}, {_grams_sql(3)} AS sh FROM documents
+        SELECT doc_id{key}, len(sh) AS n, unnest(sh) AS g
+        FROM (SELECT doc_id{key}, {_grams_sql(3)} AS sh FROM documents)
     ), pairs AS MATERIALIZED (
         SELECT id_a, id_b, ROUND(j, 6) AS jaccard FROM (
             SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                   CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
-                     / (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh))) AS j
-            FROM s a JOIN s b ON {same}a.doc_id < b.doc_id
-            WHERE list_has_any(a.sh, b.sh)
+                   CAST(COUNT(*) AS DOUBLE) / (a.n + b.n - COUNT(*)) AS j
+            FROM s a JOIN s b ON {same}a.g = b.g AND a.doc_id < b.doc_id
+            GROUP BY a.doc_id, b.doc_id, a.n, b.n
         ) WHERE j >= CAST({float(threshold)!r} AS DOUBLE)
     )"""
 
@@ -7286,7 +7287,6 @@ def training_mix_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     CTEs, the md5 ordering, per-language cumulative sums, the greedy
     cut, and the manifest under one value hash."""
     from .functions.text import token_count
-    from .io import broadcast_if_small
     from .operators.selection import ordered_cumsum, waterfill_allocation
 
     d = _t(spark, sf_dir, "documents")
@@ -7346,10 +7346,8 @@ def training_mix_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("_off"),
     )
     # offsets/alloc/sel are SOURCE-COUNT-sized BY CONSTRUCTION (per-lang
-    # aggregates of the caps frame / the waterfill output) — a direct
-    # broadcast hint is scale-safe and skips the adaptive wrapper's
-    # checkpoint+count barrier jobs (guide §3.1; the wrapper stays for
-    # data-dependent frames like candidate lists)
+    # aggregates of the caps frame / the waterfill output), so a direct
+    # broadcast hint is scale-safe (guide §3.1)
     sel = (
         g.join(F.broadcast(offsets), "lang")
         .join(F.broadcast(alloc), "lang")
@@ -7901,10 +7899,9 @@ def snapshot_neardup_moves(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # two slice consumers (removed + added) of one classification pass.
-    # Lazy pin (r12): the MinHash stage's own construction-time count
-    # (broadcast_if_small over its candidates) forces this frame before
-    # the final action, so the standalone materialization job is pure
-    # barrier — dropping it keeps one evaluation, one fewer job.
+    # Lazy pin: the first job that reads it (the MinHash stage's own
+    # lazy signature pin runs its input shuffle at construction) fills
+    # it — one evaluation, and no standalone materialization job.
     diff = snapshot_diff(d, b).localCheckpoint(eager=False)
     rem = (
         diff.filter(F.col("status") == "removed")
@@ -8237,10 +8234,10 @@ def unigram_surprisal_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-language distribution plus how many docs a 4.0-nat threshold
     would flag. Spark-first: the vocab is a grouped count off one
     explode scan and joins back onto the token stream through
-    `operators/selection.unigram_surprisal_scores` — broadcast while
-    the vocab is verifiably small, hash-partitioned shuffle join above
-    the cap (a web-scale unigram vocabulary exceeds any broadcast
-    budget); per-doc scores are one grouped AVG. No UDF anywhere —
+    `operators/selection.unigram_surprisal_scores` — AQE broadcasts
+    the vocab while it is small and runs a hash-partitioned shuffle
+    join above its threshold (a web-scale unigram vocabulary exceeds
+    any broadcast budget); per-doc scores are one grouped AVG. No UDF anywhere —
     ln/avg are codegen'd."""
     from .operators.selection import unigram_surprisal_scores
 
@@ -8899,14 +8896,9 @@ def semantic_split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame
         "vec_id",
         F.when(frac < 0.9, "train").otherwise("eval").alias("split"),
     )
-    from .io import broadcast_if_small
-
     la = lab.select(F.col("vec_id").alias("id_a"), F.col("split").alias("sa"))
     lb = lab.select(F.col("vec_id").alias("id_b"), F.col("split").alias("sb"))
-    j = (
-        pairs.join(broadcast_if_small(la), "id_a")
-        .join(broadcast_if_small(lb), "id_b")
-    )
+    j = pairs.join(la, "id_a").join(lb, "id_b")
     cross = F.col("sa") != F.col("sb")
     return j.agg(
         F.count(F.lit(1)).alias("n_pairs"),
@@ -9654,7 +9646,7 @@ def nn_descent_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF/LSH ANN operators and THIS step is cheap — wedges cost
     Σ deg² = |V|·k² over the kNN graph, and the verify touches only
     candidate pairs."""
-    from .io import broadcast_if_small, ensure_parallelism
+    from .io import ensure_parallelism
     from .operators.similarity import knn_exact
 
     e = _t(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 1000)
@@ -10089,8 +10081,6 @@ def dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     with >1 member, CORPUS-wide so cross-source copies count for both
     sides) broadcast back onto the keyed scan; the text itself never
     shuffles."""
-    from .io import broadcast_if_small
-
     d = _t(spark, sf_dir, "documents")
     keyed = d.select("source", F.md5(F.col("text")).alias("h"))
     dup_keys = (
@@ -10100,7 +10090,7 @@ def dup_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("h")
     )
     flagged = keyed.join(
-        broadcast_if_small(dup_keys.withColumn("_dup", F.lit(1))), "h", "left"
+        dup_keys.withColumn("_dup", F.lit(1)), "h", "left"
     )
     return (
         flagged.groupBy("source")
@@ -11123,8 +11113,8 @@ def bigram_lm_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     model (word-salad docs score high even when their unigram mix looks
     normal), reported per language with a 3.45-nat flag count. One corpus
     scan builds the bigram occurrence stream; the count tables are
-    vocabulary-sized and join back broadcast-while-small
-    (operators/selection.bigram_surprisal_scores). Docs with <2 tokens
+    vocabulary-sized and join back by the strategy AQE picks from
+    their sizes (operators/selection.bigram_surprisal_scores). Docs with <2 tokens
     have no bigrams and are excluded by construction."""
     from .operators.selection import bigram_surprisal_scores
 
@@ -11409,19 +11399,18 @@ def oov_rate_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     on) and measure each language's out-of-vocabulary token rate
     against it — the number that tells you a tokenizer will shatter
     low-resource languages into bytes. One explode scan; the reference
-    vocab is a distinct-key frame that broadcasts while verifiably
-    small (`broadcast_if_small`) and degrades to a hash join at
-    web-scale vocabulary sizes; the OOV test is a left join's NULL
-    probe, counted per language."""
+    vocab is a distinct-key frame that AQE broadcasts while it is small
+    and joins by hash at web-scale vocabulary sizes; the OOV test is a
+    left join's NULL probe, counted per language."""
     from .functions.text import tokens
-    from .io import broadcast_if_small
 
     d = _t(spark, sf_dir, "documents")
     tok = d.select("lang", F.explode(tokens("text")).alias("word"))
-    vocab = broadcast_if_small(
-        tok.filter(F.col("lang") == "en").select("word").distinct(),
-        max_rows=5_000_000,
-    ).withColumnRenamed("word", "v_word")
+    vocab = (
+        tok.filter(F.col("lang") == "en")
+        .select(F.col("word").alias("v_word"))
+        .distinct()
+    )
     return (
         tok.join(vocab, tok.word == vocab.v_word, "left")
         .groupBy("lang")
@@ -11575,9 +11564,6 @@ def embedding_outlier_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("col").cast("double").alias("val"),
     )
     centroid = flat.groupBy("label", "pos").agg(F.avg("val").alias("c"))
-    from .io import broadcast_if_small
-
-    centroid = broadcast_if_small(centroid, max_rows=10_000_000)
     # dist feeds BOTH the stats agg and the final join: cut the
     # lineage so the posexplode + centroid join runs once, not twice
     dist = (
@@ -13000,11 +12986,9 @@ def signup_to_purchase_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min("ts").alias("t0"))
     )
-    from .io import broadcast_if_small
-
     p = (
         e.filter(F.col("event_type") == "purchase")
-        .join(broadcast_if_small(s), "user_id")
+        .join(s, "user_id")
         .filter(F.col("ts") >= F.col("t0"))
         .groupBy("user_id")
         .agg(F.min("ts").alias("t1"), F.min("t0").alias("t0"))
@@ -13137,7 +13121,6 @@ def length_ks_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     over that lattice (hash shuffle on source, never a global window),
     and the global cumulative rides the same lattice rows."""
     from .functions.text import token_count
-    from .io import broadcast_if_small
 
     d = _t(spark, sf_dir, "documents")
     # (source, L) is 2 small ints per doc; five consumers (grid, srcs,
@@ -13302,15 +13285,17 @@ def ngram_novelty_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the identical gram classes and first-seen rule in
     SQL, putting the gram construction, the min-attribution, AND the
     ratio arithmetic under one value hash."""
+    from .io import materialize
     from .operators.dedup import ngram_novelty_scores
 
-    from .io import broadcast_if_small
-
     d = _t(spark, sf_dir, "documents")
-    scores = ngram_novelty_scores(d, n=3)
+    # lazy pin: unpinned, the join lets the optimizer infer a non-empty
+    # gram-array filter and push it into the scan, re-splitting the
+    # text four times
+    scores = materialize(ngram_novelty_scores(d, n=3), eager=False)
     return (
         d.select("doc_id", "lang")
-        .join(broadcast_if_small(scores), "doc_id")
+        .join(scores, "doc_id")
         .groupBy("lang")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -13469,8 +13454,6 @@ def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the before-number that motivates it. Oracle replays pairs, the CC
     closure (recursive CTE), the split hash, and all the counts under
     one value hash."""
-    from .io import broadcast_if_small
-
     d = _t(spark, sf_dir, "documents")
     pairs, labels, _ = _jaccard_components(d)
     frac = (
@@ -13490,13 +13473,8 @@ def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("test")
         .alias("split"),
     )
-    # ONE adaptive pin of the (doc_id, split) frame shared by all three
-    # consumers (r12, guide §2.4) — the two per-side wrapper calls each
-    # paid their own checkpoint+count barrier over an identical frame;
-    # the rename projections sit on top of the shared hinted pin
-    asn = broadcast_if_small(assigned)
     comp_stats = (
-        labels.join(asn, "doc_id")
+        labels.join(assigned, "doc_id")
         .groupBy("cluster_id")
         .agg(
             F.count(F.lit(1)).alias("n_members"),
@@ -13506,12 +13484,12 @@ def split_leakage_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cross = (
         pairs.join(
-            asn.withColumnRenamed("doc_id", "id_a")
+            assigned.withColumnRenamed("doc_id", "id_a")
             .withColumnRenamed("split", "_sa"),
             "id_a",
         )
         .join(
-            asn.withColumnRenamed("doc_id", "id_b")
+            assigned.withColumnRenamed("doc_id", "id_b")
             .withColumnRenamed("split", "_sb"),
             "id_b",
         )

@@ -9,6 +9,9 @@ Design notes (SURVEY.md §4.4, 100 TB posture):
 - Session timezone pinned to UTC so date/time functions are deterministic
   and match the DuckDB oracle (naive timestamps).
 - Arrow enabled: every pandas-UDF boundary is Arrow-batched.
+- Local defaults fit the machine: ``local[n]`` over the cores this
+  process may run on, and a driver heap of half the physical memory
+  (at most 16 GiB).
 """
 
 from __future__ import annotations
@@ -29,13 +32,25 @@ DEFAULT_CONFS = {
     "spark.sql.python.filterPushdown.enabled": "true",
     # The engine checkpoints small intermediates (MinHash signatures,
     # candidate lists) per query; their RDD blocks are only reclaimed by
-    # the ContextCleaner after a DRIVER GC, and with a mostly-idle 16 GB
+    # the ContextCleaner after a DRIVER GC, and with a mostly-idle
     # driver heap that can be never. On a long pipeline (the 100+-query
     # bench, or a multi-stage production run) unreclaimed blocks crowd
     # the block manager. Force a periodic driver GC so cleanup keeps
     # pace (default is 30 min — far longer than a whole bench run).
     "spark.cleaner.periodicGC.interval": "1min",
 }
+
+
+def _machine_cpus() -> int:
+    """Cores this process may run on (its affinity mask, not the
+    host's core count)."""
+    return len(os.sched_getaffinity(0))
+
+
+def _machine_driver_memory() -> str:
+    """Half the physical memory, at most 16 GiB, in MiB."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(phys // 2, 16 << 30) >> 20}m"
 
 
 def get_spark(
@@ -49,13 +64,16 @@ def get_spark(
     on a cluster would configure master/executors externally. This factory
     only controls local runs.
     """
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or _machine_cpus()
     shuffle_partitions = shuffle_partitions or str(cpus)
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or _machine_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # static conf: keep managed tables (bucketing tests) out of cwd
         .config(

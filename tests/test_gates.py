@@ -62,7 +62,9 @@ def test_gate_summary_fires_even_on_empty_df(spark):
     frame's own rows never evaluates when the frame is EMPTY. The
     union-branch form must (a) raise on an empty frame whose summary
     violates the condition, (b) return the empty frame unchanged when
-    the summary passes, (c) pass non-empty frames through untouched."""
+    the summary passes, (c) pass non-empty frames through untouched,
+    (d) still raise under a downstream key join, whose inferred
+    IS NOT NULL filter reaches the union branch."""
     from pystreams_spark.gates import gate_summary
 
     df = spark.range(10).withColumn("v", F.col("id") * 2)
@@ -83,6 +85,10 @@ def test_gate_summary_fires_even_on_empty_df(spark):
     assert out.count() == 10 and out.columns == ["id", "v"]
     with pytest.raises(Exception, match="wrong count"):
         gate_summary(df, full_sum, F.col("n") == 11, "wrong count").collect()
+    with pytest.raises(Exception, match="joined"):
+        gate_summary(df, full_sum, F.col("n") == 11, "joined").join(
+            df.select("id"), "id"
+        ).collect()
 
 
 def test_binomial_bound_shape(spark):

@@ -603,3 +603,21 @@ def test_ensure_parallelism_runs_no_job(spark, sf_dir):
         assert jobs == 0, f"{name}: {jobs} Spark job(s) at construction"
         assert out.rdd.getNumPartitions() == 7, name
         assert sorted(out.collect()) == sorted(df.collect()), name
+
+
+def test_verify_pairs_runs_no_job(spark):
+    """The exact set-overlap verify builds its joins without submitting
+    a Spark job: adaptive execution sizes the candidate join at the
+    action, so construction runs no count of the candidate list."""
+    from pystreams_spark.operators.dedup import _verify_pairs
+
+    sh = spark.createDataFrame(
+        [(1, [1, 2, 3, 4]), (2, [1, 2, 3, 5]), (3, [7, 8])],
+        "doc_id long, _sh array<long>",
+    )
+    cands = spark.createDataFrame([(1, 2), (1, 3), (2, 3)], "id_a long, id_b long")
+    out, jobs = _jobs_in(
+        spark, "verify-pairs", lambda: _verify_pairs(sh, sh, cands, 0.5, "doc_id")
+    )
+    assert jobs == 0, f"{jobs} Spark job(s) at construction"
+    assert [tuple(r) for r in out.collect()] == [(1, 2, 0.6)]

@@ -3,6 +3,7 @@ merge_asof, sketch error bounds, MinHash recall vs exact Jaccard,
 connected-components dedup survivors."""
 
 import random
+from contextlib import contextmanager
 
 import pandas as pd
 import pytest
@@ -18,6 +19,35 @@ from pystreams_spark.operators.dedup import (
 )
 from pystreams_spark.operators.joins import asof_join, interval_join
 from pystreams_spark.operators.similarity import knn_exact, knn_lsh
+from pystreams_spark.plans import executed_plan
+
+_BROADCAST_THRESHOLDS = (
+    "spark.sql.autoBroadcastJoinThreshold",
+    "spark.sql.adaptive.autoBroadcastJoinThreshold",
+)
+
+
+@contextmanager
+def _broadcast_joins_off(spark):
+    """Both broadcast-join thresholds (the planner's and adaptive
+    execution's runtime conversion) at -1, restored on exit: every
+    unhinted equi-join runs as a shuffle join."""
+    old = {k: spark.conf.get(k, None) for k in _BROADCAST_THRESHOLDS}
+    for k in old:
+        spark.conf.set(k, "-1")
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _n_broadcast_hints(df):
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return plan.count("strategy=broadcast")
 
 
 def test_asof_join_matches_pandas_merge_asof(spark):
@@ -698,31 +728,24 @@ def test_ann_recall_floor_raises(spark, sf_dir):
 
 
 def test_unigram_surprisal_vocab_join_switch(spark, sf_dir):
-    """Above the broadcast cap the vocab join must be a shuffle join
-    (no BroadcastHashJoin on the word key), with identical scores."""
+    """With broadcast joins switched off the vocab join is a shuffle
+    join (no BroadcastHashJoin on the word key), with identical
+    scores."""
     from pystreams_spark.operators.selection import unigram_surprisal_scores
 
     docs = load_table(spark, sf_dir, "documents").limit(150)
     bc = unigram_surprisal_scores(docs, carry_cols=("lang",))
-    sh = unigram_surprisal_scores(
-        docs, carry_cols=("lang",), vocab_broadcast_max=0
-    )
     a = {r.doc_id: round(r.surprisal, 9) for r in bc.collect()}
-    b = {r.doc_id: round(r.surprisal, 9) for r in sh.collect()}
+    with _broadcast_joins_off(spark):
+        sh = unigram_surprisal_scores(docs, carry_cols=("lang",))
+        b = {r.doc_id: round(r.surprisal, 9) for r in sh.collect()}
     assert a == b and len(a) == 150
 
-    # plan assertion on the HINT, not the physical join: above the cap
-    # no broadcast hint may be planted on the vocab join (AQE may still
-    # convert at runtime from its own size estimate — which is exactly
-    # the adaptive behavior we want, and which it would not do at web
-    # scale). The 1-row total is always hinted, so count hints: the
-    # broadcast form carries 2 (vocab + total), the shuffle form 1.
-    def n_broadcast_hints(df):
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        return plan.count("strategy=broadcast")
-
-    assert n_broadcast_hints(bc) == 2
-    assert n_broadcast_hints(sh) == 1
+    # the vocab join carries no hint: adaptive execution picks it from
+    # the vocab's measured size. Only the 1-row total is hinted.
+    assert _n_broadcast_hints(bc) == 1
+    assert "BroadcastHashJoin" in executed_plan(bc)
+    assert "BroadcastHashJoin" not in executed_plan(sh)
 
 
 def test_reliable_checkpoint_paths_match_local(spark, sf_dir, tmp_path):
@@ -981,13 +1004,12 @@ def test_cc_long_chain_big_graph_path(spark):
     assert got == {i: 0 for i in range(n)}
 
 
-def test_candidate_shuffle_path_identical(spark, monkeypatch):
+def test_candidate_shuffle_path_identical(spark):
     """A dup-heavy corpus routed through the shuffle-join candidate path
-    (broadcast_if_small forced to never broadcast) must produce exactly
-    the same survivors as the broadcast path — the adaptive gate changes
+    (broadcast joins switched off) must produce exactly the same
+    survivors as the broadcast path — the join size decision changes
     the physical join only."""
     import pystreams_spark.operators.dedup as dd
-    from pystreams_spark.io import broadcast_if_small
 
     rows = [
         (i, f"a perfectly unique document body number {i} " * 3)
@@ -998,22 +1020,22 @@ def test_candidate_shuffle_path_identical(spark, monkeypatch):
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
     base = {r.doc_id for r in dd.neardup_dedup(df).collect()}
-    monkeypatch.setattr(
-        dd, "broadcast_if_small", lambda d, max_rows=0: broadcast_if_small(d, 0)
-    )
-    forced = {r.doc_id for r in dd.neardup_dedup(df).collect()}
+    with _broadcast_joins_off(spark):
+        forced = {r.doc_id for r in dd.neardup_dedup(df).collect()}
     assert forced == base
     assert 100 in forced and not (forced & set(range(101, 112)))
 
 
-def test_broadcast_if_small_threshold(spark):
-    from pystreams_spark.io import broadcast_if_small
+def test_broadcast_if_small_threshold(spark, monkeypatch):
+    import pystreams_spark.io as io
 
     small = spark.range(10).toDF("k")
-    hinted = broadcast_if_small(small, max_rows=100)
+    monkeypatch.setattr(io, "BROADCAST_MAX_ROWS", 100)
+    hinted = io.broadcast_if_small(small)
     plan = hinted._jdf.queryExecution().logical().toString()
     assert "broadcast" in plan.lower()
-    unhinted = broadcast_if_small(small, max_rows=5)
+    monkeypatch.setattr(io, "BROADCAST_MAX_ROWS", 5)
+    unhinted = io.broadcast_if_small(small)
     plan2 = unhinted._jdf.queryExecution().logical().toString()
     assert "broadcast" not in plan2.lower()
 
@@ -2353,25 +2375,23 @@ def test_bigram_surprisal_flags_word_salad(spark):
 
 
 def test_bigram_surprisal_vocab_join_switch(spark, sf_dir):
-    """Above the broadcast cap the bigram/context joins must not carry
-    broadcast hints (only the 1-row V stays hinted), with identical
-    scores — same contract as the unigram path."""
+    """With broadcast joins switched off the bigram/context joins are
+    shuffle joins, with identical scores — same contract as the
+    unigram path."""
     from pystreams_spark.io import load_table
     from pystreams_spark.operators.selection import bigram_surprisal_scores
 
     docs = load_table(spark, sf_dir, "documents").limit(120)
     bc = bigram_surprisal_scores(docs)
-    sh = bigram_surprisal_scores(docs, vocab_broadcast_max=0)
     a = {r.doc_id: round(r.bigram_surprisal, 9) for r in bc.collect()}
-    b = {r.doc_id: round(r.bigram_surprisal, 9) for r in sh.collect()}
+    with _broadcast_joins_off(spark):
+        sh = bigram_surprisal_scores(docs)
+        b = {r.doc_id: round(r.bigram_surprisal, 9) for r in sh.collect()}
     assert a == b and len(a) == 120
 
-    def n_broadcast_hints(df):
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-        return plan.count("strategy=broadcast")
-
-    assert n_broadcast_hints(bc) == 3  # c12 + c1 + the 1-row V
-    assert n_broadcast_hints(sh) == 1  # only V
+    assert _n_broadcast_hints(bc) == 1  # only the 1-row V
+    assert "BroadcastHashJoin" in executed_plan(bc)
+    assert "BroadcastHashJoin" not in executed_plan(sh)
 
 
 def test_dsir_prefers_target_like_docs(spark):
@@ -3316,8 +3336,7 @@ def test_margin_bitext_blocked_gate_fires_on_zero_candidates(spark):
         ys.append((i, (w / np.linalg.norm(w)).tolist()))
     x = spark.createDataFrame(xs, "x_id long, embedding array<double>")
     y = spark.createDataFrame(ys, "y_id long, embedding array<double>")
-    # the gate raises at CONSTRUCTION (the recall frame is eagerly
-    # checkpointed, like the candidate set itself)
+    # the gate raises when the mined pairs are computed
     with _pytest.raises(Exception, match="candidate recall"):
         margin_bitext_mine_blocked(
             x, y, k=3, n_cells=4, iters=3, n_probe=1,

@@ -96,13 +96,51 @@ def test_global_topk_never_full_sorts(spark, sf_dir):
 
 
 @pytest.fixture(scope="module")
-def all_plans(spark, sf_dir):
-    """{query name: executed plan string} for every registered query,
-    built once and shared by the three all-query sweeps below (each
-    build runs the query's construction-time jobs)."""
+def all_builds(spark, sf_dir):
+    """{query name: (executed plan string, construction jobs)} for every
+    registered query, built once and shared by the all-query sweeps
+    below. Construction jobs are the Spark jobs a query's build submits
+    before its DataFrame is returned, counted by job group."""
     from pystreams_spark.plans import executed_plan
 
-    return {name: executed_plan(fn(spark, sf_dir)) for name, fn in QUERIES.items()}
+    sc = spark.sparkContext
+    builds = {}
+    for name, fn in QUERIES.items():
+        group = f"construct-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            df = fn(spark, sf_dir)
+        finally:
+            sc.setJobGroup(None, None)  # type: ignore[arg-type]
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        builds[name] = (executed_plan(df), jobs)
+    return builds
+
+
+@pytest.fixture(scope="module")
+def all_plans(all_builds):
+    """{query name: executed plan string} for every registered query."""
+    return {name: plan for name, (plan, _) in all_builds.items()}
+
+
+# Most Spark jobs the builds of all registered queries may start before
+# their DataFrames exist: the total measured at sf0.001 at 4 and 8
+# cores. Each site where adaptive execution already picks the join
+# strategy joins its plain frame, with no size probe at construction.
+_CONSTRUCTION_JOB_BUDGET = 690
+
+
+def test_construction_jobs_within_budget(all_builds):
+    """Query construction stays lazy: the construction jobs of all
+    registered queries total at most the measured budget. A new eager
+    pin or size probe anywhere raises the total and fails here."""
+    total = sum(jobs for _, jobs in all_builds.values())
+    worst = sorted(all_builds.items(), key=lambda kv: -kv[1][1])[:5]
+    assert total <= _CONSTRUCTION_JOB_BUDGET, (
+        f"{total} construction jobs over {len(all_builds)} queries "
+        f"(budget {_CONSTRUCTION_JOB_BUDGET}); most: "
+        + ", ".join(f"{n} {j}" for n, (_, j) in worst)
+    )
 
 
 def test_no_rowwise_python_udfs_anywhere(all_plans):
@@ -157,9 +195,9 @@ def test_no_rowwise_python_udfs_anywhere(all_plans):
         # PQ encodes and probes in ONE fused encode+ADC kernel
         # (knn_pq_deterministic): measured 1
         "knn_pq_adc": 1,
-        # two-stage serving: the ADC shortlist is pinned by its
-        # broadcast_if_small, so the exact re-rank plans as Column
-        # algebra over an existing RDD: measured 0
+        # two-stage serving: the ADC shortlist is pinned (a lazy
+        # materialize), so the exact re-rank plans as Column algebra
+        # over an existing RDD: measured 0
         "knn_pq_refined": 0,
         # the calibration curve's four n_probe settings filter ONE
         # scored IVF candidate superset, pinned eagerly before the

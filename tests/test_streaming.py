@@ -1480,7 +1480,7 @@ def _rows(spark, path):
 # measured on a batch that also reads the store, at 4 and 8 cores. Each
 # includes the state write, the output write and their
 # adaptive-execution stage jobs.
-_BATCH_JOB_BUDGET = {"neardup": 17, "novelty": 9, "imagedup": 15}
+_BATCH_JOB_BUDGET = {"neardup": 13, "novelty": 9, "imagedup": 13}
 
 
 @pytest.mark.parametrize("kind", sorted(_INGESTS))
