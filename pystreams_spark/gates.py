@@ -16,10 +16,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def gate_rows(df: DataFrame, cond: Column, msg: str) -> DataFrame:
-    """Per-row hard gate: raise ``msg`` (with a row tag appended when
-    it is a Column) if ``cond`` is false on any row; otherwise pass the
-    frame through unchanged.
+def gate_rows(df: DataFrame, cond: Column, msg: Column | str) -> DataFrame:
+    """Per-row hard gate: raise ``msg`` if ``cond`` is false on any row;
+    otherwise pass the frame through unchanged. A Column ``msg`` is
+    evaluated on the violating row and raised as it is (``F.lit``
+    passes a Column through unchanged), so it can name the values the
+    gate measured.
 
     ZERO-ROW CAVEAT (shared with ``gate_global``): the condition runs
     on the frame's OWN rows, so an EMPTY frame passes vacuously — which

@@ -254,6 +254,13 @@ def materialize(
     The directory is set once per SparkContext; passing a DIFFERENT
     directory later re-points it (Spark keeps old checkpoint files
     readable for already-materialized frames).
+
+    ``eager=False`` is lazy only on a plan without a shuffle. On a plan
+    that shuffles, the checkpoint builds its RDD from the adaptive plan
+    when it is called, so every shuffle stage below the pin runs as a
+    construction job and only the final stage waits for the first
+    action (``ngram_novelty_report``'s scores pin starts 3 such jobs at
+    sf0.01).
     """
     if checkpoint_dir is None:
         return df.localCheckpoint(eager=eager)

@@ -725,8 +725,9 @@ def cc_keep_min(
         .unionByName(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .distinct()
     )
-    # lazy: the branch-deciding count() below materializes the pin in
-    # its own job — one driver barrier instead of two
+    # not eager, yet not lazy either: the pin runs the distinct's
+    # shuffle stage at construction (io.materialize), and the
+    # branch-deciding count() below fills the pin in its own job
     edges = materialize(edges, checkpoint_dir, eager=False)
     # propagate labels only over nodes that occur in edges — isolated
     # nodes are their own cluster and rejoin at the end. The per-round

@@ -282,9 +282,10 @@ def _components_ctes(pairs: str) -> str:
 def _component_map(pairs: DataFrame, ids: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Connected components of a pinned (id_a, id_b) pair frame over the
     doc_id frame ``ids``: the `cc_keep_min` labels (doc_id, cluster_id),
-    pinned lazily — the edge count inside `cc_keep_min` runs at
-    construction, the label pass with the first action, and every
-    consumer reads the pin — and the component map (doc_id,
+    pinned so every consumer reads one label pass — the pin is not
+    lazy: the edge count inside `cc_keep_min` and the label plan's
+    shuffle stages run at construction, only its final stage with the
+    first action (`io.materialize`) — and the component map (doc_id,
     component_id, component_size) of the components of size > 1 (the
     oracles' `_components_ctes`)."""
     from .io import materialize
@@ -310,9 +311,10 @@ def _component_map(pairs: DataFrame, ids: DataFrame) -> tuple[DataFrame, DataFra
 
 def _jaccard_components(docs: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(pairs, labels, component map) of the Jaccard-0.35 near-dup graph
-    of ``docs``: exact prefix-filtered pairs, pinned lazily so neither
-    the closure nor a second consumer can re-run the prefix join, then
-    `_component_map` — the oracles' `_jaccard_pairs_ctes(0.35)` +
+    of ``docs``: exact prefix-filtered pairs, pinned so neither the
+    closure nor a second consumer can re-run the prefix join (the pin
+    runs the join's shuffle stages at construction, `io.materialize`),
+    then `_component_map` — the oracles' `_jaccard_pairs_ctes(0.35)` +
     `_components_ctes("pairs")`."""
     from .io import materialize
     from .operators.dedup import ngram_jaccard_pairs_prefix
@@ -5440,9 +5442,9 @@ def _count_min_oracle_sql(within_bound: bool = False) -> str:
 
 
 def _cms_md5_pair(ev: DataFrame) -> DataFrame:
-    """(user_id, h1, h2): the Kirsch–Mitzenmacher pair of the count-min
-    queries, the first 60 bits of md5(user_id || ':cms1') and of
-    md5(user_id || ':cms2') with the low bit set (an odd stride)."""
+    """``ev`` with (h1, h2): the Kirsch–Mitzenmacher pair of the
+    count-min queries, the first 60 bits of md5(user_id || ':cms1') and
+    of md5(user_id || ':cms2') with the low bit set (an odd stride)."""
     uid = F.col("user_id").cast("string")
     h1 = F.conv(
         F.substring(F.md5(F.concat(uid, F.lit(":cms1"))), 1, 15), 16, 10
@@ -5450,77 +5452,70 @@ def _cms_md5_pair(ev: DataFrame) -> DataFrame:
     h2 = F.conv(
         F.substring(F.md5(F.concat(uid, F.lit(":cms2"))), 1, 15), 16, 10
     ).cast("long").bitwiseOR(F.lit(1))
-    return ev.select("user_id", h1.alias("h1"), h2.alias("h2"))
+    return ev.select("*", h1.alias("h1"), h2.alias("h2"))
 
 
-def _count_min_user_estimates(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, int]:
-    """(user_id, exact_n, cms_est, overcount) of every events user from a
-    5 x 2048 count-min sketch of `_cms_md5_pair`, gated on CMS's hard
-    guarantee (no undercount), and N, the sketch's total."""
+def _count_min_user_estimates(ev: DataFrame, within_bound: bool = False) -> DataFrame:
+    """(user_id, exact_n, cms_est, overcount) of every non-NULL user of
+    the events frame ``ev`` from the 5 x 2048 count-min sketch of
+    `_cms_md5_pair`, gated on CMS's hard guarantee (no undercount);
+    ``within_bound`` adds overcount <= ceil(e / 2048 · N), N the row
+    count, as a column and a gate. One lazy plan: the sketch is built
+    from the per-user counts, so md5 runs once per user."""
     from .gates import gate_rows
-    from .operators.sketches import build_count_min, cms_estimate_udf, cms_total
+    from .operators.sketches import count_min_estimates
 
-    width, depth = 2048, 5
-    hashed = _cms_md5_pair(_t(spark, sf_dir, "events"))
-    cms = build_count_min(hashed, ["h1", "h2"], width, depth)
-    est = cms_estimate_udf(spark, cms, depth)
-    out = (
-        hashed.groupBy("user_id", "h1", "h2")
-        .agg(F.count(F.lit(1)).alias("exact_n"))
-        .select(
-            "user_id",
-            "exact_n",
-            est(F.col("h1"), F.col("h2")).alias("cms_est"),
-        )
-        # pin the estimate once (repo rule: kernel frames consumed
-        # twice get localCheckpoint) — otherwise the gate's filter
-        # pushes below this projection and the probe kernel plans
-        # TWICE (caught by test_plans' Python-eval budget). The frame
-        # is key-cardinality-sized, so the pin is KBs.
-        .localCheckpoint(eager=True)
-        .withColumn("overcount", F.col("cms_est") - F.col("exact_n"))
-    )
+    width = 2048
+    keys = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_n"))
+    if within_bound:
+        # N, the sketch's total: every row counts, a NULL user's too
+        keys = keys.withColumn("_n", F.sum("exact_n").over(Window.partitionBy()))
+    out = count_min_estimates(_cms_md5_pair(keys), "exact_n", width, depth=5)
+    out = out.withColumn("overcount", F.col("cms_est") - F.col("exact_n"))
     out = gate_rows(
         out, F.col("overcount") >= 0, "count_min: sketch undercounted a key"
     )
-    return out, cms_total(cms, depth)
+    cols = ["user_id", "exact_n", "cms_est", "overcount"]
+    if not within_bound:
+        return out.select(*cols)
+    # DOUBLE, in the oracle's operation order
+    bound = F.ceil(F.lit(math.e) / F.lit(width) * F.col("_n"))
+    out = out.withColumn("within_bound", F.col("overcount") <= bound)
+    return gate_rows(
+        out,
+        F.col("within_bound"),
+        F.format_string("count_min: overcount exceeds bound %d", bound),
+    ).select(*cols, "within_bound")
 
 
 @query("count_min_user_events", oracle=_count_min_oracle_sql(within_bound=True))
 def count_min_user_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch frequency estimation (§2.D sketches; operators/
-    sketches.py): one narrow pass builds a 5x2048 counter matrix over
-    events.user_id (partial matrices treeAggregate-summed executor-side
-    — the sketch is linear, so this is exact composition), then every
-    distinct key's frequency is estimated from the broadcast matrix and
-    audited against the exact count in the same row. CMS guarantees
-    no undercount ever and overcount <= ceil(e/width * N) w.h.p. —
-    both gated in the plan, the bound also emitted as ``within_bound``.
-    The sketch is `count_min_deterministic`'s, so the oracle replays
-    every estimate and the bound."""
-    from .gates import gate_rows
-
-    out, n_total = _count_min_user_estimates(spark, sf_dir)
-    bound = int(math.ceil(math.e / 2048 * n_total))
-    out = out.withColumn("within_bound", F.col("overcount") <= F.lit(bound))
-    return gate_rows(
-        out, F.col("within_bound"), f"count_min: overcount exceeds bound {bound}"
-    ).orderBy("user_id")
+    sketches.py): a 5x2048 counter matrix over events.user_id, built in
+    the plan from the per-user counts (the sketch is linear, so a cell
+    is the summed count of its users), then every distinct key's
+    frequency is estimated as the min of its cells and audited against
+    the exact count in the same row. CMS guarantees no undercount ever
+    and overcount <= ceil(e/width * N) w.h.p. — both gated in the plan,
+    the bound also emitted as ``within_bound``. The sketch is
+    `count_min_deterministic`'s, so the oracle replays every estimate
+    and the bound."""
+    ev = _t(spark, sf_dir, "events")
+    return _count_min_user_estimates(ev, within_bound=True).orderBy("user_id")
 
 
 @query("count_min_deterministic", oracle=_count_min_oracle_sql())
 def count_min_deterministic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORACLE-GRADE count-min sketch (r9, the r8 verdict's #6 recipe
-    applied to the sketch family): per-partition local matrices in an
-    Arrow kernel, treeAggregate sum (the sketch is linear, so partial
-    sums compose exactly), with the Kirsch–Mitzenmacher hash pair as
-    md5-derived 60-bit COLUMNS and positions (h1 + d·h2) mod width
-    bigint arithmetic, so DuckDB replays the ENTIRE sketch — every
-    cell count, every point estimate, the per-key overcounts — under
-    one value hash. CMS's no-undercount guarantee is an in-plan gate."""
-    return _count_min_user_estimates(spark, sf_dir)[0].orderBy("user_id")
+    applied to the sketch family): one lazy Column-algebra aggregate
+    (`sketches.count_min_estimates`) with the Kirsch–Mitzenmacher hash
+    pair as md5-derived 60-bit COLUMNS and positions (h1 + d·h2) mod
+    width bigint arithmetic, so DuckDB replays the ENTIRE sketch —
+    every cell count, every point estimate, the per-key overcounts —
+    under one value hash. CMS's no-undercount guarantee is an in-plan
+    gate."""
+    ev = _t(spark, sf_dir, "events")
+    return _count_min_user_estimates(ev).orderBy("user_id")
 
 
 @query(
@@ -13289,9 +13284,10 @@ def ngram_novelty_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import ngram_novelty_scores
 
     d = _t(spark, sf_dir, "documents")
-    # lazy pin: unpinned, the join lets the optimizer infer a non-empty
+    # pin: unpinned, the join lets the optimizer infer a non-empty
     # gram-array filter and push it into the scan, re-splitting the
-    # text four times
+    # text four times. Not lazy: the scores' shuffle stages run at
+    # construction, only the final stage with the action (io.materialize)
     scores = materialize(ngram_novelty_scores(d, n=3), eager=False)
     return (
         d.select("doc_id", "lang")

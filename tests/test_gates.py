@@ -44,6 +44,10 @@ def test_gate_rows_passes_and_fires(spark):
     # violation: the job FAILS with the message, not a filtered result
     with pytest.raises(Exception, match="v must stay under 15"):
         gate_rows(df, F.col("v") < 15, "v must stay under 15").collect()
+    # a Column message is raised as it is, naming the violating value
+    msg = F.format_string("v=%d must stay under 15", F.col("v"))
+    with pytest.raises(Exception, match="v=1[68] must stay under 15"):
+        gate_rows(df, F.col("v") < 15, msg).collect()
 
 
 def test_gate_global_passes_and_fires(spark):

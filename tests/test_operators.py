@@ -1190,6 +1190,14 @@ def test_stream_source_offset_floor_durable(tmp_path):
     assert r3.latestOffset()["offset"] == 100
 
 
+def _user_weights(df):
+    """(user_id, n, h1, h2): the per-user counts the count-min sketch
+    is built from."""
+    from pystreams_spark.queries import _cms_md5_pair
+
+    return _cms_md5_pair(df.groupBy("user_id").agg(F.count(F.lit(1)).alias("n")))
+
+
 def test_count_min_no_undercount_and_bound(spark, sf_dir):
     # CMS deterministic guarantee: estimate >= true count for EVERY key;
     # probabilistic guarantee: overcount <= e/width * N for all but a
@@ -1197,52 +1205,118 @@ def test_count_min_no_undercount_and_bound(spark, sf_dir):
     # the fixture's small key set)
     import math
 
-    from pystreams_spark.io import load_table
-    from pystreams_spark.operators.sketches import (
-        build_count_min,
-        cms_estimate_udf,
-        cms_total,
-    )
-    from pystreams_spark.queries import _cms_md5_pair
+    from pystreams_spark.operators.sketches import _count_min_cells, count_min_estimates
 
     width, depth = 1024, 5
     ev = load_table(spark, sf_dir, "events")
-    hashed = _cms_md5_pair(ev)
-    cms = build_count_min(hashed, ["h1", "h2"], width=width, depth=depth)
-    n = cms_total(cms, depth)
-    assert n == ev.count()  # every row of the matrix sums to N
+    keys = _user_weights(ev)
+    n = ev.count()
+    # every row of the matrix sums to N
+    row0 = _count_min_cells(keys, "n", width, depth).filter("d = 0")
+    assert row0.select("pos", "cell").distinct().agg(F.sum("cell")).first()[0] == n
 
-    est = cms_estimate_udf(spark, cms, depth)
-    rows = (
-        hashed.groupBy("h1", "h2")
-        .agg(F.count(F.lit(1)).alias("exact_n"))
-        .select("exact_n", est(F.col("h1"), F.col("h2")).alias("est_n"))
-        .collect()
-    )
+    rows = count_min_estimates(keys, "n", width, depth).collect()
     bound = math.ceil(math.e / width * n)
     assert rows
     for r in rows:
-        assert r.est_n >= r.exact_n, "CMS must never undercount"
-        assert r.est_n - r.exact_n <= bound
+        assert r.cms_est >= r.n, "CMS must never undercount"
+        assert r.cms_est - r.n <= bound
 
 
 def test_count_min_is_linear(spark):
     # the sketch is a linear operator: sketch(A) + sketch(B) must equal
-    # sketch(A union B) EXACTLY — the property treeAggregate merging
-    # (and any partial/rollup architecture) relies on
+    # sketch(A union B) EXACTLY — the property that lets a cell be the
+    # sum of per-key (and any partial/rollup) counts
     import numpy as np
 
-    from pystreams_spark.operators.sketches import build_count_min
-    from pystreams_spark.queries import _cms_md5_pair
+    from pystreams_spark.operators.sketches import _count_min_cells
 
-    a = _cms_md5_pair(spark.range(0, 5000).selectExpr("id % 37 AS user_id"))
-    b = _cms_md5_pair(spark.range(5000, 8000).selectExpr("id % 11 AS user_id"))
+    a = spark.range(0, 5000).selectExpr("id % 37 AS user_id")
+    b = spark.range(5000, 8000).selectExpr("id % 11 AS user_id")
     whole = a.unionAll(b)
 
     def sketch(df):
-        return np.frombuffer(build_count_min(df, ["h1", "h2"], 256, 3), dtype=np.int64)
+        mat = np.zeros((3, 256), dtype=np.int64)
+        cells = _count_min_cells(_user_weights(df), "n", 256, 3)
+        for r in cells.select("d", "pos", "cell").distinct().collect():
+            mat[r.d, r.pos] = r.cell
+        return mat
 
     assert ((sketch(a) + sketch(b)) == sketch(whole)).all()
+
+
+def test_count_min_per_key_weights_equal_row_level_cells(spark, sf_dir):
+    """Cells summed from per-user counts are the cells a row-level
+    ``groupBy(d, pos).count()`` gives, so every estimate is the same.
+    Width 64 forces collisions between the fixture's users."""
+    from pystreams_spark.operators.sketches import count_min_estimates
+    from pystreams_spark.queries import _cms_md5_pair
+
+    width, depth = 64, 5
+    ev = load_table(spark, sf_dir, "events")
+    d = F.explode(F.sequence(F.lit(0), F.lit(depth - 1))).alias("d")
+    rows = (
+        _cms_md5_pair(ev.select("user_id"))
+        .select("user_id", d, "h1", "h2")
+        .withColumn("pos", (F.col("h1") + F.col("d") * F.col("h2")) % width)
+    )
+    cells = rows.groupBy("d", "pos").count()
+    # some cell holds more than one user
+    assert cells.count() < rows.select("user_id", "d").distinct().count()
+    want = sorted(
+        rows.select("user_id", "d", "pos").distinct()
+        .join(cells, ["d", "pos"])
+        .groupBy("user_id")
+        .agg(F.min("count").alias("cms_est"))
+        .collect()
+    )
+    got = sorted(
+        count_min_estimates(_user_weights(ev), "n", width, depth)
+        .select("user_id", "cms_est")
+        .collect()
+    )
+    assert got and got == want
+
+
+def test_count_min_null_key_gets_no_row(spark):
+    """A NULL user_id has no cell position, so it gets no estimate row,
+    as in the oracle, whose position join drops it; its events still
+    count towards N, the bound's total. Both count-min plans equal the
+    DuckDB oracle SQL over the same rows."""
+    import duckdb
+
+    from pystreams_spark.queries import _count_min_oracle_sql, _count_min_user_estimates
+
+    users = [7, 7, 7, None, None, 3, 11, 7, 3]
+    ev = spark.createDataFrame([(u,) for u in users], "user_id long")
+    con = duckdb.connect()
+    con.register("events", pd.DataFrame({"user_id": pd.array(users, dtype="Int64")}))
+    for within_bound in (False, True):
+        got = _count_min_user_estimates(ev, within_bound).orderBy("user_id").collect()
+        want = con.execute(_count_min_oracle_sql(within_bound)).fetchall()
+        assert [tuple(r) for r in got] == want
+        assert [r.user_id for r in got] == [3, 7, 11]
+
+
+def test_count_min_builds_run_no_job(spark, sf_dir):
+    """Building either count-min query submits no Spark job beyond the
+    one schema job of its ``load_table``: the sketch is built and
+    probed by the query's action."""
+    from pystreams_spark.queries import QUERIES
+
+    sc = spark.sparkContext
+
+    def jobs(name, build):
+        sc.setJobGroup(name, name)
+        try:
+            build()
+        finally:
+            sc.setJobGroup(None, None)  # type: ignore[arg-type]
+        return len(sc.statusTracker().getJobIdsForGroup(name))
+
+    load = jobs("load-events", lambda: load_table(spark, sf_dir, "events"))
+    for q in ("count_min_deterministic", "count_min_user_events"):
+        assert jobs(f"build-{q}", lambda: QUERIES[q](spark, sf_dir)) <= load, q
 
 
 def test_pii_redaction_semantics(spark):

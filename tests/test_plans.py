@@ -127,7 +127,7 @@ def all_plans(all_builds):
 # their DataFrames exist: the total measured at sf0.001 at 4 and 8
 # cores. Each site where adaptive execution already picks the join
 # strategy joins its plain frame, with no size probe at construction.
-_CONSTRUCTION_JOB_BUDGET = 690
+_CONSTRUCTION_JOB_BUDGET = 684
 
 
 def test_construction_jobs_within_budget(all_builds):
