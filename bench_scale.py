@@ -204,16 +204,11 @@ def _families(spark, data_dir: str, ckpt_dir: str):
             spark, data_dir
         ).count(),
         # r8: first-seen novelty — should be exactly linear (no pairwise
-        # term by construction; the gram-min groupBy + join are the
-        # only shuffles)
+        # term by construction; the gram-keyed window min and the
+        # per-doc agg are the only shuffles, over 8-byte md5 gram values)
         "ngram_novelty": lambda: QUERIES["ngram_novelty_report"](
             spark, data_dir
         ).count(),
-        # r9 (VERDICT r8 #2): the hash_grams production path — same
-        # plan with 8-byte gram keys; the r8 string-mode 1.12 byte
-        # exponent was gram STRINGS lengthening with the fixture, so
-        # this row should bring bytes back to ~rows (~1.0)
-        "ngram_novelty_hashed": lambda: _novelty_hashed(docs()),
         # r9 (VERDICT r8 #5): the r8 report family. The leakage audit
         # and its component-split cure ride the df-order prefix join +
         # CC closure (expected ≈ effective_dataset_size's 0.97); the
@@ -381,22 +376,6 @@ def _bitext_blocked_prototyped(
         x, y, k=4, n_cells=n_cells, iters=2, n_probe=n_probe,
         min_sample_top1_recall=0.9, margin_ppm_threshold=1_000_000,
     ).count()
-
-
-def _novelty_hashed(docs_df):
-    from pystreams_spark.operators.dedup import ngram_novelty_scores
-
-    # noop sink, not count(): since the r12 window-min rewrite count()
-    # prunes the window-min shuffle (the dominant stage) — the explode
-    # and the per-doc aggregate still execute, but the measurement
-    # would cover a partial plan (guide §1.4).
-    # Return a CONSTANT, not df.count() (r12 ADVICE): a count after
-    # the write re-executes tokenize→explode→per-doc agg INSIDE the
-    # timed region — a second pass the string-mode family never paid,
-    # which contaminated the hashed-vs-string wall comparison.
-    df = ngram_novelty_scores(docs_df, n=3, hash_grams=True)
-    df.write.format("noop").mode("overwrite").save()
-    return -1
 
 
 def main() -> None:

@@ -168,12 +168,6 @@ def shingles(text: Column | str, n: int = 3) -> Column:
     )
 
 
-def char_ngrams(text: Column | str, n: int = 3) -> Column:
-    t = F.col(text) if isinstance(text, str) else text
-    idx = F.sequence(F.lit(1), F.greatest(F.length(t) - (n - 1), F.lit(1)))
-    return F.array_distinct(F.transform(idx, lambda i: F.substring(t, i, n)))
-
-
 def chunk_text(text: Column | str, size: int, stride: int) -> Column:
     """Overlapping fixed-size character chunks (array<string>): window
     starts 1, 1+stride, ... over the doc — the long-document splitter a

@@ -15,12 +15,16 @@ DuckDB oracles spell ``('0x' || substr(md5(gram), 1, 15))::BIGINT``.
 Every gram-set reader takes it: the SimHash kernel votes its 60 bits,
 the MinHash kernel takes universal-hash minima over it with
 md5-derived constants (``minhash_det_constants``), the KMV sketch
-reads its k-th minimum, and the exact set-overlap joins use it as the
-gram key, so every signature, band key and sketch is replayable in
-SQL.
+reads its k-th minimum, and the exact set-overlap joins, first-seen
+novelty (``ngram_novelty_scores``, ``NoveltyIngest``) and
+decontamination (``contaminated_docs``, the contamination profile)
+use it as the gram key, so every signature, band key, sketch and gram
+join is replayable in SQL.
 """
 
 from __future__ import annotations
+
+import hashlib
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -83,6 +87,18 @@ def _doc_shingles(texts, n: int) -> tuple[np.ndarray, np.ndarray]:
     return out, n_sh
 
 
+def _md5_60(s: str) -> int:
+    """The first 60 bits of md5 over ``s``'s UTF-8 bytes — SQL's
+    ``('0x' || substr(md5(s), 1, 15))::BIGINT``."""
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+
+
+# The md5 gram value of the empty gram '', the one gram of a NULL,
+# empty or whitespace-only text: readers that must not match such
+# texts against each other drop it.
+EMPTY_GRAM = _md5_60("")
+
+
 def _md5_gram_values(texts, n: int) -> tuple[np.ndarray, np.ndarray]:
     """texts → (flat int64 DISTINCT gram values of each doc, sorted
     within the doc, and per-doc distinct counts). A gram's value is the
@@ -90,8 +106,6 @@ def _md5_gram_values(texts, n: int) -> tuple[np.ndarray, np.ndarray]:
     ``('0x' || substr(md5(g), 1, 15))::BIGINT``. Every doc has ≥ 1
     gram: a NULL, empty or shorter-than-``n`` text yields its whole
     token string as its one gram, as ``shingles`` does."""
-    import hashlib
-
     flat, n_sh = _doc_shingles(texts, n)
     md5 = hashlib.md5
     # the first 8 digest bytes, big-endian, shifted down to 60 bits
@@ -124,12 +138,9 @@ def minhash_det_constants(k: int, p: int = _MINHASH_P) -> list[tuple[int, int]]:
     bits of md5 over a fixed salt. Pure hashlib — the constants are
     literals in both the kernel and the DuckDB oracle, so
     engine-portability is by construction."""
-    import hashlib
-
     out = []
     for j in range(k):
-        a = int(hashlib.md5(f"minhash-a:{j}".encode()).hexdigest()[:15], 16)
-        b = int(hashlib.md5(f"minhash-b:{j}".encode()).hexdigest()[:15], 16)
+        a, b = _md5_60(f"minhash-a:{j}"), _md5_60(f"minhash-b:{j}")
         out.append((a % (p - 1) + 1, b % p))
     return out
 
@@ -212,32 +223,11 @@ def hashed_shingles_udf(n: int = 3):
     return F.pandas_udf(kernel, "array<long>")
 
 
-def shingle_strings_udf(n: int = 3):
-    """pandas UDF: text → array<string> of the doc's distinct word
-    n-gram shingles (first-occurrence order) — the string-valued
-    shingle set without the interpreted-HOF pass, for consumers that
-    need the gram text itself (decontamination, contamination profiles)."""
-    import pandas as pd
-
-    def kernel(texts):
-        flat, n_sh = _doc_shingles(texts.to_numpy(dtype=object), n)
-        offsets = np.concatenate(([0], np.cumsum(n_sh)))
-        return pd.Series(
-            [
-                list(dict.fromkeys(flat[offsets[i] : offsets[i + 1]]))
-                for i in range(len(n_sh))
-            ]
-        )
-
-    return F.pandas_udf(kernel, "array<string>")
-
-
 def char_ngrams_udf(n: int = 3):
     """pandas UDF: text → array<string> of the doc's DISTINCT character
     n-grams (insertion order, like array_distinct over the window
-    transform). The scale path for ``functions.text.char_ngrams`` —
-    the Column version interprets one substring HOF call per position
-    (~10 s at sf0.1); here the windows are sliced batch-side."""
+    transform). The windows are sliced batch-side: a Column form
+    interprets one substring HOF call per position (~10 s at sf0.1)."""
     import pandas as pd
 
     def kernel(texts):

@@ -259,8 +259,8 @@ def materialize(
     that shuffles, the checkpoint builds its RDD from the adaptive plan
     when it is called, so every shuffle stage below the pin runs as a
     construction job and only the final stage waits for the first
-    action (``ngram_novelty_report``'s scores pin starts 3 such jobs at
-    sf0.01).
+    action (``queries._jaccard_components``' pairs pin starts 4 such
+    jobs at sf0.01).
     """
     if checkpoint_dir is None:
         return df.localCheckpoint(eager=eager)

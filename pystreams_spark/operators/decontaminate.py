@@ -8,7 +8,8 @@ document is flagged for removal or auditing.
 
 Scale shape (100 TB corpus, MB-scale benchmark suite):
 - The eval side is shingled separately — it is tiny by construction, so
-  its distinct (gram, eval_id) table broadcasts everywhere.
+  its (gram, eval_id) table (distinct per doc, 8-byte gram values)
+  broadcasts everywhere.
 - The train side streams through ONE narrow shingle kernel pass, then a
   broadcast hash join — no shuffle of train text or grams, no
   materialization of the train gram table. The only shuffle is the
@@ -37,27 +38,24 @@ def contaminated_docs(
     shingles with the eval set.
 
     Returns (id_col, n_matched_grams, n_eval_docs_hit), one row per
-    contaminated train doc. Shingle semantics match
-    ``functions.text.shingles`` (distinct word n-grams; a doc with < n
-    words contributes its single short shingle), so the result is
-    oracle-checkable in ANSI SQL on the string grams.
+    contaminated train doc. Grams are the md5 gram values of the
+    distinct word n-grams of ``functions.text.shingles`` (a doc with
+    < n words contributes its single short shingle), so the result is
+    oracle-checkable in ANSI SQL on the string grams. The empty gram of
+    a NULL or blank text (``EMPTY_GRAM``) matches nothing.
     """
-    from ..functions.text_kernels import shingle_strings_udf
+    from ..functions.text_kernels import EMPTY_GRAM, hashed_shingles_udf
     from ..io import ensure_parallelism
 
-    kernel = shingle_strings_udf(n)
-    ev = (
-        eval_set.select(
-            F.col(eval_id_col).alias("_eval_id"),
-            F.explode(kernel(F.col(text_col))).alias("_gram"),
-        )
-        .filter(F.col("_gram") != "")
-        .distinct()
-    )
+    kernel = hashed_shingles_udf(n)
+    ev = eval_set.select(
+        F.col(eval_id_col).alias("_eval_id"),
+        F.explode(kernel(F.col(text_col))).alias("_gram"),
+    ).filter(F.col("_gram") != EMPTY_GRAM)
     tr = (
         ensure_parallelism(train)
         .select(F.col(id_col), F.explode(kernel(F.col(text_col))).alias("_gram"))
-        .filter(F.col("_gram") != "")
+        .filter(F.col("_gram") != EMPTY_GRAM)
     )
     return (
         tr.join(F.broadcast(ev), "_gram")

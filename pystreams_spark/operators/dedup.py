@@ -388,38 +388,13 @@ def ngram_jaccard_pairs_prefix(
     return _verify_pairs(sh, sh, cand, threshold, id_col, round_to)
 
 
-def _novelty_posts(
-    df: DataFrame, n: int, text_col: str, id_col: str, hash_grams: bool
-) -> DataFrame:
-    """(id, g): one row per DISTINCT word n-gram of each doc — the
-    space-joined token window (a doc shorter than ``n`` is its whole
-    token string), or with ``hash_grams`` its xxhash64, taken inside
-    the window lambda so the per-doc array is born 8-byte wide and no
-    string gram crosses an exchange. The gram posts of
+def _novelty_posts(df: DataFrame, n: int, text_col: str, id_col: str) -> DataFrame:
+    """(id, g): one row per distinct md5 gram value of each doc
+    (``hashed_shingles_udf``) — the gram posts of
     ``ngram_novelty_scores`` and ``NoveltyIngest``."""
-    from ..functions.text import tokens
-
-    base = df.select(F.col(id_col), tokens(F.col(text_col)).alias("_toks"))
-
-    # bind _toks as a column BEFORE the lambda: an interpreted HOF
-    # re-evaluates free expressions per element (W_REPEATED_EXPR)
-    def gram(i):
-        g = F.concat_ws(" ", F.slice(F.col("_toks"), i, n))
-        return F.xxhash64(g) if hash_grams else g
-
-    grams = base.select(
-        id_col,
-        F.array_distinct(
-            F.transform(
-                F.sequence(
-                    F.lit(1),
-                    F.greatest(F.size("_toks") - (n - 1), F.lit(1)),
-                ),
-                gram,
-            )
-        ).alias("_grams"),
+    return df.select(
+        id_col, F.explode(hashed_shingles_udf(n)(F.col(text_col))).alias("g")
     )
-    return grams.select(id_col, F.explode("_grams").alias("g"))
 
 
 def ngram_novelty_scores(
@@ -438,27 +413,15 @@ def ngram_novelty_scores(
     (id, n_grams, novel_grams, novelty ∈ [0,1]).
 
     Scale shape: explode distinct grams (corpus-sized, LINEAR), one
-    partial-agg'd groupBy gram → min(id) (distinct-gram keys), one
-    gram-keyed join back (co-partitioned with the agg — AQE reuses the
-    exchange), one per-doc agg. No pairwise term anywhere — novelty is
-    a first-seen property, so cost is Σ|grams|, not Σ df².
+    gram-partitioned window min(id), one per-doc agg. No pairwise term
+    anywhere — novelty is a first-seen property, so cost is Σ|grams|,
+    not Σ df².
 
-    Gram construction is STRING n-grams (space-joined token windows;
-    short docs yield their full token string as one gram) — chosen
-    over hashed shingles so the DuckDB oracle can replay the exact
-    equivalence classes. ``hash_grams=True`` is the PRODUCTION path
-    for that recipe (r8 verdict #2): ``xxhash64`` collapses each gram
-    to 8 bytes BEFORE the explode (``_novelty_posts``), so the
-    groupBy/join shuffle moves fixed-width longs instead of
-    corpus-length strings — the r8 curve measured a 1.12 shuffle-BYTE
-    exponent in string mode purely because grams lengthen with the
-    fixture corpus; hashing removes that term (semantics unchanged up
-    to 64-bit collisions, ~N²/2⁶⁵ expected across distinct grams —
-    zero at any real corpus size
-    worth naming). The registered oracle query stays string mode;
-    ``test_ngram_novelty_hashed_matches_string`` pins the two modes
-    equal on real data."""
-    posts = _novelty_posts(ensure_parallelism(df), n, text_col, id_col, hash_grams)
+    Grams are the md5 gram values of the text kernels (8-byte keys in
+    both shuffles); the DuckDB oracles replay the string grams, whose
+    classes the 60-bit values name. ``hash_grams`` has no effect: it is
+    kept so callers that pass it still run."""
+    posts = _novelty_posts(ensure_parallelism(df), n, text_col, id_col)
     # first-seen via a partition-only window min (r12): ONE shuffle of
     # the exploded gram table instead of groupBy(min) + a gram-keyed
     # join back over the same rows — the min over an unordered gram

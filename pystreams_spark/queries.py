@@ -1459,9 +1459,8 @@ def stopword_ratio_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 def char_trigram_profiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 character trigrams per language by document frequency —
     the n-gram profile a trained language identifier uses. Per-doc
-    distinct grams (document frequency, like the char_ngrams column
-    function computes), one shuffle on (lang, gram), then per-group
-    top-k."""
+    distinct grams (document frequency, from `char_ngrams_udf`), one
+    shuffle on (lang, gram), then per-group top-k."""
     from .functions.text_kernels import char_ngrams_udf
     from .io import ensure_parallelism
     from .operators.topk import top_k_per_group
@@ -6855,13 +6854,10 @@ def novelty_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum (`selection.select_token_budget` — range shuffle + broadcast
     offsets, NOT a single-task global window). Per-language report of
     the selected set; oracle replays grams, first-seen, the ranked
-    cumulative sum, the boundary rule, and the aggregation. This query
-    runs the `hash_grams=True` PRODUCTION path (8-byte gram keys in
-    the shuffle) against the string-gram oracle — hashed ≡ string is
-    exact (pinned by `test_ngram_novelty_hashed_matches_string`, and a
-    60-bit collision would fail this very value hash), so the oracle
-    verdict certifies the production plan, not just the replay-mode
-    one.
+    cumulative sum, the boundary rule, and the aggregation. The engine
+    keys its shuffles on the md5 gram values and the oracle replays the
+    string grams they name (a 60-bit collision would fail this very
+    value hash).
 
     Rounding contract (r10, closes the r9 verdict's one mismatch):
     novelty is carried as EXACT INTEGER MICROS on both engines —
@@ -6878,7 +6874,7 @@ def novelty_budget_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.selection import select_token_budget
 
     d = _t(spark, sf_dir, "documents")
-    scores = ngram_novelty_scores(d, n=3, hash_grams=True)
+    scores = ngram_novelty_scores(d, n=3)
     base = d.select(
         "doc_id", "lang", token_count("text").cast("long").alias("n_tokens")
     ).join(
@@ -10437,10 +10433,11 @@ def contamination_overlap_profile(spark: SparkSession, sf_dir: str) -> DataFrame
     op answers "drop these docs"; this answers the prior question of
     HOW MUCH leakage exists and how it is distributed. Scale shape:
     one distinct-gram table for train (the only big shuffle, gram keys
-    only), eval grams probe it with a left join; at web scale swap the
-    gram string for a 64-bit hash (kept as strings here so the whole
-    profile is engine-portable and oracle-checked)."""
-    from .functions.text_kernels import shingle_strings_udf
+    only), eval grams probe it with a left join. Grams are the 8-byte
+    md5 gram values (`hashed_shingles_udf`), which the oracle replays
+    from the string grams, so the whole profile is engine-portable and
+    oracle-checked."""
+    from .functions.text_kernels import hashed_shingles_udf
 
     d = _t(spark, sf_dir, "documents")
     frac = (
@@ -10461,7 +10458,7 @@ def contamination_overlap_profile(spark: SparkSession, sf_dir: str) -> DataFrame
     base = d.select(
         "doc_id",
         frac.alias("frac"),
-        shingle_strings_udf(8)(F.col("text")).alias("grams"),
+        hashed_shingles_udf(8)(F.col("text")).alias("grams"),
     ).localCheckpoint(eager=False)
     train_g = (
         base.filter(F.col("frac") < 0.9)
@@ -13280,15 +13277,10 @@ def ngram_novelty_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the identical gram classes and first-seen rule in
     SQL, putting the gram construction, the min-attribution, AND the
     ratio arithmetic under one value hash."""
-    from .io import materialize
     from .operators.dedup import ngram_novelty_scores
 
     d = _t(spark, sf_dir, "documents")
-    # pin: unpinned, the join lets the optimizer infer a non-empty
-    # gram-array filter and push it into the scan, re-splitting the
-    # text four times. Not lazy: the scores' shuffle stages run at
-    # construction, only the final stage with the action (io.materialize)
-    scores = materialize(ngram_novelty_scores(d, n=3), eager=False)
+    scores = ngram_novelty_scores(d, n=3)
     return (
         d.select("doc_id", "lang")
         .join(scores, "doc_id")

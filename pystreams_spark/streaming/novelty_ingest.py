@@ -11,10 +11,10 @@ Per micro-batch (driven by ``foreachBatch``; the store plumbing is
 1. params check and store listing: the gram width is bound to the
    store (FileSystem calls, no Spark job), and the committed epochs ``< e``
    are listed BEFORE anything is written,
-2. gram once: ``dedup._novelty_posts`` with ``hash_grams`` (word
-   n-gram → xxhash64 inside the per-doc array, Column algebra only —
-   the posts of ``ngram_novelty_scores(hash_grams=True)``), pinned: the
-   first-seen aggregate and the score join both read it,
+2. gram once: ``dedup._novelty_posts`` (the doc's distinct md5 gram
+   values from the text kernel — the posts of
+   ``ngram_novelty_scores``), pinned: the first-seen aggregate and the
+   score join both read it,
 3. intra-batch first-seen: per-gram MIN(doc id) inside the batch,
 4. state write first: a gram is NOVEL iff its batch-first doc owns it
    AND the gram is absent from the accumulated GRAM STORE (parquet,
@@ -82,12 +82,19 @@ class NoveltyIngest:
         self._params_checked = False
 
     def _params(self) -> dict:
-        return {"n": self.n, "text_col": self.text_col, "id_col": self.id_col}
+        return {
+            "n": self.n,
+            "text_col": self.text_col,
+            "id_col": self.id_col,
+            "gram": "md5",
+        }
 
     def _check_params(self, spark: SparkSession) -> None:
-        """Same guard as NeardupIngest: a changed gram width against an
-        existing store would silently mis-score every later doc; a
-        session that writes no ``_SUCCESS`` markers is refused too."""
+        """Same guard as NeardupIngest: a changed gram width or gram
+        value (stores bound without ``"gram": "md5"`` hold xxhash64
+        grams) against an existing store would silently mis-score every
+        later doc; a session that writes no ``_SUCCESS`` markers is
+        refused too."""
         assert_markers_enabled(spark, "NoveltyIngest")
         if not self._params_checked:
             check_params(
@@ -111,7 +118,7 @@ class NoveltyIngest:
 
         # one gram pass, pinned: posts feed first-seen and the scores
         posts = _novelty_posts(
-            batch, self.n, self.text_col, id_col, hash_grams=True
+            batch, self.n, self.text_col, id_col
         ).localCheckpoint(eager=True)
         batch_first = posts.groupBy("g").agg(F.min(id_col).alias("_novel_owner"))
 

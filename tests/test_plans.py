@@ -95,24 +95,31 @@ def test_global_topk_never_full_sorts(spark, sf_dir):
     assert has_take_ordered(df)
 
 
+def _group_jobs(spark, group, build):
+    """(``build()``'s result, the Spark jobs it started), counted by
+    job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = build()
+    finally:
+        sc.setJobGroup(None, None)  # type: ignore[arg-type]
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 @pytest.fixture(scope="module")
 def all_builds(spark, sf_dir):
     """{query name: (executed plan string, construction jobs)} for every
     registered query, built once and shared by the all-query sweeps
     below. Construction jobs are the Spark jobs a query's build submits
-    before its DataFrame is returned, counted by job group."""
+    before its DataFrame is returned."""
     from pystreams_spark.plans import executed_plan
 
-    sc = spark.sparkContext
     builds = {}
     for name, fn in QUERIES.items():
-        group = f"construct-{name}"
-        sc.setJobGroup(group, group)
-        try:
-            df = fn(spark, sf_dir)
-        finally:
-            sc.setJobGroup(None, None)  # type: ignore[arg-type]
-        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        df, jobs = _group_jobs(
+            spark, f"construct-{name}", lambda: fn(spark, sf_dir)
+        )
         builds[name] = (executed_plan(df), jobs)
     return builds
 
@@ -127,7 +134,7 @@ def all_plans(all_builds):
 # their DataFrames exist: the total measured at sf0.001 at 4 and 8
 # cores. Each site where adaptive execution already picks the join
 # strategy joins its plain frame, with no size probe at construction.
-_CONSTRUCTION_JOB_BUDGET = 684
+_CONSTRUCTION_JOB_BUDGET = 680
 
 
 def test_construction_jobs_within_budget(all_builds):
@@ -141,6 +148,20 @@ def test_construction_jobs_within_budget(all_builds):
         f"(budget {_CONSTRUCTION_JOB_BUDGET}); most: "
         + ", ".join(f"{n} {j}" for n, (_, j) in worst)
     )
+
+
+def test_ngram_novelty_report_builds_without_a_job_of_its_own(spark, sf_dir):
+    """Building ``ngram_novelty_report`` starts no Spark job beyond its
+    ``load_table`` schema job: the scores are a lazy plan over the
+    gram kernel, with no pin to run their shuffle stages."""
+    _, load_jobs = _group_jobs(
+        spark, "novelty-load", lambda: load_table(spark, sf_dir, "documents")
+    )
+    _, build_jobs = _group_jobs(
+        spark, "novelty-build",
+        lambda: QUERIES["ngram_novelty_report"](spark, sf_dir),
+    )
+    assert build_jobs <= load_jobs, (build_jobs, load_jobs)
 
 
 def test_no_rowwise_python_udfs_anywhere(all_plans):

@@ -1034,7 +1034,7 @@ def test_quality_stats_maintainer_streaming_equals_batch(spark, sf_dir, tmp_path
 
 def test_novelty_ingest_equals_batch_and_replays(spark, sf_dir, tmp_path):
     """r9: continuous novelty scoring — id-ordered micro-batches must
-    reproduce the BATCH hashed-gram novelty scores exactly (first
+    reproduce the BATCH novelty scores exactly (first
     arrival == min id in that regime), replay of a finished epoch must
     be idempotent, and a changed gram width against existing state
     must refuse."""
@@ -1063,7 +1063,7 @@ def test_novelty_ingest_equals_batch_and_replays(spark, sf_dir, tmp_path):
     }
     batch = {
         r.doc_id: (r.n_grams, r.novel_grams, r.novelty)
-        for r in ngram_novelty_scores(docs, n=3, hash_grams=True).collect()
+        for r in ngram_novelty_scores(docs, n=3).collect()
     }
     assert streamed == batch and len(streamed) == 240
 
@@ -1117,7 +1117,7 @@ def test_novelty_ingest_skips_uncommitted_epoch_dirs(spark, sf_dir, tmp_path):
     }
     batch = {
         r.doc_id: (r.n_grams, r.novel_grams, r.novelty)
-        for r in ngram_novelty_scores(docs, n=3, hash_grams=True).collect()
+        for r in ngram_novelty_scores(docs, n=3).collect()
     }
     assert streamed == batch and len(streamed) == 120
 
@@ -1559,6 +1559,24 @@ def test_check_params_refuses_with_each_ingests_reason(spark, tmp_path, kind):
     with pytest.raises(ValueError, match=reason):
         _make_ingest(kind, tmp_path / "state", **changed)._check_params(spark)
     _make_ingest(kind, tmp_path / "state")._check_params(spark)
+
+
+def test_novelty_ingest_refuses_a_store_of_xxhash64_grams(spark, tmp_path):
+    """A store bound before the gram value became md5 (its ``_params``
+    has no "gram" entry and holds xxhash64 grams) is refused, and the
+    refusal names the stored and the current parameters."""
+    from pystreams_spark.streaming.epoch_store import check_params
+    from pystreams_spark.streaming.novelty_ingest import NoveltyIngest
+
+    state = str(tmp_path / "state")
+    old = {"n": 3, "text_col": "text", "id_col": "doc_id"}
+    check_params(spark, state, old, "NoveltyIngest", "bound")
+    ing = NoveltyIngest(state, n=3)
+    with pytest.raises(ValueError, match="gram classes") as err:
+        ing._check_params(spark)
+    msg = str(err.value)
+    assert str(dict(sorted(old.items()))) in msg
+    assert str(ing._params()) in msg
 
 
 def test_check_params_verifies_spark_text_layout_and_runs_no_job(
